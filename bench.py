@@ -868,9 +868,12 @@ def _trend(total: float, omb: dict) -> dict:
             with open(p) as f:
                 rec = json.load(f)
             parsed = rec.get("parsed", rec)
+            # the compact record carries the OMB figures under "gates";
+            # r01-r04 recorded them under "omb"
+            gates = parsed.get("gates") or parsed.get("omb") or {}
             prior[f"r{n:02d}"] = {
                 "suite_wall_s": parsed.get("value"),
-                "produce_mb_s": (parsed.get("omb") or {}).get("produce_mb_s"),
+                "produce_mb_s": gates.get("produce_mb_s"),
             }
         except Exception:
             continue

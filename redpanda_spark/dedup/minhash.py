@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from redpanda_spark.functions.text import word_shingles
@@ -193,8 +194,9 @@ def minhash_signature(
     if arrow_kernel:
         import pyarrow as pa
 
-        id_field = docs.schema[id_col]
-        out_schema = f"{id_col} {id_field.dataType.simpleString()}, sig array<bigint>"
+        out_schema = StructType(
+            [docs.schema[id_col], StructField("sig", ArrayType(LongType()))]
+        )
 
         def gen(batches):
             for batch in batches:

@@ -25,10 +25,10 @@ within each file. The manifest records per-file min/max stats for the
 partition and offset columns (Iceberg-style file metadata), so
 partition/offset pruning happens at the MANIFEST — the engine hands Spark
 only the overlapping files, no directory LIST and no footer reads on the
-read path. This replaces the earlier hive ``partition=<p>/`` layout: hive
-dirs force one file per touched partition per micro-batch (a 5k-row
-produce to a 100-partition topic = 100 files, ~16 ms of writer setup
-each), while the flat layout writes one file per shuffle task — AQE
+read path. The layout is flat rather than one directory per partition:
+per-partition dirs force one file per touched partition per micro-batch
+(a 5k-row produce to a 100-partition topic = 100 files, ~16 ms of writer
+setup each), while the flat layout writes one file per shuffle task — AQE
 coalesces a small batch to a single ~file and scales file count with
 batch bytes, which is exactly the segment-size behavior the reference
 gets from its log appender.
@@ -148,6 +148,20 @@ class FencedWriterError(Exception):
         self.current = current
 
 
+def _next_arch_epoch(paths) -> int:
+    """First archive epoch past every ``e<epoch>_<i>.parquet`` name in
+    ``paths``, so new archive uploads never overwrite them."""
+    max_epoch = -1
+    for p in paths:
+        name = os.path.basename(p)
+        if name.startswith("e") and "_" in name:
+            try:
+                max_epoch = max(max_epoch, int(name[1:].split("_", 1)[0]))
+            except ValueError:
+                pass
+    return max_epoch + 1
+
+
 class TopicEngine:
     def __init__(
         self,
@@ -224,13 +238,10 @@ class TopicEngine:
         self._cold_cache_dir: str | None = None
         self._cold_lru: dict[str, int] = {}  # rel -> size, insertion=LRU order
         self._meta_path = os.path.join(root, "_topics.json")
-        self._offsets_path = os.path.join(root, "_offsets.json")  # legacy watermarks
         self._topics: dict[str, TopicConfig] = {}
         self._high: dict[str, dict[int, int]] = {}
         # Live segment files per topic, root-relative, in manifest order.
-        # None = watermark-only mode (legacy state or non-listable root):
-        # reads fall back to directory scans.
-        self._files: dict[str, list[str] | None] = {}
+        self._files: dict[str, list[str]] = {}
         # Per-file column stats {relpath: [min_p, max_p, min_o, max_o, rows]}
         # — the manifest-level pruning index (Iceberg data-file stats
         # analog). Files without an entry are never pruned.
@@ -446,7 +457,7 @@ class TopicEngine:
             self._write_manifest_locked(topic)
 
     def _write_manifest_locked(self, topic: str) -> None:
-        files = self._files.get(topic)
+        files = self._files[topic]
         stats = self._stats.get(topic, {})
         arch = self._archived.get(topic, [])
         astats = self._archived_stats.get(topic, {})
@@ -456,7 +467,7 @@ class TopicEngine:
                 {
                     "high": self._high.get(topic, {}),
                     "files": files,
-                    "stats": {p: stats[p] for p in (files or []) if p in stats},
+                    "stats": {p: stats[p] for p in files if p in stats},
                     "producers": self._producers.get(topic, {}),
                     "clean_rows": self._clean_rows.get(topic, 0),
                     "archived": arch,
@@ -471,14 +482,6 @@ class TopicEngine:
         if self._fsio.exists(self._meta_path):
             raw = json.loads(self._fsio.read_text(self._meta_path))
             self._topics = {t: TopicConfig(**c) for t, c in raw.items()}
-        legacy_high: dict[str, dict[int, int]] = {}
-        if self._fsio.exists(self._offsets_path):
-            legacy_high = {
-                t: {int(p): o for p, o in ps.items()}
-                for t, ps in json.loads(
-                    self._fsio.read_text(self._offsets_path)
-                ).items()
-            }
         for t in self._topics:
             # Read the manifest AND claim the writer epoch inside one
             # critical section: the state we adopt is the latest committed
@@ -494,12 +497,13 @@ class TopicEngine:
             with self._fsio.write_lock(self.root) if not self.read_only \
                     else _nullcontext():
                 mp = self._manifest_path(t)
-                if self._fsio.exists(mp):
+                has_manifest = self._fsio.exists(mp)
+                if has_manifest:
                     m = json.loads(self._fsio.read_text(mp))
                     self._high[t] = {
                         int(p): o for p, o in m.get("high", {}).items()
                     }
-                    self._files[t] = m.get("files")
+                    self._files[t] = m.get("files", [])
                     self._stats[t] = m.get("stats", {})
                     self._producers[t] = m.get("producers", {})
                     self._clean_rows[t] = m.get("clean_rows", 0)
@@ -507,12 +511,23 @@ class TopicEngine:
                     self._archived_stats[t] = m.get("archived_stats", {})
                     self._arch_epoch[t] = m.get("arch_epoch", 0)
                 else:
-                    self._high[t] = legacy_high.get(t, {})
-                    self._files[t] = None
+                    # catalog written, first manifest commit never landed
+                    # (or the manifest was lost): the empty topic
+                    # create_topic commits. GC below drops stray hot
+                    # segments but leaves the archive tier alone — it may
+                    # hold the only copy of the topic's cold data — and
+                    # new archive names continue past it, never over it.
+                    self._high[t] = {
+                        p: 0 for p in range(self._topics[t].partitions)
+                    }
+                    self._files[t] = []
+                    self._arch_epoch[t] = _next_arch_epoch(
+                        self._afsio.list_segments(self._archive_dir(t))
+                    )
                 if not self.read_only:
                     self._claim_writer_epoch(t)
             if not self.read_only:
-                self._gc_orphans(t)
+                self._gc_orphans(t, archive=has_manifest)
         if not self.read_only:
             # a purge (delete_topic/unmount/create-debris) may have
             # crashed mid-swap: roll the side tables to a whole copy
@@ -527,11 +542,13 @@ class TopicEngine:
                 for d in (self._tx_ranges_dir(), self._commits_dir()):
                     self._recover_side_table_swap(d)
 
-    def _gc_orphans(self, topic: str) -> None:
+    def _gc_orphans(self, topic: str, archive: bool) -> None:
         """Crash recovery: delete segment files not referenced by the
         manifest (a produce or rewrite that died before its manifest
         commit) and leftover rewrite temp dirs. Safe under the
-        single-writer-per-root model.
+        single-writer-per-root model. ``archive=False`` limits it to the
+        hot tier (a topic opened without a manifest has no archived list
+        to judge the cold tier by).
 
         NEVER runs for read-replica topics: their archive_root is the
         SOURCE cluster's bucket, and any segment the source archived after
@@ -551,15 +568,14 @@ class TopicEngine:
             d + ".old",
         ):
             self._fsio.delete(leftover, recursive=True)
-        live = self._files.get(topic)
-        if live is None:
-            return
-        live_abs = {os.path.join(self.root, p) for p in live}
+        live_abs = {os.path.join(self.root, p) for p in self._files[topic]}
         for f in self._segment_files(topic) - live_abs:
             self._fsio.delete(f)
+        if not archive:
+            return
         # archive tier: a crash between the archival copy and the manifest
         # commit leaves half-uploaded cold segments; GC anything the
-        # manifest's archived list doesn't own (manifest-mode topics only)
+        # manifest's archived list doesn't own
         ad = self._archive_dir(topic)
         self._afsio.delete(ad + ".rewrite.tmp", recursive=True)
         live_arch = {
@@ -721,8 +737,7 @@ class TopicEngine:
         return os.path.join(self.archive_root, topic)
 
     def _segment_files(self, topic: str) -> set[str]:
-        """All parquet segment paths of a topic: flat ``*.parquet`` files
-        plus any legacy hive ``partition=<p>/`` subdir files. Listed via
+        """All parquet segment paths of a topic's flat dir. Listed via
         the root's filesystem (POSIX locally, Hadoop FS on URI roots), so
         object-store roots keep the full manifest/crash-safety story."""
         return set(self._fsio.list_segments(self._topic_dir(topic)))
@@ -804,7 +819,7 @@ class TopicEngine:
         files0 = len(self._files.get(topic) or [])
         hw0 = sum(self._high.get(topic, {}).values())
         bases = self._produce_impl(topic, batch)
-        new_files = (self._files.get(topic) or [])[files0:]
+        new_files = self._files[topic][files0:]
         self._count(
             topic,
             produce_requests=1,
@@ -847,7 +862,7 @@ class TopicEngine:
             out = self._produce_local(topic, cfg, None, records=batch)
             if out is not None:
                 return out
-            batch = self._records_to_df(batch)  # URI root/legacy: DF path
+            batch = self._records_to_df(batch)  # URI root: DF path
         else:
             out = self._produce_local(topic, cfg, batch)
             if out is not None:
@@ -873,12 +888,6 @@ class TopicEngine:
                     f"record of {biggest} bytes exceeds max.message.bytes="
                     f"{cfg.max_message_bytes}",
                 )
-
-        files = self._files.get(topic)
-        if files and any("partition=" in f for f in files):
-            # one-time migration of a legacy hive-layout topic to flat
-            # segments, so the append below never mixes layouts in one dir
-            self._rewrite(topic, self._local_log(topic))
 
         cols = batch.columns
         df = batch.withColumn("_seq", F.monotonically_increasing_id())
@@ -972,11 +981,7 @@ class TopicEngine:
             "parquet.enable.dictionary", "false"
         ).parquet(out_dir)
         new_files = sorted(self._segment_files(topic) - before)
-        prev = self._files.get(topic)
-        if prev is None:
-            # legacy topic without a manifest: adopt everything on disk
-            prev = sorted(os.path.relpath(f, self.root) for f in before)
-        self._files[topic] = prev + [
+        self._files[topic] = self._files[topic] + [
             os.path.relpath(f, self.root) for f in new_files
         ]
         self._stats.setdefault(topic, {}).update(self._footer_stats(new_files))
@@ -1025,8 +1030,8 @@ class TopicEngine:
 
     def _records_to_df(self, records) -> DataFrame:
         """List-of-records → DataFrame, for when the local fast path
-        declines (URI root, legacy hive layout) and the batch must go
-        through the distributed produce pipeline."""
+        declines (URI root, oversized batch, exotic timestamps) and the
+        batch must go through the distributed produce pipeline."""
         rows = [r.asDict() if hasattr(r, "asDict") else dict(r) for r in records]
         cols = list(rows[0]) if rows else ["key", "value"]
         schema = ", ".join(f"{c} {self._RECORD_COL_TYPES[c]}" for c in cols)
@@ -1056,16 +1061,13 @@ class TopicEngine:
         (`kafka/server/handlers/produce.cc:311-500`), and the committed
         batch stays in the batch cache (`storage/batch_cache.h:101`) so
         the next fetch never touches storage. Returns None to decline
-        (non-local plan, URI root, oversized, legacy layout, exotic
-        column types) — the caller falls through to the distributed path.
+        (non-local plan, URI root, oversized, exotic column types) — the
+        caller falls through to the distributed path.
         """
         import datetime as _dt
 
         if not isinstance(self._fsio, fsio.LocalFS):
             return None  # object-store roots: pyarrow can't write there
-        files = self._files.get(topic)
-        if files and any("partition=" in f for f in files):
-            return None  # legacy hive layout: distributed path migrates it
         if records is not None:
             rows = [
                 r.asDict() if hasattr(r, "asDict") else dict(r) for r in records
@@ -1250,12 +1252,7 @@ class TopicEngine:
             offs[i] = o
             counters[p] = o + 1
 
-        prev_files = self._files.get(topic)
-        if prev_files is None:
-            # legacy topic without a manifest: adopt everything on disk
-            prev_files = sorted(
-                os.path.relpath(f, self.root) for f in self._segment_files(topic)
-            )
+        prev_files = self._files[topic]
 
         bases: dict[int, int] = {}
         rel_new: list[str] = []
@@ -1821,14 +1818,14 @@ class TopicEngine:
         local log start routes to cloud segments transparently,
         `cloud_storage/remote_partition.cc`).
 
-        With a manifest, the scan is over the manifest's explicit live-file
-        list — committed snapshot isolation and no directory LIST on the
-        read path (the same trick Iceberg uses to avoid O(objects) LIST at
-        scale). Without one (legacy/non-listable), falls back to a
-        directory read."""
+        The scan is over the manifest's explicit live-file list —
+        committed snapshot isolation and no directory LIST on the read
+        path (the same trick Iceberg uses to avoid O(objects) LIST at
+        scale)."""
         self._require(topic)
-        df = self._scan_tiers(
-            topic, self._files.get(topic), self._archived.get(topic, [])
+        df = self._scan(
+            [os.path.join(self.root, f) for f in self._files[topic]]
+            + self._cold_paths(topic, self._archived.get(topic, []))
         )
         starts = self._log_starts(topic)
         if starts:
@@ -1843,34 +1840,25 @@ class TopicEngine:
         disk_log maintenance likewise operates below the archival
         boundary)."""
         self._require(topic)
-        df = self._scan(topic, self._files.get(topic))
+        df = self._scan([os.path.join(self.root, f) for f in self._files[topic]])
         starts = self._log_starts(topic)
         if starts:
             df = LOG.delete_records(df, starts)
         return df
 
-    def _scan(self, topic: str, files: list[str] | None) -> DataFrame:
-        """Build the record DataFrame over an explicit (possibly pruned)
-        segment list; ``None`` = directory-read fallback."""
-        d = self._topic_dir(topic)
-        from redpanda_spark.datamodel import RECORD_SCHEMA
+    def _scan(self, paths: list[str]) -> DataFrame:
+        """The record DataFrame over explicit segment paths. Hot and cold
+        segments share the flat record schema, so a tiered read is one
+        multi-path parquet read — one Spark job, file-level parallelism
+        across tiers. No paths is the empty log; a listed segment missing
+        on disk raises, so a rewrite never commits a lost read as empty."""
+        if not paths:
+            from redpanda_spark.datamodel import RECORD_SCHEMA
 
-        empty = lambda: self.spark.createDataFrame([], RECORD_SCHEMA).drop(  # noqa: E731
-            "topic", "timestamp_type"
-        )
-        if files is not None and not files:
-            return empty()
-        try:
-            if files is None:
-                return self.spark.read.parquet(d)
-            paths = [os.path.join(self.root, f) for f in files]
-            if any("partition=" in f for f in files):
-                # legacy hive-layout snapshot: partition comes from dir names
-                return self.spark.read.option("basePath", d).parquet(*paths)
-            return self.spark.read.parquet(*paths)
-        except Exception:
-            # empty topic: no files yet
-            return empty()
+            return self.spark.createDataFrame([], RECORD_SCHEMA).drop(
+                "topic", "timestamp_type"
+            )
+        return self.spark.read.parquet(*paths)
 
     def enable_cold_cache(self, max_bytes: int, cache_dir: str | None = None):
         """Turn on the cold-read cache (cloud_storage/cache_service
@@ -1905,7 +1893,7 @@ class TopicEngine:
         cache when enabled (copy-once + LRU evict), else the archive
         root directly. Only the (pruned) files a read actually touches
         are ever copied."""
-        if not self.cold_cache_bytes or self._cold_cache_dir is None:
+        if not archived or not self.cold_cache_bytes or self._cold_cache_dir is None:
             return [os.path.join(self.archive_root, f) for f in archived]
         pinned = set(archived)  # the scan being assembled needs ALL of these
         misses = []
@@ -1959,39 +1947,12 @@ class TopicEngine:
             except OSError:
                 pass
 
-    def _scan_tiers(
-        self, topic: str, files: list[str] | None, archived: list[str]
-    ) -> DataFrame:
-        """One scan over hot + cold segments. Both tiers share the flat
-        record schema, so the union is a single multi-path parquet read —
-        one Spark job, file-level parallelism across tiers."""
-        if not archived:
-            return self._scan(topic, files)
-        arch_abs = self._cold_paths(topic, archived)
-        if files is None:
-            # legacy dir-scan hot tier + explicit cold list
-            return self._scan(topic, None).unionByName(self._scan_paths(arch_abs))
-        if any("partition=" in f for f in files):
-            return self._scan(topic, files).unionByName(self._scan_paths(arch_abs))
-        return self._scan_paths(
-            [os.path.join(self.root, f) for f in files] + arch_abs
-        )
-
-    def _scan_paths(self, paths: list[str]) -> DataFrame:
-        from redpanda_spark.datamodel import RECORD_SCHEMA
-
-        if not paths:
-            return self.spark.createDataFrame([], RECORD_SCHEMA).drop(
-                "topic", "timestamp_type"
-            )
-        return self.spark.read.parquet(*paths)
-
     def _pruned_files(
         self,
         topic: str,
         partition: int | None = None,
         min_offset: int | None = None,
-    ) -> list[str] | None:
+    ) -> list[str]:
         """Manifest-level file pruning by (partition, offset) stats — the
         engine's sparse index. Conservative: a file is kept unless its
         stats PROVE it can't contain a matching row (files without stats
@@ -1999,10 +1960,9 @@ class TopicEngine:
         truth. ``max_o < min_offset`` is safe even though offsets are
         per-partition sequences: it bounds every partition's offsets in
         the file."""
-        files = self._files.get(topic)
-        if files is None:
-            return None
-        return self._prune(files, self._stats.get(topic, {}), partition, min_offset)
+        return self._prune(
+            self._files[topic], self._stats.get(topic, {}), partition, min_offset
+        )
 
     @staticmethod
     def _prune(
@@ -2104,10 +2064,10 @@ class TopicEngine:
         # manifest-level pruning: only segments whose stats overlap the
         # requested (partition, offset-range) reach the Spark scan —
         # applied per tier, so hot fetches never open cold segments
-        log = self._scan_tiers(
-            topic,
-            self._pruned_files(topic, partition=partition, min_offset=offset),
-            self._pruned_archived(topic, partition=partition, min_offset=offset),
+        hot = self._pruned_files(topic, partition=partition, min_offset=offset)
+        cold = self._pruned_archived(topic, partition=partition, min_offset=offset)
+        log = self._scan(
+            [os.path.join(self.root, f) for f in hot] + self._cold_paths(topic, cold)
         )
         starts = self._log_starts(topic)
         if starts:
@@ -2167,10 +2127,8 @@ class TopicEngine:
         comes from the manifest's per-file stats; files without stats
         report None rather than a wrong number."""
         self._require(topic)
-        files = self._files.get(topic)
-        sizes = [
-            self._fsio.getsize(os.path.join(self.root, f)) for f in (files or [])
-        ]
+        files = self._files[topic]
+        sizes = [self._fsio.getsize(os.path.join(self.root, f)) for f in files]
         rows = self._stats_rows(topic)
         arch = self._archived.get(topic, [])
         astats = self._archived_stats.get(topic, {})
@@ -2180,7 +2138,7 @@ class TopicEngine:
             else (0 if not arch else None)
         )
         return {
-            "segments": len(files or []),
+            "segments": len(files),
             "bytes": sum(sizes),
             "rows": rows,
             "archived_segments": len(arch),
@@ -2269,9 +2227,7 @@ class TopicEngine:
         # which evicts from the archive (oldest data) first, exactly the
         # reference's cloud-retention order — then each tier is rewritten
         # from its own surviving rows. Offsets are untouched.
-        cold = self._scan_paths(
-            [os.path.join(self.archive_root, f) for f in archived]
-        )
+        cold = self._scan([os.path.join(self.archive_root, f) for f in archived])
         starts = self._log_starts(topic)
         if starts:
             # physically drop DeleteRecords-truncated prefixes from the
@@ -2327,16 +2283,14 @@ class TopicEngine:
     def _retention_time_segments(self, topic: str, now_ms: int | None) -> bool:
         """Segment-granularity time retention, BOTH tiers. Returns True
         when handled (including the nothing-expired no-op); False → caller
-        falls back to the full rewrite (no manifest file list, or a file
-        without timestamp stats). Work is O(expired + boundary files) per
+        falls back to the full rewrite (a file without timestamp
+        stats). Work is O(expired + boundary files) per
         tier; for a tiered topic this is the reference's cloud-retention
         housekeeping (`cluster/archival/archival_policy.cc`): aged cloud
         segments are dropped from the manifest without touching hot
         data."""
         cfg = self._require(topic)
-        files = self._files.get(topic)
-        if files is None:
-            return False
+        files = self._files[topic]
         stats = self._stats.get(topic, {})
         archived = self._archived.get(topic, [])
         astats = self._archived_stats.get(topic, {})
@@ -2445,12 +2399,9 @@ class TopicEngine:
         """Total live rows from the manifest's per-file stats — no Spark
         job. None when any live file lacks stats (unknown => treat as
         fully dirty)."""
-        files = self._files.get(topic)
-        if not files:
-            return 0 if files == [] else None
         stats = self._stats.get(topic, {})
         total = 0
-        for f in files:
+        for f in self._files[topic]:
             st = stats.get(f)
             if st is None or len(st) < 5:
                 return None
@@ -2547,17 +2498,17 @@ class TopicEngine:
         segment replace. Truncated prefixes (DeleteRecords) are physically
         dropped by the rewrite, like the reference's eviction."""
         self._require(topic)
-        files = self._live_abs_files(topic)
+        files = self._files[topic]
         if not files:
             return {"files_before": 0, "files_after": 0}
-        total = sum(self._fsio.getsize(f) for f in files)
+        total = sum(self._fsio.getsize(os.path.join(self.root, f)) for f in files)
         n_target = max(1, -(-total // target_file_bytes))
         if len(files) <= n_target:
             return {"files_before": len(files), "files_after": len(files)}
         self._rewrite(topic, self._local_log(topic), n_files=n_target)
         return {
             "files_before": len(files),
-            "files_after": len(self._live_abs_files(topic)),
+            "files_after": len(self._files[topic]),
         }
 
     # -- tiered storage (archival) -----------------------------------------
@@ -2586,9 +2537,7 @@ class TopicEngine:
             raise ValueError("archival supports cleanup.policy=delete only")
         if cfg.local_retention_ms is None:
             raise ValueError("local_retention_ms is not set")
-        files = self._files.get(topic)
-        if files is None:
-            raise ValueError("topic has no manifest file list (legacy state)")
+        files = self._files[topic]
         stats = self._stats.get(topic, {})
         now = (now_ms or int(time.time() * 1000)) / 1000.0
         cutoff_us = int((now - cfg.local_retention_ms / 1000.0) * 1e6)
@@ -2715,17 +2664,12 @@ class TopicEngine:
         self._archived_stats[topic] = stats
         self._high[topic] = self._replica_watermarks(rels)
         # archive names continue past the recovered epochs (never collide)
-        max_epoch = -1
-        for r in rels:
-            name = os.path.basename(r)
-            if name.startswith("e") and "_" in name:
-                try:
-                    max_epoch = max(max_epoch, int(name[1:].split("_", 1)[0]))
-                except ValueError:
-                    pass
-        self._arch_epoch[topic] = max_epoch + 1
-        self._save_state()
+        self._arch_epoch[topic] = _next_arch_epoch(rels)
+        # manifest first, CATALOG LAST (mount's Phase B order): a crash
+        # in between leaves an orphan manifest that a retry overwrites,
+        # never a cataloged topic without one
         self._commit_manifest(topic)
+        self._save_state()
         # DR takes OWNERSHIP: consume EVERY handoff token left by the
         # pre-loss incarnation — a staged manifest (crashed unmount), a
         # published mountable manifest (completed unmount, target lost
@@ -2783,13 +2727,11 @@ class TopicEngine:
             raise ValueError(
                 f"topic {topic}: unmount requires remote_write=True"
             )
-        if "compact" in cfg.cleanup_policy and self._files.get(topic):
+        if "compact" in cfg.cleanup_policy and self._files[topic]:
             # (skipped on a retry after a phase-1 crash: the log is then
             # fully archived already, and it was compacted before upload)
             self.run_compaction(topic, now_ms=now_ms)
-        files = self._files.get(topic)
-        if files is None:
-            raise ValueError("topic has no manifest file list (legacy state)")
+        files = self._files[topic]
         stats = self._stats.get(topic, {})
         if any(f not in stats for f in files):
             raise ValueError(
@@ -3243,7 +3185,7 @@ class TopicEngine:
                     "_read_replica"
                 )
                 == "true",
-                "segments": len(self._files.get(topic) or [])
+                "segments": len(self._files[topic])
                 + len(self._archived.get(topic, [])),
             }
         ad = self._archive_dir(topic)
@@ -3301,9 +3243,7 @@ class TopicEngine:
         return {"added": len(rels)}
 
     def _replica_watermarks(self, rels: list[str]) -> dict[int, int]:
-        df = self._scan_paths(
-            [os.path.join(self.archive_root, r) for r in rels]
-        )
+        df = self._scan([os.path.join(self.archive_root, r) for r in rels])
         return {
             r["partition"]: r["hwm"]
             for r in df.groupBy("partition")
@@ -3370,7 +3310,7 @@ class TopicEngine:
         if len(files) <= n_target:
             return {"files_before": len(files), "files_after": len(files)}
         self._rewrite_archive(
-            topic, self._scan_paths(files), n_files=n_target
+            topic, self._scan(files), n_files=n_target
         )
         return {
             "files_before": len(files),
@@ -3397,14 +3337,6 @@ class TopicEngine:
         for f in old:
             self._afsio.delete(f)
 
-    def _live_abs_files(self, topic: str) -> set[str]:
-        """Absolute paths of the topic's committed segment files: manifest
-        list when present, else directory listing (legacy state)."""
-        files = self._files.get(topic)
-        if files is not None:
-            return {os.path.join(self.root, f) for f in files}
-        return self._segment_files(topic)
-
     def _rewrite(self, topic: str, df: DataFrame, n_files: int | None = None) -> None:
         """Replace the topic's data with ``df`` (compaction / retention /
         segment merge). New flat segment files are written to a temp dir
@@ -3417,7 +3349,7 @@ class TopicEngine:
         intact (orphans GC'd on reopen)."""
         cfg = self._require(topic)
         d = self._topic_dir(topic)
-        old_files = self._live_abs_files(topic)
+        old_files = [os.path.join(self.root, f) for f in self._files[topic]]
         rows_before = self._stats_rows(topic)
         tmp = d + ".rewrite.tmp"
         self._fsio.delete(tmp, recursive=True)
@@ -3440,9 +3372,6 @@ class TopicEngine:
         self._commit_manifest(topic)  # atomic old→new snapshot switch
         for f in old_files:
             self._fsio.delete(f)
-        # drop now-empty legacy hive partition dirs
-        for sub in self._fsio.list_subdirs(d, "partition="):
-            self._fsio.delete_dir_if_empty(sub)
         self._fsio.delete(tmp, recursive=True)
 
     # -- transaction ranges (rm_stm aborted/committed tx metadata) --------

@@ -132,12 +132,6 @@ class LocalFS:
         except OSError:
             pass
 
-    def delete_dir_if_empty(self, path: str) -> None:
-        try:
-            os.rmdir(path)
-        except OSError:
-            pass
-
     def rename(self, src: str, dst: str) -> None:
         os.rename(src, dst)
 
@@ -165,8 +159,7 @@ class LocalFS:
         return os.path.getsize(path)
 
     def list_segments(self, d: str) -> dict[str, int]:
-        """{path: size} of every parquet segment under a topic dir: flat
-        files plus legacy hive ``partition=<p>/`` subdir files."""
+        """{path: size} of every parquet segment in a flat topic dir."""
         out: dict[str, int] = {}
         if not os.path.isdir(d):
             return out
@@ -174,19 +167,9 @@ class LocalFS:
             for e in os.scandir(d):
                 if e.name.endswith(".parquet"):
                     out[e.path] = e.stat().st_size
-                elif e.is_dir() and e.name.startswith("partition="):
-                    for f in os.scandir(e.path):
-                        if f.name.endswith(".parquet"):
-                            out[f.path] = f.stat().st_size
         except OSError:
             pass
         return out
-
-    def list_subdirs(self, d: str, prefix: str) -> list[str]:
-        try:
-            return [e.path for e in os.scandir(d) if e.is_dir() and e.name.startswith(prefix)]
-        except OSError:
-            return []
 
     def list_files_recursive(self, d: str) -> list[str]:
         """All data-file paths under ``d`` (any depth), skipping metadata
@@ -411,15 +394,6 @@ class HadoopFS:
         except Exception:
             pass
 
-    def delete_dir_if_empty(self, path: str) -> None:
-        try:
-            p = self._p(path)
-            it = self._fs.listStatus(p)
-            if len(it) == 0:
-                self._fs.delete(p, False)
-        except Exception:
-            pass
-
     def rename(self, src: str, dst: str) -> None:
         if not self._fs.rename(self._p(src), self._p(dst)):
             raise OSError(f"rename failed: {src} -> {dst}")
@@ -447,23 +421,9 @@ class HadoopFS:
                 name = path.getName()
                 if name.endswith(".parquet"):
                     out[path.toString()] = int(st.getLen())
-                elif st.isDirectory() and name.startswith("partition="):
-                    for f in self._fs.listStatus(path):
-                        if f.getPath().getName().endswith(".parquet"):
-                            out[f.getPath().toString()] = int(f.getLen())
         except Exception:
             pass
         return out
-
-    def list_subdirs(self, d: str, prefix: str) -> list[str]:
-        try:
-            return [
-                st.getPath().toString()
-                for st in self._fs.listStatus(self._p(d))
-                if st.isDirectory() and st.getPath().getName().startswith(prefix)
-            ]
-        except Exception:
-            return []
 
     def list_files_recursive(self, d: str) -> list[str]:
         out: list[str] = []

@@ -284,13 +284,3 @@ def murmur2_partition_udf(num_partitions: int):
         return pd.Series(part)
 
     return _udf
-
-
-def crc32_col(col):
-    """Record-batch CRC analog (reference `model/record_utils.cc`) — Spark builtin."""
-    return F.crc32(col)
-
-
-def xxhash64_col(*cols):
-    """xxhash64 (reference uses xxhash in `hashing/`) — Spark builtin, JVM-side."""
-    return F.xxhash64(*cols)

@@ -31,8 +31,3 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_rounded(a: Column, b: Column, digits: int = 6) -> Column:
-    """Cosine rounded for stable cross-engine comparison."""
-    return F.round(cosine(a, b), digits)

@@ -65,12 +65,6 @@ def normalize16(col_name: str, mn: int, mx: int) -> Column:
     return F.expr(f"((`{col_name}` - {mn}) * 65535) div {mx - mn}")
 
 
-def normalize16_sql(expr: str, mn: int, mx: int) -> str:
-    if mx <= mn:
-        return "0"
-    return f"((({expr}) - {mn}) * 65535) // {mx - mn}"
-
-
 def zvalue2(x16: Column, y16: Column) -> Column:
     """Morton-interleave two 16-bit values: x takes the even bits, y the
     odd — a 32-bit key where nearby (x, y) points share prefixes."""

@@ -138,32 +138,3 @@ def topic_view_oracle_sql(num_partitions: int = DEFAULT_NUM_PARTITIONS) -> str:
                                    ORDER BY event_id) - 1 AS BIGINT) AS "offset"
     FROM events
     """
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table bucketed (and sorted) on its join key — the
-    co-located-join layout SURVEY.md §4 calls for on the big fact tables.
-
-    Two tables bucketed on the same key with the same bucket count join
-    WITHOUT any Exchange: the bucket spec is a persistent pre-shuffle,
-    paid once at write time instead of on every join (at 100 TB, the
-    recurring lineitem⋈orders shuffle is the single largest cost a
-    layout decision can delete — asserted shuffle-free in
-    test_bucketed_join_is_shuffle_free). Spark's bucketing requires a
-    saved table (catalog-managed), not a bare path.
-
-    Thin wrapper over sources/bucketed.py's implementation (one file per
-    bucket via aligned repartition, optional external path) — kept for
-    signature compatibility; don't fork the logic again."""
-    from redpanda_spark.sources import bucketed
-
-    bucketed.write_bucketed(
-        df, table, bucket_col, buckets=n_buckets, mode=mode, sort=sort
-    )

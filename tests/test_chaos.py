@@ -30,8 +30,7 @@ class FaultInjectingFS:
     MUTATING call (reads never fail — a crashed process doesn't corrupt
     what it only read)."""
 
-    _MUTATORS = {"write_text_atomic", "rename", "delete", "mkdirs",
-                 "delete_dir_if_empty"}
+    _MUTATORS = {"write_text_atomic", "rename", "delete", "mkdirs"}
 
     def __init__(self, inner, budget: int):
         self._inner = inner

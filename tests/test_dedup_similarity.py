@@ -791,7 +791,8 @@ def test_minhash_signature_arrow_matches_python(spark, sf_dir):
     its set) must be BIT-identical to the per-doc pandas_udf path on
     adversarial shapes (NULL, empty, whitespace-only, bidi-class control
     whitespace \\x1c, NBSP/unicode, shorter-than-n, repeats, long) and on
-    a real corpus slice, at several (num_hashes, shingle_n) shapes."""
+    a real corpus slice, at several (num_hashes, shingle_n) shapes, and
+    with an id column whose name needs quoting."""
     from redpanda_spark.dedup.minhash import minhash_signature
 
     rows = [
@@ -802,12 +803,13 @@ def test_minhash_signature_arrow_matches_python(spark, sf_dir):
     ]
     adv = spark.createDataFrame(rows, "doc_id int, text string")
     corpus = load_table(spark, sf_dir, "documents").limit(300)
-    for df in (adv, corpus):
+    quoted = adv.withColumnRenamed("doc_id", "doc id")
+    for df, id_col in ((adv, "doc_id"), (corpus, "doc_id"), (quoted, "doc id")):
         for num_hashes, shingle_n in ((32, 3), (8, 2)):
-            kw = dict(num_hashes=num_hashes, shingle_n=shingle_n)
+            kw = dict(id_col=id_col, num_hashes=num_hashes, shingle_n=shingle_n)
             a = minhash_signature(df, arrow_kernel=False, **kw).collect()
             b = minhash_signature(df, arrow_kernel=True, **kw).collect()
-            assert sorted(r["doc_id"] for r in a) == sorted(r["doc_id"] for r in b)
-            sig_a = {r["doc_id"]: r["sig"] for r in a}
-            sig_b = {r["doc_id"]: r["sig"] for r in b}
+            assert sorted(r[id_col] for r in a) == sorted(r[id_col] for r in b)
+            sig_a = {r[id_col]: r["sig"] for r in a}
+            sig_b = {r[id_col]: r["sig"] for r in b}
             assert sig_a == sig_b, (num_hashes, shingle_n)

@@ -4,7 +4,10 @@ reference's produce/consume e2e suite (`produce_consume_test.cc`,
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -457,6 +460,52 @@ def test_rewrite_crash_before_manifest_commit_keeps_old_snapshot(spark, tmp_path
         for r in eng2.log("rc").collect()
     }
     assert rows == {"a": "2", "b": "1"}
+
+
+def test_compaction_over_missing_segment_raises_and_keeps_the_rest(spark, tmp_path):
+    """A manifest-listed segment that is gone from disk is a read error,
+    never an empty log: compaction must raise instead of committing the
+    survivors away, and reads must fail rather than return 0 rows."""
+    root = str(tmp_path / "topics")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("ms", TopicConfig(partitions=1, cleanup_policy="compact"))
+    for i in range(4):
+        eng.produce("ms", [{"key": f"k{i}".encode(), "value": b"v"}])
+    files = list(eng._files["ms"])
+    assert len(files) == 4
+    os.remove(os.path.join(root, files[1]))
+
+    with pytest.raises(AnalysisException):
+        eng.run_compaction("ms")
+    assert eng._files["ms"] == files
+    assert eng.high_watermarks("ms") == {0: 4}
+    for f in files[:1] + files[2:]:
+        assert os.path.exists(os.path.join(root, f))
+    with pytest.raises(AnalysisException):
+        eng.log("ms").count()
+
+
+@pytest.mark.parametrize("n_records", [3, 0])
+def test_reopen_without_manifest_opens_empty_topic(spark, tmp_path, n_records):
+    """A cataloged topic whose manifest is missing (the crash window
+    between the catalog write and the first manifest commit, or a lost
+    manifest) reopens as the empty topic create_topic commits: watermark
+    0, stray segments GC'd, and the next produce starts at offset 0
+    without duplicating it."""
+    root = str(tmp_path / "topics")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("nm", TopicConfig(partitions=1))
+    if n_records:
+        eng.produce("nm", [{"value": f"v{i}".encode()} for i in range(n_records)])
+    os.remove(os.path.join(root, "_manifest_nm.json"))
+
+    eng2 = TopicEngine(spark, root)
+    assert eng2.high_watermarks("nm") == {0: 0}
+    assert eng2._files["nm"] == []
+    assert not [f for f in os.listdir(eng2._topic_dir("nm")) if f.endswith(".parquet")]
+    assert eng2.produce("nm", [{"value": b"new"}]) == {0: 0}
+    rows = eng2.log("nm").collect()
+    assert [(r["offset"], bytes(r["value"])) for r in rows] == [(0, b"new")]
 
 
 def _idem_batch(spark, pid, epoch, seqs, partition=0, tag="v"):

@@ -446,7 +446,6 @@ class _Inject:
         "rename",
         "delete",
         "mkdirs",
-        "delete_dir_if_empty",
         "create_exclusive",
     }
 

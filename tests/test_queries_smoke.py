@@ -33,7 +33,8 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
     layout for 100 TB fact-fact joins."""
     from pyspark.sql import functions as F
 
-    from redpanda_spark.sources.tables import load_table, write_bucketed
+    from redpanda_spark.sources.bucketed import write_bucketed
+    from redpanda_spark.sources.tables import load_table
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

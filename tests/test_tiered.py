@@ -517,6 +517,82 @@ def test_disaster_recovery_from_archive(spark, tmp_path):
     assert fresh.log("t").count() == 21
 
 
+def _archive_bytes(eng, topic):
+    ad = eng._archive_dir(topic)
+    return {
+        name: open(os.path.join(ad, name), "rb").read()
+        for name in os.listdir(ad)
+        if name.endswith(".parquet")
+    }
+
+
+def test_disaster_recovery_crash_before_manifest_keeps_archive(
+    spark, tmp_path, monkeypatch
+):
+    """A recovery that dies at its manifest write must leave the bucket
+    intact: the archive it read from is the only copy left, so the
+    reopen GC may not treat it as orphans, and a retry recovers it."""
+    bucket = str(tmp_path / "bucket")
+    cfg = TopicConfig(partitions=2, remote_write=True, local_retention_ms=1000)
+    src = TopicEngine(spark, str(tmp_path / "old_cluster"), archive_root=bucket)
+    src.create_topic("t", cfg)
+    for b in range(2):
+        src.produce(
+            "t",
+            [
+                {
+                    "partition": i % 2,
+                    "value": f"{b}:{i}".encode(),
+                    "timestamp": BASE + dt.timedelta(hours=b, seconds=i),
+                }
+                for i in range(10)
+            ],
+        )
+    src.run_archival("t", now_ms=_ms(BASE + dt.timedelta(hours=2)))
+    archived = _archive_bytes(src, "t")
+    assert len(archived) == 2
+
+    new_root = str(tmp_path / "new_cluster")
+    fresh = TopicEngine(spark, new_root, archive_root=bucket)
+
+    def _fail(topic):
+        raise OSError("manifest write failed")
+
+    monkeypatch.setattr(fresh, "_write_manifest_locked", _fail)
+    with pytest.raises(OSError, match="manifest write failed"):
+        fresh.recover_topic_from_archive("t", config=cfg)
+
+    reopened = TopicEngine(spark, new_root, archive_root=bucket)
+    assert _archive_bytes(reopened, "t") == archived
+    info = reopened.recover_topic_from_archive("t", config=cfg)
+    assert info["high_watermarks"] == {0: 10, 1: 10}
+    assert reopened.log("t").count() == 20
+
+
+def test_lost_manifest_keeps_archive_and_archives_past_it(spark, tmp_path):
+    """A tiered topic whose manifest is lost reopens empty, but its cold
+    segments are not GC'd, and later archival writes new names instead
+    of overwriting them."""
+    root = str(tmp_path / "r")
+    eng = _build(spark, root)
+    eng.run_archival("t", now_ms=_ms(BASE + dt.timedelta(hours=2)))
+    archived = _archive_bytes(eng, "t")
+    assert len(archived) == 2
+    os.remove(os.path.join(root, "_manifest_t.json"))
+
+    eng2 = TopicEngine(spark, root)
+    assert eng2.high_watermarks("t") == {0: 0, 1: 0}
+    assert not [f for f in os.listdir(eng2._topic_dir("t")) if f.endswith(".parquet")]
+    assert _archive_bytes(eng2, "t") == archived
+    eng2.produce("t", [{"partition": 0, "value": b"new", "timestamp": BASE}])
+    res = eng2.run_archival("t", now_ms=_ms(BASE + dt.timedelta(hours=2)))
+    assert res["archived"] == 1
+    after = _archive_bytes(eng2, "t")
+    assert len(after) == 3
+    assert {n: after[n] for n in archived} == archived
+    assert [bytes(r["value"]) for r in eng2.log("t").collect()] == [b"new"]
+
+
 def test_tiered_on_uri_roots(spark, tmp_path):
     """Object-store code path: hot root AND archive root as file:// URIs
     route every archival operation (byte copy, listings, manifest
