@@ -19,10 +19,8 @@ Performance design (matters at 100 TB):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
@@ -78,9 +76,12 @@ def _signature_batch(
     texts, num_hashes: int, shingle_n: int, seeds: np.ndarray
 ) -> np.ndarray:
     """(n_docs, num_hashes) int64 signature matrix for one Arrow batch of
-    text — ZERO per-document Python (r14).
+    text, with no per-document Python: the only per-item Python is
+    murmur2_flat folding its last few live shingles (at most
+    ``_SCALAR_LIVE_KEYS`` per call), whatever the batch size.
 
-    Same math as the historical per-doc loop, vectorized end to end:
+    Same math as a per-doc loop (str.split, the shingle set, scalar
+    murmur2, per-doc minima), vectorized end to end:
     tokenize with pyarrow's utf8_split_whitespace (whitespace set equal to
     Python str.split() — utf8proc includes the bidi-class controls; the
     boundary-empty tokens it emits are filtered), build every shingle with
@@ -89,8 +90,8 @@ def _signature_batch(
     fold per-doc minima with the segmented reduce. Shingles are NOT
     dedup'd: a min over a multiset equals the min over its set, so the
     signatures are bit-identical to the set-comprehension form (pinned by
-    test_minhash_signature_arrow_matches_python) while skipping the
-    per-doc Python set build entirely.
+    test_minhash_signature_arrow_matches_python against that per-doc
+    loop) while skipping the per-doc Python set build entirely.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -170,76 +171,37 @@ def minhash_signature(
     id_col: str = "doc_id",
     num_hashes: int = 32,
     shingle_n: int = 3,
-    arrow_kernel: bool = True,
 ) -> DataFrame:
     """(id, sig: array<bigint> of length num_hashes) — single pass.
 
-    Arrow-batched numpy kernel: per batch, all docs' shingles are hashed in
-    one vectorized murmur2 call, the k permutations are splitmix64 mixes of
-    (hash ^ seed_k), and per-doc minima come from a segmented reduce.
-    Measured ~4× over the equivalent JVM higher-order-function fold —
-    Catalyst interprets lambda expressions inside aggregate/zip_with, so
-    the "stay JVM-side" rule inverts here; the UDF is the vectorized path.
-
-    ``arrow_kernel=True`` (default, r14) runs the fully vectorized batch
-    kernel via mapInArrow — no per-document Python, no pandas string
-    materialization; signatures are bit-identical to the historical
-    per-doc loop (``arrow_kernel=False``, kept for the equivalence test
-    and as a fallback surface).
+    Arrow-batched numpy kernel via mapInArrow: per batch, all docs'
+    shingles are hashed in one vectorized murmur2 call, the k permutations
+    are splitmix64 mixes of (hash ^ seed_k), and per-doc minima come from
+    a segmented reduce — no per-document Python, no pandas string
+    materialization (see ``_signature_batch``). Measured ~4× over the
+    equivalent JVM higher-order-function fold — Catalyst interprets
+    lambda expressions inside aggregate/zip_with, so the "stay JVM-side"
+    rule inverts here; the batch kernel is the vectorized path.
     """
-    from redpanda_spark.functions.hashes import murmur2_batch
+    import pyarrow as pa
 
     seeds = _splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
+    out_schema = StructType(
+        [docs.schema[id_col], StructField("sig", ArrayType(LongType()))]
+    )
 
-    if arrow_kernel:
-        import pyarrow as pa
+    def gen(batches):
+        for batch in batches:
+            ids = batch.column(0)
+            sig = _signature_batch(batch.column(1), num_hashes, shingle_n, seeds)
+            n, k = sig.shape
+            siglist = pa.ListArray.from_arrays(
+                np.arange(0, (n + 1) * k, k, dtype=np.int32),
+                pa.array(sig.reshape(-1), type=pa.int64()),
+            )
+            yield pa.RecordBatch.from_arrays([ids, siglist], [id_col, "sig"])
 
-        out_schema = StructType(
-            [docs.schema[id_col], StructField("sig", ArrayType(LongType()))]
-        )
-
-        def gen(batches):
-            for batch in batches:
-                ids = batch.column(0)
-                sig = _signature_batch(batch.column(1), num_hashes, shingle_n, seeds)
-                n, k = sig.shape
-                siglist = pa.ListArray.from_arrays(
-                    np.arange(0, (n + 1) * k, k, dtype=np.int32),
-                    pa.array(sig.reshape(-1), type=pa.int64()),
-                )
-                yield pa.RecordBatch.from_arrays([ids, siglist], [id_col, "sig"])
-
-        return docs.select(id_col, text_col).mapInArrow(gen, out_schema)
-
-    @pandas_udf("array<bigint>")
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        counts: list[int] = []
-        shingles: list[bytes] = []
-        for t in texts:
-            toks = t.split() if t else []
-            if len(toks) < shingle_n:
-                sh = {" ".join(toks)}
-            else:
-                sh = {
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                }
-            counts.append(len(sh))
-            shingles.extend(s.encode() for s in sh)
-        n_docs = len(texts)
-        base = (
-            murmur2_batch(shingles).astype(np.uint64)
-            if shingles
-            else np.empty(0, dtype=np.uint64)
-        )
-        starts = np.zeros(n_docs, dtype=np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        acc = _doc_min_signatures(base, starts, seeds, n_docs)
-        # bigint output: drop the top bit so values fit signed int64
-        out = (acc >> np.uint64(1)).astype(np.int64)
-        return pd.Series(list(out.T))
-
-    return docs.select(F.col(id_col), sig_udf(F.col(text_col)).alias("sig"))
+    return docs.select(id_col, text_col).mapInArrow(gen, out_schema)
 
 
 def lsh_bands(sig_df: DataFrame, id_col: str = "doc_id", bands: int = 8) -> DataFrame:

@@ -8,8 +8,10 @@ Hamming distance, blocked by exact-band match: with 4 bands, any pair within
 Hamming distance 3 shares at least one band (pigeonhole), so the self-join
 is on band equality — never a cross product.
 
-Everything is `transform`/`aggregate` folds over token arrays (whole-stage
-codegen); no Python in the data path.
+The fingerprint is a `transform`/`aggregate` fold over the token array;
+the md5/48-bit variant runs the Arrow kernel ``simhash48_md5_kernel``
+instead, a bit-exact twin of that fold. Banding and the pair join are
+JVM-side.
 """
 
 from __future__ import annotations
@@ -153,7 +155,6 @@ def simhash_near_dups(
     max_hamming: int = 3,
     bits: int = SIMHASH_BITS,
     token_hash=None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """(id_a < id_b, hamming) pairs within ``max_hamming`` bits.
 
@@ -164,12 +165,11 @@ def simhash_near_dups(
 
     The md5/48-bit variant fingerprints through the Arrow kernel
     (``simhash48_md5_kernel``, bit-exact twin of the expression — see its
-    docstring); ``vectorized=False`` forces the expression path (the
-    equivalence tests exercise both). Other (bits, token_hash) shapes
-    (production xxhash64 default) stay on the JVM expression: no byte-
-    compatible Python xxhash64 exists in this environment."""
+    docstring). Other (bits, token_hash) shapes (production xxhash64
+    default) stay on the JVM expression: the package has no
+    byte-compatible Python xxhash64."""
     docs = parallelize_narrow(docs)
-    if vectorized and bits == 48 and token_hash is md5_hash48:
+    if bits == 48 and token_hash is md5_hash48:
         sh_expr = simhash48_md5_kernel(F.col(text_col))
     else:
         sh_expr = simhash(F.col(text_col), bits=bits, token_hash=token_hash)

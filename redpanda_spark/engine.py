@@ -839,7 +839,7 @@ class TopicEngine:
         optional headers/producer_id/producer_epoch/base_sequence.
 
         Pipeline (mirrors produce.cc): route partition (explicit, else
-        JVM-side murmur2(key), else round-robin via monotonic id) →
+        Arrow-batched murmur2(key), else round-robin via monotonic id) →
         timestamp validate/rewrite per topic timestamp_type → assign
         contiguous offsets from the stored high watermark → one write job
         (local (partition, offset) sort + flat parquet append), then the
@@ -913,11 +913,10 @@ class TopicEngine:
             )
             part = F.coalesce(F.col("partition").cast("int"), unrouted)
         else:
-            # Arrow-batched murmur2 kernel. (A pure-JVM murmur2 expression
-            # exists — functions.hashes.murmur2_partition_expr — but its
-            # expression tree costs ~1.3s of driver-side analysis PER
+            # Arrow-batched murmur2 kernel, not a JVM expression: murmur2
+            # as an expression tree cost ~1.3s of driver-side analysis PER
             # produce, measured; the UDF keeps the per-batch plan small,
-            # which dominates small-batch produce latency.)
+            # which dominates small-batch produce latency.
             # key-less batches (legal: null key = no routing affinity)
             # round-robin on the monotonic id, like null-keyed rows
             rr = F.pmod(F.col("_seq"), F.lit(n_parts)).cast("int")

@@ -190,7 +190,7 @@ _REP_UDF = None
 
 def _repetition_counts_kernel(c: Column) -> Column:
     """Arrow-batched twin of the two ``_runs`` folds + distinct count in
-    ``repetition_metrics`` (struct<n_tok,n_distinct,top2,dup5>). The
+    ``_repetition_metrics_expr`` (struct<n_tok,n_distinct,top2,dup5>). The
     expression form sorts and linearly folds two shingle arrays per doc
     under interpreted lambdas; the kernel computes the same four integers
     with one split + two Counter passes per doc in C. Integer-exact, so
@@ -218,9 +218,7 @@ def _repetition_counts_kernel(c: Column) -> Column:
     return _REP_UDF(c)
 
 
-def repetition_metrics(
-    col: Column | str, vectorized: bool = True
-) -> dict[str, Column]:
+def repetition_metrics(col: Column | str) -> dict[str, Column]:
     """Gopher-style within-document repetition signals (Rae et al. 2021,
     published quality-filter rules): documents dominated by repeated
     n-grams are boilerplate/spam and get filtered before training.
@@ -231,35 +229,34 @@ def repetition_metrics(
     - ``dup_5gram_frac``: fraction of word 5-grams occurring more than
       once.
 
-    All-JVM higher-order expressions, one scan, no shuffle. Gram counting
-    is a LINEAR run-length fold over the sorted gram array (an
-    O(distinct × total) nested filter-per-distinct was measured ~20×
-    slower under interpreted lambdas). Callers should filter docs with
-    fewer than 5 tokens (metrics are degenerate there and word_shingles
-    falls back to a whole-text shingle).
-
-    ``vectorized`` (default) computes the four underlying integers in the
-    Arrow kernel above — the folds don't codegen, so the batch kernel is
-    the §4.2 shape — and builds the SAME ratio expressions on top, so the
-    doubles are bit-identical; ``vectorized=False`` keeps the pure-
-    expression form (the equivalence test pins the two against each
-    other)."""
+    One scan, no shuffle. The four underlying integers come from the
+    Arrow kernel above — the expression folds don't codegen, so the batch
+    kernel is the §4.2 shape — and the ratio expressions are built on top
+    JVM-side; ``_repetition_metrics_expr`` is the pure-expression form
+    the doubles are tested bit-identical against. Callers should filter
+    docs with fewer than 5 tokens (metrics are degenerate there and
+    word_shingles falls back to a whole-text shingle)."""
     c = F.col(col) if isinstance(col, str) else col
-    if vectorized:
-        s = _repetition_counts_kernel(c)
-        n_tok = s["n_tok"]
+    s = _repetition_counts_kernel(c)
+    n_tok = s["n_tok"]
 
-        def _n_shingles_v(n: int) -> Column:
-            return F.when(n_tok < n, F.lit(1)).otherwise(
-                n_tok - F.lit(n) + F.lit(1)
-            )
+    def _n_shingles(n: int) -> Column:
+        return F.when(n_tok < n, F.lit(1)).otherwise(n_tok - F.lit(n) + F.lit(1))
 
-        return {
-            "dup_token_frac": F.lit(1.0)
-            - s["n_distinct"].cast("double") / n_tok,
-            "top_2gram_frac": s["top2"].cast("double") / _n_shingles_v(2),
-            "dup_5gram_frac": s["dup5"].cast("double") / _n_shingles_v(5),
-        }
+    return {
+        "dup_token_frac": F.lit(1.0) - s["n_distinct"].cast("double") / n_tok,
+        "top_2gram_frac": s["top2"].cast("double") / _n_shingles(2),
+        "dup_5gram_frac": s["dup5"].cast("double") / _n_shingles(5),
+    }
+
+
+def _repetition_metrics_expr(col: Column | str) -> dict[str, Column]:
+    """``repetition_metrics`` as all-JVM higher-order expressions: the
+    JVM-semantics reference for the kernel. Gram counting is a LINEAR
+    run-length fold over the sorted gram array (an O(distinct × total)
+    nested filter-per-distinct was measured ~20× slower under interpreted
+    lambdas)."""
+    c = F.col(col) if isinstance(col, str) else col
     toks = tokens(c)
 
     def _runs(grams):

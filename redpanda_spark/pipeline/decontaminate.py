@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from redpanda_spark.functions.text import tokens, word_shingles
 from redpanda_spark.sources.tables import parallelize_narrow
 
 
@@ -60,25 +59,14 @@ def _gram_udf(n: int):
 
 
 def _grams(
-    df: DataFrame, n: int, text_col: str, id_col: str, out_id: str,
-    use_arrow: bool = True,
+    df: DataFrame, n: int, text_col: str, id_col: str, out_id: str
 ) -> DataFrame:
     # the gram kernel is the CPU-bound stage and small corpus parquet
     # arrives as 1-2 splits — spread before it (no-op at scale)
     df = parallelize_narrow(df)
-    if use_arrow:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.explode(_gram_udf(n)(F.col(text_col))).alias("gram"),
-        )
-    return (
-        df.where(F.size(tokens(F.col(text_col))) >= n)
-        .select(
-            F.col(id_col).alias(out_id),
-            F.explode(F.array_distinct(word_shingles(F.col(text_col), n))).alias(
-                "gram"
-            ),
-        )
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.explode(_gram_udf(n)(F.col(text_col))).alias("gram"),
     )
 
 

@@ -13,22 +13,13 @@ oracle) regenerates the identical matrix. Inputs are quantized to
 integer milli-units before the fold, making every projected component
 an exact integer sum — bit-identical across engines and summation
 orders, the same exactness trick the quality classifier uses.
-
-Two implementations, same result:
-  project_expr  all-JVM expression (zip_with + aggregate per component)
-                — the oracle-paired path, plan stays UDF-free
-  project_arrow Arrow-batched numpy matmul over a broadcast sign matrix
-                — the throughput path for wide d·k (same shape as
-                similarity/ann.ivf_assign); parity-tested equal
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 def _sign(i: int, j: int, dim: int, seed: int) -> int:
     # md5 for real avalanche: multiplicative-hash parities left rows
@@ -72,25 +63,3 @@ def project_expr(
             )
         )
     return emb.withColumn("proj", F.array(*comps))
-
-
-def project_arrow(
-    emb: DataFrame, k: int, dim: int, vec_col: str = "embedding", seed: int = 0
-) -> DataFrame:
-    """Same projection as one numpy matmul per Arrow batch (broadcast
-    sign matrix) — the wide-model path; equals project_expr exactly."""
-    M = sign_matrix(k, dim, seed)
-    bc = emb.sparkSession.sparkContext.broadcast(M)
-
-    @pandas_udf("array<long>")
-    def proj_udf(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        y = np.array(list(vs), dtype=np.float64) * 1000
-        # half-away-from-zero, matching Spark/DuckDB ROUND (np.rint is
-        # half-to-even and would diverge on exact .5 boundaries)
-        x = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
-        out = x @ bc.value.T
-        return pd.Series(list(out))
-
-    return emb.withColumn("proj", proj_udf(F.col(vec_col).cast("array<double>")))

@@ -381,7 +381,6 @@ def translate_avro_topic(
     log: DataFrame,
     schema_json: str,
     wire_framed: bool = False,
-    use_jvm: str = "auto",
 ) -> DataFrame:
     """Decode Avro binary values into typed columns + system struct + hour.
 
@@ -390,8 +389,7 @@ def translate_avro_topic(
     decode entirely JVM-side (the 100 TB path — parity with the
     reference's native `schema_avro.cc` decode); otherwise an
     Arrow-batched pandas UDF over registry.avro_codec. Both are narrow
-    per-row maps — no shuffle, no driver involvement. ``use_jvm``:
-    "auto" | "never" (force the Python codec, used by the parity test).
+    per-row maps — no shuffle, no driver involvement.
     """
     from redpanda_spark.registry.avro_codec import decode_datum, resolve_names
 
@@ -400,7 +398,7 @@ def translate_avro_topic(
     if not isinstance(value_type, T.StructType):
         raise ValueError("top-level avro schema must be a record")
 
-    if use_jvm == "auto" and _jvm_avro_ready(log.sparkSession):
+    if _jvm_avro_ready(log.sparkSession):
         from pyspark.sql.avro.functions import from_avro
 
         decoded = log.select(
@@ -443,7 +441,6 @@ def translate_proto_topic(
     msg_name: str,
     wire_framed: bool = False,
     desc_set: bytes | None = None,
-    use_jvm: str = "auto",
 ) -> DataFrame:
     """Decode Protobuf wire-format values into typed columns + system struct
     + hour (schema_protobuf.cc parity), via registry.proto_codec.
@@ -451,15 +448,14 @@ def translate_proto_topic(
     JVM fast path: when the spark-protobuf package is loadable AND the
     caller supplies a compiled ``desc_set`` (FileDescriptorSet bytes —
     Spark's from_protobuf cannot consume .proto text), decode stays
-    JVM-side; otherwise the Arrow-batched Python codec runs. ``use_jvm``:
-    "auto" | "never"."""
+    JVM-side; otherwise the Arrow-batched Python codec runs."""
     from redpanda_spark.registry.proto_codec import decode_message
     from redpanda_spark.registry.protobuf_compat import parse_proto
 
     schema = parse_proto(proto_text)
     value_type = proto_spark_type(schema, msg_name)
 
-    if use_jvm == "auto" and desc_set is not None and _jvm_proto_ready(log.sparkSession):
+    if desc_set is not None and _jvm_proto_ready(log.sparkSession):
         from pyspark.sql.protobuf.functions import from_protobuf
 
         decoded = log.select(

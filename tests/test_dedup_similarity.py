@@ -269,13 +269,24 @@ def test_span_dedup_flags_planted_boilerplate(spark):
     assert out[0]["cleaned_md5"] != out[1]["cleaned_md5"]
 
 
-def test_srp_expr_and_arrow_paths_agree(spark, sf_dir):
-    from redpanda_spark.similarity.projection import project_arrow, project_expr
+def test_srp_expr_matches_numpy_reference(spark, sf_dir):
+    """project_expr equals the quantized numpy matmul over sign_matrix
+    exactly, every vector."""
+    import numpy as np
+
+    from redpanda_spark.similarity.projection import project_expr, sign_matrix
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = {r["vec_id"]: list(r["proj"]) for r in project_expr(emb, 8, 64).select("vec_id", "proj").collect()}
-    b = {r["vec_id"]: list(r["proj"]) for r in project_arrow(emb, 8, 64).select("vec_id", "proj").collect()}
-    assert a == b  # exact integer equality, every vector
+    got = {r["vec_id"]: list(r["proj"]) for r in project_expr(emb, 8, 64).select("vec_id", "proj").collect()}
+    M = sign_matrix(8, 64)
+    want = {}
+    for r in emb.select("vec_id", "embedding").collect():
+        y = np.array(r["embedding"], dtype=np.float64) * 1000
+        # half-away-from-zero, matching Spark/DuckDB ROUND (np.rint is
+        # half-to-even and would diverge on exact .5 boundaries)
+        x = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+        want[r["vec_id"]] = [int(v) for v in M @ x]
+    assert got == want
 
 
 def test_srp_preserves_pairwise_similarity(spark, sf_dir):
@@ -644,13 +655,13 @@ def test_bm25_topk_truncates_and_orders(spark, sf_dir):
 
 def test_minhash_kernel_paths_identical():
     """The signature kernel has two memory regimes (one-shot (k,S) matrix
-    vs per-k segmented passes, minhash.py sig_udf); both must produce the
+    vs per-k segmented passes, minhash._doc_min_signatures); both must produce the
     exact minima the scatter-free layout promises. Pure-numpy check so the
     long-document fallback (never hit at test SF) is still exercised."""
     import numpy as np
 
     from redpanda_spark.dedup.minhash import _splitmix64
-    from redpanda_spark.functions.hashes import murmur2_batch
+    from redpanda_spark.functions.hashes import murmur2
 
     rng = np.random.default_rng(42)
     num_hashes = 16
@@ -660,7 +671,7 @@ def test_minhash_kernel_paths_identical():
         f"tok{rng.integers(0, 500)} tok{rng.integers(0, 500)}".encode()
         for _ in range(int(counts.sum()))
     ]
-    base = murmur2_batch(shingles).astype(np.uint64)
+    base = np.array([murmur2(sh) for sh in shingles], dtype=np.uint64)
     starts = np.zeros(len(counts), dtype=np.int64)
     np.cumsum(counts[:-1], out=starts[1:])
 
@@ -755,10 +766,10 @@ def test_simhash_md5_kernel_matches_expression(spark):
     expression form (simhash(bits=48, token_hash=md5_hash48)) on
     adversarial shapes — NULL, empty, Java-\\s-only whitespace, NBSP/
     unicode tokens (Java \\s is ASCII-only; Python's is not), ties,
-    long docs — and the two simhash_near_dups paths must emit the same
-    pair set."""
+    long docs — and simhash_near_dups (kernel) must emit the same pair set
+    as the banded join over the expression fingerprints."""
     from redpanda_spark.dedup.simhash import (
-        md5_hash48, simhash, simhash48_md5_kernel,
+        N_BANDS, hash_near_dup_pairs, md5_hash48, simhash, simhash48_md5_kernel,
     )
     rows = [
         (1, None), (2, ""), (3, " \t\n\x0b\f\r "), (4, "one"),
@@ -779,21 +790,41 @@ def test_simhash_md5_kernel_matches_expression(spark):
             "once semantics using checkpoints for recovery")
     docs = docs_df(spark, [base, base.replace("records", "events"),
                            "totally unrelated short text"])
-    kw = dict(max_hamming=12, bits=48, token_hash=md5_hash48)
-    a = simhash_near_dups(docs, vectorized=False, **kw)
-    b = simhash_near_dups(docs, vectorized=True, **kw)
+    sh = docs.select(
+        F.col("doc_id").alias("id"),
+        simhash(F.col("text"), bits=48, token_hash=md5_hash48).alias("sh"),
+    )
+    a = hash_near_dup_pairs(
+        sh, hash_col="sh", max_hamming=12, bits=48, n_bands=N_BANDS
+    )
+    b = simhash_near_dups(docs, max_hamming=12, bits=48, token_hash=md5_hash48)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_minhash_signature_arrow_matches_python(spark, sf_dir):
     """The vectorized Arrow signature kernel (mapInArrow, zero per-doc
     Python, non-dedup'd shingles — min over a multiset equals min over
-    its set) must be BIT-identical to the per-doc pandas_udf path on
-    adversarial shapes (NULL, empty, whitespace-only, bidi-class control
-    whitespace \\x1c, NBSP/unicode, shorter-than-n, repeats, long) and on
-    a real corpus slice, at several (num_hashes, shingle_n) shapes, and
-    with an id column whose name needs quoting."""
-    from redpanda_spark.dedup.minhash import minhash_signature
+    its set) must be BIT-identical to a per-doc reference (str.split,
+    shingle set, scalar murmur2) on adversarial shapes (NULL, empty,
+    whitespace-only, bidi-class control whitespace \\x1c, NBSP/unicode,
+    shorter-than-n, repeats, long) and on a real corpus slice, at several
+    (num_hashes, shingle_n) shapes, and with an id column whose name
+    needs quoting."""
+    import numpy as np
+
+    from redpanda_spark.dedup.minhash import (
+        _doc_min_signatures, _splitmix64, minhash_signature,
+    )
+    from redpanda_spark.functions.hashes import murmur2
+
+    def reference(text, num_hashes, shingle_n):
+        toks = text.split() if text else []
+        n = max(len(toks) - shingle_n + 1, 1)
+        sh = {" ".join(toks[i : i + shingle_n]) for i in range(n)}
+        base = np.array([murmur2(s.encode()) for s in sh], dtype=np.uint64)
+        seeds = _splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
+        acc = _doc_min_signatures(base, np.zeros(1, np.int64), seeds, 1)
+        return [int(v) for v in (acc[:, 0] >> np.uint64(1))]
 
     rows = [
         (1, None), (2, ""), (3, " \t\n\x0b\f\r "), (4, "one"),
@@ -807,9 +838,10 @@ def test_minhash_signature_arrow_matches_python(spark, sf_dir):
     for df, id_col in ((adv, "doc_id"), (corpus, "doc_id"), (quoted, "doc id")):
         for num_hashes, shingle_n in ((32, 3), (8, 2)):
             kw = dict(id_col=id_col, num_hashes=num_hashes, shingle_n=shingle_n)
-            a = minhash_signature(df, arrow_kernel=False, **kw).collect()
-            b = minhash_signature(df, arrow_kernel=True, **kw).collect()
-            assert sorted(r[id_col] for r in a) == sorted(r[id_col] for r in b)
-            sig_a = {r[id_col]: r["sig"] for r in a}
-            sig_b = {r[id_col]: r["sig"] for r in b}
-            assert sig_a == sig_b, (num_hashes, shingle_n)
+            got = minhash_signature(df, **kw).collect()
+            want = {
+                r[id_col]: reference(r["text"], num_hashes, shingle_n)
+                for r in df.select(id_col, "text").collect()
+            }
+            assert sorted(r[id_col] for r in got) == sorted(want)
+            assert {r[id_col]: r["sig"] for r in got} == want, (num_hashes, shingle_n)

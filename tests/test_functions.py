@@ -35,35 +35,16 @@ def test_murmur2_partition_range():
 
 
 def test_murmur2_udf_matches_python(spark):
-    keys = [b"foobar", b"21", b"abc", None, b"\x00\x01\x02"]
-    df = spark.createDataFrame([Row(key=k) for k in keys])
+    # one batch of more keys than murmur2_flat's _SCALAR_LIVE_KEYS runs the
+    # vectorized rounds; the 300-byte key is among the last live keys,
+    # which the scalar chunk fold finishes
+    keys = [b"foobar", b"21", b"abc", None, b"\x00\x01\x02", bytes(range(256)) + b"k" * 44]
+    keys += [b"key-%d" % i for i in range(40)]
+    df = spark.createDataFrame([Row(key=k) for k in keys]).coalesce(1)
     out = df.select(murmur2_partition_udf(16)(F.col("key")).alias("p")).collect()
     for k, r in zip(keys, out):
         expected = -1 if k is None else murmur2_partition(k, 16)
         assert r["p"] == expected
-
-
-def test_murmur2_jvm_expr_matches_python(spark):
-    """The pure-JVM murmur2 expression is byte-compatible with the scalar
-    reference over every tail length, golden vectors included."""
-    import random
-
-    from redpanda_spark.functions.hashes import murmur2_expr, murmur2_partition_expr
-
-    rnd = random.Random(7)
-    keys = [b"", b"a", b"ab", b"abc", b"abcd", b"abcde", *KAFKA_MURMUR2_GOLDEN]
-    keys += [
-        bytes(rnd.randrange(256) for _ in range(rnd.randrange(0, 40)))
-        for _ in range(120)
-    ]
-    df = spark.createDataFrame([(k,) for k in keys], "key binary")
-    out = df.select(
-        murmur2_expr(F.col("key")).alias("h"),
-        murmur2_partition_expr(F.col("key"), 12).alias("p"),
-    ).collect()
-    for k, r in zip(keys, out):
-        assert r["h"] == murmur2(k), k
-        assert r["p"] == murmur2_partition(k, 12), k
 
 
 def test_token_count_and_ratios(spark):
@@ -386,8 +367,8 @@ def test_word_shingles_zipwith_matches_index_formulation(spark):
 
 
 def test_repetition_kernel_matches_expression(spark):
-    """The Arrow repetition kernel (vectorized=True, the default) must
-    equal the pure-expression fold form metric-for-metric at 6dp on every
+    """The Arrow repetition kernel (repetition_metrics) must equal the
+    pure-expression fold form metric-for-metric at 6dp on every
     in-contract shape: ≥1 token (0-token docs are outside the documented
     contract — both forms ANSI-divide-by-zero there), NULL text, unicode
     and NBSP tokens (Java \\s is ASCII-only), ties, heavy repeats."""
@@ -400,16 +381,16 @@ def test_repetition_kernel_matches_expression(spark):
     ]
     df = spark.createDataFrame(rows, "text string")
 
-    def cols(vec):
-        m = TXT.repetition_metrics("text", vectorized=vec)
+    def cols(metrics):
+        m = metrics("text")
         return [
             F.round(m["dup_token_frac"], 6).alias("dt"),
             F.round(m["top_2gram_frac"], 6).alias("t2"),
             F.round(m["dup_5gram_frac"], 6).alias("d5"),
         ]
 
-    got = df.select(*cols(True)).collect()
-    want = df.select(*cols(False)).collect()
+    got = df.select(*cols(TXT.repetition_metrics)).collect()
+    want = df.select(*cols(TXT._repetition_metrics_expr)).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
@@ -456,3 +437,35 @@ def test_murmur2_flat_matches_scalar():
     assert (got == want).all()
     # empty input
     assert murmur2_flat(np.zeros(0, np.uint8), np.zeros(1, np.int64)).size == 0
+
+
+def test_murmur2_flat_long_keys_stay_vectorized(monkeypatch):
+    """A batch of many keys over 256 B runs the vectorized rounds: only the
+    last ``_SCALAR_LIVE_KEYS`` live keys reach the per-key scalar fold, so
+    no input length turns the kernel into one Python call per key."""
+    import random
+
+    import numpy as np
+    import pyarrow as pa
+
+    from redpanda_spark.functions import hashes
+
+    random.seed(12)
+    keys = [
+        bytes(random.randrange(256) for _ in range(random.randrange(300, 420)))
+        for _ in range(500)
+    ]
+    want = np.array([murmur2(k) for k in keys], dtype=np.uint32)
+    calls = []
+    fold = hashes._mix_chunks
+
+    def counted_fold(h, data):
+        calls.append(len(data))
+        return fold(h, data)
+
+    monkeypatch.setattr(hashes, "_mix_chunks", counted_fold)
+    got = hashes.murmur2_flat(
+        *hashes.string_array_bytes_offsets(pa.array(keys, type=pa.binary()))
+    )
+    assert (got == want).all()
+    assert 0 < len(calls) <= hashes._SCALAR_LIVE_KEYS

@@ -8,23 +8,34 @@ handful of random workloads against an in-Python reference model.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from redpanda_spark.functions.hashes import murmur2, murmur2_batch
+from redpanda_spark.functions.hashes import (
+    murmur2,
+    murmur2_flat,
+    string_array_bytes_offsets,
+)
 from redpanda_spark.operators.coordinator import range_assign, roundrobin_assign
 from redpanda_spark.security import AclBinding, AclStore
 
-# -- murmur2: vectorized batch kernel ≡ scalar reference ------------------
+# -- murmur2: vectorized flat kernel ≡ scalar reference -------------------
 
 
-@given(st.lists(st.one_of(st.none(), st.binary(min_size=0, max_size=40)), max_size=30))
+# up to 80 keys of 0-40 B and 200-600 B: lists longer than
+# murmur2_flat's _SCALAR_LIVE_KEYS hand their last live keys to the scalar
+# chunk fold mid-key, shorter ones fold every key in scalar
+@given(
+    st.lists(
+        st.one_of(st.binary(max_size=40), st.binary(min_size=200, max_size=600)),
+        max_size=80,
+    )
+)
 @settings(max_examples=200)
-def test_murmur2_batch_matches_scalar(keys):
-    out = murmur2_batch(keys)
-    for k, h in zip(keys, out):
-        if k is not None:
-            assert int(h) == murmur2(bytes(k))
+def test_murmur2_flat_matches_scalar(keys):
+    out = murmur2_flat(*string_array_bytes_offsets(pa.array(keys, type=pa.binary())))
+    assert [int(h) for h in out] == [murmur2(k) for k in keys]
 
 
 # -- ACL algebra: store ≡ brute-force model -------------------------------

@@ -338,7 +338,7 @@ def test_translate_topic_streaming(spark, tmp_path):
     assert sorted(r["a"] for r in spark.table(name).collect()) == list(range(5))
 
 
-def test_translate_avro_jvm_fast_path_parity(spark):
+def test_translate_avro_jvm_fast_path_parity(spark, monkeypatch):
     """When spark-avro is loadable, the JVM from_avro path must agree with
     the Python codec path on identical wire bytes (schema_avro.cc decodes
     natively in the reference; this pins both our paths to one answer).
@@ -352,10 +352,11 @@ def test_translate_avro_jvm_fast_path_parity(spark):
     payloads = [avro_encode(sch, {"a": i, "b": f"v{i}"}) for i in range(4)]
     log = _log_df(spark, payloads)
     jvm_rows = sorted(
-        (r["a"], r["b"]) for r in translate_avro_topic(log, sch, use_jvm="auto").collect()
+        (r["a"], r["b"]) for r in translate_avro_topic(log, sch).collect()
     )
+    monkeypatch.setattr(dl, "_JVM_AVRO_READY", False)
     py_rows = sorted(
-        (r["a"], r["b"]) for r in translate_avro_topic(log, sch, use_jvm="never").collect()
+        (r["a"], r["b"]) for r in translate_avro_topic(log, sch).collect()
     )
     assert jvm_rows == py_rows
 
@@ -368,7 +369,7 @@ def test_jvm_probe_falls_back_cleanly(spark):
     assert dl._jvm_avro_ready(spark) in (True, False)  # no raise
     sch = '{"type":"record","name":"e","fields":[{"name":"a","type":"long"}]}'
     out = translate_avro_topic(
-        _log_df(spark, [avro_encode(sch, {"a": 7})]), sch, use_jvm="auto"
+        _log_df(spark, [avro_encode(sch, {"a": 7})]), sch
     ).collect()
     assert out[0]["a"] == 7
 
@@ -738,8 +739,8 @@ def test_metadata_tables_snapshots_files_history(spark, tmp_path):
 
 def test_jvm_auto_selection_routing_guard(spark, monkeypatch):
     """Auto-selection regression guard (r5 VERDICT item 7): when the probe
-    reports the spark-avro / spark-protobuf package present,
-    ``use_jvm='auto'`` MUST route to the JVM decode path — never silently
+    reports the spark-avro / spark-protobuf package present, translate
+    MUST route to the JVM decode path — never silently
     fall back to the Python codec. In containers WITH the package the
     built plan is checked for the absence of a Python eval node; in
     containers WITHOUT it (this one) presence is simulated, and the
@@ -754,17 +755,16 @@ def test_jvm_auto_selection_routing_guard(spark, monkeypatch):
     payloads = [avro_encode(sch, {"a": i, "b": f"v{i}"}) for i in range(3)]
     log = _log_df(spark, payloads)
     if dl._jvm_avro_ready(spark):
-        plan = dl.translate_avro_topic(
-            log, sch, use_jvm="auto"
-        )._jdf.queryExecution().toString()
+        plan = dl.translate_avro_topic(log, sch)._jdf.queryExecution().toString()
         assert "EvalPython" not in plan and "pythonudf" not in plan.lower()
     else:
         monkeypatch.setattr(dl, "_JVM_AVRO_READY", True)
         with pytest.raises(Exception):  # JavaPackage not callable / Py4J
-            dl.translate_avro_topic(log, sch, use_jvm="auto").collect()
-        # explicit opt-out still takes the Python codec under a ready probe
-        out = dl.translate_avro_topic(log, sch, use_jvm="never").collect()
-        assert sorted(r["a"] for r in out) == [0, 1, 2]
+            dl.translate_avro_topic(log, sch).collect()
+    # an absent package takes the Python codec
+    monkeypatch.setattr(dl, "_JVM_AVRO_READY", False)
+    out = dl.translate_avro_topic(log, sch).collect()
+    assert sorted(r["a"] for r in out) == [0, 1, 2]
 
     # protobuf twin (JVM path additionally requires a descriptor set)
     if not dl._jvm_proto_ready(spark):
@@ -774,9 +774,10 @@ def test_jvm_auto_selection_routing_guard(spark, monkeypatch):
         proto = 'syntax = "proto3"; message M { int64 a = 1; }'
         plog = _log_df(spark, [encode_message(proto, "M", {"a": 1})])
         with pytest.raises(Exception):
-            dl.translate_proto_topic(
-                plog, proto, "M", desc_set=b"\x00", use_jvm="auto"
-            ).collect()
+            dl.translate_proto_topic(plog, proto, "M", desc_set=b"\x00").collect()
+        # without a descriptor set the Python codec runs under a ready probe
+        out = dl.translate_proto_topic(plog, proto, "M").collect()
+        assert [r["a"] for r in out] == [1]
 
 
 # -- Iceberg v2 export (standard-format interop) ---------------------------

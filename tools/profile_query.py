@@ -6,8 +6,8 @@ each query's ``explain("formatted")`` to plans/<round>/<name>_<tag>.txt so
 plan claims are reviewable offline.
 
 Usage:
-  python tools/profile_query.py [--runs N] [--tag before|after] \
-      [--sf-dir DIR] [--noop] query [query ...]
+  python tools/profile_query.py --round ROUND [--runs N] \
+      [--tag before|after] [--sf-dir DIR] [--noop] query [query ...]
 
 ``--noop`` times ``df.write.format("noop")`` instead of ``count()``
 (guide §1.4) — used for isolating computation cost; the bench's own
@@ -31,10 +31,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--tag", default=None, help="write plans/r13/<q>_<tag>.txt")
+    ap.add_argument("--tag", default=None, help="write plans/<round>/<q>_<tag>.txt")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--noop", action="store_true")
-    ap.add_argument("--round", dest="round_dir", default="r13")
+    ap.add_argument("--round", dest="round_dir", required=True)
     args = ap.parse_args()
 
     spark = get_spark("profile")
