@@ -641,47 +641,49 @@ def last_snapshot_meta(spark, path: str) -> dict | None:
 
 
 def _load_lake_manifest(fs, manifest: str) -> dict:
-    m = json.loads(fs.read_text(manifest))
-    if "snapshots" not in m and "files" in m:  # migrate v1 single-snapshot
-        m["snapshots"] = [{"id": 1, "files": m["files"]}]
-    m.setdefault("snapshots", [])
-    m.setdefault("expired", [])
-    return m
+    return json.loads(fs.read_text(manifest))
 
 
 def write_datalake(
     df: DataFrame,
     path: str,
     mode: str = "append",
-    fmt: str = "parquet",
     meta: dict | None = None,
 ) -> list[str]:
-    """Hour-partitioned table write with snapshot semantics.
+    """Hour-partitioned Parquet table write with snapshot semantics.
 
     Iceberg-commit analog (`datalake/coordinator/iceberg_file_committer.cc`):
     data files land under ``path`` first, then a ``_manifest.json`` holding
     the snapshot history — each snapshot is the complete live-file list at
     its commit — is swapped in with one atomic rename, the same commit
     pattern the engine uses for topic mutations (engine.py::
-    _commit_manifest). Readers that honor the manifest (read_datalake)
-    never observe a half-written snapshot; a crash before the rename leaves
-    the previous manifest intact and the orphaned files invisible. File
-    listing and the manifest swap go through redpanda_spark.fsio, so URI
+    _commit_manifest). An append commits the previous snapshot's files
+    plus the files this write added (the listing diff around the Spark
+    write, as in the engine's produce), so files a crashed writer left
+    behind never enter a snapshot. Readers that honor the manifest
+    (read_datalake) never observe a half-written snapshot. File listing
+    and the manifest swap go through redpanda_spark.fsio, so URI
     (object-store) table paths behave identically. Returns the newly
     committed snapshot's file list (path-relative).
 
     ``mode="overwrite"`` physically deletes prior snapshots' data files
     (Spark's overwrite), so the prior snapshot ids move to the manifest's
     ``expired`` list — time travel to them raises a clear error instead
-    of file-not-found. The manifest read-modify-write assumes the
-    engine's single-writer model (one committer per table, like the
-    reference's datalake coordinator); concurrent writers need an
-    external lock.
+    of file-not-found. Table maintenance (compaction, expiry, deletes,
+    upserts) runs on the exported Iceberg table (sources/iceberg_maintain.py),
+    not here. The manifest read-modify-write assumes the engine's
+    single-writer model (one committer per table, like the reference's
+    datalake coordinator); concurrent writers need an external lock.
     """
     from redpanda_spark import fsio
 
     fs = fsio.for_root(df.sparkSession, path)
     manifest = os.path.join(path, "_manifest.json")
+    root = fs.normalize(path)
+
+    def listing() -> set[str]:
+        return {os.path.relpath(p, root) for p in fs.list_files_recursive(path)}
+
     # read the prior history BEFORE the write: Spark's overwrite truncates
     # the whole table path, manifest included
     snapshots: list[dict] = []
@@ -689,214 +691,43 @@ def write_datalake(
     if fs.exists(manifest):
         prev = _load_lake_manifest(fs, manifest)
         snapshots, expired = prev["snapshots"], prev["expired"]
-    df.write.mode(mode).partitionBy("_hour").format(fmt).save(path)
-    files = sorted(
-        os.path.relpath(p, fs.normalize(path))
-        for p in fs.list_files_recursive(path)
-    )
-    if mode == "overwrite" and snapshots:
-        expired = sorted(set(expired) | {s["id"] for s in snapshots})
-        snapshots = []
+    before = listing()
+    df.write.mode(mode).partitionBy("_hour").parquet(path)
+    after = listing()
+    if mode == "overwrite":
+        files = sorted(after)
+        if snapshots:
+            expired = sorted(set(expired) | {s["id"] for s in snapshots})
+            snapshots = []
+    else:
+        live = snapshots[-1]["files"] if snapshots else []
+        files = sorted(set(live) | (after - before))
     next_id = max(
         [s["id"] for s in snapshots] + expired + [0]
     ) + 1
     snap: dict = {"id": next_id, "files": files}
     if meta:
         snap["meta"] = meta  # e.g. streaming batch_id for replay skipping
-    import time as _time
-
-    snap["ts"] = _time.time()  # commit timestamp — AS OF time travel
     snapshots.append(snap)
     fs.write_text_atomic(
-        manifest, json.dumps({"format": fmt, "snapshots": snapshots, "expired": expired})
+        manifest, json.dumps({"snapshots": snapshots, "expired": expired})
     )
     return files
-
-
-def expire_snapshots(spark, path: str, keep_last: int = 1) -> dict:
-    """Snapshot expiry + orphan-file GC — the Iceberg ``expire_snapshots``
-    / ``remove_orphan_files`` maintenance pair (the reference expires
-    through its Iceberg catalog; commit side in
-    `datalake/coordinator/iceberg_file_committer.cc`). Keeps the newest
-    ``keep_last`` snapshots, deletes every data file referenced ONLY by
-    expired snapshots, and records the expired ids so time travel to them
-    raises a clear error. Bounds both manifest growth and dead-file disk
-    usage on a long-lived table. Single-writer, like the commit path."""
-    from redpanda_spark import fsio
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    fs = fsio.for_root(spark, path)
-    manifest = os.path.join(path, "_manifest.json")
-    m = _load_lake_manifest(fs, manifest)
-    snapshots = m["snapshots"]
-    if len(snapshots) <= keep_last:
-        return {"expired": 0, "deleted_files": 0}
-    kept, dropped = snapshots[-keep_last:], snapshots[:-keep_last]
-    live = {f for s in kept for f in s["files"]}
-    deleted = 0
-    for s in dropped:
-        for f in s["files"]:
-            if f not in live:
-                fs.delete(os.path.join(path, f))
-                deleted += 1
-    expired = sorted(set(m["expired"]) | {s["id"] for s in dropped})
-    fs.write_text_atomic(
-        manifest,
-        json.dumps(
-            {"format": m.get("format", "parquet"), "snapshots": kept, "expired": expired}
-        ),
-    )
-    return {"expired": len(dropped), "deleted_files": deleted}
-
-
-def rewrite_data_files(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    small_ratio: float = 0.75,
-) -> dict:
-    """Bin-pack small-file compaction — the Iceberg ``rewrite_data_files``
-    maintenance action (the streaming sink commits one snapshot per
-    micro-batch, so a continuously exported table accretes one small file
-    per partition per trigger; at 100 TB that's the classic lake
-    small-files problem: scan task count and manifest size grow without
-    bound).
-
-    Per hour-partition, files smaller than ``small_ratio × target`` are
-    read back and rewritten into ~target-size files; files already near
-    target are left untouched. The result is committed as a NEW snapshot
-    — rows identical, file list consolidated — while prior snapshots keep
-    their (still on disk) files, so time travel is unaffected until
-    ``expire_snapshots`` reclaims them. Crash safety mirrors the engine's
-    rewrite: new files land under unique names first and are invisible
-    until the manifest rename; a crash leaves orphans for
-    ``remove_orphan_files``. Single-writer, like every commit here.
-    """
-    from redpanda_spark import fsio
-
-    fs = fsio.for_root(spark, path)
-    manifest = os.path.join(path, "_manifest.json")
-    m = _load_lake_manifest(fs, manifest)
-    if not m["snapshots"]:
-        return {"rewritten": 0, "files_before": 0, "files_after": 0}
-    cur = m["snapshots"][-1]
-    live = cur["files"]
-
-    # group the snapshot's files by partition dir; pick the small ones
-    by_part: dict[str, list[str]] = {}
-    for f in live:
-        by_part.setdefault(os.path.dirname(f), []).append(f)
-    threshold = int(target_file_bytes * small_ratio)
-    rewrite: list[str] = []
-    for part, fl in by_part.items():
-        small = [f for f in fl if fs.getsize(os.path.join(path, f)) < threshold]
-        if len(small) >= 2:
-            rewrite.extend(small)
-    if not rewrite:
-        return {
-            "rewritten": 0,
-            "files_before": len(live),
-            "files_after": len(live),
-        }
-
-    # one job: read the small files (basePath keeps _hour), bin-pack to
-    # ~target-size outputs per partition, write to a temp dir
-    total = sum(fs.getsize(os.path.join(path, f)) for f in rewrite)
-    n_out = max(1, -(-total // target_file_bytes))
-    # temp dir is a SIBLING of the table path (like engine._rewrite) so
-    # table-path listings never see half-written files, even after a crash
-    tmp = fs.normalize(path).rstrip("/") + ".rewrite.tmp"
-    fs.delete(tmp, recursive=True)
-    df = (
-        spark.read.format(m.get("format", "parquet"))
-        .option("basePath", path)
-        .load([os.path.join(path, f) for f in rewrite])
-    )
-    df.repartition(n_out, "_hour").write.mode("overwrite").partitionBy(
-        "_hour"
-    ).format(m.get("format", "parquet")).save(tmp)
-
-    # move the new files into their partition dirs under unique names;
-    # they stay invisible until the manifest commit below
-    next_id = max([s["id"] for s in m["snapshots"]] + m["expired"] + [0]) + 1
-    new_rel: list[str] = []
-    tmp_root = fs.normalize(tmp)
-    for p in sorted(fs.list_files_recursive(tmp)):
-        rel = os.path.relpath(p, tmp_root)
-        dest_rel = os.path.join(
-            os.path.dirname(rel), f"compact-{next_id}-{os.path.basename(rel)}"
-        )
-        dest = os.path.join(path, dest_rel)
-        fs.mkdirs(os.path.dirname(dest))
-        fs.rename(p, dest)
-        new_rel.append(dest_rel)
-    fs.delete(tmp, recursive=True)
-
-    gone = set(rewrite)
-    files = sorted([f for f in live if f not in gone] + new_rel)
-    m["snapshots"].append(
-        {"id": next_id, "files": files, "meta": {"rewrite_of": cur["id"]}}
-    )
-    fs.write_text_atomic(
-        manifest,
-        json.dumps(
-            {
-                "format": m.get("format", "parquet"),
-                "snapshots": m["snapshots"],
-                "expired": m["expired"],
-            }
-        ),
-    )
-    return {
-        "rewritten": len(rewrite),
-        "files_before": len(live),
-        "files_after": len(files),
-        "snapshot_id": next_id,
-    }
-
-
-def remove_orphan_files(spark, path: str) -> dict:
-    """Delete data files referenced by NO snapshot — debris from a crash
-    between a rewrite/write and its manifest commit (Iceberg
-    ``remove_orphan_files``). Safe under the single-writer model: any
-    file a concurrent commit is about to reference would already be in
-    the manifest it reads."""
-    from redpanda_spark import fsio
-
-    fs = fsio.for_root(spark, path)
-    root = fs.normalize(path)
-    manifest = os.path.join(path, "_manifest.json")
-    m = _load_lake_manifest(fs, manifest)
-    live = {f for s in m["snapshots"] for f in s["files"]}
-    # crashed-rewrite temp dir (sibling of the table path)
-    fs.delete(root.rstrip("/") + ".rewrite.tmp", recursive=True)
-    deleted = 0
-    # list_files_recursive already excludes metadata basenames
-    # (_manifest.json, _SUCCESS, dotfiles)
-    for p in fs.list_files_recursive(path):
-        rel = os.path.relpath(p, root)
-        if rel not in live:
-            fs.delete(p)
-            deleted += 1
-    return {"deleted_files": deleted}
 
 
 def read_datalake(
     spark,
     path: str,
     snapshot_id: int | None = None,
-    as_of: float | None = None,
 ) -> DataFrame:
     """Snapshot read: only files listed in the committed manifest.
 
-    ``snapshot_id`` selects a historical snapshot, ``as_of`` (unix
-    seconds) the last snapshot committed at or before that time — the
-    two Iceberg time-travel forms. Default is the latest. Expired
-    snapshots raise a ValueError naming the expiry, never a
-    file-not-found from a dangling list. ``mergeSchema`` is on, so a
-    table whose later snapshots added columns (schema evolution) reads
-    with NULLs for pre-evolution rows — Iceberg add-column semantics.
+    ``snapshot_id`` selects a historical snapshot (time travel); default
+    is the latest. Snapshots expired by an overwrite raise a ValueError
+    naming the expiry, never a file-not-found from a dangling list.
+    ``mergeSchema`` is on, so a table whose later snapshots added columns
+    (schema evolution) reads with NULLs for pre-evolution rows — Iceberg
+    add-column semantics.
     """
     from redpanda_spark import fsio
 
@@ -904,14 +735,7 @@ def read_datalake(
     manifest = os.path.join(path, "_manifest.json")
     m = _load_lake_manifest(fs, manifest)
     snapshots = m["snapshots"]
-    if snapshot_id is not None and as_of is not None:
-        raise ValueError("pass snapshot_id or as_of, not both")
-    if as_of is not None:
-        eligible = [s for s in snapshots if s.get("ts", 0) <= as_of]
-        if not eligible:
-            raise ValueError(f"no snapshot committed at or before {as_of}")
-        snap = eligible[-1]
-    elif snapshot_id is None:
+    if snapshot_id is None:
         if not snapshots:
             raise ValueError(f"no live snapshots in {manifest}")
         snap = snapshots[-1]
@@ -919,205 +743,12 @@ def read_datalake(
         matches = [s for s in snapshots if s["id"] == snapshot_id]
         if not matches:
             if snapshot_id in m["expired"]:
-                raise ValueError(
-                    f"snapshot {snapshot_id} expired (expire_snapshots/overwrite)"
-                )
+                raise ValueError(f"snapshot {snapshot_id} expired (overwrite)")
             raise ValueError(f"no snapshot {snapshot_id} in {manifest}")
         snap = matches[0]
     full = [os.path.join(path, p) for p in snap["files"]]
     return (
-        spark.read.format(m.get("format", "parquet"))
-        .option("basePath", path)
+        spark.read.option("basePath", path)
         .option("mergeSchema", "true")
-        .load(full)
-    )
-
-
-def commit_snapshot(spark, path: str, df: DataFrame, meta: dict | None = None) -> int:
-    """Copy-on-write full-table commit that PRESERVES history: ``df``
-    becomes the new snapshot's complete contents, written to fresh files
-    (prior snapshots keep theirs — time travel intact until
-    ``expire_snapshots``), unlike ``mode="overwrite"``, which physically
-    deletes. The engine-side twin of Iceberg's replace commits. Returns
-    the new snapshot id."""
-    from redpanda_spark import fsio
-
-    fs = fsio.for_root(spark, path)
-    manifest = os.path.join(path, "_manifest.json")
-    m = _load_lake_manifest(fs, manifest)
-    fmt = m.get("format", "parquet")
-    tmp = fs.normalize(path).rstrip("/") + ".rewrite.tmp"
-    fs.delete(tmp, recursive=True)
-    df.write.mode("overwrite").partitionBy("_hour").format(fmt).save(tmp)
-    next_id = max([s["id"] for s in m["snapshots"]] + m["expired"] + [0]) + 1
-    tmp_root = fs.normalize(tmp)
-    new_rel: list[str] = []
-    for p in sorted(fs.list_files_recursive(tmp)):
-        rel = os.path.relpath(p, tmp_root)
-        dest_rel = os.path.join(
-            os.path.dirname(rel), f"cow-{next_id}-{os.path.basename(rel)}"
-        )
-        dest = os.path.join(path, dest_rel)
-        fs.mkdirs(os.path.dirname(dest))
-        fs.rename(p, dest)
-        new_rel.append(dest_rel)
-    fs.delete(tmp, recursive=True)
-    import time as _time
-
-    snap: dict = {"id": next_id, "files": sorted(new_rel), "ts": _time.time()}
-    if meta:
-        snap["meta"] = meta
-    m["snapshots"].append(snap)
-    fs.write_text_atomic(
-        manifest,
-        json.dumps(
-            {"format": fmt, "snapshots": m["snapshots"], "expired": m["expired"]}
-        ),
-    )
-    return next_id
-
-
-def apply_changelog(
-    spark,
-    path: str,
-    changes: DataFrame,
-    key_cols: list[str],
-    deleted_col: str = "_deleted",
-) -> dict:
-    """Apply a keyed changelog (CDC / compacted-topic semantics) to the
-    table: upsert rows, delete tombstoned keys, commit copy-on-write.
-
-    ``changes`` carries the table schema plus optionally ``_deleted``
-    boolean, ONE row per key (a duplicated key raises — pre-compact the
-    changelog with keep-latest first; dim_from_topic does exactly that). This is the merge the reference's users run downstream of the
-    datalake sink to turn an append log into a current-state table
-    (Iceberg MERGE INTO analog, copy-on-write strategy: rewrite touched
-    table, single commit)."""
-    live = read_datalake(spark, path)
-    dup = (
-        changes.groupBy(*key_cols).count().where(F.col("count") > 1).limit(1).count()
-    )
-    if dup:
-        raise ValueError(
-            "changes carry multiple rows for the same key — pre-compact the "
-            "changelog (keep-latest) so the merge is unambiguous"
-        )
-    has_del = deleted_col in changes.columns
-    dels = (
-        changes.where(F.col(deleted_col)).select(*key_cols)
-        if has_del
-        else changes.limit(0).select(*key_cols)
-    )
-    ups = changes.where(~F.col(deleted_col)) if has_del else changes
-    ups = ups.select(*[c for c in live.columns])
-    touched = changes.select(*key_cols).distinct()
-    kept = live.join(touched, key_cols, "left_anti")
-    merged = kept.unionByName(ups)
-    n_dels = dels.count()
-    sid = commit_snapshot(
-        spark, path, merged, meta={"changelog": True, "deletes": n_dels}
-    )
-    return {"snapshot_id": sid, "deleted_keys": n_dels}
-
-
-# -- Metadata tables (Iceberg `table.snapshots` / `.files` / `.history`) ----
-
-
-def snapshots_table(spark, path: str) -> DataFrame:
-    """`SELECT * FROM tbl.snapshots` analog: one row per snapshot (live
-    and expired) with commit timestamp, file count, and the commit meta.
-    Driver-side manifest parse — the manifest is control-plane sized."""
-    from redpanda_spark import fsio
-
-    fs = fsio.for_root(spark, path)
-    m = _load_lake_manifest(fs, os.path.join(path, "_manifest.json"))
-    expired = set(m["expired"])
-    rows = [
-        (
-            int(s["id"]),
-            float(s.get("ts", 0.0)),
-            len(s["files"]),
-            False,
-            json.dumps(s.get("meta", {})),
-        )
-        for s in m["snapshots"]
-    ] + [(int(i), None, None, True, "{}") for i in sorted(expired)]
-    return spark.createDataFrame(
-        rows,
-        "snapshot_id long, committed_at double, n_files int,"
-        " is_expired boolean, meta string",
-    )
-
-
-def files_table(spark, path: str, snapshot_id: int | None = None) -> DataFrame:
-    """`tbl.files` analog for one snapshot (default: current): data file
-    path, partition value, byte size, and record count. Record counts come
-    from a distributed footer scan grouped by input file — never a
-    driver-side loop over files."""
-    from redpanda_spark import fsio
-
-    fs = fsio.for_root(spark, path)
-    m = _load_lake_manifest(fs, os.path.join(path, "_manifest.json"))
-    snaps = m["snapshots"]
-    if not snaps:
-        raise ValueError(f"no live snapshots under {path}")
-    snap = snaps[-1] if snapshot_id is None else next(
-        (s for s in snaps if s["id"] == snapshot_id), None
-    )
-    if snap is None:
-        raise ValueError(f"snapshot {snapshot_id} not live under {path}")
-    data_files = list(snap["files"])
-    full = [os.path.join(fs.normalize(path), f) for f in data_files]
-    sizes = spark.createDataFrame(
-        [(f, int(fs.getsize(os.path.join(fs.normalize(path), f)))) for f in data_files],
-        "file_path string, size_bytes long",
-    )
-    # Match scan-side input_file_name() (a URI, possibly percent-escaped)
-    # back to manifest-relative paths by decoded-suffix match, not a
-    # layout-specific regexp — robust to non-hour layouts and URI escaping.
-    # This is a metadata table over the snapshot's file list, so the
-    # broadcast suffix join is over #files rows, not data rows.
-    counts = (
-        spark.read.format(m.get("format", "parquet"))
-        .load(full)
-        .groupBy(F.input_file_name().alias("_full"))
-        .agg(F.count(F.lit(1)).alias("record_count"))
-        .withColumn("_full", F.url_decode(F.col("_full")))
-        .join(
-            F.broadcast(sizes.select("file_path")),
-            F.col("_full").endswith(F.concat(F.lit("/"), F.col("file_path"))),
-            "left",
-        )
-    )
-    unmatched = counts.where(F.col("file_path").isNull())
-    if unmatched.limit(1).count():
-        bad = [r["_full"] for r in unmatched.select("_full").limit(5).collect()]
-        raise ValueError(
-            f"files_table: scanned file(s) not matched to the snapshot "
-            f"manifest (layout/URI mismatch): {bad}"
-        )
-    counts = counts.select("file_path", "record_count")
-    part = F.regexp_extract(F.col("file_path"), r"_hour=([^/]+)/", 1)
-    return (
-        sizes.join(counts, "file_path", "left")
-        .select(
-            F.lit(int(snap["id"])).alias("snapshot_id"),
-            "file_path",
-            F.when(part != "", part).alias("partition_hour"),
-            "size_bytes",
-            # a manifest file the scan never yielded rows/footers for is
-            # surfaced as NULL, not silently coalesced to 0
-            F.col("record_count"),
-        )
-    )
-
-
-def history_table(spark, path: str) -> DataFrame:
-    """`tbl.history` analog: commit timeline with the current flag."""
-    snaps = snapshots_table(spark, path)
-    cur = snaps.where(~F.col("is_expired")).agg(F.max("snapshot_id")).collect()[0][0]
-    return snaps.select(
-        "committed_at",
-        "snapshot_id",
-        (F.col("snapshot_id") == F.lit(cur)).alias("is_current_ancestor"),
+        .parquet(*full)
     )

@@ -521,8 +521,6 @@ def export_iceberg(
     )
     if snap is None:
         raise ValueError(f"snapshot {snapshot_id} not live under {lake_path}")
-    if m.get("format", "parquet") != "parquet":
-        raise ValueError("iceberg export requires parquet data files")
 
     # the table root's filesystem: plain local paths stay on the POSIX
     # fast path; URI roots (file:/hdfs:/s3a:/...) ride the Hadoop

@@ -399,6 +399,14 @@ def test_write_datalake_manifest_snapshot(spark, tmp_path):
     # a plain directory read would see the orphan's rows (sanity check that
     # the manifest is doing the work)
     assert spark.read.option("basePath", out).parquet(out).count() > 6
+    # the next append commits only the files it wrote: the orphan stays
+    # out of every later snapshot
+    more = translate_avro_topic(
+        _log_df(spark, [avro_encode(sch, {"a": 10 + i, "b": "x"}) for i in range(2)]),
+        sch,
+    )
+    write_datalake(more.drop("redpanda"), out)
+    assert read_datalake(spark, out).count() == 8
 
 
 def test_write_datalake_snapshot_time_travel(spark, tmp_path):
@@ -420,12 +428,8 @@ def test_write_datalake_snapshot_time_travel(spark, tmp_path):
 
 
 def test_expire_snapshots_gc_and_time_travel_error(spark, tmp_path):
-    """Write 3 snapshots, expire to 1: expired ids raise a clear error,
-    the live read is unchanged, and data files referenced only by expired
-    snapshots are physically deleted (Iceberg expire_snapshots +
-    remove_orphan_files analog)."""
-    from redpanda_spark.sources.datalake import expire_snapshots
-
+    """Write 3 snapshots, then overwrite: the prior ids expire with a clear
+    error, and the data files they referenced are physically deleted."""
     sch = '{"type":"record","name":"e","fields":[{"name":"a","type":"long"},{"name":"b","type":"string"}]}'
     out = str(tmp_path / "lake3")
 
@@ -450,14 +454,6 @@ def test_expire_snapshots_gc_and_time_travel_error(spark, tmp_path):
         )
 
     n_files_before = n_data_files()
-
-    stats = expire_snapshots(spark, out, keep_last=1)
-    assert stats["expired"] == 2 and stats["deleted_files"] == 0
-    # snapshots are cumulative file lists, so expiring keeps every file
-    # still referenced by the latest — the live read is unchanged
-    assert read_datalake(spark, out).count() == 7
-    with pytest.raises(ValueError, match="expired"):
-        read_datalake(spark, out, snapshot_id=1)
 
     # overwrite: old files deleted, prior ids expired with a clear error
     typed = translate_avro_topic(
@@ -567,59 +563,10 @@ def test_translate_avro_streaming(spark, tmp_path):
     assert sorted((r["a"], r["b"]) for r in rows) == [(i, f"v{i}") for i in range(5)]
 
 
-def test_rewrite_data_files_binpacks_and_preserves_rows(spark, tmp_path):
-    """5 append snapshots -> many small files; rewrite_data_files commits a
-    consolidated snapshot with identical rows, old snapshots still
-    time-travelable until expired, orphan GC cleans a crashed tmp dir."""
-    from redpanda_spark.sources.datalake import (
-        remove_orphan_files,
-        rewrite_data_files,
-    )
-
-    sch = '{"type":"record","name":"e","fields":[{"name":"a","type":"long"},{"name":"b","type":"string"}]}'
-    out = str(tmp_path / "lake4")
-    for s in range(5):
-        typed = translate_avro_topic(
-            _log_df(spark, [avro_encode(sch, {"a": s * 10 + i, "b": "x"}) for i in range(4)]),
-            sch,
-        ).drop("redpanda")
-        write_datalake(typed, out)
-
-    before = read_datalake(spark, out)
-    rows_before = sorted(r["a"] for r in before.select("a").collect())
-    stats = rewrite_data_files(spark, out, target_file_bytes=1 << 20)
-    assert stats["rewritten"] >= 2
-    assert stats["files_after"] < stats["files_before"]
-
-    after = read_datalake(spark, out)
-    assert sorted(r["a"] for r in after.select("a").collect()) == rows_before
-    # pre-rewrite snapshot still readable (its files are still on disk)
-    assert read_datalake(spark, out, snapshot_id=5).count() == 20
-    # second rewrite is a no-op (already packed)
-    assert rewrite_data_files(spark, out, target_file_bytes=1 << 20)["rewritten"] == 0
-
-    # expire history; then orphan GC (incl. a fake crashed tmp dir) leaves
-    # the live read intact
-    expire = __import__("redpanda_spark.sources.datalake", fromlist=["expire_snapshots"])
-    expire.expire_snapshots(spark, out, keep_last=1)
-    os.makedirs(out + ".rewrite.tmp/_hour=x", exist_ok=True)
-    open(out + ".rewrite.tmp/_hour=x/part-crash.parquet", "wb").write(b"junk")
-    part_dir = next(
-        os.path.join(out, d) for d in os.listdir(out) if d.startswith("_hour=")
-    )
-    open(os.path.join(part_dir, "part-orphan2.parquet"), "wb").write(b"junk")
-    gc = remove_orphan_files(spark, out)
-    assert gc["deleted_files"] >= 1
-    assert not os.path.exists(out + ".rewrite.tmp")
-    assert sorted(r["a"] for r in read_datalake(spark, out).select("a").collect()) == rows_before
-
-
 def test_schema_evolution_and_as_of_time_travel(spark, tmp_path):
     """Append a snapshot with an added column: old rows read as NULL for
-    the new column (Iceberg add-column); AS OF reads pick the last
-    snapshot committed at or before the given time."""
-    import time as _time
-
+    the new column (Iceberg add-column); a time-travel read of the first
+    snapshot sees its own schema."""
     sch1 = '{"type":"record","name":"e","fields":[{"name":"a","type":"long"}]}'
     sch2 = '{"type":"record","name":"e","fields":[{"name":"a","type":"long"},{"name":"b","type":"string"}]}'
     out = str(tmp_path / "lake_evo")
@@ -627,8 +574,6 @@ def test_schema_evolution_and_as_of_time_travel(spark, tmp_path):
         _log_df(spark, [avro_encode(sch1, {"a": i}) for i in range(3)]), sch1
     ).drop("redpanda")
     write_datalake(first, out)
-    t_between = _time.time()
-    _time.sleep(0.01)
     second = translate_avro_topic(
         _log_df(spark, [avro_encode(sch2, {"a": 10, "b": "new"})]), sch2
     ).drop("redpanda")
@@ -639,102 +584,8 @@ def test_schema_evolution_and_as_of_time_travel(spark, tmp_path):
     rows = {r["a"]: r["b"] for r in cur.collect()}
     assert rows[10] == "new" and rows[0] is None  # evolution NULLs
 
-    old = read_datalake(spark, out, as_of=t_between)
+    old = read_datalake(spark, out, snapshot_id=1)
     assert old.count() == 3 and "b" not in old.columns
-    with pytest.raises(ValueError, match="at or before"):
-        read_datalake(spark, out, as_of=0.0)
-
-
-def test_apply_changelog_upserts_and_tombstones(spark, tmp_path):
-    """CDC apply: update one key, insert one, delete one — committed
-    copy-on-write so the pre-merge snapshot stays time-travelable."""
-    from pyspark.sql import functions as F
-
-    from redpanda_spark.sources.datalake import apply_changelog
-
-    sch = '{"type":"record","name":"e","fields":[{"name":"a","type":"long"},{"name":"b","type":"string"}]}'
-    out = str(tmp_path / "lake_cdc")
-    base = translate_avro_topic(
-        _log_df(spark, [avro_encode(sch, {"a": i, "b": f"v{i}"}) for i in range(4)]),
-        sch,
-    ).drop("redpanda")
-    write_datalake(base, out)
-    live = read_datalake(spark, out)
-
-    hour = live.select("_hour").first()["_hour"]
-    changes = spark.createDataFrame(
-        [
-            (1, "UPDATED", hour, False),
-            (99, "INSERTED", hour, False),
-            (2, None, hour, True),  # tombstone
-        ],
-        "a long, b string, _hour timestamp, _deleted boolean",
-    ).withColumn("redpanda_ts", F.lit(None))  # extra col ignored by select
-    res = apply_changelog(spark, out, changes.drop("redpanda_ts"), ["a"])
-    assert res["deleted_keys"] == 1
-
-    now = {r["a"]: r["b"] for r in read_datalake(spark, out).collect()}
-    assert now == {0: "v0", 1: "UPDATED", 3: "v3", 99: "INSERTED"}
-    # pre-merge snapshot intact (copy-on-write)
-    pre = {r["a"]: r["b"] for r in read_datalake(spark, out, snapshot_id=1).collect()}
-    assert pre == {0: "v0", 1: "v1", 2: "v2", 3: "v3"}
-
-    # duplicate-key changelog is rejected
-    dup = spark.createDataFrame(
-        [(1, "x", hour, False), (1, "y", hour, False)],
-        "a long, b string, _hour timestamp, _deleted boolean",
-    )
-    with pytest.raises(ValueError, match="pre-compact"):
-        apply_changelog(spark, out, dup, ["a"])
-
-
-def test_metadata_tables_snapshots_files_history(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from redpanda_spark.sources.datalake import (
-        expire_snapshots,
-        files_table,
-        history_table,
-        read_datalake,
-        snapshots_table,
-        write_datalake,
-    )
-
-    path = str(tmp_path / "lake")
-    df1 = spark.range(10).select(
-        F.col("id"), F.lit("2024-01-01-00").alias("_hour")
-    )
-    df2 = spark.range(5).select(
-        (F.col("id") + 100).alias("id"), F.lit("2024-01-01-01").alias("_hour")
-    )
-    write_datalake(df1, path)
-    write_datalake(df2, path)
-
-    snaps = snapshots_table(spark, path).orderBy("snapshot_id").collect()
-    assert [s["snapshot_id"] for s in snaps] == [1, 2]
-    assert all(not s["is_expired"] for s in snaps)
-    assert snaps[0]["committed_at"] <= snaps[1]["committed_at"]
-
-    files = files_table(spark, path).collect()  # current snapshot = 2
-    assert all(f["snapshot_id"] == 2 for f in files)
-    assert sum(f["record_count"] for f in files) == 15
-    hours = {f["partition_hour"] for f in files}
-    assert hours == {"2024-01-01-00", "2024-01-01-01"}
-    assert all(f["size_bytes"] > 0 for f in files)
-    # per-snapshot view: snapshot 1 has only the first write's rows
-    f1 = files_table(spark, path, snapshot_id=1).collect()
-    assert sum(f["record_count"] for f in f1) == 10
-
-    hist = {r["snapshot_id"]: r["is_current_ancestor"]
-            for r in history_table(spark, path).collect()}
-    assert hist == {1: False, 2: True}
-
-    # expiry is reflected: snapshot 1 flips to expired
-    expire_snapshots(spark, path, keep_last=1)
-    snaps = {s["snapshot_id"]: s["is_expired"]
-             for s in snapshots_table(spark, path).collect()}
-    assert snaps == {1: True, 2: False}
-    assert read_datalake(spark, path).count() == 15
 
 
 def test_jvm_auto_selection_routing_guard(spark, monkeypatch):
