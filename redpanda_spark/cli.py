@@ -176,19 +176,21 @@ def cmd_topic_truncate(args) -> int:
 
 
 def cmd_group_seek(args) -> int:
-    """rpk group seek: reset committed offsets (to earliest/end/explicit)."""
+    """rpk group seek: reset committed offsets (to earliest/end/explicit)
+    of every selected partition in one atomic commit."""
     eng = _engine(args)
     parts = range(eng.list_topics()[args.topic].partitions)
     if args.partition is not None:
         parts = [args.partition]
-    for p in parts:
-        if args.to == "start":
-            off = eng._log_starts(args.topic).get(p, 0)
-        elif args.to == "end":
-            off = eng.high_watermarks(args.topic).get(p, 0)
-        else:
-            off = int(args.to)
-        eng.offset_commit(args.group, args.topic, p, off)
+    if args.to == "start":
+        pos = eng._log_starts(args.topic)
+    elif args.to == "end":
+        pos = eng.high_watermarks(args.topic)
+    else:
+        pos = dict.fromkeys(parts, int(args.to))
+    offsets = {(args.topic, p): pos.get(p, 0) for p in parts}
+    eng.offset_commit_batch(args.group, offsets)
+    for (_, p), off in offsets.items():
         print(json.dumps({"group": args.group, "topic": args.topic,
                           "partition": p, "committed": off}))
     return 0
@@ -233,31 +235,27 @@ def cmd_group_export(args) -> int:
 def cmd_group_import(args) -> int:
     """Restore/migrate committed offsets from JSON lines on stdin (the
     export format; an optional per-line 'group' is overridden by the
-    target group argument)."""
+    target group argument), as one atomic commit."""
     eng = _engine(args)
-    n = 0
-    for line in sys.stdin:
-        line = line.strip()
-        if not line:
-            continue
-        rec = json.loads(line)
-        eng.offset_commit(
-            args.group, rec["topic"], int(rec["partition"]), int(rec["offset"])
-        )
-        n += 1
-    print(json.dumps({"group": args.group, "imported": n}))
+    recs = [json.loads(line) for line in sys.stdin if line.strip()]
+    eng.offset_commit_batch(args.group, {
+        (r["topic"], int(r["partition"])): int(r["offset"]) for r in recs
+    })
+    print(json.dumps({"group": args.group, "imported": len(recs)}))
     return 0
 
 
 def cmd_group_delete_offsets(args) -> int:
     """rpk group offset-delete analog: tombstone committed offsets so the
-    group's lag accounting forgets the topic (KIP-496 OffsetDelete)."""
+    group's lag accounting forgets the topic (KIP-496 OffsetDelete), every
+    selected partition in one atomic commit."""
     eng = _engine(args)
     parts = range(eng.list_topics()[args.topic].partitions)
     if args.partition is not None:
         parts = [args.partition]
-    for p in parts:
-        eng.offset_delete(args.group, args.topic, p)
+    eng.offset_commit_batch(args.group, dict.fromkeys(
+        ((args.topic, p) for p in parts), None
+    ))
     print(json.dumps({"group": args.group, "topic": args.topic,
                       "deleted_partitions": list(parts)}))
     return 0

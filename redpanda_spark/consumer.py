@@ -13,8 +13,9 @@ Poll returns records for THIS member's assigned partitions only,
 starting from the group's committed offset per partition (or the reset
 policy's position when nothing is committed: "earliest" = log start,
 "latest" = high watermark). ``commit()`` records the consumed positions
-through the engine's `_consumer_offsets` keep-latest table, so progress
-survives the member, the group, and the process.
+as one record batch in the engine's internal compacted
+``__consumer_offsets`` topic, so progress survives the member, the
+group, and the process.
 
 Driver-side control loop; the data path stays DataFrame jobs (the
 fetch). At cluster scale one of these runs per external consumer — the
@@ -159,10 +160,8 @@ class Consumer:
 
     def _init_positions(self, keys: list[tuple[str, int]]) -> None:
         """Resolve start positions for all ``keys`` with ONE committed-
-        offsets job (the keep-latest aggregation scans the whole commits
-        table regardless of filter, so per-partition fetches would run it
-        |assignment| times) plus one watermark/log-start lookup per
-        topic."""
+        offsets read (the engine's replayed keep-latest map, no Spark
+        job) plus one watermark/log-start lookup per topic."""
         missing = [k for k in keys if k not in self._positions]
         if not missing:
             return
@@ -268,7 +267,7 @@ class Consumer:
 
     def commit(self) -> None:
         """Commit every polled position (OffsetCommit semantics: the
-        committed offset is the NEXT offset to read) — one append job
+        committed offset is the NEXT offset to read) — one record batch
         for the whole assignment, like the single OffsetCommit RPC."""
         self.engine.offset_commit_batch(self.group_id, dict(self._positions))
 

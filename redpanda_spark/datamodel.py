@@ -61,8 +61,11 @@ TOPIC_META_SCHEMA = T.StructType(
     ]
 )
 
-# Committed consumer-group offsets (reference: __consumer_offsets topic,
-# src/v/kafka/server/group_metadata.h:71,121).
+# Committed consumer-group offsets as commit events (reference:
+# __consumer_offsets topic, src/v/kafka/server/group_metadata.h:71,121) —
+# the commits table the catalog's group queries read. The engine stores
+# the same state as keyed records of its internal __consumer_offsets
+# topic (operators/groups.encode_group_record).
 CONSUMER_OFFSETS_SCHEMA = T.StructType(
     [
         T.StructField("group_id", T.StringType(), False),

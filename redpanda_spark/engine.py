@@ -17,7 +17,9 @@ Maps the reference's RPC surface (SURVEY.md §2.1) onto table operations:
   list_offsets / timequery           ListOffsets (list_offsets.cc:66-157)
   delete_records                     DeleteRecords (delete_records.cc:115-172)
   run_retention / run_compaction     storage GC + keep-latest compaction
-  offset_commit / offset_fetch       group offsets (group_metadata.h)
+  offset_commit / offset_fetch       group offsets (group_metadata.h): keyed
+                                     records in the internal compacted
+                                     ``__consumer_offsets`` topic
 
 Storage layout: ``root/<topic>/*.parquet`` — flat segment files with
 ``partition`` stored as a DATA column, sorted by (partition, offset)
@@ -76,11 +78,8 @@ from pyspark.sql import functions as F
 from redpanda_spark import fsio
 from redpanda_spark.functions.hashes import murmur2_partition_udf
 from redpanda_spark.operators import log as LOG
-from redpanda_spark.operators.compaction import (
-    compact_keep_latest,
-    compact_with_tombstone_grace,
-)
-from redpanda_spark.operators.groups import offset_fetch as _offset_fetch
+from redpanda_spark.operators import groups as G
+from redpanda_spark.operators.compaction import compact_with_tombstone_grace
 from redpanda_spark.operators.transactions import read_committed as _read_committed
 
 
@@ -146,6 +145,13 @@ class FencedWriterError(Exception):
         self.topic = topic
         self.mine = mine
         self.current = current
+
+
+# Group state (committed offsets, group metadata): keyed records of this
+# internal compacted topic, as in the reference (`group_metadata.h:71`).
+# Opened (and claimed) by every engine; it is never in the catalog, its
+# first manifest is written by the first commit, and list_topics hides it.
+OFFSETS_TOPIC = "__consumer_offsets"
 
 
 def _next_arch_epoch(paths) -> int:
@@ -282,6 +288,9 @@ class TopicEngine:
         # the dir's file listing — lets the hot tail serve read_committed
         # with zero Spark jobs (LSO bound + aborted filter in-process)
         self._tx_local_cache: tuple[tuple[str, ...], list[dict]] | None = None
+        # keep-latest map of __consumer_offsets (record key -> decoded
+        # value), keyed by the manifest file list it was replayed from
+        self._group_cache: tuple[tuple[str, ...], dict] | None = None
         # Engine-instance nonce, written into every epoch-claim file. On
         # stores whose create is NOT arbitrated (plain S3 without
         # conditional writes), two engines racing the same epoch number
@@ -479,9 +488,26 @@ class TopicEngine:
         )
 
     def _load_state(self) -> None:
+        for d in ("_consumer_offsets", "_groups"):
+            for legacy in (d, d + ".old", d + ".purge.tmp"):
+                # group state's old Parquet side tables (and a crashed
+                # purge swap's copies): not imported, so opening would
+                # silently drop every committed position
+                legacy = os.path.join(self.root, legacy)
+                if self._fsio.list_names(legacy):
+                    raise ValueError(
+                        f"{legacy}: legacy group-state table, not read since "
+                        f"group state moved into the {OFFSETS_TOPIC} topic"
+                    )
         if self._fsio.exists(self._meta_path):
             raw = json.loads(self._fsio.read_text(self._meta_path))
             self._topics = {t: TopicConfig(**c) for t, c in raw.items()}
+        # never in the catalog; opened (and claimed) like every topic
+        # whether or not its first commit has landed, so an older engine's
+        # group-state commits are fenced from this open on
+        self._topics[OFFSETS_TOPIC] = TopicConfig(
+            partitions=1, cleanup_policy="compact", delete_retention_ms=0
+        )
         for t in self._topics:
             # Read the manifest AND claim the writer epoch inside one
             # critical section: the state we adopt is the latest committed
@@ -530,17 +556,16 @@ class TopicEngine:
                 self._gc_orphans(t, archive=has_manifest)
         if not self.read_only:
             # a purge (delete_topic/unmount/create-debris) may have
-            # crashed mid-swap: roll the side tables to a whole copy
-            # BEFORE anything probes them (a half-swapped table reads as
+            # crashed mid-swap: roll the tx-range table to a whole copy
+            # BEFORE anything probes it (a half-swapped table reads as
             # absent, which would hide rows from the create_topic debris
-            # probes — and strand them for a later purge to resurrect).
+            # probe — and strand them for a later purge to resurrect).
             # Under the root lock: another engine may be mid-purge RIGHT
             # NOW, and "rolling back" its in-flight swap would make its
             # rename(tmp→d) collide (local roots; URI roots rely on the
             # single-writer fence as everywhere else).
             with self._fsio.write_lock(self.root):
-                for d in (self._tx_ranges_dir(), self._commits_dir()):
-                    self._recover_side_table_swap(d)
+                self._recover_side_table_swap(self._tx_ranges_dir())
 
     def _gc_orphans(self, topic: str, archive: bool) -> None:
         """Crash recovery: delete segment files not referenced by the
@@ -593,10 +618,13 @@ class TopicEngine:
         # admin at a time". DATA cannot be lost to this — every data
         # mutation commits through the epoch-fenced manifest path.
         self._fsio.write_text_atomic(
-            self._meta_path, json.dumps({t: vars(c) for t, c in self._topics.items()})
+            self._meta_path,
+            json.dumps({t: vars(c) for t, c in self.list_topics().items()}),
         )
 
     def create_topic(self, topic: str, config: TopicConfig | None = None) -> None:
+        if topic == OFFSETS_TOPIC:
+            raise ValueError(f"topic name reserved for group state: {topic}")
         if topic in self._topics:
             raise ValueError(f"topic exists: {topic}")
         self._topics[topic] = config or TopicConfig()
@@ -611,34 +639,39 @@ class TopicEngine:
         # engine fenced on the old incarnation can never pass the fence
         # on the new one (the ABA hazard a restarted lineage would open).
         self._fsio.delete(self._manifest_path(topic))
-        # a crashed MOUNT may have left replayed tx ranges AND/OR consumer
-        # offsets for this name (its catalog commit never landed, so
-        # delete_topic's purge never ran) — stale aborted ranges would
-        # hide this fresh topic's rows at the reused offsets, and stale
-        # committed offsets would make consumers skip them (mount Phase B
-        # replays groups AFTER tx ranges, so offsets-only debris is a real
-        # crash shape). Both probes are driver-side pyarrow (zero Spark
-        # jobs); the purge runs only on a hit in either side table.
-        if (
-            any(r["topic"] == topic for r in self._tx_ranges_local())
-            or self._offsets_topic_present(topic)
-        ):
+        # a crashed delete, unmount or mount may have left tx ranges and/or
+        # committed offsets for this name: stale aborted ranges would hide
+        # this fresh topic's rows at the reused offsets, and stale offsets
+        # would make consumers skip them. Both probes are driver-side
+        # (zero Spark jobs); each purge runs only on a hit.
+        if any(r["topic"] == topic for r in self._tx_ranges_local()):
             # under the root lock, like every other purge call site: the
             # swap must not interleave with another engine's purge
             with self._fsio.write_lock(self.root):
                 self._purge_topic_metadata(topic)
+        self._purge_group_offsets(topic)
         self._save_state()
         self._commit_manifest(topic)
 
     def delete_topic(self, topic: str) -> None:
-        """Drop the topic's data AND its rows in the tx-range / consumer-
-        offset side tables. Without the purge, recreating a topic with the
+        """Drop the topic's data, its tx-range rows and its committed
+        offsets. Without the purge, recreating a topic with the
         same name resurrects stale tx metadata — a leftover 'open' range
         would gate the new topic's LSO forever, and stale aborted ranges
         could hide fresh records at the reused offsets (the reference
         scopes this state to the partition's raft log, which dies with the
         topic: `cluster/rm_stm`'s state is per-partition)."""
+        if topic == OFFSETS_TOPIC:
+            raise ValueError(f"internal topic cannot be deleted: {topic}")
         self._require(topic)
+        # tombstone its committed offsets first (a commit of its own, so
+        # outside the root lock), so no crash past the catalog removal
+        # can leave them for a mount of the same name to resurrect. The
+        # fence check first: a stale writer must not tombstone the offsets
+        # of a topic it no longer owns.
+        with self._fsio.write_lock(self.root):
+            self._check_writer_fence(topic)
+        self._purge_group_offsets(topic)
         # a stale writer must not destroy the current writer's topic —
         # and the fence must hold THROUGH the destructive sequence, not
         # just at entry: the root write_lock is held across the deletes
@@ -687,6 +720,7 @@ class TopicEngine:
             self._writer_epoch.pop(topic, None)
             self._purge_topic_metadata(topic)
             self._save_state()
+        self._purge_group_offsets(topic)  # sweep: commits that raced in
 
     def _recover_side_table_swap(self, d: str) -> None:
         """Roll a crashed side-table swap (see _purge_topic_metadata)
@@ -707,28 +741,35 @@ class TopicEngine:
         self._fsio.delete(d + ".purge.tmp", recursive=True)
 
     def _purge_topic_metadata(self, topic: str) -> None:
-        """Rewrite _tx_ranges and _consumer_offsets dropping the topic's
-        rows. Crash-idempotent: write-tmp → rename(d→old) → rename(tmp→d)
+        """Rewrite _tx_ranges dropping the topic's rows.
+        Crash-idempotent: write-tmp → rename(d→old) → rename(tmp→d)
         → delete(old), with a half-done swap first rolled forward/backward
         from whichever copy survived. Caller must hold the root
         write_lock (every call site does): the roll-back of a crashed
         swap must never race another engine's IN-FLIGHT swap, whose
         rename(tmp→d) would then collide mid-sequence."""
-        for d in (self._tx_ranges_dir(), self._commits_dir()):
-            self._recover_side_table_swap(d)
-            try:
-                df = self.spark.read.parquet(d)
-            except Exception:
-                continue  # side table doesn't exist yet
-            tmp = d + ".purge.tmp"
-            df.where(F.col("topic") != topic).write.mode("overwrite").parquet(tmp)
-            old = d + ".old"
-            self._fsio.rename(d, old)
-            self._fsio.rename(tmp, d)
-            self._fsio.delete(old, recursive=True)
+        d = self._tx_ranges_dir()
+        self._recover_side_table_swap(d)
+        try:
+            df = self.spark.read.parquet(d)
+        except Exception:
+            return  # side table doesn't exist yet
+        tmp = d + ".purge.tmp"
+        df.where(F.col("topic") != topic).write.mode("overwrite").parquet(tmp)
+        old = d + ".old"
+        self._fsio.rename(d, old)
+        self._fsio.rename(tmp, d)
+        self._fsio.delete(old, recursive=True)
+
+    def _purge_group_offsets(self, topic: str) -> None:
+        """Tombstone every committed offset of ``topic`` in one commit
+        (which takes the root lock: call it outside a locked section)."""
+        self._group_append(
+            [(k, None) for k in self._group_map() if k[0] == "offset" and k[2] == topic]
+        )
 
     def list_topics(self) -> dict[str, TopicConfig]:
-        return dict(self._topics)
+        return {t: c for t, c in self._topics.items() if t != OFFSETS_TOPIC}
 
     def _topic_dir(self, topic: str) -> str:
         return os.path.join(self.root, topic)
@@ -1508,21 +1549,10 @@ class TopicEngine:
         )
         return rows
 
-    def _side_table_files(self, d: str) -> list[str]:
-        """Sorted parquet part names of a side-table dir, via the root's
-        filesystem (POSIX scandir locally, Hadoop listStatus on URI
-        roots) — so the driver-side mirrors below see the SAME table
-        everywhere (an earlier os.listdir-only version silently read []
-        on URI roots, which made hot-tail read_committed skip aborted
-        filtering and unmount's handoff carry no tx metadata there)."""
-        return sorted(
-            f for f in self._fsio.list_names(d) if f.endswith(".parquet")
-        )
-
     def _read_side_table_file(self, d: str, name: str, columns=None):
-        """One side-table part as a pyarrow table — direct-path locally,
-        bytes-through-the-driver on URI roots (parts are tiny: one row
-        per tx outcome / group commit, keep-latest compacted)."""
+        """One parquet file as a pyarrow table — direct-path locally,
+        bytes-through-the-driver on URI roots (the files are tiny: tx
+        outcomes, or group-state commits of OFFSETS_TOPIC)."""
         import pyarrow.parquet as _pq
 
         if getattr(self._fsio, "is_local", True):
@@ -1534,21 +1564,6 @@ class TopicEngine:
             columns=columns,
         )
 
-    def _offsets_topic_present(self, topic: str) -> bool:
-        """Driver-side (zero Spark jobs) probe: does the consumer-offsets
-        side table hold any row for ``topic``? Reads only the ``topic``
-        column via pyarrow — the table is tiny (one row per commit,
-        keep-latest compacted by maintenance), and the probe runs only on
-        the rare create/delete admin paths."""
-        d = self._commits_dir()
-        for f in self._side_table_files(d):
-            col = self._read_side_table_file(d, f, columns=["topic"]).column(
-                "topic"
-            )
-            if topic in col.to_pylist():
-                return True
-        return False
-
     def _tx_ranges_local(self) -> list[dict]:
         """Driver-side (zero Spark jobs) replica of ``tx_ranges()``'s live
         view: final rows + open rows not superseded by a final row for the
@@ -1556,9 +1571,12 @@ class TopicEngine:
         tiny by design (one row per transaction outcome), read via pyarrow
         and cached on the dir's file listing — one directory listing per
         poll (POSIX scandir locally, Hadoop listStatus on URI roots), a
-        re-parse only when EndTxn/purge actually changed the table."""
+        re-parse only when EndTxn/purge actually changed the table (an
+        os.listdir here silently read [] on URI roots)."""
         d = self._tx_ranges_dir()
-        files = tuple(self._side_table_files(d))
+        files = tuple(
+            sorted(f for f in self._fsio.list_names(d) if f.endswith(".parquet"))
+        )
         if self._tx_local_cache is not None and self._tx_local_cache[0] == files:
             return self._tx_local_cache[1]
         rows: list[dict] = []
@@ -2751,24 +2769,14 @@ class TopicEngine:
                 f"topic {topic}: open transaction in flight — "
                 "commit/abort before unmount"
             )
-        group_rows: list[dict] = []
-        if with_groups:
-            wanted = (
-                None if with_groups is True else set(with_groups)
-            )
-            for r in (
-                self.offset_fetch()
-                .where(F.col("topic") == topic)
-                .collect()
-            ):
-                if wanted is None or r["group_id"] in wanted:
-                    group_rows.append(
-                        {
-                            "group": r["group_id"],
-                            "partition": int(r["partition"]),
-                            "offset": int(r["committed_offset"]),
-                        }
-                    )
+        group_rows = [
+            {"group": k[1], "partition": k[3], "offset": v["committed_offset"]}
+            for k, v in self._group_map().items()
+            if with_groups
+            and k[0] == "offset"
+            and k[2] == topic
+            and (with_groups is True or k[1] in with_groups)
+        ]
         ad = self._archive_dir(topic)
         self._afsio.mkdirs(ad)
         epoch = self._arch_epoch.get(topic, 0)
@@ -2853,8 +2861,8 @@ class TopicEngine:
         #
         # Crash states: before _save_state → topic still owned (retry
         # unmount); between detach and stage write → detached with NO
-        # token, but nothing was purged — the side-table rows are intact
-        # under this root, so a plain mount here falls back to footer
+        # token, but nothing was purged — tx rows and committed offsets
+        # are intact under this root, so a plain mount here falls back to footer
         # recovery and still sees full tx/group metadata; after the
         # stage → mount_topic(resume_claim=True) adopts with metadata
         # intact. No state allows TWO clusters to own the topic at once.
@@ -2901,7 +2909,7 @@ class TopicEngine:
                 e.add_note(
                     f"unmount of {topic!r} failed writing the staged "
                     "handoff manifest AFTER the local detach committed: "
-                    "the topic is detached, side-table metadata is "
+                    "the topic is detached, tx/group metadata is "
                     "intact under this root — run "
                     "recover_topic_from_archive (or retry once the "
                     "bucket is reachable: mount here, then unmount "
@@ -2913,6 +2921,7 @@ class TopicEngine:
             # epoch chain survives (monotone lineage across mounts)
             self._writer_epoch.pop(topic, None)
             self._purge_topic_metadata(topic)
+        self._purge_group_offsets(topic)  # commits, so outside the lock
         # Phase 3: PUBLISH the handoff token by atomic rename of the
         # staged manifest to its mountable name. Mount reads it for O(1)
         # metadata adoption (exact config + watermarks even for
@@ -3061,7 +3070,7 @@ class TopicEngine:
             # CATALOG-LAST: the _save_state at the end is the adoption
             # commit point, so a crash anywhere before it leaves the
             # topic mounted NOWHERE (token claimed; debris = an orphan
-            # manifest + replayed side-table rows, all overwritten or
+            # manifest + replayed tx rows and offsets, all overwritten or
             # idempotent under resume_claim) — never a cataloged topic
             # that reads empty because its manifest is missing (the
             # kill-point sweep caught exactly that with the old
@@ -3092,9 +3101,7 @@ class TopicEngine:
             # first-class consumer-offset migration (opt-in at unmount):
             # resume at the exact committed positions. Batched per group
             # (offset_commit_batch, the OffsetCommit-request shape): one
-            # append job per GROUP, not one per (group, partition) row —
-            # 50 groups x 8 partitions is 50 jobs, not 400, and 8x fewer
-            # tiny side-table part files for compaction to fold later
+            # commit per GROUP, not one per (group, partition) row
             by_group: dict[str, dict[tuple[str, int], int]] = {}
             for g in m.get("groups", []):
                 by_group.setdefault(g["group"], {})[
@@ -3122,7 +3129,8 @@ class TopicEngine:
             try:
                 self._fsio.delete(self._manifest_path(topic))
                 with self._fsio.write_lock(self.root):  # purge discipline
-                    self._purge_topic_metadata(topic)  # replayed side rows
+                    self._purge_topic_metadata(topic)  # replayed tx rows
+                self._purge_group_offsets(topic)  # replayed offsets
                 self._save_state()
             except BaseException:
                 pass  # reopen-time GC / resume_claim cover the debris
@@ -3382,6 +3390,7 @@ class TopicEngine:
         """Record transaction outcomes (one row per (topic, partition,
         producer, offset-range)). Appended by the TxCoordinator at EndTxn;
         read_committed fetches anti-join the aborted rows."""
+        self._refuse_read_only()
         df.write.mode("append").parquet(self._tx_ranges_dir())
 
     def tx_ranges(self) -> DataFrame:
@@ -3402,111 +3411,107 @@ class TopicEngine:
         )
         return final.unionByName(live_open)
 
-    # -- group metadata (coordinator persistence) -------------------------
+    # -- group state: records of OFFSETS_TOPIC ----------------------------
 
-    GROUP_META_SCHEMA = (
-        "group_id string, seq long, state string, generation int,"
-        " protocol string, leader string, members_json string, deleted boolean"
-    )
+    def _group_map(self) -> dict[tuple, dict]:
+        """Keep-latest map of OFFSETS_TOPIC (decoded key -> latest value;
+        tombstoned keys absent), replayed driver-side like the reference's
+        `group_recovery_consumer.cc`. It follows the manifest on disk, so
+        commits of a newer engine on the root show too; appended files
+        replay incrementally."""
+        mp = self._manifest_path(OFFSETS_TOPIC)
+        files = (
+            tuple(json.loads(self._fsio.read_text(mp))["files"])
+            if self._fsio.exists(mp)
+            else ()
+        )
+        seen, state = self._group_cache or ((), {})
+        if files[: len(seen)] != seen:
+            seen, state = (), {}  # rewritten by compaction: replay all
+        log: list[tuple] = []
+        for f in files[len(seen):]:
+            cols = ("offset", "key", "value")
+            t = self._read_side_table_file(self.root, f, columns=list(cols))
+            log += zip(*(t.column(c).to_pylist() for c in cols))
+        log.sort(key=lambda r: r[0])
+        for key, value in (G.decode_group_record(k, v) for _, k, v in log):
+            if value is None:
+                state.pop(key, None)
+            else:
+                state[key] = value
+        self._group_cache = (files, state)
+        return state
 
-    def _groups_dir(self) -> str:
-        return os.path.join(self.root, "_groups")
+    def _group_append(self, records: list[tuple[tuple, dict | None]]) -> None:
+        """Commit (key, value) records as ONE batch of OFFSETS_TOPIC by the
+        normal produce path (zero-job _produce_local on local roots),
+        atomic and fenced like every commit; the next _group_map call
+        replays the new file."""
+        self._refuse_read_only()
+        if not records:
+            return
+        self._produce_impl(
+            OFFSETS_TOPIC,
+            [
+                dict(zip(("key", "value"), G.encode_group_record(k, v)))
+                for k, v in records
+            ],
+        )
 
     def group_metadata_append(self, snapshot: dict) -> None:
-        """Append one group-metadata snapshot row. The reference persists
-        group membership/generation as records in the compacted
-        __consumer_offsets partition (`kafka/server/group_manager.cc`,
-        serialization in `group_metadata.cc`); this is the same append-only
-        + keep-latest design over a parquet side table."""
-        row = [
-            (
-                snapshot["group_id"],
-                time.time_ns(),
-                snapshot.get("state", "Empty"),
-                snapshot.get("generation", 0),
-                snapshot.get("protocol"),
-                snapshot.get("leader"),
-                json.dumps(snapshot.get("members", {})),
-                bool(snapshot.get("deleted", False)),
-            )
-        ]
-        self.spark.createDataFrame(row, self.GROUP_META_SCHEMA).write.mode(
-            "append"
-        ).parquet(self._groups_dir())
+        """Commit one group-metadata snapshot (GroupCoordinator.snapshot)
+        — the record the reference writes to __consumer_offsets
+        (`kafka/server/group_manager.cc`, serialization in
+        `group_metadata.cc`); ``deleted`` writes the group's tombstone."""
+        value = {k: v for k, v in snapshot.items() if k not in ("group_id", "deleted")}
+        key = ("group", snapshot["group_id"])
+        self._group_append([(key, None if snapshot.get("deleted") else value)])
 
     def group_metadata_snapshots(self) -> list[dict]:
-        """Latest surviving snapshot per group — the recovery read
-        (`group_recovery_consumer.cc` replays the compacted partition; here
-        keep-latest over the side table does the replay in one shot)."""
-        try:
-            raw = self.spark.read.parquet(self._groups_dir())
-        except Exception:
-            return []
-        latest = compact_keep_latest(raw, ["group_id"], order_col="seq")
-        out = []
-        for r in latest.where(~F.col("deleted")).collect():
-            out.append(
-                {
-                    "group_id": r["group_id"],
-                    "state": r["state"],
-                    "generation": r["generation"],
-                    "protocol": r["protocol"],
-                    "leader": r["leader"],
-                    "members": json.loads(r["members_json"] or "{}"),
-                }
-            )
-        return out
+        """Latest surviving snapshot per group, from the replayed map."""
+        return [
+            {"group_id": k[1], **v}
+            for k, v in self._group_map().items()
+            if k[0] == "group"
+        ]
 
     # -- consumer offsets -------------------------------------------------
 
-    def _commits_dir(self) -> str:
-        return os.path.join(self.root, "_consumer_offsets")
-
     def offset_commit(
         self, group_id: str, topic: str, partition: int, offset: int,
-        metadata: str = "", deleted: bool = False,
+        metadata: str = "",
     ) -> None:
-        row = [
-            (
-                group_id,
-                topic,
-                partition,
-                offset,
-                0,
-                metadata,
-                time.time_ns(),
-                deleted,
-            )
-        ]
-        df = self.spark.createDataFrame(
-            row,
-            "group_id string, topic string, partition int, committed_offset long,"
-            " leader_epoch int, metadata string, commit_seq long, deleted boolean",
-        )
-        df.write.mode("append").parquet(self._commits_dir())
+        value = self._offset_value(offset, metadata)
+        self._group_append([(("offset", group_id, topic, int(partition)), value)])
+
+    @staticmethod
+    def _offset_value(offset: int, metadata: str = "") -> dict:
+        return {
+            "committed_offset": int(offset),
+            "leader_epoch": 0,
+            "metadata": metadata,
+            "commit_seq": time.time_ns(),  # commit time: KIP-211 expiry
+        }
 
     def offset_commit_batch(
-        self, group_id: str, offsets: dict[tuple[str, int], int]
+        self, group_id: str, offsets: dict[tuple[str, int], int | None]
     ) -> None:
         """Commit many (topic, partition) -> next-offset positions as ONE
-        append (one Spark job), the OffsetCommit-request shape — a client
-        commits its whole assignment in one RPC, not one per partition."""
-        if not offsets:
-            return
-        now = time.time_ns()
-        rows = [
-            (group_id, t, p, off, 0, "", now, False)
-            for (t, p), off in offsets.items()
-        ]
-        df = self.spark.createDataFrame(
-            rows,
-            "group_id string, topic string, partition int, committed_offset long,"
-            " leader_epoch int, metadata string, commit_seq long, deleted boolean",
+        record batch, the OffsetCommit-request shape — a client commits
+        its whole assignment in one RPC, not one per partition. A None
+        position writes that partition's tombstone (OffsetDelete)."""
+        self._group_append(
+            [
+                (
+                    ("offset", group_id, t, int(p)),
+                    None if off is None else self._offset_value(off),
+                )
+                for (t, p), off in offsets.items()
+            ]
         )
-        df.coalesce(1).write.mode("append").parquet(self._commits_dir())
 
     def offset_delete(self, group_id: str, topic: str, partition: int) -> None:
-        self.offset_commit(group_id, topic, partition, -1, deleted=True)
+        self.offset_commit_batch(group_id, {(topic, partition): None})
 
     def expire_producers(
         self, topic: str, max_idle_ms: int = 24 * 3600 * 1000,
@@ -3535,46 +3540,32 @@ class TopicEngine:
         return len(gone)
 
     def compact_offsets(self) -> dict[str, int]:
-        """Compact the `_consumer_offsets` commit log: keep only the
-        latest commit per (group, topic, partition) and drop delete
-        tombstones entirely (their shadowing work is done once no earlier
-        commit survives) — the reference keeps `__consumer_offsets` small
-        the same way, with keep-latest compaction. Readers do keep-latest
-        at fetch time regardless, so this is purely a storage/read-cost
-        bound: the commits table stays O(live group-partitions) instead
-        of O(all commits ever). Compacted rows append into the
-        live directory before the superseded files are deleted, so a
-        concurrent reader always sees a complete keep-latest-equivalent
-        view (never a missing directory), and commits racing in during
-        the job are untouched."""
-        from redpanda_spark.operators.compaction import compact_keep_latest
-
-        d = self._commits_dir()
-        try:
-            commits = self.spark.read.parquet(d)
-        except Exception:
+        """Keep-latest compaction of OFFSETS_TOPIC (run_compaction; its
+        config drops tombstones), so the topic stays O(live keys) — the
+        reference compacts `__consumer_offsets` the same way. Returns the
+        record counts before and after, from the manifest."""
+        if not self._files[OFFSETS_TOPIC]:
             return {"before": 0, "after": 0}
-        before = commits.count()
-        # snapshot the file list BEFORE compacting: commits appended while
-        # the job runs are not in the snapshot and therefore survive
-        old_files = list(self._fsio.list_files_recursive(d))
-        latest = compact_keep_latest(
-            self.spark.read.parquet(*old_files),
-            ["group_id", "topic", "partition"],
-            order_col="commit_seq",
-        ).where(~F.col("deleted"))
-        # append the compacted rows INTO the live dir under fresh part
-        # names, then delete the old files. There is no moment when the
-        # directory is missing or a key's latest commit is absent: during
-        # the overlap a reader sees (old ∪ compacted) rows — duplicates of
-        # identical (key, commit_seq) rows, which keep-latest readers
-        # collapse to the same values. Tombstones drop only once nothing
-        # they shadow remains.
-        latest.write.mode("append").parquet(d)
-        for f in old_files:
-            self._fsio.delete(f)
-        after = self.spark.read.parquet(d).count()
-        return {"before": before, "after": after}
+        before = self._stats_rows(OFFSETS_TOPIC)
+        self.run_compaction(OFFSETS_TOPIC)
+        return {"before": before, "after": self._stats_rows(OFFSETS_TOPIC)}
+
+    def _offsets_df(self, group_id: str | None = None) -> DataFrame:
+        """Latest committed offsets as a commits table (an Arrow
+        LocalRelation: collecting it runs no Spark job)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from redpanda_spark.datamodel import CONSUMER_OFFSETS_SCHEMA
+
+        rows = [
+            {"group_id": k[1], "topic": k[2], "partition": k[3], **v,
+             "deleted": False}
+            for k, v in self._group_map().items()
+            if k[0] == "offset" and group_id in (None, k[1])
+        ]
+        schema = to_arrow_schema(CONSUMER_OFFSETS_SCHEMA)
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema))
 
     def expire_offsets(
         self,
@@ -3584,15 +3575,9 @@ class TopicEngine:
     ) -> int:
         """GC committed offsets older than offsets.retention.ms for groups
         with no live members (KIP-211 semantics; the reference expires
-        through the group coordinator's periodic offset GC). Writes
-        tombstone rows in ONE append — the expirable set is control-plane
-        sized (≤ groups × partitions), nothing is collected to the
-        driver."""
-        from redpanda_spark.operators.groups import expired_offsets
-
-        try:
-            commits = self.spark.read.parquet(self._commits_dir())
-        except Exception:
+        through the group coordinator's periodic offset GC). Writes the
+        tombstones as ONE commit."""
+        if not any(k[0] == "offset" for k in self._group_map()):
             return 0
         now = now_ns if now_ns is not None else time.time_ns()
         active = None
@@ -3600,34 +3585,12 @@ class TopicEngine:
             active = self.spark.createDataFrame(
                 [(g,) for g in active_group_ids], "group_id string"
             )
-        exp = expired_offsets(commits, now, retention_ms, active)
-        tomb = exp.select(
-            "group_id",
-            "topic",
-            "partition",
-            F.lit(-1).cast("long").alias("committed_offset"),
-            F.lit(0).alias("leader_epoch"),
-            F.lit("").alias("metadata"),
-            F.lit(now).alias("commit_seq"),
-            F.lit(True).alias("deleted"),
-        ).persist()
-        n = tomb.count()
-        if n:
-            tomb.write.mode("append").parquet(self._commits_dir())
-        tomb.unpersist()
-        return n
+        commits = self._offsets_df()
+        exp = G.expired_offsets(commits, now, retention_ms, active).collect()
+        self._group_append([(("offset", *r[:3]), None) for r in exp])
+        return len(exp)
 
     def offset_fetch(self, group_id: str | None = None) -> DataFrame:
-        try:
-            commits = self.spark.read.parquet(self._commits_dir())
-        except Exception:
-            # no commits yet
-            commits = self.spark.createDataFrame(
-                [],
-                "group_id string, topic string, partition int, committed_offset long,"
-                " leader_epoch int, metadata string, commit_seq long, deleted boolean",
-            )
-        out = _offset_fetch(commits)
-        if group_id is not None:
-            out = out.where(F.col("group_id") == group_id)
-        return out
+        """OffsetFetch: latest committed offset per (group, topic,
+        partition), tombstoned entries excluded."""
+        return self._offsets_df(group_id).drop("commit_seq", "deleted")

@@ -10,9 +10,10 @@ sessions alive; expiry or membership change triggers a new generation.
 This is coordination logic, not a data-plane operator: it runs driver-side
 over in-memory state, exactly like the reference runs it on the
 coordinator shard. Durability mirrors the reference too: group metadata
-(generation, protocol, leader, members, assignments) is written to a
-compacted side table at the same points the reference writes
-__consumer_offsets records — rebalance completion, member departure,
+(generation, protocol, leader, members, assignments) is written as
+records of the engine's internal compacted ``__consumer_offsets`` topic
+at the same points the reference writes them — rebalance completion,
+member departure,
 group deletion (`group_manager.cc` checkpoint on state change) — and
 recovered by a keep-latest replay on construction
 (`group_recovery_consumer.cc`). Heartbeats stay in memory only (the
@@ -592,8 +593,9 @@ class GroupManager:
 
     def __init__(self, topic_partitions: dict[str, int], engine=None):
         """``engine`` (a TopicEngine) enables durability: group metadata
-        checkpoints append to the engine's compacted ``_groups`` table and
-        every group is replayed from its latest snapshot here — the
+        checkpoints are records of the engine's internal compacted
+        ``__consumer_offsets`` topic, and every group is replayed from
+        its latest snapshot here — the
         group_recovery_consumer.cc startup path. Without an engine the
         manager is memory-only (tests, throwaway sessions)."""
         self.topic_partitions = topic_partitions

@@ -1,13 +1,19 @@
 """Consumer-group operators (SURVEY.md §2.3).
 
-The reference persists group offsets in a compacted `__consumer_offsets`
-topic (`src/v/kafka/server/group_metadata.h:71,121`) and recovers state by
-replay (`group_recovery_consumer.cc`). Here the offsets log is a table of
-commit events; reads are keep-latest-by-(group,topic,partition) — the same
-compaction operator, reused.
+The reference persists group offsets and group metadata as keyed records
+in the compacted `__consumer_offsets` topic
+(`src/v/kafka/server/group_metadata.h:71,121`) and recovers state by
+replay (`group_recovery_consumer.cc`). The engine does the same: its
+internal ``__consumer_offsets`` topic holds records encoded by
+:func:`encode_group_record`, replayed driver-side into a keep-latest map.
+The DataFrame operators below read a commits table (one row per commit
+event, keep-latest by (group, topic, partition)) — the catalog queries'
+shape, and the one the engine's offset expiry feeds :func:`expired_offsets`.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -15,6 +21,22 @@ from pyspark.sql import functions as F
 from redpanda_spark.operators.compaction import compact_keep_latest
 
 GROUP_KEY = ["group_id", "topic", "partition"]
+
+
+def encode_group_record(
+    key: tuple, value: dict | None
+) -> tuple[bytes, bytes | None]:
+    """Record key and value bytes of one group-state record. Keys are
+    ``("offset", group, topic, partition)`` or ``("group", group)``;
+    values are JSON objects; ``None`` is the tombstone (null value)."""
+    return (
+        json.dumps(key).encode(),
+        None if value is None else json.dumps(value).encode(),
+    )
+
+
+def decode_group_record(key: bytes, value: bytes | None) -> tuple[tuple, dict | None]:
+    return tuple(json.loads(key)), None if value is None else json.loads(value)
 
 
 def offset_fetch(commits: DataFrame) -> DataFrame:
@@ -27,10 +49,6 @@ def offset_fetch(commits: DataFrame) -> DataFrame:
     return latest.where(~F.col("deleted")).select(
         *GROUP_KEY, "committed_offset", "leader_epoch", "metadata"
     )
-
-
-def list_groups(commits: DataFrame) -> DataFrame:
-    return commits.select("group_id").distinct()
 
 
 def group_lag(commits: DataFrame, log_ends: DataFrame) -> DataFrame:

@@ -9,7 +9,7 @@ import json
 import pytest
 
 from redpanda_spark.admin import AdminClient
-from redpanda_spark.engine import TopicConfig, TopicEngine
+from redpanda_spark.engine import OFFSETS_TOPIC, TopicConfig, TopicEngine
 from redpanda_spark.registry import SchemaRegistry
 from redpanda_spark.rest import RestApp
 
@@ -340,6 +340,12 @@ def test_cli_topic_lifecycle(spark, tmp_path, capsys, monkeypatch):
     assert main(["--root", root, "topic", "delete", "t"]) == 0
 
 
+def _offsets_segments(root):
+    """Segment count of the root's internal __consumer_offsets topic."""
+    with open(f"{root}/_manifest_{OFFSETS_TOPIC}.json") as f:
+        return len(json.load(f)["files"])
+
+
 def test_cli_seek_truncate_alter(spark, tmp_path, capsys, monkeypatch):
     import io
     import json as _json
@@ -364,14 +370,27 @@ def test_cli_seek_truncate_alter(spark, tmp_path, capsys, monkeypatch):
     recs = [_json.loads(x) for x in capsys.readouterr().out.splitlines()]
     assert [r["offset"] for r in recs] == [4, 5]
 
-    # group seek to start = log start (4 after truncation), then end
+    # group seek to start = log start (4 after truncation), then end;
+    # each seek is one commit: one new segment of the internal topic
     assert main(["--root", root, "group", "seek", "g", "-t", "t",
                  "--to", "start"]) == 0
     seek = _json.loads(capsys.readouterr().out)
     assert seek["committed"] == 4
+    assert _offsets_segments(root) == 1
     assert main(["--root", root, "group", "seek", "g", "-t", "t",
                  "--to", "end"]) == 0
     assert _json.loads(capsys.readouterr().out)["committed"] == 6
+    assert _offsets_segments(root) == 2
+    # every partition of a multi-partition topic in the same one commit
+    main(["--root", root, "topic", "create", "t3", "-p", "3"])
+    capsys.readouterr()
+    assert main(["--root", root, "group", "seek", "g", "-t", "t3",
+                 "--to", "7"]) == 0
+    lines = [_json.loads(x) for x in capsys.readouterr().out.splitlines()]
+    assert [(r["partition"], r["committed"]) for r in lines] == [
+        (0, 7), (1, 7), (2, 7)
+    ]
+    assert _offsets_segments(root) == 3
 
     # alter-config round-trips through describe
     assert main(["--root", root, "topic", "alter-config", "t",
@@ -433,8 +452,10 @@ def test_cli_group_export_import(spark, tmp_path, capsys, monkeypatch):
     assert [(r["partition"], r["offset"]) for r in lines] == [(0, 4), (1, 9)]
 
     monkeypatch.setattr("sys.stdin", io.StringIO(dump))
+    segments = _offsets_segments(root)
     assert main(["--root", root, "group", "import", "dst"]) == 0
     assert _json.loads(capsys.readouterr().out)["imported"] == 2
+    assert _offsets_segments(root) == segments + 1  # one atomic commit
     got = {
         r["partition"]: r["committed_offset"]
         for r in eng.offset_fetch("dst").collect()
@@ -956,9 +977,11 @@ def test_cli_group_offset_delete(spark, tmp_path, capsys, monkeypatch):
     assert main(["--root", root, "group", "describe", "g"]) == 0
     assert len(capsys.readouterr().out.splitlines()) == 2  # both partitions
 
+    segments = _offsets_segments(root)
     assert main(["--root", root, "group", "offset-delete", "g", "-t", "t"]) == 0
     out = _json.loads(capsys.readouterr().out)
     assert out["deleted_partitions"] == [0, 1]
+    assert _offsets_segments(root) == segments + 1  # one atomic commit
     assert main(["--root", root, "group", "describe", "g"]) == 0
     assert capsys.readouterr().out.strip() == ""  # offsets tombstoned
 

@@ -739,3 +739,83 @@ def test_nonce_fence_read_error_propagates_not_swallowed(spark, tmp_path):
     # at-least-once shape every log has (idempotence dedups on retry);
     # the POINT is the error was raised, not silently swallowed
     assert vals == [b"v1", b"v2", b"v3"]
+
+
+def _committed_group(spark, root):
+    a = TopicEngine(spark, root)
+    a.create_topic("t", TopicConfig(partitions=2))
+    a.offset_commit_batch("g", {("t", 0): 1, ("t", 1): 1})
+    return a
+
+
+def test_read_only_engine_refuses_group_state_commits(spark, tmp_path):
+    """Offsets and group metadata commit through the internal
+    __consumer_offsets topic, so an observer refuses them like every
+    other mutation."""
+    root = str(tmp_path / "topics")
+    _committed_group(spark, root)
+    ro = TopicEngine(spark, root, read_only=True)
+    with pytest.raises(ValueError, match="read_only"):
+        ro.offset_commit_batch("g", {("t", 0): 5})
+    with pytest.raises(ValueError, match="read_only"):
+        ro.offset_commit("g", "t", 0, 5)
+    with pytest.raises(ValueError, match="read_only"):
+        ro.group_metadata_append({"group_id": "g", "state": "Stable"})
+    got = {r["partition"]: r["committed_offset"] for r in ro.offset_fetch("g").collect()}
+    assert got == {0: 1, 1: 1}
+    assert ro.group_metadata_snapshots() == []
+
+
+def test_stale_engine_group_state_commit_is_fenced(spark, tmp_path):
+    """A second open claims the internal topic's writer epoch too: the
+    first engine's offset and group-metadata commits are refused."""
+    root = str(tmp_path / "topics")
+    a = _committed_group(spark, root)
+    b = TopicEngine(spark, root)
+    with pytest.raises(FencedWriterError):
+        a.offset_commit_batch("g", {("t", 0): 7})
+    with pytest.raises(FencedWriterError):
+        a.group_metadata_append({"group_id": "g", "state": "Stable"})
+    b.offset_commit("g", "t", 1, 3)
+    reader = TopicEngine(spark, root, read_only=True)
+    got = {r["partition"]: r["committed_offset"] for r in reader.offset_fetch("g").collect()}
+    assert got == {0: 1, 1: 3}
+    assert reader.group_metadata_snapshots() == []
+
+
+def test_stale_engine_is_fenced_when_the_newer_one_commits_first(spark, tmp_path):
+    """The internal topic is claimed at open even before its first commit:
+    once a newer engine has opened, the older one cannot create the topic
+    under it, take it over and fence the newer engine out."""
+    root = str(tmp_path / "topics")
+    a = TopicEngine(spark, root)
+    a.create_topic("t", TopicConfig(partitions=1))
+    b = TopicEngine(spark, root)
+    b.offset_commit("g", "t", 0, 1)
+    with pytest.raises(FencedWriterError):
+        a.offset_commit("g", "t", 0, 9)
+    with pytest.raises(FencedWriterError):
+        a.group_metadata_append({"group_id": "g", "state": "Stable"})
+    b.offset_commit("g", "t", 0, 2)
+    b.group_metadata_append({"group_id": "g", "state": "Empty"})
+    got = {r["partition"]: r["committed_offset"] for r in b.offset_fetch("g").collect()}
+    assert got == {0: 2}
+    b.delete_topic("t")
+    assert b.offset_fetch("g").collect() == []
+
+
+def test_read_only_engine_refuses_tx_range_append(spark, tmp_path):
+    from redpanda_spark.operators.txcoord import TX_RANGE_SCHEMA
+
+    root = str(tmp_path / "topics")
+    a = TopicEngine(spark, root)
+    a.create_topic("t", TopicConfig(partitions=1))
+    row = Row(topic="t", partition=0, producer_id=1, first_offset=0,
+              last_offset=0, outcome="aborted")
+    a.append_tx_ranges(spark.createDataFrame([row], TX_RANGE_SCHEMA))
+    ro = TopicEngine(spark, root, read_only=True)
+    before = sorted(ro.tx_ranges().collect())
+    late = row.asDict() | {"first_offset": 5, "last_offset": 6}
+    with pytest.raises(ValueError, match="read_only"):
+        ro.append_tx_ranges(spark.createDataFrame([Row(**late)], TX_RANGE_SCHEMA))
+    assert sorted(ro.tx_ranges().collect()) == before

@@ -142,28 +142,19 @@ def test_engine_expire_offsets_tombstones(spark, tmp_path):
 
     eng = TopicEngine(spark, str(tmp_path / "root"))
     eng.create_topic("t", TopicConfig(partitions=2))
-    old = time.time_ns() - 3600 * 1_000_000_000  # an hour ago
-    # doctor an old commit by writing through offset_commit then expiring
     eng.offset_commit("g_old", "t", 0, 11)
+    between = time.time_ns()
     eng.offset_commit("g_new", "t", 0, 22)
-    # force g_old's commit_seq into the past
-    import pyspark.sql.functions as F
-
-    d = eng._commits_dir()
-    df = spark.read.parquet(d)
-    rows = df.withColumn(
-        "commit_seq",
-        F.when(F.col("group_id") == "g_old", F.lit(old)).otherwise(
-            F.col("commit_seq")
-        ),
-    ).collect()
-    spark.createDataFrame(rows, df.schema).write.mode("overwrite").parquet(d)
-    n = eng.expire_offsets(retention_ms=600_000)
+    # age g_old's commit: evaluate expiry exactly one retention after a
+    # moment between the two commits
+    retention_ms = 600_000
+    now_ns = between + retention_ms * 1_000_000
+    n = eng.expire_offsets(retention_ms=retention_ms, now_ns=now_ns)
     assert n == 1
     left = {r["group_id"] for r in eng.offset_fetch().collect()}
     assert left == {"g_new"}
     # idempotent: second run expires nothing new
-    assert eng.expire_offsets(retention_ms=600_000) == 0
+    assert eng.expire_offsets(retention_ms=retention_ms, now_ns=now_ns) == 0
 
 
 def test_compact_offsets_bounds_commit_log(spark, tmp_path):
@@ -190,3 +181,96 @@ def test_compact_offsets_bounds_commit_log(spark, tmp_path):
         r["committed_offset"]
         for r in eng.offset_fetch("g").where("partition = 0").collect()
     } == {7}
+    # a freshly opened engine that has committed nothing compacts too
+    assert TopicEngine(spark, eng.root).compact_offsets() == {
+        "before": 3, "after": 2
+    }
+
+
+def _job_ids(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_group_state_commit_and_read_run_no_spark_job(spark, tmp_path):
+    """Group state is records of the internal __consumer_offsets topic:
+    on a local root a commit is one zero-job local produce, and a
+    freshly opened engine replays it driver-side, also job-free."""
+    from redpanda_spark.engine import TopicConfig, TopicEngine
+
+    root = str(tmp_path / "root")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("t", TopicConfig(partitions=4))
+    _, jobs = _job_ids(
+        spark,
+        "g-commit",
+        lambda: eng.offset_commit_batch("g", {("t", p): 10 + p for p in range(4)}),
+    )
+    assert jobs == []
+    snap = {"group_id": "g", "state": "Stable", "generation": 2,
+            "protocol": "range", "leader": "m1", "members": {"m1": {}},
+            "next_member": 2, "coop_followup": True}
+    _, jobs = _job_ids(spark, "g-meta", lambda: eng.group_metadata_append(snap))
+    assert jobs == []
+
+    fresh = TopicEngine(spark, root)
+    rows, jobs = _job_ids(spark, "g-fetch", lambda: fresh.offset_fetch("g").collect())
+    assert jobs == []
+    assert {(r["partition"], r["committed_offset"]) for r in rows} == {
+        (p, 10 + p) for p in range(4)
+    }
+    assert fresh.offset_fetch().columns == [
+        "group_id", "topic", "partition", "committed_offset",
+        "leader_epoch", "metadata",
+    ]
+    snaps, jobs = _job_ids(spark, "g-snaps", fresh.group_metadata_snapshots)
+    assert jobs == []
+    assert snaps == [snap]
+
+
+def test_internal_offsets_topic_is_hidden_and_reserved(spark, tmp_path, capsys):
+    import json
+
+    import pytest
+
+    from redpanda_spark.cli import main
+    from redpanda_spark.engine import OFFSETS_TOPIC, TopicConfig, TopicEngine
+    from redpanda_spark.rest import RestApp
+
+    eng = TopicEngine(spark, str(tmp_path / "root"))
+    eng.create_topic("t", TopicConfig(partitions=1))
+    eng.offset_commit("g", "t", 0, 1)
+    assert list(eng.list_topics()) == ["t"]
+    assert list(TopicEngine(spark, eng.root).list_topics()) == ["t"]
+    assert RestApp(eng).handle("GET", "/topics") == (200, ["t"])
+    capsys.readouterr()
+    assert main(["--root", eng.root, "topic", "list"]) == 0
+    listed = [json.loads(x)["topic"] for x in capsys.readouterr().out.splitlines()]
+    assert listed == ["t"]
+    with pytest.raises(ValueError, match="reserved"):
+        eng.create_topic(OFFSETS_TOPIC)
+
+
+def test_legacy_group_side_tables_refuse_to_open(spark, tmp_path):
+    """A root that still holds the old Parquet side tables must not open
+    as if it had no committed offsets."""
+    import os
+
+    import pytest
+
+    from redpanda_spark.engine import TopicEngine
+
+    # a crashed purge swap of the old side tables could leave the only
+    # copy in ``.old`` or ``.purge.tmp``
+    for base in ("_consumer_offsets", "_groups"):
+        for d in (base, base + ".old", base + ".purge.tmp"):
+            root = tmp_path / d.strip("_")
+            os.makedirs(root / d)
+            (root / d / "part-00000.parquet").write_bytes(b"")
+            with pytest.raises(ValueError, match=d):
+                TopicEngine(spark, str(root))

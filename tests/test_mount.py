@@ -1140,7 +1140,10 @@ def test_crash_sweep_delete_topic_never_resurrects_metadata(
     metadata — a leftover aborted range would hide the fresh topic's
     rows at the reused offsets from read_committed consumers, and a
     stale committed offset would make a resuming consumer skip them
-    (the `create_topic` purge-on-hit guard, both tables)."""
+    (the `create_topic` purge-on-hit guard, both tables). Once the
+    catalog removal has landed, a topic of the same name mounted from a
+    bucket must not inherit the deleted topic's committed offsets either:
+    mount replays only the groups its handoff carries."""
     from redpanda_spark.engine import TopicEngine
 
     state = {}
@@ -1155,9 +1158,18 @@ def test_crash_sweep_delete_topic_never_resurrects_metadata(
         return a
 
     def recover(budget):
-        rec = TopicEngine(spark, state["root"])
-        if "t" in rec.list_topics():
-            rec.delete_topic("t")  # finish the crashed delete
+        bucket = str(tmp_path / f"d{budget}" / "bucket")
+        rec = TopicEngine(spark, state["root"], archive_root=bucket)
+        if "t" not in rec.list_topics():
+            src = TopicEngine(
+                spark, str(tmp_path / f"d{budget}" / "src"), archive_root=bucket
+            )
+            src.create_topic("t", _cfg(partitions=1))
+            _produce(src, "t", ["m1"])
+            src.unmount_topic("t")
+            rec.mount_topic("t")
+            assert _group_offsets_for(rec, "t") == {}, f"budget {budget}"
+        rec.delete_topic("t")  # finish the crashed delete / drop the mount
         rec.create_topic("t", TopicConfig(partitions=1))
         assert _tx_rows_for(rec, "t") == set(), f"budget {budget}"
         assert _group_offsets_for(rec, "t") == {}, f"budget {budget}"
