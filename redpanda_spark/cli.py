@@ -141,11 +141,10 @@ def cmd_topic_produce(args) -> int:
 
 def cmd_topic_consume(args) -> int:
     eng = _engine(args, read_only=True)
-    df = eng.fetch(
+    for r in eng.fetch_rows(
         args.topic, args.partition, offset=args.offset,
         max_records=args.num, isolation=args.isolation,
-    )
-    for r in sorted(df.collect(), key=lambda x: x["offset"]):
+    ):
         print(json.dumps({
             "partition": r["partition"],
             "offset": r["offset"],

@@ -191,8 +191,9 @@ class Consumer:
         position; advances in-memory positions (commit() makes them
         durable). Returns {(topic, partition): [rows...]}.
 
-        Served through the engine's hot-tail cache when it covers the
-        positions (zero Spark jobs — the interactive consumer path);
+        Each partition is one ``engine.fetch_rows`` with zero Spark jobs:
+        served from the hot-tail cache when it covers the position, else
+        from a pyarrow read of the manifest-pruned parquet segments;
         ``max_partition_fetch_bytes`` applies the Kafka per-partition
         byte budget (whole records, oversized first record still
         returned)."""

@@ -12,8 +12,10 @@ Maps the reference's RPC surface (SURVEY.md §2.1) onto table operations:
                                      or the streaming twin), not a produce-
                                      time filter — the log keeps duplicate
                                      sequences; readers drop them.
-  fetch                              Fetch (handlers/fetch.cc:300): offset-range
-                                     scan with isolation level
+  fetch / fetch_rows                 Fetch (handlers/fetch.cc:300): offset-range
+                                     scan with isolation level; the row
+                                     fetch reads the hot tail or the
+                                     pruned segments in-process
   list_offsets / timequery           ListOffsets (list_offsets.cc:66-157)
   delete_records                     DeleteRecords (delete_records.cc:115-172)
   run_retention / run_compaction     storage GC + keep-latest compaction
@@ -66,13 +68,14 @@ tiered storage (`cloud_storage/`) dissolved into a FileSystem impl.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import time
 from contextlib import nullcontext as _nullcontext
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from redpanda_spark import fsio
@@ -152,6 +155,49 @@ class FencedWriterError(Exception):
 # Opened (and claimed) by every engine; it is never in the catalog, its
 # first manifest is written by the first commit, and list_topics hides it.
 OFFSETS_TOPIC = "__consumer_offsets"
+
+# Segment column order, written by both produce paths; a segment scan's
+# collect() returns its fields in this order, and so does fetch_rows.
+_RecordRow = Row(
+    "partition", "timestamp", "key", "value", "headers", "producer_id",
+    "producer_epoch", "base_sequence", "is_transactional", "is_control",
+    "offset",
+)
+_HeaderRow = Row("key", "value")
+
+
+def _record_row(r: dict) -> Row:
+    """A stored record (integer-µs timestamp, header dicts) as the Row a
+    ``collect()`` of the segment scan returns: the timestamp naive in the
+    OS-local zone, as TimestampType.fromInternal builds it (not in the
+    session timezone), and headers as Rows."""
+    us, hdrs = r["timestamp"], r["headers"]
+    return _RecordRow(
+        r["partition"],
+        _dt.datetime.fromtimestamp(us // 1_000_000).replace(
+            microsecond=us % 1_000_000
+        ),
+        r["key"],
+        r["value"],
+        None if hdrs is None else [_HeaderRow(h["key"], h["value"]) for h in hdrs],
+        r["producer_id"],
+        r["producer_epoch"],
+        r["base_sequence"],
+        r["is_transactional"],
+        r["is_control"],
+        r["offset"],
+    )
+
+
+def _record_bytes(r) -> int:
+    """Wire-size estimate of one record: the 16-byte overhead + key +
+    value accounting that byte budgets, fetch counters and the hot-tail
+    reservation share."""
+    return (
+        16
+        + (len(r["key"]) if r["key"] else 0)
+        + (len(r["value"]) if r["value"] else 0)
+    )
 
 
 def _next_arch_epoch(paths) -> int:
@@ -841,17 +887,6 @@ class TopicEngine:
             )
         return entry
 
-    @staticmethod
-    def _rows_bytes(rows) -> int:
-        """Wire-size estimate of fetched rows (the 16-byte overhead + key
-        + value accounting the byte-budget path uses)."""
-        return sum(
-            16
-            + (len(r["key"]) if r["key"] else 0)
-            + (len(r["value"]) if r["value"] else 0)
-            for r in rows
-        )
-
     def produce(self, topic: str, batch: DataFrame) -> dict[int, int]:
         """Instrumented produce: counts appended rows/bytes around
         :meth:`_produce_impl` (which holds the full semantics docstring).
@@ -1106,7 +1141,7 @@ class TopicEngine:
         """
         import datetime as _dt
 
-        if not isinstance(self._fsio, fsio.LocalFS):
+        if not getattr(self._fsio, "is_local", False):
             return None  # object-store roots: pyarrow can't write there
         if records is not None:
             rows = [
@@ -1447,23 +1482,12 @@ class TopicEngine:
     def _update_tail(self, topic, prev_tail, recs, bases) -> None:
         """Post-commit hot-tail maintenance: extend contiguous coverage,
         trim to the row/byte budgets from the OLD end (so coverage always
-        stays [start, high))."""
-        import datetime as _dt
-
+        stays [start, high)). The tail keeps the committed records as
+        written (integer-µs timestamps); fetch_rows builds the Rows."""
         new_tail: dict[int, tuple[int, list[dict]]] = dict(prev_tail)
         by_part: dict[int, list[dict]] = {}
         for r in recs:
-            row = dict(r)
-            # store timestamps EXACTLY the way a Spark collect() returns
-            # them: TimestampType.fromInternal = datetime.fromtimestamp
-            # (OS-local naive) — NOT the session timezone, which diverges
-            # from collect() whenever the two differ (the tail and the
-            # parquet scan must be indistinguishable, timestamps included)
-            us = row["timestamp"]
-            row["timestamp"] = _dt.datetime.fromtimestamp(
-                us // 1_000_000
-            ).replace(microsecond=us % 1_000_000)
-            by_part.setdefault(row["partition"], []).append(row)
+            by_part.setdefault(r["partition"], []).append(r)
         for p, lst in by_part.items():
             prev = prev_tail.get(p)
             if prev and prev[1] and prev[1][-1]["offset"] + 1 == bases[p]:
@@ -1476,21 +1500,16 @@ class TopicEngine:
                 start = merged[0]["offset"]
             new_tail[p] = (start, merged)
         # topic-level byte budget (batch_cache memory reservation analog)
-        def nbytes(row):
-            return (
-                16
-                + (len(row["key"]) if row["key"] else 0)
-                + (len(row["value"]) if row["value"] else 0)
-            )
-
-        total = sum(nbytes(r) for _, (_s, lst) in new_tail.items() for r in lst)
+        total = sum(
+            _record_bytes(r) for _, (_s, lst) in new_tail.items() for r in lst
+        )
         if total > self._tail_max_bytes:
             for p in list(new_tail):
                 if total <= self._tail_max_bytes:
                     break
                 start, lst = new_tail[p]
                 while lst and total > self._tail_max_bytes:
-                    total -= nbytes(lst[0])
+                    total -= _record_bytes(lst[0])
                     lst = lst[1:]
                 if lst:
                     new_tail[p] = (lst[0]["offset"], lst)
@@ -1507,61 +1526,119 @@ class TopicEngine:
         max_bytes: int | None = None,
         isolation: str = "read_uncommitted",
     ) -> list:
-        """Row-level fetch for interactive consumers: served from the
-        hot-tail cache when it covers the range (ZERO Spark jobs), else
-        the pruned parquet scan. Byte budget first, then the record cap —
-        the same order the relational path applies them."""
-        rows = self._tail_fetch(topic, partition, offset, isolation)
-        if rows is None:
-            self._count(topic, tail_cache_misses=1)
-            rows = self.fetch(
-                topic,
-                partition,
-                offset=offset,
-                max_records=max_records,
-                max_bytes=max_bytes,
-                isolation=isolation,
-            ).collect()
-            rows.sort(key=lambda r: r["offset"])
-            self._count(
-                topic,
-                fetched_rows=len(rows),
-                fetched_bytes=self._rows_bytes(rows),
-            )
-            return rows
-        self._count(topic, tail_cache_hits=1)
-        if max_bytes is not None:
-            kept, cum = [], 0
-            for r in rows:  # first record always returns (broker contract)
-                if cum >= max_bytes:
-                    break
-                kept.append(r)
-                cum += (
-                    16
-                    + (len(r["key"]) if r["key"] else 0)
-                    + (len(r["value"]) if r["value"] else 0)
-                )
-            rows = kept
-        if max_records is not None:
-            rows = rows[:max_records]
-        self._count(
-            topic, fetched_rows=len(rows), fetched_bytes=self._rows_bytes(rows)
-        )
-        return rows
+        """Row-level fetch for consumers, in-process with ZERO Spark jobs:
+        served from the hot-tail cache when it covers ``offset``, else
+        read with pyarrow from the manifest-pruned parquet segments of
+        both tiers — the reference's batch cache in front of
+        `storage::log_reader` (`storage/log_reader.h:131`). Both sources
+        go through the same log start, read_committed visibility, byte
+        budget (whole records; the first one returns even alone over
+        budget) and then record cap, and the Rows equal
+        ``fetch(...).collect()`` sorted by offset."""
+        self._require(topic)
+        cut = max(offset, self._log_starts(topic).get(partition, 0))
+        tail = self._tail.get(topic, {}).get(partition)
+        if tail is not None and offset >= tail[0]:
+            self._count(topic, tail_cache_hits=1)
+            recs = (r for r in tail[1] if r["offset"] >= cut)
+        else:
+            self._count(topic, tail_cache_misses=1, fetch_requests=1)
+            recs = self._segment_records(topic, partition, cut)
+        visible = self._visibility(topic, partition, isolation)
+        if visible is not None:
+            recs = filter(visible, recs)
+        taken, size = [], 0
+        # checked before each pull, so a met limit opens no further segment
+        while (max_bytes is None or size < max_bytes) and (
+            max_records is None or len(taken) < max_records
+        ):
+            r = next(recs, None)
+            if r is None:
+                break
+            taken.append(r)
+            size += _record_bytes(r)
+        self._count(topic, fetched_rows=len(taken), fetched_bytes=size)
+        return [_record_row(r) for r in taken]
 
-    def _read_side_table_file(self, d: str, name: str, columns=None):
-        """One parquet file as a pyarrow table — direct-path locally,
-        bytes-through-the-driver on URI roots (the files are tiny: tx
-        outcomes, or group-state commits of OFFSETS_TOPIC)."""
+    def _segment_records(self, topic: str, partition: int, cut: int):
+        """Records of ``partition`` at/after ``cut`` in offset order, from
+        the segments the manifest stats index leaves (hot, then cold
+        through the cold cache). Segments are opened in ascending
+        min-offset order, each only once the merge reaches its min
+        offset, so a fetch that stops early leaves the rest unread. A
+        manifest-listed segment missing on disk raises."""
+        import heapq
+
+        def min_offset(stats, rel) -> int:
+            s = stats.get(rel)
+            return s[2] if s else -1  # no stats: read it first
+
+        hot = self._pruned_files(topic, partition=partition, min_offset=cut)
+        cold = self._pruned_archived(topic, partition=partition, min_offset=cut)
+        hot_stats = self._stats.get(topic, {})
+        cold_stats = self._archived_stats.get(topic, {})
+        cands = [
+            (min_offset(hot_stats, rel), self._fsio, os.path.join(self.root, rel))
+            for rel in hot
+        ]
+        for rel, path in zip(cold, self._cold_paths(topic, cold)):
+            # _cold_paths leaves a segment on the archive root or maps it
+            # into the local cold cache
+            remote = path == os.path.join(self.archive_root, rel)
+            fs = self._afsio if remote else fsio.LocalFS()
+            cands.append((min_offset(cold_stats, rel), fs, path))
+        cands.sort(key=lambda c: c[0])
+        heap: list = []
+        nxt = 0
+        while True:
+            while nxt < len(cands) and (not heap or cands[nxt][0] <= heap[0][0]):
+                it = self._read_segment(cands[nxt][1], cands[nxt][2], partition, cut)
+                first = next(it, None)
+                if first is not None:
+                    heapq.heappush(heap, (first["offset"], nxt, first, it))
+                nxt += 1
+            if not heap:
+                return
+            _o, i, rec, it = heap[0]
+            yield rec
+            r = next(it, None)
+            if r is None:
+                heapq.heappop(heap)
+            else:
+                heapq.heapreplace(heap, (r["offset"], i, r, it))
+
+    def _read_segment(self, fs, path: str, partition: int, cut: int):
+        """One segment's records of ``partition`` at/after ``cut`` as
+        record dicts in offset order, converted batch by batch as the
+        caller consumes them."""
+        import pyarrow as pa
+
+        t = self._read_parquet_file(
+            fs,
+            path,
+            columns=list(_RecordRow),
+            filters=[("partition", "=", partition), ("offset", ">=", cut)],
+        )
+        ts = t["timestamp"].cast(pa.timestamp("us"), safe=False).cast(pa.int64())
+        t = t.set_column(t.schema.get_field_index("timestamp"), "timestamp", ts)
+        for batch in t.sort_by("offset").to_batches(max_chunksize=1024):
+            yield from batch.to_pylist()
+
+    def _read_parquet_file(self, fs, path: str, columns=None, filters=None):
+        """One parquet file as a pyarrow table — direct-path on a local
+        filesystem, bytes-through-the-driver on a URI one (tx outcomes,
+        group-state commits of OFFSETS_TOPIC, and the few segments a row
+        fetch reads)."""
         import pyarrow.parquet as _pq
 
-        if getattr(self._fsio, "is_local", True):
-            return _pq.read_table(os.path.join(d, name), columns=columns)
+        if getattr(fs, "is_local", True):
+            return _pq.read_table(
+                path, columns=columns, filters=filters, partitioning=None
+            )
         import io as _io
 
         return _pq.read_table(
-            _io.BytesIO(self._fsio.read_bytes(os.path.join(d, name))),
-            columns=columns,
+            _io.BytesIO(fs.read_bytes(path)), columns=columns, filters=filters
         )
 
     def _tx_ranges_local(self) -> list[dict]:
@@ -1581,7 +1658,9 @@ class TopicEngine:
             return self._tx_local_cache[1]
         rows: list[dict] = []
         for f in files:
-            rows.extend(self._read_side_table_file(d, f).to_pylist())
+            rows.extend(
+                self._read_parquet_file(self._fsio, os.path.join(d, f)).to_pylist()
+            )
         final = [r for r in rows if r["outcome"] != "open"]
         fkeys = {
             (r["topic"], r["partition"], r["producer_id"], r["first_offset"])
@@ -1597,29 +1676,16 @@ class TopicEngine:
         self._tx_local_cache = (files, live)
         return live
 
-    def _tail_fetch(self, topic, partition, offset, isolation):
-        """Serve a fetch from the hot tail without a Spark job, or None if
-        the tail can't FULLY answer it (offsets before tail_start need the
-        parquet path).
-
-        read_committed is served too — the reference's batch cache answers
-        ALL fetches, with the LSO applied as a read bound
-        (`handlers/fetch.cc:355-399`): the LSO (min open-txn first_offset,
-        else HWM), the aborted-range filter, and the control-row drop are
-        applied in-process from the driver-side tx-ranges mirror — the
-        same predicates operators/transactions.py::read_committed runs
-        relationally."""
-        t = self._tail.get(topic, {}).get(partition)
-        if t is None:
-            return None
-        start, lst = t
-        if offset < start:
-            return None
-        from pyspark.sql import Row
-
-        cut = max(offset, self._log_starts(topic).get(partition, 0))
+    def _visibility(self, topic, partition, isolation):
+        """The read_committed visibility test of one partition's records,
+        or None at read_uncommitted. Applied in-process from the
+        driver-side tx-ranges mirror, as the reference's fetch applies the
+        LSO as a read bound (`handlers/fetch.cc:355-399`): offsets below
+        the LSO (min open-txn first_offset, else HWM), outside aborted
+        ranges, never control rows — the same predicates
+        operators/transactions.py::read_committed runs relationally."""
         if isolation != "read_committed":
-            return [Row(**r) for r in lst if r["offset"] >= cut]
+            return None
         ranges = [
             r
             for r in self._tx_ranges_local()
@@ -1636,18 +1702,20 @@ class TopicEngine:
             for r in ranges
             if r["outcome"] == "aborted"
         ]
-        out = []
-        for r in lst:
+
+        def visible(r) -> bool:
             o = r["offset"]
-            if o < cut or o >= lso or r["is_control"]:
-                continue
-            if r["is_transactional"] and any(
-                pid == r["producer_id"] and fo <= o <= lo
-                for pid, fo, lo in aborted
-            ):
-                continue
-            out.append(Row(**r))
-        return out
+            return not (
+                o >= lso
+                or r["is_control"]
+                or r["is_transactional"]
+                and any(
+                    pid == r["producer_id"] and fo <= o <= lo
+                    for pid, fo, lo in aborted
+                )
+            )
+
+        return visible
 
     def _idempotence_gate(self, topic: str, df: DataFrame) -> DataFrame:
         """Broker-side sequence window per (partition, producer): the
@@ -2052,11 +2120,10 @@ class TopicEngine:
         `fetch.h:34`). Driver-side poll loop — streaming consumers should
         use ``log_stream`` instead.
 
-        Hot path: when the requested range is fully covered by the
-        hot-tail cache (the just-committed batches,
-        `storage/batch_cache.h:101`), the rows are served in-process with
-        ZERO Spark jobs — the interactive consumer latency path. Anything
-        older than the tail falls back to the pruned parquet scan."""
+        Each poll is one ``fetch_rows``: served in-process with ZERO
+        Spark jobs, from the hot-tail cache (the just-committed batches,
+        `storage/batch_cache.h:101`) when it covers the range, else from
+        a pyarrow read of the manifest-pruned parquet segments."""
         deadline = time.monotonic() + max_wait_s
         while True:
             rows = self.fetch_rows(topic, partition, offset=offset, isolation=isolation)
@@ -3091,13 +3158,9 @@ class TopicEngine:
                 # read_committed filters identically on the target
                 # cluster (duplicate rows from a resumed mount are
                 # harmless: range filtering is idempotent per row)
-                from redpanda_spark.operators.txcoord import TX_RANGE_SCHEMA
+                from redpanda_spark.operators.txcoord import tx_ranges_frame
 
-                self.append_tx_ranges(
-                    self.spark.createDataFrame(
-                        m["tx_ranges"], TX_RANGE_SCHEMA
-                    )
-                )
+                self.append_tx_ranges(tx_ranges_frame(self.spark, m["tx_ranges"]))
             # first-class consumer-offset migration (opt-in at unmount):
             # resume at the exact committed positions. Batched per group
             # (offset_commit_batch, the OffsetCommit-request shape): one
@@ -3397,13 +3460,13 @@ class TopicEngine:
         """Live tx metadata: final (committed/aborted) rows plus open rows
         not yet superseded by an EndTxn row for the same (topic, partition,
         producer, first_offset). Tiny table — the anti-join broadcasts."""
-        from redpanda_spark.operators.txcoord import TX_RANGE_SCHEMA
+        from redpanda_spark.operators.txcoord import tx_ranges_frame
 
         d = self._tx_ranges_dir()
         try:
             raw = self.spark.read.parquet(d)
         except Exception:
-            return self.spark.createDataFrame([], TX_RANGE_SCHEMA)
+            return tx_ranges_frame(self.spark, [])
         final = raw.where(F.col("outcome") != "open")
         keys = ["topic", "partition", "producer_id", "first_offset"]
         live_open = raw.where(F.col("outcome") == "open").join(
@@ -3431,7 +3494,9 @@ class TopicEngine:
         log: list[tuple] = []
         for f in files[len(seen):]:
             cols = ("offset", "key", "value")
-            t = self._read_side_table_file(self.root, f, columns=list(cols))
+            t = self._read_parquet_file(
+                self._fsio, os.path.join(self.root, f), columns=list(cols)
+            )
             log += zip(*(t.column(c).to_pylist() for c in cols))
         log.sort(key=lambda r: r[0])
         for key, value in (G.decode_group_record(k, v) for _, k, v in log):

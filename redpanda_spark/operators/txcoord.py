@@ -34,13 +34,27 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TX_RANGE_SCHEMA = (
     "topic string, partition int, producer_id bigint, "
     "first_offset bigint, last_offset bigint, outcome string"
 )
+_TX_RANGE_COLUMNS = (
+    "topic", "partition", "producer_id", "first_offset", "last_offset", "outcome"
+)
+
+
+def tx_ranges_frame(spark, rows: list[dict]) -> DataFrame:
+    """Tx-range rows as an Arrow LocalRelation: collecting or joining it
+    runs no Spark job, where a list-built createDataFrame is an RDD scan."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pydict(
+        {c: [r[c] for r in rows] for c in _TX_RANGE_COLUMNS}
+    )
+    return spark.createDataFrame(table, schema=TX_RANGE_SCHEMA)
 
 
 class TxError(Exception):
@@ -249,9 +263,10 @@ class TxCoordinator:
                 new_open.append((p, base))
         if new_open:
             self.engine.append_tx_ranges(
-                self.spark.createDataFrame(
+                tx_ranges_frame(
+                    self.spark,
                     [
-                        Row(
+                        dict(
                             topic=topic,
                             partition=p,
                             producer_id=st.producer_id,
@@ -261,7 +276,6 @@ class TxCoordinator:
                         )
                         for p, base in new_open
                     ],
-                    TX_RANGE_SCHEMA,
                 )
             )
         self._save()
@@ -321,7 +335,7 @@ class TxCoordinator:
             raise TxError("INVALID_TXN_STATE")
         outcome = "committed" if commit else "aborted"
         rows = [
-            Row(
+            dict(
                 topic=t,
                 partition=p,
                 producer_id=st.producer_id,
@@ -333,9 +347,7 @@ class TxCoordinator:
             for p, rng in parts.items()
         ]
         if rows:
-            self.engine.append_tx_ranges(
-                self.spark.createDataFrame(rows, TX_RANGE_SCHEMA)
-            )
+            self.engine.append_tx_ranges(tx_ranges_frame(self.spark, rows))
         if commit:
             by_group: dict[str, dict] = {}
             for (group, topic, part), off in st.staged_offsets.items():

@@ -396,11 +396,11 @@ class RestApp:
             "produce_requests": "produce calls",
             "produced_rows": "rows appended",
             "produced_bytes": "segment bytes appended",
-            "fetch_requests": "relational fetch plans built",
+            "fetch_requests": "relational fetches and row fetches from segments",
             "fetched_rows": "rows served via row-level fetch",
             "fetched_bytes": "wire-size bytes served via row-level fetch",
             "tail_cache_hits": "fetches served from the hot tail",
-            "tail_cache_misses": "row fetches that needed the parquet path",
+            "tail_cache_misses": "row fetches read from the parquet segments",
             "archival_uploads": "segments uploaded to the archive tier",
             "archival_bytes": "bytes uploaded to the archive tier",
             "cold_cache_hits": "cold reads served from the local cache",
@@ -570,7 +570,7 @@ class RestApp:
         count = int(query.get("count", 100))
         # consumer_byte_rate quota, POST-PAID like Kafka's fetch throttle:
         # a request arriving while the bucket is in deficit is rejected
-        # BEFORE any read happens (no wasted Spark job, and the deficit
+        # BEFORE any read happens (no wasted segment read, and the deficit
         # drains with wall time so the client's backoff always succeeds
         # eventually); completed reads then charge their actual bytes,
         # letting the bucket go negative for oversized fetches instead of
@@ -583,9 +583,9 @@ class RestApp:
                 "message": f"quota exceeded for {client}",
                 "throttle_time_ms": int(delay * 1000),
             }
-        out = self.engine.fetch(
+        out = self.engine.fetch_rows(
             topic, int(partition), offset=offset, max_records=count
-        ).collect()
+        )
         nbytes = sum(
             len(r["key"] or b"") + len(r["value"] or b"") for r in out
         )

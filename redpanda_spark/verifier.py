@@ -410,38 +410,24 @@ def run_workload(
 
 
 def verify_tail_consistency(engine, topic: str) -> dict:
-    """Hot-tail cache ≡ durable log over the covered range: the zero-job
-    read path (engine._tail, served by fetch_rows/fetch_poll) must be
-    indistinguishable from the parquet scan — same offsets, keys, and
-    payload bytes. The read-path twin of the contiguity invariant."""
-
-    def norm(r):
-        return (
-            r["offset"],
-            bytes(r["key"]) if r["key"] is not None else None,
-            bytes(r["value"]) if r["value"] is not None else None,
-            r["timestamp"],  # the cache stores collect()-identical values
-        )
-
+    """Hot-tail cache ≡ durable log over the covered range: a
+    ``fetch_rows`` the hot tail serves (the zero-job read path) must
+    equal the relational scan row for row, at both isolation levels —
+    read_committed applies the LSO bound, aborted filter and control drop
+    in-process. The read-path twin of the contiguity invariant."""
     checked = mismatches = 0
-    for p, (start, rows) in sorted((engine._tail.get(topic) or {}).items()):
+    for p, (start, _recs) in sorted((engine._tail.get(topic) or {}).items()):
         checked += 1
-        want = engine.fetch(topic, p, offset=start).collect()
-        want.sort(key=lambda r: r["offset"])
-        if [norm(r) for r in rows] != [norm(r) for r in want]:
-            mismatches += 1
-        # read_committed twin: the zero-job tail path (LSO bound + aborted
-        # filter + control drop applied in-process) must equal the
-        # relational read_committed scan over the same range
-        got_rc = engine._tail_fetch(topic, p, start, "read_committed")
-        want_rc = engine.fetch(
-            topic, p, offset=start, isolation="read_committed"
-        ).collect()
-        want_rc.sort(key=lambda r: r["offset"])
-        if got_rc is None or [norm(r) for r in got_rc] != [
-            norm(r) for r in want_rc
-        ]:
-            mismatches += 1
+        for isolation in ("read_uncommitted", "read_committed"):
+            hits = engine.counters(topic).get("tail_cache_hits", 0)
+            got = engine.fetch_rows(topic, p, offset=start, isolation=isolation)
+            served = engine.counters(topic).get("tail_cache_hits", 0) > hits
+            want = engine.fetch(
+                topic, p, offset=start, isolation=isolation
+            ).collect()
+            want.sort(key=lambda r: r["offset"])
+            if not served or got != want:
+                mismatches += 1
     return {
         "tail_partitions_checked": checked,
         "tail_mismatches": mismatches,

@@ -101,12 +101,29 @@ def test_rest_topic_lifecycle(engine, spark):
     )
     assert status == 200 and len(resp["offsets"]) >= 1
     # fetch each partition and reassemble
-    got = []
-    for p in (0, 1):
-        status, recs = app.handle("GET", f"/topics/t/partitions/{p}/records", query={"offset": "0"})
-        assert status == 200
-        got += [base64.b64decode(r["value"]).decode() for r in recs]
-    assert sorted(got) == ["1", "2"]
+    def fetch_all(app):
+        out = []
+        for p in (0, 1):
+            status, recs = app.handle(
+                "GET", f"/topics/t/partitions/{p}/records", query={"offset": "0"}
+            )
+            assert status == 200
+            out += recs
+        return out
+
+    recs = fetch_all(app)
+    assert sorted(base64.b64decode(r["value"]).decode() for r in recs) == ["1", "2"]
+    # a freshly opened engine has no hot tail: the same records come from
+    # the segments, with zero Spark jobs
+    fresh = RestApp(TopicEngine(spark, engine.root, read_only=True))
+    sc = spark.sparkContext
+    sc.setJobGroup("rest-fetch", "segment fetch must be job-free")
+    try:
+        again = fetch_all(fresh)
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("rest-fetch")) == []
+    assert again == recs
     assert app.handle("GET", "/topics/ghost")[0] == 404
 
 
@@ -318,7 +335,13 @@ def test_cli_topic_lifecycle(spark, tmp_path, capsys, monkeypatch):
     out = _json.loads(capsys.readouterr().out)
     assert out["produced"] == 2
 
-    assert main(["--root", root, "topic", "consume", "t", "-p", "1", "-o", "0"]) == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-consume", "consume must be job-free")
+    try:
+        assert main(["--root", root, "topic", "consume", "t", "-p", "1", "-o", "0"]) == 0
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("cli-consume")) == []
     recs = [_json.loads(x) for x in capsys.readouterr().out.splitlines()]
     assert [r["value"] for r in recs] == ["v2"]
     assert recs[0]["offset"] == 0

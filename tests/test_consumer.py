@@ -237,13 +237,18 @@ def test_pattern_subscription_and_offsets_for_times(spark, tmp_path):
 def test_consumer_poll_hot_tail_zero_jobs_and_byte_budget(spark, tmp_path):
     """A consumer polling freshly produced records is served from the
     engine's hot-tail cache with ZERO Spark jobs, and the Kafka
-    per-partition byte budget truncates at whole records."""
+    per-partition byte budget truncates at whole records. A consumer of
+    a second engine on the root (empty tail) reads the same records from
+    the segments, also with zero jobs, under the same budget."""
+    from pyspark.sql import Row
+
     from redpanda_spark.consumer import Consumer
     from redpanda_spark.engine import TopicConfig, TopicEngine
 
     from redpanda_spark.operators.coordinator import GroupManager
 
-    eng = TopicEngine(spark, str(tmp_path / "t"))
+    root = str(tmp_path / "t")
+    eng = TopicEngine(spark, root)
     eng.create_topic("hotc", TopicConfig(partitions=1))
     mgr = GroupManager({"hotc": 1}, engine=eng)
     c = Consumer(eng, mgr, "g-hot", ["hotc"], auto_offset_reset="earliest")
@@ -262,6 +267,32 @@ def test_consumer_poll_hot_tail_zero_jobs_and_byte_budget(spark, tmp_path):
     finally:
         sc.setJobGroup("", "")
     assert list(sc.statusTracker().getJobIdsForGroup("consumer-hot")) == []
+
+    # a DataFrame batch: a Spark-written segment, and its manifest flip
+    # empties the tail
+    eng.produce("hotc", spark.createDataFrame(
+        [Row(partition=0, key=b"k", value=bytes(100))] * 3,
+        "partition int, key binary, value binary",
+    ))
+    eng2 = TopicEngine(spark, root)
+    assert not eng2._tail
+    c2 = Consumer(eng2, GroupManager({"hotc": 1}, engine=eng2), "g-cold",
+                  ["hotc"], auto_offset_reset="earliest")
+    sc.setJobGroup("consumer-cold", "segment reads must be job-free")
+    try:
+        c2.subscribe()
+        polls = [c2.poll(max_partition_fetch_bytes=300)[("hotc", 0)]
+                 for _ in range(4)]
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("consumer-cold")) == []
+    assert [[r["offset"] for r in rows] for rows in polls] == [
+        [0, 1, 2], [3, 4, 5], [6, 7, 8], []
+    ]
+    assert [(r["key"], r["value"]) for rows in polls for r in rows] == [
+        (b"k", bytes(100))
+    ] * 9
+    assert eng2.counters("hotc")["tail_cache_misses"] == 4
 
 
 def test_unknown_member_heartbeat_rejoins_fresh(spark, tmp_path):

@@ -483,6 +483,9 @@ def test_compaction_over_missing_segment_raises_and_keeps_the_rest(spark, tmp_pa
         assert os.path.exists(os.path.join(root, f))
     with pytest.raises(AnalysisException):
         eng.log("ms").count()
+    # the in-process row fetch (no hot tail on a fresh engine) raises too
+    with pytest.raises(FileNotFoundError):
+        TopicEngine(spark, root, read_only=True).fetch_rows("ms", 0)
 
 
 @pytest.mark.parametrize("n_records", [3, 0])
@@ -956,6 +959,138 @@ def test_engine_fetch_max_bytes(spark, tmp_path):
     assert got == [0, 1, 2]
     got = eng.fetch("b", 0, offset=5, max_bytes=1).collect()
     assert len(got) == 1  # oversized first record still served
+
+
+def _no_jobs(spark, group, fn):
+    """fn() under a Spark job group; asserts it started no job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "must run no Spark job")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    return out
+
+
+def test_row_fetch_sources_equal_row_for_row(spark, tmp_path):
+    """A hot-tail hit, a segment read (a freshly opened engine has no
+    tail) and fetch().collect() return equal Rows: headers as Rows, a
+    null key and a tombstone included."""
+    root = str(tmp_path / "t")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("h", TopicConfig(partitions=1))
+    eng.produce("h", [
+        {"partition": 0, "key": b"k", "value": b"v",
+         "headers": [{"key": "h", "value": b"x"}]},
+        {"partition": 0, "key": None, "value": b"no-key",
+         "headers": [{"key": "n", "value": None}]},
+        {"partition": 0, "key": b"gone", "value": None, "headers": None},
+    ])
+    want = sorted(eng.fetch("h", 0).collect(), key=lambda r: r["offset"])
+    assert [r["offset"] for r in want] == [0, 1, 2]
+    tail = eng.fetch_rows("h", 0)
+    assert eng.counters("h")["tail_cache_hits"] == 1
+    fresh = TopicEngine(spark, root, read_only=True)
+    segment = _no_jobs(spark, "row-fetch-segment", lambda: fresh.fetch_rows("h", 0))
+    assert fresh.counters("h")["tail_cache_misses"] == 1
+    assert tail == want
+    assert segment == want
+    names = [list(r.__fields__) for r in want]
+    assert [list(r.__fields__) for r in tail + segment] == names * 2
+    assert want[0]["headers"] == [Row(key="h", value=bytearray(b"x"))]
+
+
+_FETCH_CASES = [
+    "archived", "archived_cold_cache", "log_start", "read_committed",
+    "max_bytes_below_first", "max_records", "offset_at_hwm",
+]
+
+
+@pytest.mark.parametrize("case", _FETCH_CASES)
+def test_fetch_rows_equals_sorted_fetch_collect(spark, tmp_path, case):
+    """fetch_rows on a freshly opened engine (empty hot tail) reads the
+    segments in-process with zero Spark jobs and returns exactly the
+    relational fetch's rows in offset order, across pyarrow- and
+    Spark-written segments of both tiers."""
+    import datetime as dt
+
+    from redpanda_spark.operators.txcoord import TxCoordinator
+
+    root = str(tmp_path / "r")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("t", TopicConfig(
+        partitions=2, remote_write=True, local_retention_ms=60_000,
+    ))
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    old = [
+        {"key": b"k%d" % i, "value": bytes(40 + i), "timestamp": base,
+         "headers": [{"key": "i", "value": b"%d" % i}]}
+        for i in range(8)
+    ]
+    eng.produce("t", old[:4])
+    eng.produce("t", old[4:])
+    eng.produce("t", spark.createDataFrame(
+        [Row(key=b"d%d" % i, value=bytes(30)) for i in range(10)],
+        "key binary, value binary",
+    ))  # a Spark-written segment
+    eng.produce("t", [{"key": None, "value": b"no-key"}, {"key": b"z", "value": None}])
+    if case.startswith("archived"):
+        now_ms = int((base + dt.timedelta(hours=2)).timestamp() * 1000)
+        assert eng.run_archival("t", now_ms=now_ms)["archived"] == 2
+    if case == "log_start":
+        eng.delete_records("t", {0: 3, 1: 2})
+    if case == "read_committed":
+        tc = TxCoordinator(eng)
+        tc.init_producer_id("a")
+        tc.produce("a", "t", [{"partition": 0, "key": b"c", "value": b"committed"}])
+        tc.commit("a")
+        eng.produce("t", [{"partition": 0, "key": None, "value": None,
+                           "is_control": True}])
+        tc.produce("a", "t", [{"partition": 0, "key": b"x", "value": b"aborted"}])
+        tc.abort("a")
+        eng.produce("t", [{"partition": 0, "key": b"p", "value": b"plain"}])
+        tc.init_producer_id("b")
+        tc.produce("b", "t", [{"partition": 0, "key": b"o", "value": b"open"}])
+        eng.produce("t", [{"partition": 0, "key": b"l", "value": b"above-lso"}])
+    kw = {
+        "archived": {}, "archived_cold_cache": {}, "offset_at_hwm": {},
+        "log_start": {"offset": 1},
+        "read_committed": {"isolation": "read_committed"},
+        "max_bytes_below_first": {"offset": 1, "max_bytes": 10},
+        "max_records": {"offset": 1, "max_records": 3},
+    }[case]
+
+    fresh = TopicEngine(spark, root, read_only=True)
+    if case == "archived_cold_cache":
+        fresh.enable_cold_cache(1 << 30, str(tmp_path / "cc"))
+    for p in (0, 1):
+        if case == "offset_at_hwm":
+            kw["offset"] = fresh.high_watermarks("t")[p]
+        got = _no_jobs(
+            spark, f"fetch-rows-{case}-{p}", lambda: fresh.fetch_rows("t", p, **kw)
+        )
+        want = sorted(fresh.fetch("t", p, **kw).collect(), key=lambda r: r["offset"])
+        assert got == want
+        assert [list(r.__fields__) for r in got] == [list(r.__fields__) for r in want]
+        if case == "offset_at_hwm":
+            assert got == []
+        elif case == "max_bytes_below_first":
+            assert len(got) == 1
+        elif case == "max_records":
+            assert len(got) == 3
+        else:
+            assert len(got) >= 2
+    if case == "read_committed":
+        rows0 = fresh.fetch_rows("t", 0, isolation="read_committed")
+        values = {r["value"] for r in rows0}
+        assert {b"committed", b"plain"} <= values
+        assert not {b"aborted", b"open", b"above-lso"} & values
+        assert not any(r["is_control"] for r in rows0)
+    if case == "archived_cold_cache":
+        c = fresh.counters("t")
+        # fetch_rows filled the cache (misses) and fetch() then hit it
+        assert c["cold_cache_misses"] == 2 and c["cold_cache_hits"] >= 2
 
 
 def test_record_produce_zero_valued_producer_fields(spark, tmp_path):

@@ -233,6 +233,21 @@ def test_group_state_commit_and_read_run_no_spark_job(spark, tmp_path):
     assert snaps == [snap]
 
 
+def test_tx_ranges_without_transactions_runs_no_spark_job(spark, tmp_path):
+    """With no transaction recorded, tx_ranges() is an empty Arrow
+    LocalRelation (run_compaction broadcast-joins it on every call), so
+    collecting it starts no Spark job."""
+    from redpanda_spark.engine import TopicEngine
+
+    eng = TopicEngine(spark, str(tmp_path / "root"))
+    rows, jobs = _job_ids(spark, "tx-empty", lambda: eng.tx_ranges().collect())
+    assert jobs == [] and rows == []
+    assert eng.tx_ranges().columns == [
+        "topic", "partition", "producer_id", "first_offset", "last_offset",
+        "outcome",
+    ]
+
+
 def test_internal_offsets_topic_is_hidden_and_reserved(spark, tmp_path, capsys):
     import json
 

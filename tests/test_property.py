@@ -208,10 +208,20 @@ def test_idempotent_dedup_matches_model(spark, recs):
 # the REAL TxCoordinator methods drive the FSM via record_produced.)
 
 
+# TxCoordinator builds its tx-range rows as an Arrow table, and pyarrow's
+# first conversion from Python objects imports pandas (~0.4 s here): pay
+# that once at import, not inside a deadline-timed example
+pa.array([0])
+
+
 class _StubEngine:
     class _Spark:
-        def createDataFrame(self, rows, schema):
-            return rows  # txcoord only forwards this to append_tx_ranges
+        def createDataFrame(self, table, schema):
+            # txcoord hands its Arrow table of tx-range rows straight on
+            # to append_tx_ranges
+            from pyspark.sql import Row
+
+            return [Row(**r) for r in table.to_pylist()]
 
     def __init__(self, root):
         import os

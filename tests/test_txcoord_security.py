@@ -436,8 +436,11 @@ def test_transaction_timeout_expiry_aborts_and_unblocks_lso(spark, engine):
 
 
 def _rc_tail(engine, topic, offset=0):
-    rows = engine._tail_fetch(topic, 0, offset, "read_committed")
-    assert rows is not None, "tail declined a read_committed poll"
+    hits = engine.counters(topic).get("tail_cache_hits", 0)
+    rows = engine.fetch_rows(topic, 0, offset=offset, isolation="read_committed")
+    assert engine.counters(topic)["tail_cache_hits"] == hits + 1, (
+        "tail declined a read_committed poll"
+    )
     return [bytes(r["value"]).decode() for r in rows]
 
 
