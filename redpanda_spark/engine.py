@@ -69,12 +69,16 @@ tiered storage (`cloud_storage/`) dissolved into a FileSystem impl.
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
 import json
 import os
 import time
 from contextlib import nullcontext as _nullcontext
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -165,6 +169,34 @@ _RecordRow = Row(
 )
 _HeaderRow = Row("key", "value")
 
+# The record columns a produce batch may carry, as the in-process produce
+# core takes them: the segment schema, with timestamps as integer µs.
+_RECORD_ARROW = pa.schema(
+    [
+        ("partition", pa.int32()),
+        ("timestamp", pa.int64()),
+        ("key", pa.binary()),
+        ("value", pa.binary()),
+        ("headers", pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))),
+        ("producer_id", pa.int64()),
+        ("producer_epoch", pa.int16()),
+        ("base_sequence", pa.int32()),
+        ("is_transactional", pa.bool_()),
+        ("is_control", pa.bool_()),
+    ]
+)
+
+# Largest DataFrame batch, by its optimized plan's sizeInBytes, that
+# produce collects with one toArrow() and appends in-process; a bigger
+# one takes the distributed route/write/read-back pipeline. Set at the
+# measured crossover: on a 4-core VM (local[4], cached keyed batches, a
+# 4-partition topic) the in-process append took less session CPU at every
+# size from 8 to 128 MiB, 1 KiB and 100 B records alike, and less wall
+# time up to 64 MiB; at 128 MiB of 1 KiB records the walls met (in-process
+# 1.4-2.1 s, distributed 1.7-2.2 s) while 100 B records still ran 2x
+# faster in-process. Past it the driver holds the whole batch for little.
+_LOCAL_PRODUCE_MAX_BYTES = 128 << 20
+
 
 def _record_row(r: dict) -> Row:
     """A stored record (integer-µs timestamp, header dicts) as the Row a
@@ -187,6 +219,31 @@ def _record_row(r: dict) -> Row:
         r["is_control"],
         r["offset"],
     )
+
+
+# Produce-batch columns other than partition, timestamp and offset, with
+# the value a record lacking one stores (None: null).
+_RECORD_DEFAULTS = {
+    "key": None, "value": None, "headers": None, "producer_id": -1,
+    "producer_epoch": -1, "base_sequence": -1, "is_transactional": False,
+    "is_control": False,
+}
+
+
+def _record_dicts(columns, idx, n: int) -> list[dict]:
+    """Rows ``idx`` of an ``n``-row batch held as ``_RecordRow``-ordered
+    columns (numpy arrays, Arrow arrays, or one value for every row) as
+    the record dicts the hot tail keeps. Column-wise, so a 10-record batch
+    pays a few list conversions rather than a whole-table ``to_pylist``."""
+    lists = []
+    for c in columns:
+        if isinstance(c, np.ndarray):
+            lists.append(c[idx].tolist())
+        elif isinstance(c, (pa.Array, pa.ChunkedArray)):
+            lists.append((c if len(idx) == n else c.take(pa.array(idx))).to_pylist())
+        else:
+            lists.append([c] * len(idx))
+    return [dict(zip(_RecordRow, v)) for v in zip(*lists)]
 
 
 def _record_bytes(r) -> int:
@@ -330,6 +387,8 @@ class TopicEngine:
         self._tail: dict[str, dict[int, tuple[int, list[dict]]]] = {}
         self._tail_max_rows = 2048  # per partition
         self._tail_max_bytes = 16 << 20  # per topic (batch_cache reservation)
+        # _record_bytes sum per partition of _tail[topic]
+        self._tail_bytes: dict[str, dict[int, int]] = {}
         # driver-side mirror of the (tiny) _tx_ranges side table, keyed by
         # the dir's file listing — lets the hot tail serve read_committed
         # with zero Spark jobs (LSO bound + aborted filter in-process)
@@ -914,26 +973,30 @@ class TopicEngine:
         optional timestamp, optional partition int (explicit routing),
         optional headers/producer_id/producer_epoch/base_sequence.
 
-        Pipeline (mirrors produce.cc): route partition (explicit, else
-        Arrow-batched murmur2(key), else round-robin via monotonic id) →
-        timestamp validate/rewrite per topic timestamp_type → assign
-        contiguous offsets from the stored high watermark → one write job
-        (local (partition, offset) sort + flat parquet append), then the
-        watermark bookkeeping reads back ONLY the new files: a
-        column-pruned per-partition count job plus driver-side footer
-        stats for the manifest pruning index — O(files in batch) =
-        O(write tasks), not O(partitions), and nothing re-runs the
-        routing/offset pipeline (the reference's segment index records
-        batch row counts at append, `storage/index_state.h`).
+        Driver-sized batches append in-process (``_produce_local``): a
+        record list or a LocalRelation DataFrame with zero Spark jobs, any
+        other DataFrame whose optimized plan's ``sizeInBytes`` is at most
+        ``_LOCAL_PRODUCE_MAX_BYTES`` with one ``toArrow()`` job, then
+        routing, offsets, validation and the parquet write on Arrow
+        arrays. URI roots, streaming frames and bigger batches take the
+        distributed pipeline below.
+
+        Distributed pipeline (mirrors produce.cc): route partition
+        (explicit, else Arrow-batched murmur2(key), else round-robin via
+        monotonic id) → timestamp validate/rewrite per topic
+        timestamp_type → assign contiguous offsets from the stored high
+        watermark → one write job (local (partition, offset) sort + flat
+        parquet append), then the watermark bookkeeping reads back ONLY
+        the new files: a column-pruned per-partition count job plus
+        driver-side footer stats for the manifest pruning index —
+        O(files in batch) = O(write tasks), not O(partitions), and nothing
+        re-runs the routing/offset pipeline (the reference's segment index
+        records batch row counts at append, `storage/index_state.h`).
         """
         cfg = self._require(topic)
         self._refuse_replica_mutation(topic)
         n_parts = cfg.partitions
 
-        # Small-batch fast path: a batch the driver already holds — a list
-        # of record dicts/Rows (the producer-client shape: REST produce,
-        # interactive producers) or a genuinely local DataFrame plan — is
-        # appended entirely driver-side with zero Spark jobs.
         if isinstance(batch, (list, tuple)):
             out = self._produce_local(topic, cfg, None, records=batch)
             if out is not None:
@@ -1018,14 +1081,16 @@ class TopicEngine:
             "is_control": F.lit(False),
         }
         # single select (not a withColumn chain): one analysis pass, and
-        # small-batch produce latency is sensitive to driver round trips
+        # small-batch produce latency is sensitive to driver round trips.
+        # Key and value are stored binary whatever the batch's types, as
+        # the in-process path stores them.
         df = df.select(
             part.alias("partition"),
             ts.alias("timestamp"),
-            (F.col("key") if "key" in cols else F.lit(None).cast("binary")).alias(
+            (F.col("key") if "key" in cols else F.lit(None)).cast("binary").alias(
                 "key"
             ),
-            F.col("value"),
+            F.col("value").cast("binary").alias("value"),
             *[
                 (F.col(c) if c in cols else d.alias(c))
                 for c, d in defaults.items()
@@ -1104,9 +1169,9 @@ class TopicEngine:
     }
 
     def _records_to_df(self, records) -> DataFrame:
-        """List-of-records → DataFrame, for when the local fast path
-        declines (URI root, oversized batch, exotic timestamps) and the
-        batch must go through the distributed produce pipeline."""
+        """List-of-records → DataFrame, for when the in-process path
+        declines (URI root, over 200,000 records, exotic timestamps) and
+        the batch must go through the distributed produce pipeline."""
         rows = [r.asDict() if hasattr(r, "asDict") else dict(r) for r in records]
         cols = list(rows[0]) if rows else ["key", "value"]
         schema = ", ".join(f"{c} {self._RECORD_COL_TYPES[c]}" for c in cols)
@@ -1117,30 +1182,26 @@ class TopicEngine:
     def _produce_local(
         self, topic: str, cfg: TopicConfig, batch: DataFrame | None, records=None
     ):
-        """Driver-side append for driver-held batches — zero Spark jobs.
+        """Driver-side append for driver-sized batches, with no Spark job
+        beyond collecting the batch.
 
-        A batch the driver already holds (a list of record dicts — the
-        producer-client shape used by REST produce and interactive
-        producers — or a DataFrame whose plan is a true local relation)
-        gains nothing from the distributed pipeline: 2-3 Spark jobs
-        (~250ms each) of pure scheduling overhead for a few KiB of rows.
-        This path runs the IDENTICAL produce semantics in-process —
-        murmur2/explicit routing, timestamp-type rewrite, schema-id +
-        max.message.bytes validation, producer idempotence window,
-        contiguous offsets, a (partition, offset)-sorted parquet segment
-        with footer stats, and the same atomic manifest commit — then
-        leaves the committed rows in the hot-tail cache for fetch_poll.
+        A batch the driver holds — a list of record dicts/Rows (REST
+        produce, interactive producers) or a DataFrame whose optimized
+        plan is a local relation — is collected with a zero-job
+        ``collect()``. Any other DataFrame whose optimized plan's
+        ``sizeInBytes`` is at most ``_LOCAL_PRODUCE_MAX_BYTES`` is
+        collected with one ``toArrow()`` job. Either way the batch then
+        takes ``_append_arrow``, which runs the distributed path's produce
+        semantics on Arrow arrays in-process, with no routing UDF stage,
+        no offset window shuffle and no count read-back job.
 
         This is the reference's produce shape: the partition leader
-        handles a small append on its own shard without a scatter
-        (`kafka/server/handlers/produce.cc:311-500`), and the committed
-        batch stays in the batch cache (`storage/batch_cache.h:101`) so
-        the next fetch never touches storage. Returns None to decline
-        (non-local plan, URI root, oversized, exotic column types) — the
-        caller falls through to the distributed path.
+        appends on its own shard (`kafka/server/handlers/produce.cc:311-500`)
+        and keeps the batch in its batch cache (`storage/batch_cache.h:101`)
+        so the next fetch never touches storage. Returns None to decline
+        (URI root, streaming frame, over-bound batch, exotic column
+        types); the caller falls through to the distributed path.
         """
-        import datetime as _dt
-
         if not getattr(self._fsio, "is_local", False):
             return None  # object-store roots: pyarrow can't write there
         if records is not None:
@@ -1167,49 +1228,37 @@ class TopicEngine:
                     "INVALID_RECORD",
                     "records must carry a 'value' field (null = tombstone)",
                 )
+        elif batch.isStreaming:
+            return None
         else:
             try:
                 # isLocal() only looks at the ANALYZED plan, so a foldable
                 # projection over a driver-held batch (e.g. the tx
                 # coordinator's withColumn(lit(pid))) reads as non-local
-                # even though ConvertToLocalRelation collapses it — check
-                # the OPTIMIZED plan too before declining
-                if not batch.isLocal():
-                    opt = (
-                        batch._jdf.queryExecution()
-                        .optimizedPlan()
-                        .getClass()
-                        .getSimpleName()
-                    )
-                    if opt != "LocalRelation":
-                        return None
-                # LocalTableScan: executeCollect, no executors involved
-                rows = [r.asDict() for r in batch.collect()]
+                # even though ConvertToLocalRelation collapses it — the
+                # OPTIMIZED plan decides
+                plan = None if batch.isLocal() else (
+                    batch._jdf.queryExecution().optimizedPlan()
+                )
+                if plan is None or plan.getClass().getSimpleName() == "LocalRelation":
+                    # LocalTableScan: executeCollect, no executors involved
+                    rows = [r.asDict() for r in batch.collect()]
+                    cols = set(batch.columns)
+                elif plan.stats().sizeInBytes() <= _LOCAL_PRODUCE_MAX_BYTES:
+                    rows, table = None, self._collect_arrow(batch)
+                else:
+                    return None
             except Exception:
                 return None
-            cols = set(batch.columns)
-        if len(rows) > 200_000:
-            return None  # large local batch: distributed write parallelism
-        n_parts = cfg.partitions
+        if rows is not None:
+            if len(rows) > 200_000:
+                return None  # large local batch: distributed write parallelism
+            table = self._rows_to_arrow(cfg, rows, cols)
+        return None if table is None else self._append_arrow(topic, cfg, table)
 
-        # -- validations (before any state mutation) ----------------------
-        if cfg.value_schema_subject is not None:
-            self._validate_schema_ids_local(rows, cfg.value_schema_subject)
-        if cfg.max_message_bytes is not None:
-            for r in rows:
-                sz = len(r["value"]) if r["value"] is not None else 0
-                if "key" in cols and r["key"] is not None:
-                    sz += len(r["key"])
-                if sz > cfg.max_message_bytes:
-                    raise ProduceError(
-                        "MESSAGE_TOO_LARGE",
-                        f"record of {sz} bytes exceeds max.message.bytes="
-                        f"{cfg.max_message_bytes}",
-                    )
-
-        # -- timestamps (integer-us; same rewrite rule as the DF path) ----
-        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-        one_us = _dt.timedelta(microseconds=1)
+    def _session_tz(self):
+        """The session time zone naive timestamps are read in, or None
+        for a zone this process cannot resolve."""
         # cached: spark.conf.get is a py4j round-trip (~1 ms) — on the
         # zero-job produce hot path that was ~20% of e2e visible latency.
         # The session timezone doesn't change mid-engine; invalidate by
@@ -1223,216 +1272,240 @@ class TopicEngine:
                 pass
             self._session_tz_name = tzname
         if tzname in ("UTC", "Etc/UTC", "GMT"):
-            session_tz = _dt.timezone.utc
-        else:
-            try:
-                from zoneinfo import ZoneInfo
+            return _dt.timezone.utc
+        try:
+            from zoneinfo import ZoneInfo
 
-                session_tz = ZoneInfo(tzname)
-            except Exception:
-                return None
-        now_us = (_dt.datetime.now(_dt.timezone.utc) - epoch) // one_us
-        use_append = "timestamp" not in cols or cfg.timestamp_type == "LogAppendTime"
-        if use_append:
-            ts_us = [now_us] * len(rows)
-        else:
-            ts_us = []
-            for r in rows:
-                t = r["timestamp"]
-                if t is None:
-                    ts_us.append(now_us)
-                elif isinstance(t, _dt.datetime):
+            return ZoneInfo(tzname)
+        except Exception:
+            return None
+
+    def _rows_to_arrow(self, cfg: TopicConfig, rows: list[dict], cols: set):
+        """Record dicts as the Arrow table ``_append_arrow`` takes (integer
+        µs timestamps, naive ones read in the session zone), or None to
+        decline a batch with exotic timestamps or no value column."""
+        if rows and "value" not in cols:
+            return None
+        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+        one_us = _dt.timedelta(microseconds=1)
+        data = {}
+        for c in self._RECORD_COL_TYPES:
+            if c not in cols or (
+                c == "timestamp" and cfg.timestamp_type == "LogAppendTime"
+            ):
+                continue
+            vals = [r[c] for r in rows]
+            if c == "timestamp":
+                tz = self._session_tz()
+                for i, t in enumerate(vals):
+                    if t is None:
+                        continue
+                    if not isinstance(t, _dt.datetime):
+                        return None  # exotic timestamp type: decline
                     if t.tzinfo is None:
-                        t = t.replace(tzinfo=session_tz)
-                    ts_us.append((t - epoch) // one_us)
-                else:
-                    return None  # exotic timestamp type: decline pre-mutation
+                        if tz is None:
+                            return None
+                        t = t.replace(tzinfo=tz)
+                    vals[i] = (t - epoch) // one_us
+            elif c in ("is_transactional", "is_control"):
+                vals = [bool(v) for v in vals]
+            elif c == "headers":
+                vals = [
+                    None
+                    if h is None
+                    else [{"key": x["key"], "value": x["value"]} for x in h]
+                    for h in vals
+                ]
+            data[c] = pa.array(vals, _RECORD_ARROW.field(c).type)
+        return pa.table(data) if data else pa.table({"value": pa.nulls(0, pa.binary())})
 
-        # -- routing (byte-compat murmur2 / explicit / round-robin) -------
-        from redpanda_spark.functions.hashes import murmur2_partition
+    def _collect_arrow(self, batch: DataFrame):
+        """The batch's record columns, key and value cast to binary as the
+        distributed path reads them, collected with one ``toArrow()`` into
+        the table ``_append_arrow`` takes; None for a batch without a
+        value column or with a non-TIMESTAMP timestamp column."""
+        types = dict(batch.dtypes)
+        if "value" not in types or types.get("timestamp", "timestamp") != "timestamp":
+            return None
+        t = batch.select(
+            *[
+                F.col(c).cast(ty).alias(c)
+                for c, ty in self._RECORD_COL_TYPES.items()
+                if c in types
+            ]
+        ).toArrow()
+        if "timestamp" in types:
+            i = t.schema.get_field_index("timestamp")
+            # the arrow values are UTC µs whatever zone the type names
+            us = t.column(i).cast(pa.timestamp("us"), safe=False).cast(pa.int64())
+            t = t.set_column(i, "timestamp", us)
+        return t.cast(pa.schema([_RECORD_ARROW.field(c) for c in t.column_names]))
 
-        def _route(i: int, r) -> int:
-            k = r["key"] if "key" in cols else None
-            return (
-                murmur2_partition(bytes(k), n_parts)
-                if k is not None
-                else i % n_parts
+    def _append_arrow(self, topic: str, cfg: TopicConfig, t):
+        """The in-process produce core over an Arrow table of record
+        columns (a subset of ``_RECORD_ARROW``, timestamps as integer µs):
+        schema-id and max.message.bytes validation, timestamp-type rewrite,
+        murmur2 routing over the key buffer (``murmur2_partitions``, the
+        kernel the distributed path's UDF runs) with explicit partitions
+        winning and key-less rows round-robin, the producer idempotence
+        window (``_idempotence_decide``), contiguous per-partition offsets
+        by a stable sort, one (partition, offset)-sorted parquet segment
+        whose manifest stats come from the arrays, the atomic manifest
+        commit, and then the hot tail, with record dicts built only for
+        the rows it keeps. Returns {partition: base_offset}."""
+        from redpanda_spark.functions.hashes import murmur2_partitions
+
+        t = t.combine_chunks()
+        n = t.num_rows
+        cols = set(t.column_names)
+
+        def column(c):
+            return t[c].chunk(0) if t[c].num_chunks else pa.nulls(0, t[c].type)
+
+        key = column("key") if "key" in cols else pa.nulls(n, pa.binary())
+        value = column("value")
+
+        # -- validations (before any state mutation) ----------------------
+        if cfg.value_schema_subject is not None:
+            self._validate_schema_ids_local(value, cfg.value_schema_subject)
+        nbytes = np.asarray(
+            pc.add(
+                pc.fill_null(pc.binary_length(key), 0),
+                pc.fill_null(pc.binary_length(value), 0),
+            ),
+            dtype=np.int64,
+        )
+        if cfg.max_message_bytes is not None and n:
+            biggest = int(nbytes.max())
+            if biggest > cfg.max_message_bytes:
+                raise ProduceError(
+                    "MESSAGE_TOO_LARGE",
+                    f"record of {biggest} bytes exceeds max.message.bytes="
+                    f"{cfg.max_message_bytes}",
+                )
+        nbytes += 16  # the _record_bytes overhead
+
+        # -- timestamps (integer µs; same rewrite rule as the DF path) ----
+        now_us = time.time_ns() // 1000
+        if "timestamp" in cols and cfg.timestamp_type != "LogAppendTime":
+            ts = np.asarray(pc.fill_null(column("timestamp"), now_us), dtype=np.int64)
+        else:
+            ts = np.full(n, now_us, dtype=np.int64)
+
+        # -- routing: explicit partition, else murmur2(key), else
+        # round-robin — a null partition in a mixed batch is routed, never
+        # silently partition 0
+        part = np.arange(n, dtype=np.int64) % cfg.partitions
+        if "key" in cols:
+            hashed = murmur2_partitions(key, cfg.partitions)
+            part = np.where(hashed >= 0, hashed, part)
+        if "partition" in cols:
+            explicit = column("partition")
+            part = np.where(
+                np.asarray(explicit.is_null()),
+                part,
+                np.asarray(explicit.fill_null(0), dtype=np.int64),
             )
 
-        if "partition" in cols:
-            # Kafka ProduceRequest shape: each record either names a
-            # partition or the partitioner routes it — a null partition
-            # in a mixed batch falls back to key-hash / round-robin,
-            # never silently partition 0
-            parts = [
-                int(r["partition"]) if r["partition"] is not None else _route(i, r)
-                for i, r in enumerate(rows)
-            ]
-        else:
-            parts = [_route(i, r) for i, r in enumerate(rows)]
-
-        def val(r, name, default=None):
-            return r[name] if name in cols else default
-
-        def _i(x, default):
-            return default if x is None else int(x)
-
         # -- producer idempotence window (shared decision logic) ----------
-        keep = list(range(len(rows)))
+        keep = np.ones(n, dtype=bool)
         if "producer_id" in cols and "base_sequence" in cols:
-            groups: dict[tuple[int, int, int], list[int]] = {}
-            for i, r in enumerate(rows):
-                pid = val(r, "producer_id", -1)
-                if pid is None or int(pid) < 0:
-                    continue
-                ep = val(r, "producer_epoch")
-                gk = (parts[i], int(pid), -1 if ep is None else int(ep))
-                sq = int(r["base_sequence"])
-                g = groups.get(gk)
-                groups[gk] = (
-                    [min(g[0], sq), max(g[1], sq)] if g else [sq, sq]
+
+            def ints(c):
+                if c not in cols:
+                    return np.full(n, -1, dtype=np.int64)
+                return np.asarray(column(c).fill_null(-1), dtype=np.int64)
+
+            pid, ep, seq = ints("producer_id"), ints("producer_epoch"), ints("base_sequence")
+            m = pid >= 0
+            if m.any():
+                groups = pa.table({
+                    "partition": part[m], "producer_id": pid[m],
+                    "producer_epoch": ep[m], "seq": seq[m],
+                }).group_by(
+                    ["partition", "producer_id", "producer_epoch"], use_threads=False
+                ).aggregate([("seq", "min"), ("seq", "max")])
+                drop_all, trim = self._idempotence_decide(
+                    topic,
+                    [
+                        {**g, "min_seq": g["seq_min"], "max_seq": g["seq_max"]}
+                        for g in groups.to_pylist()
+                    ],
                 )
-            if groups:
-                stats = [
-                    {
-                        "partition": p,
-                        "producer_id": pid,
-                        "producer_epoch": ep,
-                        "min_seq": g[0],
-                        "max_seq": g[1],
-                    }
-                    for (p, pid, ep), g in groups.items()
-                ]
-                drop_all, trim = self._idempotence_decide(topic, stats)
-                dropset = set(drop_all)
-                trimmap = {(p, pid): last for p, pid, last in trim}
-                keep = []
-                for i, r in enumerate(rows):
-                    pid = val(r, "producer_id", -1)
-                    if pid is not None and int(pid) >= 0:
-                        kp = (parts[i], int(pid))
-                        if kp in dropset:
-                            continue
-                        if kp in trimmap and int(r["base_sequence"]) <= trimmap[kp]:
-                            continue
-                    keep.append(i)
+                for p, q in drop_all:
+                    keep &= ~((part == p) & (pid == q))
+                for p, q, last in trim:
+                    keep &= ~((part == p) & (pid == q) & (seq <= last))
 
         # -- contiguous offsets from the stored watermark ------------------
-        base = dict(self._high.get(topic, {}))
-        counters = dict(base)
-        offs = {}
-        for i in keep:
-            p = parts[i]
-            o = counters.get(p, 0)
-            offs[i] = o
-            counters[p] = o + 1
+        kept = np.flatnonzero(keep)
+        order = kept[np.argsort(part[kept], kind="stable")]
+        sp = part[order]
+        parts, first, counts = np.unique(sp, return_index=True, return_counts=True)
+        base = self._high.get(topic, {})
+        starts = np.array([base.get(int(p), 0) for p in parts], dtype=np.int64)
+        offs = np.repeat(starts - first, counts) + np.arange(order.size)
 
-        prev_files = self._files[topic]
+        k = order.size
+        taken = t.take(pa.array(order))
+        sts = ts[order]
+        # each column as the batch carries it (nulls filled) or as one
+        # default for every row; NB: a null id/epoch/sequence is -1, a
+        # legitimate 0 stays 0
+        col = {
+            c: (taken[c] if d is None else taken[c].fill_null(d)) if c in cols else d
+            for c, d in _RECORD_DEFAULTS.items()
+        }
+
+        def array(c, v):
+            if not isinstance(v, (pa.Array, pa.ChunkedArray)):
+                v = pa.nulls(k, _RECORD_ARROW.field(c).type)
+                return v if col[c] is None else v.fill_null(col[c])
+            return v
+
+        recs = pa.table({
+            "partition": pa.array(sp, pa.int32()),
+            "timestamp": pa.array(sts, pa.int64()),
+            **{c: array(c, v) for c, v in col.items()},
+            "offset": pa.array(offs, pa.int64()),
+        })
 
         bases: dict[int, int] = {}
-        rel_new: list[str] = []
-        recs: list[dict] = []
-        if keep:
-            order = sorted(keep, key=lambda i: (parts[i], offs[i]))
-            for i in order:
-                r = rows[i]
-                hdrs = val(r, "headers")
-                recs.append(
-                    {
-                        "partition": parts[i],
-                        "timestamp": ts_us[i],
-                        "key": bytes(r["key"])
-                        if "key" in cols and r["key"] is not None
-                        else None,
-                        "value": bytes(r["value"]) if r["value"] is not None else None,
-                        "headers": [
-                            {"key": h["key"], "value": bytes(h["value"]) if h["value"] is not None else None}
-                            for h in hdrs
-                        ]
-                        if hdrs is not None
-                        else None,
-                        # NB: `x or -1` would collapse legitimate
-                        # zeros (epoch 0 / pid 0 / seq 0) to -1
-                        "producer_id": _i(val(r, "producer_id"), -1),
-                        "producer_epoch": _i(val(r, "producer_epoch"), -1),
-                        "base_sequence": _i(val(r, "base_sequence"), -1),
-                        "is_transactional": bool(val(r, "is_transactional", False) or False),
-                        "is_control": bool(val(r, "is_control", False) or False),
-                        "offset": offs[i],
-                    }
-                )
+        if order.size:
             rel = self._write_local_segment(topic, cfg, recs)
-            rel_new.append(rel)
-            touched = {parts[i] for i in keep}
-            bases = {p: base.get(p, 0) for p in touched}
-            for p in touched:
-                self._high.setdefault(topic, {})[p] = counters[p]
-            self._files[topic] = prev_files + rel_new
+            high = self._high.setdefault(topic, {})
+            for p, s, c in zip(parts.tolist(), starts.tolist(), counts.tolist()):
+                bases[p] = s
+                high[p] = s + c
+            self._files[topic] = self._files[topic] + [rel]
             self._stats.setdefault(topic, {})[rel] = [
-                min(r["partition"] for r in recs),
-                max(r["partition"] for r in recs),
-                min(r["offset"] for r in recs),
-                max(r["offset"] for r in recs),
-                len(recs),
-                min(r["timestamp"] for r in recs),
-                max(r["timestamp"] for r in recs),
+                int(sp[0]), int(sp[-1]), int(offs.min()), int(offs.max()),
+                int(order.size), int(sts.min()), int(sts.max()),
             ]
-        else:
-            self._files[topic] = prev_files
 
         prev_tail = dict(self._tail.get(topic) or {})
+        prev_sizes = dict(self._tail_bytes.get(topic) or {}) if topic in self._tail else {}
         self._commit_manifest(topic)  # atomic visibility point (clears tail)
-        self._update_tail(topic, prev_tail, recs, bases)
+        spans = zip(parts.tolist(), first.tolist(), (first + counts).tolist(), starts.tolist())
+        columns = [sp, sts, *col.values(), offs]
+        self._update_tail(topic, prev_tail, prev_sizes, columns, nbytes[order], spans)
         return bases
 
-    def _write_local_segment(
-        self, topic: str, cfg: TopicConfig, recs: list[dict]
-    ) -> str:
+    def _write_local_segment(self, topic: str, cfg: TopicConfig, recs) -> str:
         """One (partition, offset)-sorted parquet segment via pyarrow,
         byte-compatible with the Spark-written ones (same schema, micros
-        timestamps, dictionary off). Returns the root-relative path."""
+        timestamps, dictionary off). ``recs`` holds the segment columns
+        with integer-µs timestamps. Returns the root-relative path."""
         import uuid
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         d = self._topic_dir(topic)
         os.makedirs(d, exist_ok=True)
-        schema = pa.schema(
-            [
-                ("partition", pa.int32()),
-                ("timestamp", pa.timestamp("us", tz="UTC")),
-                ("key", pa.binary()),
-                ("value", pa.binary()),
-                (
-                    "headers",
-                    pa.list_(
-                        pa.struct([("key", pa.string()), ("value", pa.binary())])
-                    ),
-                ),
-                ("producer_id", pa.int64()),
-                ("producer_epoch", pa.int16()),
-                ("base_sequence", pa.int32()),
-                ("is_transactional", pa.bool_()),
-                ("is_control", pa.bool_()),
-                ("offset", pa.int64()),
-            ]
+        i = recs.schema.get_field_index("timestamp")
+        table = recs.set_column(
+            i, "timestamp", recs.column(i).cast(pa.timestamp("us", tz="UTC"))
         )
-        arrays = [
-            pa.array([r["partition"] for r in recs], pa.int32()),
-            pa.array([r["timestamp"] for r in recs], pa.int64()).cast(
-                pa.timestamp("us", tz="UTC")
-            ),
-            pa.array([r["key"] for r in recs], pa.binary()),
-            pa.array([r["value"] for r in recs], pa.binary()),
-            pa.array([r["headers"] for r in recs], schema.field("headers").type),
-            pa.array([r["producer_id"] for r in recs], pa.int64()),
-            pa.array([r["producer_epoch"] for r in recs], pa.int16()),
-            pa.array([r["base_sequence"] for r in recs], pa.int32()),
-            pa.array([r["is_transactional"] for r in recs], pa.bool_()),
-            pa.array([r["is_control"] for r in recs], pa.bool_()),
-            pa.array([r["offset"] for r in recs], pa.int64()),
-        ]
         codec = {
             "snappy": "snappy",
             "zstd": "zstd",
@@ -1443,79 +1516,102 @@ class TopicEngine:
             "producer": "snappy",
         }.get(cfg.compression, "snappy")
         dest = os.path.join(d, f"local-{uuid.uuid4().hex}.parquet")
-        pq.write_table(
-            pa.Table.from_arrays(arrays, schema=schema),
-            dest,
-            compression=codec,
-            use_dictionary=False,
-        )
+        pq.write_table(table, dest, compression=codec, use_dictionary=False)
         return os.path.relpath(dest, self.root)
 
-    def _validate_schema_ids_local(self, rows, subject: str) -> None:
-        """Driver-side twin of _validate_schema_ids (same error surface)."""
+    def _validate_schema_ids_local(self, values, subject: str) -> None:
+        """Driver-side twin of _validate_schema_ids over a pyarrow binary
+        array of values (same error surface)."""
+        from redpanda_spark.functions.hashes import string_array_bytes_offsets
+
         if self.registry is None:
             raise ProduceError(
                 "INVALID_CONFIG", "schema-id validation requires a registry"
             )
-        ids = {
+        ids = [
             int(self.registry.get_version(subject, v).id)
             for v in self.registry.versions(subject)
-        }
-        bad = 0
-        for r in rows:
-            v = r["value"]
-            if v is None:
-                continue
-            v = bytes(v)
-            if (
-                len(v) < 5
-                or v[0] != 0
-                or (int.from_bytes(v[1:5], "big") not in ids if ids else True)
-            ):
-                bad += 1
+        ]
+        data, off = string_array_bytes_offsets(values)
+        at = off[:-1]
+        if data.size == 0:
+            data = np.zeros(1, dtype=np.uint8)
+
+        def byte(j):
+            return data[np.minimum(at + j, data.size - 1)].astype(np.int64)
+
+        sid = (byte(1) << 24) | (byte(2) << 16) | (byte(3) << 8) | byte(4)
+        good = (off[1:] - at >= 5) & (byte(0) == 0) & np.isin(sid, ids)
+        bad = int((~good & ~np.asarray(values.is_null())).sum())
         if bad:
             raise ProduceError(
                 "INVALID_RECORD",
                 f"{bad} record(s) failed schema-id validation for subject {subject}",
             )
 
-    def _update_tail(self, topic, prev_tail, recs, bases) -> None:
-        """Post-commit hot-tail maintenance: extend contiguous coverage,
-        trim to the row/byte budgets from the OLD end (so coverage always
-        stays [start, high)). The tail keeps the committed records as
-        written (integer-µs timestamps); fetch_rows builds the Rows."""
-        new_tail: dict[int, tuple[int, list[dict]]] = dict(prev_tail)
-        by_part: dict[int, list[dict]] = {}
-        for r in recs:
-            by_part.setdefault(r["partition"], []).append(r)
-        for p, lst in by_part.items():
-            prev = prev_tail.get(p)
-            if prev and prev[1] and prev[1][-1]["offset"] + 1 == bases[p]:
-                start, merged = prev[0], prev[1] + lst
-            else:
-                start, merged = bases[p], lst
-            if len(merged) > self._tail_max_rows:
-                cut = len(merged) - self._tail_max_rows
-                merged = merged[cut:]
-                start = merged[0]["offset"]
-            new_tail[p] = (start, merged)
+    def _update_tail(self, topic, prev_tail, prev_sizes, columns, nbytes, spans) -> None:
+        """Post-commit hot-tail upkeep in O(batch). ``columns`` holds the
+        committed batch sorted by (partition, offset) (see
+        ``_record_dicts``), ``nbytes`` its records' ``_record_bytes`` and
+        ``spans`` (partition, first row, end row, base offset) per touched
+        partition. Each partition's contiguous
+        coverage is extended with its newest records, then trimmed to the
+        row and byte budgets from the OLD end with one slice, so coverage
+        always stays [start, high). The byte counts per cached partition
+        are kept running, and the budgets are settled on the batch's
+        arrays first, so record dicts are built only for the rows the tail
+        keeps. The tail keeps the records as written (integer-µs
+        timestamps); fetch_rows builds the Rows."""
+        cap = self._tail_max_bytes
+        tail = dict(prev_tail)  # dict order is the byte-budget trim order
+        size = dict(prev_sizes)
+        new: dict[int, list[int]] = {}  # partition -> [lo, end) rows kept
+        for p, a, end, base in spans:
+            lo = max(a, end - self._tail_max_rows)
+            old = tail.get(p, (0, []))[1]
+            if not (old and lo == a and old[-1]["offset"] + 1 == base):
+                old, size[p] = [], 0  # superseded by newer rows, or a gap
+            cut = max(0, len(old) + end - lo - self._tail_max_rows)
+            size[p] += int(nbytes[lo:end].sum()) - sum(
+                map(_record_bytes, itertools.islice(old, cut))
+            )
+            tail[p] = (0, old[cut:])
+            new[p] = [lo, end]
         # topic-level byte budget (batch_cache memory reservation analog)
-        total = sum(
-            _record_bytes(r) for _, (_s, lst) in new_tail.items() for r in lst
+        total = sum(size.values())
+        for p in list(tail):
+            if total <= cap:
+                break
+            old, cut = tail[p][1], 0
+            while cut < len(old) and total > cap:
+                total -= _record_bytes(old[cut])
+                size[p] -= _record_bytes(old[cut])
+                cut += 1
+            tail[p] = (0, old[cut:])
+            if p in new and total > cap:
+                lo, end = new[p]
+                c = np.cumsum(nbytes[lo:end])
+                k = min(int(np.searchsorted(c, total - cap)) + 1, end - lo)
+                total -= int(c[k - 1])
+                size[p] -= int(c[k - 1])
+                new[p][0] = lo + k
+        rows = _record_dicts(
+            columns,
+            np.array([i for lo, end in new.values() for i in range(lo, end)], np.int64),
+            nbytes.size,
         )
-        if total > self._tail_max_bytes:
-            for p in list(new_tail):
-                if total <= self._tail_max_bytes:
-                    break
-                start, lst = new_tail[p]
-                while lst and total > self._tail_max_bytes:
-                    total -= _record_bytes(lst[0])
-                    lst = lst[1:]
-                if lst:
-                    new_tail[p] = (lst[0]["offset"], lst)
-                else:
-                    del new_tail[p]
-        self._tail[topic] = new_tail
+        at = 0
+        for p, (lo, end) in new.items():
+            tail[p] = (0, tail[p][1] + rows[at:at + end - lo])
+            at += end - lo
+        for p, (_s, lst) in list(tail.items()):
+            if lst:
+                tail[p] = (lst[0]["offset"], lst)
+            else:
+                del tail[p]
+                del size[p]
+        self._tail[topic] = tail
+        self._tail_bytes[topic] = size
 
     def fetch_rows(
         self,
@@ -1936,12 +2032,24 @@ class TopicEngine:
         segments share the flat record schema, so a tiered read is one
         multi-path parquet read — one Spark job, file-level parallelism
         across tiers. No paths is the empty log; a listed segment missing
-        on disk raises, so a rewrite never commits a lost read as empty."""
+        on disk raises, so a rewrite never commits a lost read as empty.
+        The empty log is built from an empty Arrow table, a LocalRelation
+        whose reads run no Spark job (a list-built frame is an RDD scan)."""
         if not paths:
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
+
             from redpanda_spark.datamodel import RECORD_SCHEMA
 
-            return self.spark.createDataFrame([], RECORD_SCHEMA).drop(
-                "topic", "timestamp_type"
+            schema = StructType(
+                [
+                    f
+                    for f in RECORD_SCHEMA.fields
+                    if f.name not in ("topic", "timestamp_type")
+                ]
+            )
+            return self.spark.createDataFrame(
+                to_arrow_schema(schema).empty_table(), schema=schema
             )
         return self.spark.read.parquet(*paths)
 

@@ -10,12 +10,16 @@ stricter discipline than any Kafka client actually follows. This module
 restores the client semantics over TopicEngine: ``send`` enqueues a batch
 without running a Spark job; the accumulated group is routed,
 offset-assigned, written and manifest-committed as ONE append when
-``flush`` runs (or when ``linger_batches`` sends have accumulated).
+``flush`` runs (or when ``linger_batches`` sends have accumulated). A
+group whose optimized plan is at most the engine's byte bound
+(``engine._LOCAL_PRODUCE_MAX_BYTES``) is collected with one ``toArrow()``
+job and appended in-process, filling the hot tail; a bigger one takes the
+distributed produce pipeline.
 
 Record order: offsets respect send order per topic partition — the union
-concatenates batches in send order, and produce's ingest sequence
-(monotonically_increasing_id over the unioned frame) is monotone in that
-concatenation order.
+concatenates batches in send order, and both produce paths assign offsets
+in that concatenation order (the Arrow collect's row order in-process,
+monotonically_increasing_id over the unioned frame when distributed).
 
 Delivery semantics match Kafka's async producer: durability at flush()
 (acks resolve when the group's manifest commit lands), not at send().

@@ -5,6 +5,12 @@ that matter at cluster scale too: AQE on (runtime re-plan, skew-join
 handling), shuffle partitions sized for the data volume, Arrow enabled for
 the few Pandas-UDF paths, and broadcast threshold high enough that dimension
 tables always broadcast.
+
+Python workers start from ``redpanda_spark.daemon``, which spares each
+task a re-read of ``pyspark.zip``'s directory, and find the package
+through ``spark.executorEnv.PYTHONPATH`` whatever the driver's working
+directory. The engine's own produce and fetch paths run no Python worker
+for driver-sized batches: they route, write and read in-process on Arrow.
 """
 
 from __future__ import annotations
@@ -20,6 +26,15 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    extra_conf = dict(extra_conf or {})
+    pythonpath = os.pathsep.join(
+        p
+        for p in (
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            extra_conf.pop("spark.executorEnv.PYTHONPATH", ""),
+        )
+        if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -52,7 +67,9 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "redpanda_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

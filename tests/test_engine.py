@@ -11,6 +11,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from redpanda_spark import engine as engine_mod
 from redpanda_spark.engine import TopicConfig, TopicEngine
 from redpanda_spark.functions.hashes import murmur2_partition
 
@@ -833,9 +834,11 @@ def test_record_produce_zero_spark_jobs(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup("hotpath")) == []
 
 
-def test_record_produce_matches_dataframe_produce(spark, tmp_path):
+def test_record_produce_matches_dataframe_produce(spark, tmp_path, monkeypatch):
     """Identical batch via the record-list path and the DataFrame path
     yields identical log contents (routing, offsets, defaults)."""
+    # a zero byte bound sends the DataFrame through the distributed path
+    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", 0)
     # keyed records only: murmur2 routing is deterministic on both paths;
     # null-key round-robin placement is client-incidental (Kafka's sticky
     # partitioner likewise) so it is not part of the parity contract
@@ -861,6 +864,182 @@ def test_record_produce_matches_dataframe_produce(spark, tmp_path):
     a = sorted(map(tuple, eng_a.log("t").select(cols).collect()))
     b = sorted(map(tuple, eng_b.log("t").select(cols).collect()))
     assert a == b
+
+
+_LOG_COLS = ["partition", "offset", "key", "value", "headers", "producer_id",
+             "producer_epoch", "base_sequence", "is_transactional", "is_control"]
+
+
+def _bulk(spark, table):
+    """A DataFrame over ``table`` whose optimized plan is not a local
+    relation, so produce sizes it against the byte bound."""
+    return spark.createDataFrame(table).coalesce(1)
+
+
+def _segment_kinds(files) -> set[str]:
+    """``local`` for segments the in-process path wrote, ``part`` for the
+    distributed path's."""
+    return {os.path.basename(f).split("-")[0] for f in files}
+
+
+def test_dataframe_produce_paths_agree(spark, tmp_path, monkeypatch):
+    """A DataFrame batch under the byte bound, appended in-process, stores
+    what the distributed path (bound forced to 0) stores: string-key and
+    explicit-partition routing, headers and CreateTime timestamps,
+    producer columns with a retried sequence, and the same ProduceErrors
+    for max.message.bytes and schema ids. Null keys only need a partition
+    in range."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from redpanda_spark.engine import ProduceError
+    from redpanda_spark.registry.store import SchemaRegistry
+
+    hdr = pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))
+    ts = [dt.datetime(2024, 1, 1, h, tzinfo=dt.timezone.utc) for h in range(4)]
+    stamped = pa.table({
+        "key": pa.array(["alpha", "bravo", "charlie", "delta"]),  # strings
+        "value": pa.array([b"a", None, b"c", b"d"]),
+        "headers": pa.array(
+            [[{"key": "h", "value": b"x"}], None, [], [{"key": "i", "value": None}]],
+            hdr,
+        ),
+        "timestamp": pa.array(ts, pa.timestamp("us", tz="UTC")),
+    })
+    explicit = pa.table({  # a null partition is key-routed
+        "key": pa.array([b"k1", b"k2", b"k3"]),
+        "value": pa.array([b"e1", b"e2", b"e3"]),
+        "partition": pa.array([3, None, 0], pa.int32()),
+    })
+
+    def seqs(first, n):
+        return pa.table({
+            "key": pa.array([b"p"] * n),
+            "value": pa.array([b"s%d" % (first + i) for i in range(n)]),
+            "producer_id": pa.array([7] * n, pa.int64()),
+            "producer_epoch": pa.array([0] * n, pa.int16()),
+            "base_sequence": pa.array(range(first, first + n), pa.int32()),
+        })
+
+    # 0-2 appended, 1-2 again is a retry (dropped), 2-4 keeps 3-4
+    batches = [stamped, explicit, seqs(0, 3), seqs(1, 2), seqs(2, 3)]
+    nulls = pa.table({"key": pa.nulls(6, pa.binary()),
+                      "value": pa.array([b"n%d" % i for i in range(6)])})
+    too_big = pa.table({"key": pa.array([b"k", b"k"]),
+                        "value": pa.array([b"x" * 5, b"x" * 40])})
+    reg = SchemaRegistry()
+    sid = reg.register("s-value", '{"type": "record", "name": "r", "fields": []}')
+    ids = pa.table({"key": pa.nulls(3, pa.binary()), "value": pa.array(
+        [SchemaRegistry.wire_encode(sid, b"ok"), b"raw", b"\x00\x00"])})
+
+    runs = []
+    for bound in (engine_mod._LOCAL_PRODUCE_MAX_BYTES, 0):
+        monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", bound)
+        eng = TopicEngine(spark, str(tmp_path / f"b{bound}"), registry=reg)
+        eng.create_topic("t", TopicConfig(partitions=4))
+        eng.create_topic("n", TopicConfig(partitions=4))
+        eng.create_topic("cap", TopicConfig(partitions=1, max_message_bytes=16))
+        eng.create_topic("sid", TopicConfig(partitions=1, value_schema_subject="s-value"))
+        bases = [eng.produce("t", _bulk(spark, b)) for b in batches]
+        bases.append(eng.produce("n", _bulk(spark, nulls)))
+        errors = []
+        for topic, b in (("cap", too_big), ("sid", ids)):
+            with pytest.raises(ProduceError) as ei:
+                eng.produce(topic, _bulk(spark, b))
+            errors.append(str(ei.value))
+        rows = sorted(eng.log("t").collect(), key=lambda r: (r["partition"], r["offset"]))
+        stamps = {bytes(r["key"]): r["timestamp"] for r in rows
+                  if bytes(r["key"]) in (b"alpha", b"bravo", b"charlie", b"delta")}
+        null_rows = eng.log("n").collect()
+        runs.append((
+            bases, errors, [tuple(r[c] for c in _LOG_COLS) for r in rows], stamps,
+            sorted(bytes(r["value"]) for r in null_rows),
+            _segment_kinds(eng._files["t"] + eng._files["n"]),
+        ))
+        assert all(0 <= r["partition"] < 4 for r in null_rows)
+        assert eng.high_watermarks("t") == {
+            p: sum(r["partition"] == p for r in rows) for p in eng.high_watermarks("t")
+        }
+        assert all(eng.log(t).count() == 0 for t in ("cap", "sid"))
+    (*local, kinds_local), (*dist, kinds_dist) = runs
+    assert local == dist
+    assert kinds_local == {"local"} and kinds_dist == {"part"}
+    assert [bytes(r[3]) for r in local[2] if r[5] == 7] == [b"s0", b"s1", b"s2", b"s3", b"s4"]
+    assert local[1][0] == (
+        "MESSAGE_TOO_LARGE: record of 41 bytes exceeds max.message.bytes=16"
+    )
+    assert local[1][1].startswith("INVALID_RECORD: 2 record(s) failed")
+
+
+def test_produce_path_selection(spark, tmp_path, monkeypatch):
+    """A LocalRelation batch appends with zero Spark jobs; a batch at the
+    byte bound appends in-process, one byte over it and on a URI root the
+    distributed path writes."""
+    import pyarrow as pa
+
+    table = pa.table({"key": pa.array([b"a", b"b"]), "value": pa.array([b"1", b"2"])})
+    eng = TopicEngine(spark, str(tmp_path / "a"))
+    eng.create_topic("t", TopicConfig(partitions=2))
+    kinds = []
+
+    def produce(e, df):
+        before = list(e._files["t"])
+        e.produce("t", df)
+        kinds.append(_segment_kinds(set(e._files["t"]) - set(before)))
+
+    _no_jobs(spark, "local-relation-produce",
+             lambda: produce(eng, spark.createDataFrame(table)))
+    bulk = _bulk(spark, table)
+    size = bulk._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", size)
+    produce(eng, bulk)
+    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", size - 1)
+    produce(eng, bulk)
+    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", size)
+    uri = TopicEngine(spark, "file://" + str(tmp_path / "u"))
+    uri.create_topic("t", TopicConfig(partitions=2))
+    produce(uri, bulk)
+    assert kinds == [{"local"}, {"local"}, {"part"}, {"part"}]
+    assert sum(eng.high_watermarks("t").values()) == 6
+
+
+def test_hot_tail_cap_binding_produce_keeps_coverage(spark, tmp_path):
+    """A batch that binds the topic byte cap leaves every cached partition
+    covering [start, high) with a byte count equal to its records, and a
+    tail-served fetch_rows equals the segment read of a fresh engine."""
+    import pyarrow as pa
+
+    from redpanda_spark.engine import _record_bytes
+
+    root = str(tmp_path / "t")
+    eng = TopicEngine(spark, root)
+    eng._tail_max_bytes = 40_000
+    eng.create_topic("c", TopicConfig(partitions=16))
+    for n in (800, 1600):
+        eng.produce("c", _bulk(spark, pa.table({
+            "key": pa.array([b"k%d" % i for i in range(n)]),
+            "value": pa.array([bytes(100)] * n),
+        })))
+        tail, high = eng._tail["c"], eng.high_watermarks("c")
+        cached = sum(_record_bytes(r) for _s, lst in tail.values() for r in lst)
+        assert cached == sum(eng._tail_bytes["c"].values()) <= eng._tail_max_bytes
+        assert cached > eng._tail_max_bytes - 200
+        for p, (start, lst) in tail.items():
+            assert [r["offset"] for r in lst] == list(range(start, high[p]))
+    fresh = TopicEngine(spark, root, read_only=True)
+    for p, (start, _lst) in eng._tail["c"].items():
+        hits = eng.counters("c").get("tail_cache_hits", 0)
+        got = eng.fetch_rows("c", p, offset=start)
+        assert eng.counters("c")["tail_cache_hits"] == hits + 1
+        assert got == fresh.fetch_rows("c", p, offset=start)
+
+
+def test_empty_log_frames_run_no_spark_job(spark, tmp_path):
+    eng = TopicEngine(spark, str(tmp_path / "t"))
+    eng.create_topic("e", TopicConfig(partitions=2))
+    assert _no_jobs(spark, "empty-log", lambda: eng.log("e").collect()) == []
+    assert _no_jobs(spark, "empty-fetch", lambda: eng.fetch("e", 0).collect()) == []
 
 
 def test_record_produce_validations(spark, tmp_path):
