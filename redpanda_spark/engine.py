@@ -186,16 +186,53 @@ _RECORD_ARROW = pa.schema(
     ]
 )
 
-# Largest DataFrame batch, by its optimized plan's sizeInBytes, that
-# produce collects with one toArrow() and appends in-process; a bigger
-# one takes the distributed route/write/read-back pipeline. Set at the
-# measured crossover: on a 4-core VM (local[4], cached keyed batches, a
-# 4-partition topic) the in-process append took less session CPU at every
-# size from 8 to 128 MiB, 1 KiB and 100 B records alike, and less wall
-# time up to 64 MiB; at 128 MiB of 1 KiB records the walls met (in-process
-# 1.4-2.1 s, distributed 1.7-2.2 s) while 100 B records still ran 2x
-# faster in-process. Past it the driver holds the whole batch for little.
+# Largest produce batch, in bytes of its Arrow record table, that is
+# appended in-process; a bigger one takes the distributed
+# route/write/read-back pipeline. Set at the measured crossover: on a
+# 4-core VM (local[4], cached keyed batches, a 4-partition topic) the
+# in-process append took less session CPU at every size from 8 to
+# 128 MiB, 1 KiB and 100 B records alike, and less wall time up to 64 MiB;
+# at 128 MiB of 1 KiB records the walls met (in-process 1.4-2.1 s,
+# distributed 1.7-2.2 s) while 100 B records still ran 2x faster
+# in-process. Past it the driver holds the whole batch for little.
 _LOCAL_PRODUCE_MAX_BYTES = 128 << 20
+
+# Plan operators whose output is a subset of their input's rows: over
+# cached frames they make a batch no bigger than those frames.
+_ROW_SUBSET_NODES = frozenset({
+    "Filter", "Union", "GlobalLimit", "LocalLimit", "Sample", "Sort",
+    "Repartition", "RepartitionByExpression",
+})
+
+
+def _cached_plan_bytes(plan) -> int | None:
+    """An upper bound on the bytes of an optimized plan that reads only
+    materialized cached frames through ``_ROW_SUBSET_NODES`` and column
+    selections: the sum of those frames' cached sizes, which Spark counts
+    exactly as it fills the cache. None for any other plan."""
+    total, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "InMemoryRelation":
+            # unloaded, its size is still the estimate of the plan it caches
+            if not node.cacheBuilder().isCachedColumnBuffersLoaded():
+                return None
+            total += node.stats().sizeInBytes()
+            continue
+        if name == "Project":
+            cols = node.projectList()
+            for i in range(cols.size()):
+                e = cols.apply(i)
+                if e.nodeName() == "Alias":
+                    e = e.child()
+                if e.nodeName() != "AttributeReference":
+                    return None
+        elif name not in _ROW_SUBSET_NODES:
+            return None
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return total
 
 
 def _record_row(r: dict) -> Row:
@@ -973,13 +1010,13 @@ class TopicEngine:
         optional timestamp, optional partition int (explicit routing),
         optional headers/producer_id/producer_epoch/base_sequence.
 
-        Driver-sized batches append in-process (``_produce_local``): a
-        record list or a LocalRelation DataFrame with zero Spark jobs, any
-        other DataFrame whose optimized plan's ``sizeInBytes`` is at most
-        ``_LOCAL_PRODUCE_MAX_BYTES`` with one ``toArrow()`` job, then
-        routing, offsets, validation and the parquet write on Arrow
-        arrays. URI roots, streaming frames and bigger batches take the
-        distributed pipeline below.
+        Batches of at most ``_LOCAL_PRODUCE_MAX_BYTES`` append in-process
+        (``_produce_local``): a record list or a LocalRelation DataFrame
+        with zero Spark jobs, a DataFrame over materialized cached frames
+        with one ``toArrow()`` job, then routing, offsets, validation and
+        the parquet write on Arrow arrays. URI roots, streaming frames,
+        bigger batches and plans whose size is only the planner's
+        estimate take the distributed pipeline below.
 
         Distributed pipeline (mirrors produce.cc): route partition
         (explicit, else Arrow-batched murmur2(key), else round-robin via
@@ -1170,7 +1207,7 @@ class TopicEngine:
 
     def _records_to_df(self, records) -> DataFrame:
         """List-of-records → DataFrame, for when the in-process path
-        declines (URI root, over 200,000 records, exotic timestamps) and
+        declines (URI root, over the byte bound, exotic timestamps) and
         the batch must go through the distributed produce pipeline."""
         rows = [r.asDict() if hasattr(r, "asDict") else dict(r) for r in records]
         cols = list(rows[0]) if rows else ["key", "value"]
@@ -1188,19 +1225,24 @@ class TopicEngine:
         A batch the driver holds — a list of record dicts/Rows (REST
         produce, interactive producers) or a DataFrame whose optimized
         plan is a local relation — is collected with a zero-job
-        ``collect()``. Any other DataFrame whose optimized plan's
-        ``sizeInBytes`` is at most ``_LOCAL_PRODUCE_MAX_BYTES`` is
-        collected with one ``toArrow()`` job. Either way the batch then
-        takes ``_append_arrow``, which runs the distributed path's produce
-        semantics on Arrow arrays in-process, with no routing UDF stage,
-        no offset window shuffle and no count read-back job.
+        ``collect()``. A DataFrame that only selects, filters, unions or
+        limits materialized cached frames (``_cached_plan_bytes``) is
+        collected with one ``toArrow()`` job when those frames hold at
+        most ``_LOCAL_PRODUCE_MAX_BYTES``; any other plan's size is the
+        planner's estimate, which can be orders of magnitude low (a file
+        scan's compressed size, a computed column's default type size),
+        so it is never collected. The record table must then be at most
+        ``_LOCAL_PRODUCE_MAX_BYTES`` too, and takes ``_append_arrow``,
+        which runs the distributed path's produce semantics on Arrow
+        arrays in-process, with no routing UDF stage, no offset window
+        shuffle and no count read-back job.
 
         This is the reference's produce shape: the partition leader
         appends on its own shard (`kafka/server/handlers/produce.cc:311-500`)
         and keeps the batch in its batch cache (`storage/batch_cache.h:101`)
         so the next fetch never touches storage. Returns None to decline
-        (URI root, streaming frame, over-bound batch, exotic column
-        types); the caller falls through to the distributed path.
+        (URI root, streaming frame, over-bound or unsized batch, exotic
+        column types); the caller falls through to the distributed path.
         """
         if not getattr(self._fsio, "is_local", False):
             return None  # object-store roots: pyarrow can't write there
@@ -1240,21 +1282,22 @@ class TopicEngine:
                 plan = None if batch.isLocal() else (
                     batch._jdf.queryExecution().optimizedPlan()
                 )
-                if plan is None or plan.getClass().getSimpleName() == "LocalRelation":
+                if plan is None or plan.nodeName() == "LocalRelation":
                     # LocalTableScan: executeCollect, no executors involved
                     rows = [r.asDict() for r in batch.collect()]
                     cols = set(batch.columns)
-                elif plan.stats().sizeInBytes() <= _LOCAL_PRODUCE_MAX_BYTES:
-                    rows, table = None, self._collect_arrow(batch)
                 else:
-                    return None
+                    size = _cached_plan_bytes(plan)
+                    if size is None or size > _LOCAL_PRODUCE_MAX_BYTES:
+                        return None
+                    rows, table = None, self._collect_arrow(batch)
             except Exception:
                 return None
         if rows is not None:
-            if len(rows) > 200_000:
-                return None  # large local batch: distributed write parallelism
             table = self._rows_to_arrow(cfg, rows, cols)
-        return None if table is None else self._append_arrow(topic, cfg, table)
+        if table is None or table.nbytes > _LOCAL_PRODUCE_MAX_BYTES:
+            return None
+        return self._append_arrow(topic, cfg, table)
 
     def _session_tz(self):
         """The session time zone naive timestamps are read in, or None

@@ -11,10 +11,11 @@ restores the client semantics over TopicEngine: ``send`` enqueues a batch
 without running a Spark job; the accumulated group is routed,
 offset-assigned, written and manifest-committed as ONE append when
 ``flush`` runs (or when ``linger_batches`` sends have accumulated). A
-group whose optimized plan is at most the engine's byte bound
-(``engine._LOCAL_PRODUCE_MAX_BYTES``) is collected with one ``toArrow()``
-job and appended in-process, filling the hot tail; a bigger one takes the
-distributed produce pipeline.
+group of materialized cached frames that hold at most the engine's byte
+bound (``engine._LOCAL_PRODUCE_MAX_BYTES``) is collected with one
+``toArrow()`` job and appended in-process, filling the hot tail; a bigger
+group, or one over uncached plans, takes the distributed produce
+pipeline.
 
 Record order: offsets respect send order per topic partition — the union
 concatenates batches in send order, and both produce paths assign offsets

@@ -6,11 +6,10 @@ handling), shuffle partitions sized for the data volume, Arrow enabled for
 the few Pandas-UDF paths, and broadcast threshold high enough that dimension
 tables always broadcast.
 
-Python workers start from ``redpanda_spark.daemon``, which spares each
-task a re-read of ``pyspark.zip``'s directory, and find the package
-through ``spark.executorEnv.PYTHONPATH`` whatever the driver's working
-directory. The engine's own produce and fetch paths run no Python worker
-for driver-sized batches: they route, write and read in-process on Arrow.
+Python workers find the package through ``spark.executorEnv.PYTHONPATH``
+whatever the driver's working directory. The engine's own produce and
+fetch paths run no Python worker for driver-sized batches: they route,
+write and read in-process on Arrow.
 """
 
 from __future__ import annotations
@@ -67,7 +66,6 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", "redpanda_spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
     for k, v in extra_conf.items():

@@ -1108,7 +1108,7 @@ def test_cli_cluster_metrics(spark, tmp_path, capsys, monkeypatch):
     assert 'redpanda_spark_partition_high_watermark{topic="mt",partition="0"} 1' in out
 
 
-def test_rest_metrics_rate_counters(engine, spark, monkeypatch):
+def test_rest_metrics_rate_counters(engine, spark):
     """The exposition also carries the engine's rate counters (reference
     /public_metrics rate families): produce/fetch rows+bytes, request
     counts, tail-cache outcomes — accumulated engine-side, O(topics) to
@@ -1117,11 +1117,6 @@ def test_rest_metrics_rate_counters(engine, spark, monkeypatch):
 
     from pyspark.sql import functions as F
 
-    from redpanda_spark import engine as engine_mod
-
-    # the DataFrame batches take the distributed path, which leaves the
-    # hot tail cold, so the first row fetches read the segments
-    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", 0)
     engine.create_topic("c", TopicConfig(partitions=1))
     df = spark.range(7).select(
         F.col("id").cast("string").cast("binary").alias("key"),

@@ -871,9 +871,12 @@ _LOG_COLS = ["partition", "offset", "key", "value", "headers", "producer_id",
 
 
 def _bulk(spark, table):
-    """A DataFrame over ``table`` whose optimized plan is not a local
-    relation, so produce sizes it against the byte bound."""
-    return spark.createDataFrame(table).coalesce(1)
+    """A DataFrame over a materialized cached frame of ``table``: not a
+    local relation, and sized exactly, so produce collects it with
+    toArrow() when it is under the byte bound."""
+    df = spark.createDataFrame(table).persist()
+    df.count()
+    return df.coalesce(1)
 
 
 def _segment_kinds(files) -> set[str]:
@@ -973,35 +976,61 @@ def test_dataframe_produce_paths_agree(spark, tmp_path, monkeypatch):
 
 
 def test_produce_path_selection(spark, tmp_path, monkeypatch):
-    """A LocalRelation batch appends with zero Spark jobs; a batch at the
-    byte bound appends in-process, one byte over it and on a URI root the
-    distributed path writes."""
+    """A LocalRelation batch appends with zero Spark jobs. A batch at the
+    byte bound appends in-process; one byte over it, on a URI root, or
+    with a size the planner only estimates, the distributed path writes,
+    however small the estimate."""
     import pyarrow as pa
+
+    from pyspark.sql import functions as F
 
     table = pa.table({"key": pa.array([b"a", b"b"]), "value": pa.array([b"1", b"2"])})
     eng = TopicEngine(spark, str(tmp_path / "a"))
     eng.create_topic("t", TopicConfig(partitions=2))
     kinds = []
 
-    def produce(e, df):
+    def produce(e, batch):
         before = list(e._files["t"])
-        e.produce("t", df)
+        e.produce("t", batch)
         kinds.append(_segment_kinds(set(e._files["t"]) - set(before)))
 
     _no_jobs(spark, "local-relation-produce",
              lambda: produce(eng, spark.createDataFrame(table)))
     bulk = _bulk(spark, table)
-    size = bulk._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = max(table.nbytes, engine_mod._cached_plan_bytes(
+        bulk._jdf.queryExecution().optimizedPlan()))
     monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", size)
     produce(eng, bulk)
+    produce(eng, table.to_pylist())
     monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", size - 1)
     produce(eng, bulk)
+    produce(eng, table.to_pylist())
+    produce(eng, spark.createDataFrame(table))
     monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", size)
     uri = TopicEngine(spark, "file://" + str(tmp_path / "u"))
     uri.create_topic("t", TopicConfig(partitions=2))
     produce(uri, bulk)
-    assert kinds == [{"local"}, {"local"}, {"part"}, {"part"}]
-    assert sum(eng.high_watermarks("t").values()) == 6
+    # 2 x 100 kB of values whose plans the optimizer sizes at a few
+    # hundred bytes, a computed column over a cached frame and a range,
+    # are never collected to the driver
+    wide = "cast(repeat(cast(value as string), 100000) as binary)"
+    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", 64 << 10)
+    collected = []
+    monkeypatch.setattr(TopicEngine, "_collect_arrow", collected.append)
+    for under in (
+        bulk.select("key", F.expr(wide).alias("value")),
+        spark.range(2).select(
+            F.col("id").cast("string").cast("binary").alias("key"),
+            F.expr("repeat('x', 100000)").cast("binary").alias("value"),
+        ),
+    ):
+        plan = under._jdf.queryExecution().optimizedPlan()
+        assert plan.stats().sizeInBytes() < 64 << 10
+        assert engine_mod._cached_plan_bytes(plan) is None
+        produce(eng, under)
+    assert collected == []
+    assert kinds == [{"local"}] * 3 + [{"part"}] * 6
+    assert sum(eng.high_watermarks("t").values()) == 16
 
 
 def test_hot_tail_cap_binding_produce_keeps_coverage(spark, tmp_path):

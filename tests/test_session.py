@@ -1,60 +1,22 @@
-"""The session's Python worker daemon: zip directories re-read only when
-the archive changed, and the daemon serving the session's UDFs."""
+"""The session builder: Python workers import the package whatever the
+driver's working directory."""
 
 from __future__ import annotations
 
 import os
-import zipfile
-import zipimport
 
 from pyspark.sql import functions as F
 
-from redpanda_spark import daemon
+import redpanda_spark
 
 
-def _write_zip(path, body: str) -> None:
-    with zipfile.ZipFile(path, "w") as z:
-        z.writestr("mod_in_zip.py", body)
+def test_workers_find_the_package_on_their_path(spark):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(redpanda_spark.__file__)))
 
+    @F.udf("boolean")
+    def on_path(_):
+        import os as o
 
-def test_zip_directory_reread_only_when_archive_changes(tmp_path, monkeypatch):
-    reads = []
-    real = zipimport._read_directory
+        return root in o.environ.get("PYTHONPATH", "").split(o.pathsep)
 
-    def counting(archive):
-        reads.append(archive)
-        return real(archive)
-
-    monkeypatch.setattr(zipimport, "_read_directory", counting)
-    monkeypatch.setattr(
-        zipimport.zipimporter, "invalidate_caches", daemon._invalidate_caches
-    )
-    path = str(tmp_path / "lib.zip")
-    _write_zip(path, "X = 1\n")
-    imp = zipimport.zipimporter(path)
-    reads.clear()
-    imp.invalidate_caches()  # first call records the archive's stamp
-    imp.invalidate_caches()
-    imp.invalidate_caches()
-    assert reads == [path]
-    tmp = str(tmp_path / "lib.zip.new")
-    _write_zip(tmp, "X = 2\nY = 3\n")
-    os.replace(tmp, path)  # rewritten: new inode and size
-    imp.invalidate_caches()
-    assert reads == [path, path]
-    assert imp.get_source("mod_in_zip") == "X = 2\nY = 3\n"
-    imp.invalidate_caches()
-    assert reads == [path, path]
-
-
-def test_session_udfs_run_under_the_daemon(spark):
-    @F.udf("string")
-    def invalidate_name(_):
-        import zipimport as z
-
-        import redpanda_spark  # noqa: F401  (the package resolves on workers)
-
-        return z.zipimporter.invalidate_caches.__name__
-
-    got = {r[0] for r in spark.range(4).select(invalidate_name("id")).collect()}
-    assert got == {"_invalidate_caches"}
+    assert {r[0] for r in spark.range(2).select(on_path("id")).collect()} == {True}
