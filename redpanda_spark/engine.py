@@ -71,6 +71,7 @@ from __future__ import annotations
 import datetime as _dt
 import itertools
 import json
+import operator
 import os
 import time
 from contextlib import nullcontext as _nullcontext
@@ -259,17 +260,67 @@ def _record_row(r: dict) -> Row:
 
 
 # Produce-batch columns other than partition, timestamp and offset, with
-# the value a record lacking one stores (None: null).
+# the value a record lacking one stores (a null scalar: null), typed once
+# so a defaulted column is one pa.repeat.
 _RECORD_DEFAULTS = {
-    "key": None, "value": None, "headers": None, "producer_id": -1,
-    "producer_epoch": -1, "base_sequence": -1, "is_transactional": False,
-    "is_control": False,
+    c: pa.scalar(d, _RECORD_ARROW.field(c).type)
+    for c, d in {
+        "key": None, "value": None, "headers": None, "producer_id": -1,
+        "producer_epoch": -1, "base_sequence": -1, "is_transactional": False,
+        "is_control": False,
+    }.items()
 }
+
+# Kafka compression.type -> pyarrow parquet codec ("producer": the default)
+_PARQUET_CODECS = {
+    "snappy": "snappy", "zstd": "zstd", "gzip": "gzip", "lz4": "lz4",
+    "none": "none", "uncompressed": "none", "producer": "snappy",
+}
+
+_MISSING = object()
+
+
+class _SegmentsText:
+    """The ``json.dumps`` text of a manifest's segment list and of its
+    stats map (``{p: stats[p] for p in files if p in stats}``), built from
+    per-segment fragments. A segment's fragments are encoded when it
+    joins the list or its stats entry is replaced by another object (the
+    engine replaces entries, never mutates them); the rest are found and
+    joined by C-level iteration, with no per-segment Python work."""
+
+    def __init__(self):
+        self.src: dict = {}  # rel -> the stats entry encoded (None: none)
+        self.name: dict[str, str] = {}  # rel -> json.dumps(rel)
+        self.entry: dict[str, str] = {}  # rel -> '"rel": [stats]'
+
+    def encode(self, files: list[str], stats: dict) -> tuple[str, str]:
+        src = self.src
+        stale = itertools.compress(files, map(
+            operator.is_not,
+            map(stats.get, files),
+            map(src.get, files, itertools.repeat(_MISSING)),
+        ))
+        for p in list(stale):
+            s = src[p] = stats.get(p)
+            q = self.name[p] = json.dumps(p)
+            if s is None:
+                self.entry.pop(p, None)
+            else:
+                self.entry[p] = f"{q}: {json.dumps(s)}"
+        if len(src) > len(files):  # segments left the list
+            live = set(files)
+            for d in (src, self.name, self.entry):
+                for p in [p for p in d if p not in live]:
+                    del d[p]
+        return (
+            "[" + ", ".join(map(self.name.__getitem__, files)) + "]",
+            "{" + ", ".join(filter(None, map(self.entry.get, files))) + "}",
+        )
 
 
 def _record_dicts(columns, idx, n: int) -> list[dict]:
     """Rows ``idx`` of an ``n``-row batch held as ``_RecordRow``-ordered
-    columns (numpy arrays, Arrow arrays, or one value for every row) as
+    columns (numpy arrays, Arrow arrays, or one pa.Scalar for every row) as
     the record dicts the hot tail keeps. Column-wise, so a 10-record batch
     pays a few list conversions rather than a whole-table ``to_pylist``."""
     lists = []
@@ -279,7 +330,7 @@ def _record_dicts(columns, idx, n: int) -> list[dict]:
         elif isinstance(c, (pa.Array, pa.ChunkedArray)):
             lists.append((c if len(idx) == n else c.take(pa.array(idx))).to_pylist())
         else:
-            lists.append([c] * len(idx))
+            lists.append([c.as_py()] * len(idx))
     return [dict(zip(_RecordRow, v)) for v in zip(*lists)]
 
 
@@ -417,7 +468,10 @@ class TopicEngine:
         # `storage/batch_cache.h:101`: just-committed batches served from
         # memory without touching storage). Per topic per partition:
         # (tail_start_offset, [row dicts]) covering the CONTIGUOUS range
-        # [tail_start, high-watermark). Strictly read-through: populated
+        # [tail_start, high-watermark), so the record at offset o is list
+        # index o - tail_start. A published pair and its list are never
+        # mutated (upkeep builds new ones), so a reader may hold them
+        # without a lock. Strictly read-through: populated
         # only AFTER a successful manifest commit by the local produce
         # path, invalidated by EVERY manifest flip (_commit_manifest), so
         # it can never serve rows the durable log doesn't have.
@@ -426,6 +480,10 @@ class TopicEngine:
         self._tail_max_bytes = 16 << 20  # per topic (batch_cache reservation)
         # _record_bytes sum per partition of _tail[topic]
         self._tail_bytes: dict[str, dict[int, int]] = {}
+        # per topic: (stored "_log_starts" config string, its parsed map)
+        self._log_start_cache: dict[str, tuple[str, dict[int, int]]] = {}
+        # per topic: manifest text of the hot and archived segments
+        self._manifest_text: dict[str, tuple[_SegmentsText, _SegmentsText]] = {}
         # driver-side mirror of the (tiny) _tx_ranges side table, keyed by
         # the dir's file listing — lets the hot tail serve read_committed
         # with zero Spark jobs (LSO bound + aborted filter in-process)
@@ -608,25 +666,28 @@ class TopicEngine:
             self._write_manifest_locked(topic)
 
     def _write_manifest_locked(self, topic: str) -> None:
-        files = self._files[topic]
-        stats = self._stats.get(topic, {})
-        arch = self._archived.get(topic, [])
-        astats = self._archived_stats.get(topic, {})
+        """The manifest as ``json.dumps`` writes this dict, byte for byte:
+        ``{"high", "files", "stats" (of listed files), "producers",
+        "clean_rows", "archived", "archived_stats", "arch_epoch",
+        "writer_epoch"}``. The segment lists and stats maps of both tiers
+        come from ``_SegmentsText``, so a commit encodes only the segments
+        it added or whose stats it replaced."""
+        enc = self._manifest_text.get(topic)
+        if enc is None:
+            enc = self._manifest_text[topic] = (_SegmentsText(), _SegmentsText())
+        files, stats = enc[0].encode(self._files[topic], self._stats.get(topic, {}))
+        arch, astats = enc[1].encode(
+            self._archived.get(topic, []), self._archived_stats.get(topic, {})
+        )
+        dumps = json.dumps
         self._fsio.write_text_atomic(
             self._manifest_path(topic),
-            json.dumps(
-                {
-                    "high": self._high.get(topic, {}),
-                    "files": files,
-                    "stats": {p: stats[p] for p in files if p in stats},
-                    "producers": self._producers.get(topic, {}),
-                    "clean_rows": self._clean_rows.get(topic, 0),
-                    "archived": arch,
-                    "archived_stats": {p: astats[p] for p in arch if p in astats},
-                    "arch_epoch": self._arch_epoch.get(topic, 0),
-                    "writer_epoch": self._writer_epoch.get(topic, 0),
-                }
-            ),
+            f'{{"high": {dumps(self._high.get(topic, {}))}, "files": {files}, '
+            f'"stats": {stats}, "producers": {dumps(self._producers.get(topic, {}))}, '
+            f'"clean_rows": {dumps(self._clean_rows.get(topic, 0))}, '
+            f'"archived": {arch}, "archived_stats": {astats}, '
+            f'"arch_epoch": {dumps(self._arch_epoch.get(topic, 0))}, '
+            f'"writer_epoch": {dumps(self._writer_epoch.get(topic, 0))}}}',
         )
 
     def _load_state(self) -> None:
@@ -836,6 +897,7 @@ class TopicEngine:
             self._high.pop(topic, None)
             self._files.pop(topic, None)
             self._stats.pop(topic, None)
+            self._manifest_text.pop(topic, None)
             self._tail.pop(topic, None)
             self._producers.pop(topic, None)
             self._archived.pop(topic, None)
@@ -1405,19 +1467,17 @@ class TopicEngine:
         def column(c):
             return t[c].chunk(0) if t[c].num_chunks else pa.nulls(0, t[c].type)
 
-        key = column("key") if "key" in cols else pa.nulls(n, pa.binary())
+        def lengths(a):
+            return np.asarray(pc.fill_null(pc.binary_length(a), 0), dtype=np.int64)
+
         value = column("value")
 
         # -- validations (before any state mutation) ----------------------
         if cfg.value_schema_subject is not None:
             self._validate_schema_ids_local(value, cfg.value_schema_subject)
-        nbytes = np.asarray(
-            pc.add(
-                pc.fill_null(pc.binary_length(key), 0),
-                pc.fill_null(pc.binary_length(value), 0),
-            ),
-            dtype=np.int64,
-        )
+        nbytes = lengths(value)
+        if "key" in cols:
+            nbytes += lengths(column("key"))
         if cfg.max_message_bytes is not None and n:
             biggest = int(nbytes.max())
             if biggest > cfg.max_message_bytes:
@@ -1440,7 +1500,7 @@ class TopicEngine:
         # silently partition 0
         part = np.arange(n, dtype=np.int64) % cfg.partitions
         if "key" in cols:
-            hashed = murmur2_partitions(key, cfg.partitions)
+            hashed = murmur2_partitions(column("key"), cfg.partitions)
             part = np.where(hashed >= 0, hashed, part)
         if "partition" in cols:
             explicit = column("partition")
@@ -1490,32 +1550,32 @@ class TopicEngine:
         offs = np.repeat(starts - first, counts) + np.arange(order.size)
 
         k = order.size
-        taken = t.take(pa.array(order))
+        # a batch already in segment order (say, one partition) is not taken
+        taken = t if np.array_equal(order, np.arange(n)) else t.take(order)
         sts = ts[order]
-        # each column as the batch carries it (nulls filled) or as one
-        # default for every row; NB: a null id/epoch/sequence is -1, a
-        # legitimate 0 stays 0
-        col = {
-            c: (taken[c] if d is None else taken[c].fill_null(d)) if c in cols else d
-            for c, d in _RECORD_DEFAULTS.items()
-        }
-
-        def array(c, v):
-            if not isinstance(v, (pa.Array, pa.ChunkedArray)):
-                v = pa.nulls(k, _RECORD_ARROW.field(c).type)
-                return v if col[c] is None else v.fill_null(col[c])
-            return v
-
-        recs = pa.table({
-            "partition": pa.array(sp, pa.int32()),
-            "timestamp": pa.array(sts, pa.int64()),
-            **{c: array(c, v) for c, v in col.items()},
-            "offset": pa.array(offs, pa.int64()),
-        })
+        # each column as the batch carries it (nulls filled) or its
+        # default scalar for every row; NB: a null id/epoch/sequence is -1,
+        # a legitimate 0 stays 0
+        col = {}
+        for c, d in _RECORD_DEFAULTS.items():
+            if c not in cols:
+                col[c] = d
+            elif d.is_valid and taken[c].null_count:
+                col[c] = taken[c].fill_null(d)
+            else:
+                col[c] = taken[c]
 
         bases: dict[int, int] = {}
-        if order.size:
-            rel = self._write_local_segment(topic, cfg, recs)
+        if k:
+            rel = self._write_local_segment(topic, cfg, pa.table({
+                "partition": pa.array(sp, pa.int32()),
+                "timestamp": pa.array(sts, pa.timestamp("us", tz="UTC")),
+                **{
+                    c: pa.repeat(v, k) if isinstance(v, pa.Scalar) else v
+                    for c, v in col.items()
+                },
+                "offset": pa.array(offs, pa.int64()),
+            }))
             high = self._high.setdefault(topic, {})
             for p, s, c in zip(parts.tolist(), starts.tolist(), counts.tolist()):
                 bases[p] = s
@@ -1526,8 +1586,8 @@ class TopicEngine:
                 int(order.size), int(sts.min()), int(sts.max()),
             ]
 
-        prev_tail = dict(self._tail.get(topic) or {})
-        prev_sizes = dict(self._tail_bytes.get(topic) or {}) if topic in self._tail else {}
+        prev_tail = self._tail.get(topic) or {}
+        prev_sizes = self._tail_bytes.get(topic, {}) if prev_tail else {}
         self._commit_manifest(topic)  # atomic visibility point (clears tail)
         spans = zip(parts.tolist(), first.tolist(), (first + counts).tolist(), starts.tolist())
         columns = [sp, sts, *col.values(), offs]
@@ -1537,30 +1597,27 @@ class TopicEngine:
     def _write_local_segment(self, topic: str, cfg: TopicConfig, recs) -> str:
         """One (partition, offset)-sorted parquet segment via pyarrow,
         byte-compatible with the Spark-written ones (same schema, micros
-        timestamps, dictionary off). ``recs`` holds the segment columns
-        with integer-µs timestamps. Returns the root-relative path."""
+        timestamps, dictionary off). ``recs`` holds the segment columns.
+        Returns the root-relative path."""
         import uuid
 
         import pyarrow.parquet as pq
 
-        d = self._topic_dir(topic)
-        os.makedirs(d, exist_ok=True)
-        i = recs.schema.get_field_index("timestamp")
-        table = recs.set_column(
-            i, "timestamp", recs.column(i).cast(pa.timestamp("us", tz="UTC"))
-        )
-        codec = {
-            "snappy": "snappy",
-            "zstd": "zstd",
-            "gzip": "gzip",
-            "lz4": "lz4",
-            "none": "none",
-            "uncompressed": "none",
-            "producer": "snappy",
-        }.get(cfg.compression, "snappy")
-        dest = os.path.join(d, f"local-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, dest, compression=codec, use_dictionary=False)
-        return os.path.relpath(dest, self.root)
+        rel = os.path.join(topic, f"local-{uuid.uuid4().hex}.parquet")
+        dest = os.path.join(self.root, rel)
+        try:
+            raw = pa.OSFile(dest, "wb")
+        except FileNotFoundError:  # the topic dir is made at its first write
+            os.makedirs(self._topic_dir(topic), exist_ok=True)
+            raw = pa.OSFile(dest, "wb")
+        # buffered: the writer's many small header and footer writes
+        # become a few syscalls; bigger writes pass straight through
+        with pa.BufferedOutputStream(raw, 1 << 16) as f:
+            pq.write_table(
+                recs, f, compression=_PARQUET_CODECS.get(cfg.compression, "snappy"),
+                use_dictionary=False,
+            )
+        return rel
 
     def _validate_schema_ids_local(self, values, subject: str) -> None:
         """Driver-side twin of _validate_schema_ids over a pyarrow binary
@@ -1604,7 +1661,8 @@ class TopicEngine:
         are kept running, and the budgets are settled on the batch's
         arrays first, so record dicts are built only for the rows the tail
         keeps. The tail keeps the records as written (integer-µs
-        timestamps); fetch_rows builds the Rows."""
+        timestamps); fetch_rows builds the Rows. Every (start, rows) pair
+        stored here is new: a published pair or list is never mutated."""
         cap = self._tail_max_bytes
         tail = dict(prev_tail)  # dict order is the byte-budget trim order
         size = dict(prev_sizes)
@@ -1674,15 +1732,16 @@ class TopicEngine:
         budget (whole records; the first one returns even alone over
         budget) and then record cap, and the Rows equal
         ``fetch(...).collect()`` sorted by offset."""
-        self._require(topic)
         cut = max(offset, self._log_starts(topic).get(partition, 0))
         tail = self._tail.get(topic, {}).get(partition)
-        if tail is not None and offset >= tail[0]:
-            self._count(topic, tail_cache_hits=1)
-            recs = (r for r in tail[1] if r["offset"] >= cut)
+        if tail is not None and cut >= tail[0]:
+            # contiguous offsets from tail[0]: record cut is at cut - tail[0]
+            lst = tail[1]
+            recs = map(lst.__getitem__, range(cut - tail[0], len(lst)))
+            counts = {"tail_cache_hits": 1}
         else:
-            self._count(topic, tail_cache_misses=1, fetch_requests=1)
             recs = self._segment_records(topic, partition, cut)
+            counts = {"tail_cache_misses": 1, "fetch_requests": 1}
         visible = self._visibility(topic, partition, isolation)
         if visible is not None:
             recs = filter(visible, recs)
@@ -1696,7 +1755,7 @@ class TopicEngine:
                 break
             taken.append(r)
             size += _record_bytes(r)
-        self._count(topic, fetched_rows=len(taken), fetched_bytes=size)
+        self._count(topic, fetched_rows=len(taken), fetched_bytes=size, **counts)
         return [_record_row(r) for r in taken]
 
     def _segment_records(self, topic: str, partition: int, cut: int):
@@ -2391,11 +2450,14 @@ class TopicEngine:
     # -- admin / maintenance ---------------------------------------------
 
     def _log_starts(self, topic: str) -> dict[int, int]:
-        cfg = self._require(topic)
-        return {
-            int(p): int(o)
-            for p, o in json.loads(cfg.configs.get("_log_starts", "{}")).items()
-        }
+        """{partition: log start offset}, a copy the caller may mutate;
+        the stored config string is parsed again only when it changed."""
+        raw = self._require(topic).configs.get("_log_starts", "{}")
+        hit = self._log_start_cache.get(topic)
+        if hit is None or hit[0] != raw:
+            hit = (raw, {int(p): int(o) for p, o in json.loads(raw).items()})
+            self._log_start_cache[topic] = hit
+        return dict(hit[1])
 
     def delete_records(self, topic: str, start_offsets: dict[int, int]) -> None:
         """Advance log start offsets (visibility-immediate prefix truncate)."""
@@ -3095,6 +3157,7 @@ class TopicEngine:
                 self._high,
                 self._files,
                 self._stats,
+                self._manifest_text,
                 self._tail,
                 self._producers,
                 self._archived,
@@ -3334,6 +3397,7 @@ class TopicEngine:
                 self._high,
                 self._files,
                 self._stats,
+                self._manifest_text,
                 self._archived,
                 self._archived_stats,
                 self._arch_epoch,

@@ -391,6 +391,78 @@ def test_manifest_records_per_file_stats(engine, spark):
         assert 0 <= min_o <= max_o
 
 
+def _manifest_state(eng, t) -> dict:
+    """The state a topic's manifest holds, as one dict."""
+    files, stats = eng._files[t], eng._stats.get(t, {})
+    arch, astats = eng._archived.get(t, []), eng._archived_stats.get(t, {})
+    return {
+        "high": eng._high.get(t, {}),
+        "files": files,
+        "stats": {p: stats[p] for p in files if p in stats},
+        "producers": eng._producers.get(t, {}),
+        "clean_rows": eng._clean_rows.get(t, 0),
+        "archived": arch,
+        "archived_stats": {p: astats[p] for p in arch if p in astats},
+        "arch_epoch": eng._arch_epoch.get(t, 0),
+        "writer_epoch": eng._writer_epoch.get(t, 0),
+    }
+
+
+def test_manifest_text_is_json_dumps_of_state(spark, tmp_path, monkeypatch):
+    """After every kind of commit the manifest file is byte for byte
+    ``json.dumps`` of the topic's state dict, and a reopened engine reads
+    that state back: in-process and distributed produce (with producer
+    state), compaction, segment merge, archival, and a stats entry
+    replaced under a segment's existing name."""
+    import datetime as dt
+    import json
+
+    root = str(tmp_path / "m")
+    eng = TopicEngine(spark, root)
+
+    def check(t):
+        want = _manifest_state(eng, t)
+        with open(eng._manifest_path(t)) as f:
+            assert f.read() == json.dumps(want)
+        again = TopicEngine(spark, root, read_only=True)
+        got = _manifest_state(again, t)
+        assert {**got, "writer_epoch": 0} == {**want, "writer_epoch": 0}
+
+    eng.create_topic("c", TopicConfig(partitions=2, cleanup_policy="compact"))
+    check("c")
+    eng.produce("c", [{"key": b"k%d" % (i % 3), "value": b"v%d" % i} for i in range(6)])
+    eng.produce("c", [{"partition": 1, "key": b"k0", "value": b"p", "producer_id": 7,
+                       "producer_epoch": 0, "base_sequence": 0}])
+    check("c")
+    monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", 0)
+    eng.produce("c", records_df(spark, [("k1", "d0"), ("k4", "d1"), (None, "d2")]))
+    assert _segment_kinds(eng._files["c"]) == {"local", "part"}
+    check("c")
+    monkeypatch.undo()
+    eng.run_compaction("c")
+    check("c")
+    for i in range(3):
+        eng.produce("c", [{"key": b"n%d" % i, "value": b"x"}])
+    eng.optimize_segments("c", target_file_bytes=1 << 30)
+    assert len(eng._files["c"]) == 1
+    check("c")
+    rel = eng._files["c"][0]
+    eng._stats["c"][rel] = eng._stats["c"][rel][:5]  # same name, new entry
+    eng._commit_manifest("c")
+    check("c")
+
+    eng.create_topic("a", TopicConfig(partitions=2, remote_write=True,
+                                      local_retention_ms=60_000))
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    eng.produce("a", [{"key": b"o", "value": b"old", "timestamp": base}])
+    eng.produce("a", [{"key": b"n", "value": b"new"}])
+    now_ms = int((base + dt.timedelta(hours=2)).timestamp() * 1000)
+    assert eng.run_archival("a", now_ms=now_ms)["archived"] == 1
+    check("a")
+    eng.produce("a", [{"key": b"m", "value": b"more"}])
+    check("a")
+
+
 def test_fetch_prunes_segments_by_offset_stats(engine, spark):
     """A fetch of the tail offsets must scan only the tail segment files
     (manifest-level pruning), and still return exactly the right rows."""
@@ -1033,10 +1105,31 @@ def test_produce_path_selection(spark, tmp_path, monkeypatch):
     assert sum(eng.high_watermarks("t").values()) == 16
 
 
+def _tail_fetches_equal_segment_reads(spark, eng, root, topic, offsets, collect=()):
+    """fetch_rows at each (partition, offset) is a tail hit and equals the
+    segment read of a fresh engine; for the partitions in ``collect``
+    also the relational fetch's rows in offset order."""
+    fresh = TopicEngine(spark, root, read_only=True)
+    for p, o in offsets:
+        hits = eng.counters(topic).get("tail_cache_hits", 0)
+        got = eng.fetch_rows(topic, p, offset=o)
+        assert eng.counters(topic)["tail_cache_hits"] == hits + 1
+        assert got == fresh.fetch_rows(topic, p, offset=o)
+        assert [r["offset"] for r in got] == list(
+            range(o, eng.high_watermarks(topic)[p])
+        )
+        if p in collect:
+            rel = eng.fetch(topic, p, offset=o).collect()
+            assert got == sorted(rel, key=lambda r: r["offset"])
+
+
 def test_hot_tail_cap_binding_produce_keeps_coverage(spark, tmp_path):
     """A batch that binds the topic byte cap leaves every cached partition
     covering [start, high) with a byte count equal to its records, and a
-    tail-served fetch_rows equals the segment read of a fresh engine."""
+    tail-served fetch_rows at and inside a trimmed tail (start > 0) equals
+    the segment read of a fresh engine: after the byte cap of a small
+    tail, after the 2,048-row cap, and after the 16 MiB topic cap trims a
+    partition's rows of the batch itself."""
     import pyarrow as pa
 
     from redpanda_spark.engine import _record_bytes
@@ -1056,12 +1149,36 @@ def test_hot_tail_cap_binding_produce_keeps_coverage(spark, tmp_path):
         assert cached > eng._tail_max_bytes - 200
         for p, (start, lst) in tail.items():
             assert [r["offset"] for r in lst] == list(range(start, high[p]))
-    fresh = TopicEngine(spark, root, read_only=True)
-    for p, (start, _lst) in eng._tail["c"].items():
-        hits = eng.counters("c").get("tail_cache_hits", 0)
-        got = eng.fetch_rows("c", p, offset=start)
-        assert eng.counters("c")["tail_cache_hits"] == hits + 1
-        assert got == fresh.fetch_rows("c", p, offset=start)
+    trimmed = [(p, s) for p, (s, _l) in eng._tail["c"].items() if s > 0]
+    assert trimmed
+    _tail_fetches_equal_segment_reads(spark, eng, root, "c", [
+        (p, s + d) for p, s in trimmed for d in (0, 1)
+    ] + [(p, s) for p, (s, _l) in eng._tail["c"].items() if s == 0])
+
+    # the default caps: 2,048 rows per partition, 16 MiB per topic
+    eng = TopicEngine(spark, root)
+    eng.create_topic("rows", TopicConfig(partitions=2))
+    eng.produce("rows", [
+        {"partition": i % 2, "key": b"k", "value": b"%d" % i} for i in range(6000)
+    ])
+    assert {p: s for p, (s, _l) in eng._tail["rows"].items()} == {0: 952, 1: 952}
+    _tail_fetches_equal_segment_reads(
+        spark, eng, root, "rows",
+        [(0, 952), (0, 953), (0, 2000), (0, 2999), (0, 3000), (1, 1500)],
+        collect={0},
+    )
+    eng.create_topic("mib", TopicConfig(partitions=2))
+    eng.produce("mib", [{"partition": 0, "key": b"a", "value": b"."}])
+    eng.produce("mib", [
+        {"partition": i % 2, "key": b"k", "value": bytes([i]) * (1 << 20)}
+        for i in range(20)
+    ])
+    start, lst = eng._tail["mib"][0]
+    assert 1 < start < 11 and lst[-1]["offset"] == 10  # trimmed mid-batch
+    _tail_fetches_equal_segment_reads(
+        spark, eng, root, "mib", [(0, start), (0, start + 1), (0, 10), (1, 0)],
+        collect={0},
+    )
 
 
 def test_empty_log_frames_run_no_spark_job(spark, tmp_path):
@@ -1141,6 +1258,27 @@ def test_hot_tail_respects_delete_records(spark, tmp_path):
     eng.delete_records("d", {0: 2})  # prefix truncate to offset 2
     rows = eng.fetch_poll("d", 0, offset=0, min_records=1)
     assert [r["offset"] for r in rows] == [2, 3]
+
+
+def test_fetch_below_log_start_inside_tail_is_tail_hit(spark, tmp_path):
+    """A log start moved into the hot tail by delete_records decides the
+    fetch: one from below it reads the tail, with no Spark job, and
+    returns the segment read's Rows."""
+    root = str(tmp_path / "t")
+    eng = TopicEngine(spark, root)
+    eng._tail_max_rows = 4
+    eng.create_topic("d", TopicConfig(partitions=1))
+    for i in range(5):
+        eng.produce("d", [{"partition": 0, "key": b"k", "value": b"v%d" % i}])
+    assert eng._tail["d"][0][0] == 1
+    eng.delete_records("d", {0: 3})
+    hits = eng.counters("d").get("tail_cache_hits", 0)
+    got = _no_jobs(spark, "below-log-start", lambda: eng.fetch_rows("d", 0, offset=0))
+    assert eng.counters("d")["tail_cache_hits"] == hits + 1
+    assert eng.counters("d").get("tail_cache_misses", 0) == 0
+    fresh = TopicEngine(spark, root, read_only=True)
+    assert got == fresh.fetch_rows("d", 0, offset=0)
+    assert [r["offset"] for r in got] == [3, 4]
 
 
 def test_hot_tail_extends_and_trims(spark, tmp_path):
