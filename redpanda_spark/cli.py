@@ -264,7 +264,11 @@ def cmd_maintain(args) -> int:
     """The nightly maintenance tick: per topic run cleanup (dirty-ratio
     gated compaction + retention with the segment fast path) and
     small-segment merging; then GC stale consumer offsets, compact the
-    offsets log, and expire idle producer state."""
+    offsets log, and expire idle producer state. Each step is decided from
+    the manifest: a topic with no retention set and nothing wholly below
+    its log start runs no Spark job, and driver-sized merges and
+    retention cuts on a local root run in-process on Arrow; the
+    ``maintenance_spark_rewrites`` counter counts the rest."""
     eng = _engine(args)
     topics = [args.topic] if args.topic else sorted(eng.list_topics())
     for t in topics:

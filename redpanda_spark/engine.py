@@ -187,6 +187,10 @@ _RECORD_ARROW = pa.schema(
     ]
 )
 
+# A stored segment's columns as the in-process rewrites hold them: the
+# record columns (integer-µs timestamps) and the offset.
+_SEGMENT_ARROW = _RECORD_ARROW.append(pa.field("offset", pa.int64()))
+
 # Largest produce batch, in bytes of its Arrow record table, that is
 # appended in-process; a bigger one takes the distributed
 # route/write/read-back pipeline. Set at the measured crossover: on a
@@ -1809,18 +1813,18 @@ class TopicEngine:
         """One segment's records of ``partition`` at/after ``cut`` as
         record dicts in offset order, converted batch by batch as the
         caller consumes them."""
-        import pyarrow as pa
-
-        t = self._read_parquet_file(
-            fs,
-            path,
-            columns=list(_RecordRow),
-            filters=[("partition", "=", partition), ("offset", ">=", cut)],
+        t = self._read_records(
+            fs, path, filters=[("partition", "=", partition), ("offset", ">=", cut)]
         )
-        ts = t["timestamp"].cast(pa.timestamp("us"), safe=False).cast(pa.int64())
-        t = t.set_column(t.schema.get_field_index("timestamp"), "timestamp", ts)
         for batch in t.sort_by("offset").to_batches(max_chunksize=1024):
             yield from batch.to_pylist()
+
+    def _read_records(self, fs, path: str, filters=None):
+        """One segment's columns in ``_RecordRow`` order as an Arrow
+        table, timestamps as integer µs."""
+        t = self._read_parquet_file(fs, path, columns=list(_RecordRow), filters=filters)
+        ts = t["timestamp"].cast(pa.timestamp("us"), safe=False).cast(pa.int64())
+        return t.set_column(1, "timestamp", ts)
 
     def _read_parquet_file(self, fs, path: str, columns=None, filters=None):
         """One parquet file as a pyarrow table — direct-path on a local
@@ -2473,23 +2477,31 @@ class TopicEngine:
         """Apply time + size retention (the reference's segment GC,
         `disk_log_impl.cc:260-417`).
 
+        With neither retention.ms nor retention.bytes set nothing ages
+        out, so nothing is rewritten: the segments of either tier that lie
+        wholly below the log start (DeleteRecords) leave the manifest and
+        then the disk, the reference's prefix-truncation eviction
+        (`cluster/log_eviction_stm.cc`). A partly truncated segment stays;
+        reads filter it by the log start. Decided from the manifest stats
+        alone, with no Spark job.
+
         Time-only retention takes the SEGMENT fast path: manifest
         timestamp stats classify every live file as fully-expired (max_ts
         < cutoff → metadata-only drop), untouched (min_ts >= cutoff → not
         even read), or boundary (straddles the cutoff → row-filter
-        rewrite of just that file). Work is O(expired + boundary files),
+        rewrite of just those files, in-process on Arrow when they are
+        driver-sized). Work is O(expired + boundary files),
         not O(log) — on a 100 TB topic the nightly tick drops whole aged
         segments and rewrites at most one boundary file per partition,
         exactly the reference's behavior. Results are row-identical to
-        the full filter. Falls back to the full rewrite when size
-        retention is also configured or timestamp stats are missing."""
+        the full filter. Size retention, and time retention over a file
+        without timestamp stats, take the full Spark rewrite."""
         cfg = self._require(topic)
         self._refuse_replica_mutation(topic)
-        if (
-            cfg.retention_ms is not None
-            and cfg.retention_bytes is None
-            and self._retention_time_segments(topic, now_ms)
-        ):
+        if cfg.retention_ms is None and cfg.retention_bytes is None:
+            self._drop_below_log_start(topic)
+            return
+        if cfg.retention_bytes is None and self._retention_time_segments(topic, now_ms):
             return
 
         def _filters(log: DataFrame) -> DataFrame:
@@ -2553,6 +2565,29 @@ class TopicEngine:
         finally:
             self._fsio.delete(spill, recursive=True)
 
+    def _drop_below_log_start(self, topic: str) -> None:
+        """Drop the segments of both tiers that lie wholly below the log
+        start: their max offset is below the smallest start of the
+        partitions their stats span (an unset start is 0, and an empty
+        segment spans none). Manifest math only; a file without stats
+        stays."""
+        starts = self._log_starts(topic)
+
+        def below(files, stats) -> list[str]:
+            return [
+                f for f in files
+                if (st := stats.get(f)) is not None and st[3] < min(
+                    (starts.get(p, 0) for p in range(st[0], st[1] + 1)), default=0
+                )
+            ]
+
+        gone = below(self._files[topic], self._stats.get(topic, {}))
+        a_gone = below(
+            self._archived.get(topic, []), self._archived_stats.get(topic, {})
+        )
+        if gone or a_gone:
+            self._replace_segments(topic, gone, [], {}, a_gone, [], {})
+
     @staticmethod
     def _classify_expired(
         files: list[str], stats: dict[str, list[int]], cutoff_us: int
@@ -2602,60 +2637,39 @@ class TopicEngine:
         a_drop, a_boundary = arch_cls
         if not drop and not boundary and not a_drop and not a_boundary:
             return True  # zero work, zero jobs
-        d = self._topic_dir(topic)
         new_rel: list[str] = []
+        new_stats: dict[str, list[int]] = {}
         if boundary:
-            bdf = self.spark.read.parquet(
-                *[os.path.join(self.root, f) for f in boundary]
-            ).where(F.unix_micros(F.col("timestamp")) >= F.lit(cutoff_us))
-            tmp = d + ".rewrite.tmp"
-            self._fsio.delete(tmp, recursive=True)
-            (
-                bdf.repartitionByRange("partition", "offset")
-                .sortWithinPartitions("partition", "offset")
-                .write.mode("overwrite")
-                .option("compression", cfg.compression)
-                .option("parquet.enable.dictionary", "false")
-                .parquet(tmp)
-            )
-            for f in sorted(self._fsio.list_segments(tmp)):
-                dest = os.path.join(d, os.path.basename(f))
-                self._fsio.rename(f, dest)
-                new_rel.append(os.path.relpath(dest, self.root))
+            paths = [os.path.join(self.root, f) for f in boundary]
+            if self._driver_sized(sum(map(self._fsio.getsize, paths))):
+                new_stats = self._merge_local(topic, boundary, min_ts_us=cutoff_us)
+                new_rel = list(new_stats)
+            else:
+                new_rel = self._write_segments(
+                    topic,
+                    self.spark.read.parquet(*paths).where(
+                        F.unix_micros(F.col("timestamp")) >= F.lit(cutoff_us)
+                    ),
+                )
+                new_stats = self._footer_stats(
+                    [os.path.join(self.root, f) for f in new_rel]
+                )
         a_new_rel: list[str] = []
         if a_boundary:
-            a_new_rel = self._write_archive_segments(
+            a_new_rel = self._write_segments(
                 topic,
                 self.spark.read.parquet(
                     *[os.path.join(self.archive_root, f) for f in a_boundary]
                 ).where(F.unix_micros(F.col("timestamp")) >= F.lit(cutoff_us)),
+                archive=True,
             )
-        rows_before = self._stats_rows(topic)
-        gone = set(drop) | set(boundary)
-        kept = [f for f in files if f not in gone]
-        self._files[topic] = kept + new_rel
-        st_map = {f: stats[f] for f in kept if f in stats}
-        st_map.update(
-            self._footer_stats([os.path.join(self.root, f) for f in new_rel])
-        )
-        self._stats[topic] = st_map
-        a_gone = set(a_drop) | set(a_boundary)
-        a_kept = [f for f in archived if f not in a_gone]
-        self._archived[topic] = a_kept + a_new_rel
-        a_map = {f: astats[f] for f in a_kept if f in astats}
-        a_map.update(
-            self._footer_stats(
+        self._replace_segments(
+            topic, drop + boundary, new_rel, new_stats,
+            a_drop + a_boundary, a_new_rel, self._footer_stats(
                 [os.path.join(self.archive_root, f) for f in a_new_rel],
                 base=self.archive_root,
-            )
+            ),
         )
-        self._archived_stats[topic] = a_map
-        self._adjust_clean_baseline(topic, rows_before)
-        self._commit_manifest(topic)  # atomic switch; then physical delete
-        for f in gone:
-            self._fsio.delete(os.path.join(self.root, f))
-        for f in a_gone:
-            self._afsio.delete(os.path.join(self.archive_root, f))
         return True
 
     def run_cleanup(self, topic: str, now_ms: int | None = None) -> None:
@@ -2789,11 +2803,15 @@ class TopicEngine:
         consolidate the many small per-produce segment files into
         ~target-size, offset-sorted files. Rows, offsets and watermarks are
         unchanged — this is the small-files maintenance job that keeps a
-        100 TB topic's file count (scan + listing cost) bounded. One
-        range-shuffle job on (partition, offset), so merged files stay
-        offset-contiguous; the atomic dir swap mirrors the reference's
-        segment replace. Truncated prefixes (DeleteRecords) are physically
-        dropped by the rewrite, like the reference's eviction."""
+        100 TB topic's file count (scan + listing cost) bounded. Merged
+        files stay offset-contiguous on (partition, offset). Segments of a
+        local root that total at most ``_LOCAL_PRODUCE_MAX_BYTES`` on disk
+        merge in-process on Arrow (``_merge_local``), with no Spark job;
+        bigger inputs and URI roots take one Spark range-shuffle job.
+        Either way the manifest commit is the one atomic switch, as in the
+        reference's segment replace, and truncated prefixes
+        (DeleteRecords) are physically dropped, like the reference's
+        eviction."""
         self._require(topic)
         files = self._files[topic]
         if not files:
@@ -2802,7 +2820,11 @@ class TopicEngine:
         n_target = max(1, -(-total // target_file_bytes))
         if len(files) <= n_target:
             return {"files_before": len(files), "files_after": len(files)}
-        self._rewrite(topic, self._local_log(topic), n_files=n_target)
+        if self._driver_sized(total):
+            merged = self._merge_local(topic, files, n_files=n_target)
+            self._replace_segments(topic, files, list(merged), merged)
+        else:
+            self._rewrite(topic, self._local_log(topic), n_files=n_target)
         return {
             "files_before": len(files),
             "files_after": len(self._files[topic]),
@@ -3543,38 +3565,6 @@ class TopicEngine:
                 "INVALID_TOPIC_EXCEPTION", f"{topic} is a read replica (read-only)"
             )
 
-    def _write_archive_segments(
-        self, topic: str, df: DataFrame, n_files: int | None = None
-    ) -> list[str]:
-        """Write ``df`` as new cold-tier segments with epoch-unique names;
-        returns archive-relative paths. Caller owns the manifest commit."""
-        cfg = self._require(topic)
-        ad = self._archive_dir(topic)
-        self._afsio.mkdirs(ad)
-        tmp = ad + ".rewrite.tmp"
-        self._afsio.delete(tmp, recursive=True)
-        rp = (
-            df.repartitionByRange(n_files, "partition", "offset")
-            if n_files
-            else df.repartitionByRange("partition", "offset")
-        )
-        (
-            rp.sortWithinPartitions("partition", "offset")
-            .write.mode("overwrite")
-            .option("compression", cfg.compression)
-            .option("parquet.enable.dictionary", "false")
-            .parquet(tmp)
-        )
-        epoch = self._arch_epoch.get(topic, 0)
-        self._arch_epoch[topic] = epoch + 1
-        new_rel: list[str] = []
-        for i, f in enumerate(sorted(self._afsio.list_segments(tmp))):
-            dest = os.path.join(ad, f"e{epoch:06d}_{i:05d}.parquet")
-            self._afsio.rename(f, dest)
-            new_rel.append(os.path.relpath(dest, self.archive_root))
-        self._afsio.delete(tmp, recursive=True)
-        return new_rel
-
     def optimize_archive_segments(
         self, topic: str, target_file_bytes: int = 128 * 1024 * 1024
     ) -> dict[str, int]:
@@ -3606,58 +3596,148 @@ class TopicEngine:
         self, topic: str, df: DataFrame, n_files: int | None = None
     ) -> None:
         """Replace the topic's COLD tier with ``df`` (tiered retention
-        fallback) — the archive-side twin of _rewrite: write new segments,
-        flip the manifest, delete the old cold files."""
-        old = [
-            os.path.join(self.archive_root, f)
-            for f in self._archived.get(topic, [])
-        ]
-        new_rel = self._write_archive_segments(topic, df, n_files=n_files)
-        self._archived[topic] = new_rel
-        self._archived_stats[topic] = self._footer_stats(
-            [os.path.join(self.archive_root, f) for f in new_rel],
-            base=self.archive_root,
+        fallback, cold-tier merge) — the archive-side twin of _rewrite."""
+        new_rel = self._write_segments(topic, df, n_files=n_files, archive=True)
+        self._replace_segments(
+            topic, [], [], {}, self._archived.get(topic, []), new_rel,
+            self._footer_stats(
+                [os.path.join(self.archive_root, f) for f in new_rel],
+                base=self.archive_root,
+            ),
         )
-        self._commit_manifest(topic)
-        for f in old:
-            self._afsio.delete(f)
 
     def _rewrite(self, topic: str, df: DataFrame, n_files: int | None = None) -> None:
-        """Replace the topic's data with ``df`` (compaction / retention /
-        segment merge). New flat segment files are written to a temp dir
-        range-partitioned and sorted on (partition, offset) — contiguous
-        offset runs per file, tight manifest stats — then moved into the
-        topic dir under their (unique) names, becoming visible only at the
-        manifest commit — one atomic switch, mirroring the reference's
-        segment-replace. The old files are deleted after the commit; a
-        crash at any point leaves either the old or the new snapshot fully
-        intact (orphans GC'd on reopen)."""
+        """Replace the topic's hot segments with ``df`` written by Spark
+        (compaction, size retention, and merges past the in-process bound):
+        ``_write_segments``, then ``_replace_segments``."""
+        new_rel = self._write_segments(topic, df, n_files=n_files)
+        self._replace_segments(
+            topic, self._files[topic], new_rel,
+            self._footer_stats([os.path.join(self.root, f) for f in new_rel]),
+        )
+
+    def _write_segments(
+        self, topic: str, df: DataFrame, n_files: int | None = None,
+        archive: bool = False,
+    ) -> list[str]:
+        """Write ``df`` as new segments of the hot (or, with ``archive``,
+        the cold) tier with Spark: range-partitioned on (partition,
+        offset), ``n_files`` ranges or the planner's count, and sorted
+        within each, so every file holds contiguous offset runs with tight
+        manifest stats. The files land in a temp dir and move into the
+        topic dir under unique names (Spark's part names; cold ones
+        epoch-prefixed). Returns their root-relative paths; they are
+        invisible until the caller's manifest commit."""
         cfg = self._require(topic)
-        d = self._topic_dir(topic)
-        old_files = [os.path.join(self.root, f) for f in self._files[topic]]
-        rows_before = self._stats_rows(topic)
+        fs, root = (self._afsio, self.archive_root) if archive else (self._fsio, self.root)
+        d = os.path.join(root, topic)
+        fs.mkdirs(d)
         tmp = d + ".rewrite.tmp"
-        self._fsio.delete(tmp, recursive=True)
+        fs.delete(tmp, recursive=True)
         rp = (
             df.repartitionByRange(n_files, "partition", "offset")
             if n_files
             else df.repartitionByRange("partition", "offset")
         )
-        rp.sortWithinPartitions("partition", "offset").write.mode("overwrite").option(
-            "compression", cfg.compression
-        ).option("parquet.enable.dictionary", "false").parquet(tmp)
-        new_abs: list[str] = []
-        for f in sorted(self._fsio.list_segments(tmp)):
-            dest = os.path.join(d, os.path.basename(f))
-            self._fsio.rename(f, dest)
-            new_abs.append(dest)
-        self._files[topic] = [os.path.relpath(p, self.root) for p in new_abs]
-        self._stats[topic] = self._footer_stats(new_abs)
+        (
+            rp.sortWithinPartitions("partition", "offset")
+            .write.mode("overwrite")
+            .option("compression", cfg.compression)
+            .option("parquet.enable.dictionary", "false")
+            .parquet(tmp)
+        )
+        if archive:
+            epoch = self._arch_epoch.get(topic, 0)
+            self._arch_epoch[topic] = epoch + 1
+        new_rel: list[str] = []
+        for i, f in enumerate(sorted(fs.list_segments(tmp))):
+            name = f"e{epoch:06d}_{i:05d}.parquet" if archive else os.path.basename(f)
+            fs.rename(f, os.path.join(d, name))
+            new_rel.append(os.path.join(topic, name))
+        fs.delete(tmp, recursive=True)
+        self._count(topic, maintenance_spark_rewrites=1)
+        return new_rel
+
+    def _driver_sized(self, nbytes: int) -> bool:
+        """Whether a maintenance rewrite of segments holding ``nbytes`` on
+        disk runs in-process: a local root, and at most the in-process
+        produce bound."""
+        return getattr(self._fsio, "is_local", False) and nbytes <= _LOCAL_PRODUCE_MAX_BYTES
+
+    def _merge_local(
+        self, topic: str, rels: list[str], n_files: int = 1,
+        min_ts_us: int | None = None,
+    ) -> dict[str, list[int]]:
+        """Rewrite the hot segments ``rels`` in-process on Arrow, with no
+        Spark job: their rows at or past the log start (and, with
+        ``min_ts_us``, with a timestamp at or past it), sorted on
+        (partition, offset) and cut into at most ``n_files`` contiguous
+        runs of equal row count, each written by ``_write_local_segment``.
+        Returns {new rel: manifest stats from the arrays} in offset order;
+        the caller commits, then deletes ``rels``."""
+        cfg = self._require(topic)
+        t = pa.concat_tables([
+            self._read_records(self._fsio, os.path.join(self.root, f)).cast(_SEGMENT_ARROW)
+            for f in rels
+        ]).combine_chunks()
+        part = t["partition"].to_numpy()
+        offs = t["offset"].to_numpy()
+        ts = t["timestamp"].to_numpy()
+        keep = np.ones(t.num_rows, dtype=bool)
+        starts = self._log_starts(topic)
+        if starts and t.num_rows:
+            lo = np.zeros(max(int(part.max()), *starts) + 1, dtype=np.int64)
+            lo[list(starts)] = list(starts.values())
+            keep &= offs >= lo[part]
+        if min_ts_us is not None:
+            keep &= ts >= min_ts_us
+        idx = np.flatnonzero(keep)
+        idx = idx[np.lexsort((offs[idx], part[idx]))]
+        if not np.array_equal(idx, np.arange(t.num_rows)):
+            t, part, offs, ts = t.take(idx), part[idx], offs[idx], ts[idx]
+        t = t.set_column(1, "timestamp", t["timestamp"].cast(pa.timestamp("us", tz="UTC")))
+        out: dict[str, list[int]] = {}
+        cuts = np.linspace(0, t.num_rows, n_files + 1).astype(np.int64).tolist()
+        for a, b in zip(cuts, cuts[1:]):
+            if a == b:
+                continue
+            rel = self._write_local_segment(topic, cfg, t.slice(a, b - a))
+            out[rel] = [
+                int(part[a]), int(part[b - 1]), int(offs[a:b].min()),
+                int(offs[a:b].max()), b - a, int(ts[a:b].min()), int(ts[a:b].max()),
+            ]
+        self._count(topic, maintenance_local_rewrites=1)
+        return out
+
+    def _replace_segments(
+        self, topic: str, gone, new: list[str], new_stats: dict[str, list[int]],
+        a_gone=(), a_new: list[str] = (), a_new_stats: dict[str, list[int]] | None = None,
+    ) -> None:
+        """The segment swap every maintenance change ends with: segments
+        ``gone`` (hot) and ``a_gone`` (cold) leave the manifest lists,
+        ``new`` and ``a_new`` join them with their stats, the manifest
+        commits in one atomic switch (the reference's segment replace),
+        and then the replaced files are deleted. A crash before the commit
+        leaves the old snapshot whole, with the new files orphans that
+        reopen GC deletes; one after it leaves the old files as such
+        orphans."""
+        rows_before = self._stats_rows(topic)
+        gone, a_gone = set(gone), set(a_gone)
+        for files, stats, g, n, ns in (
+            (self._files, self._stats, gone, new, new_stats),
+            (self._archived, self._archived_stats, a_gone, a_new, a_new_stats or {}),
+        ):
+            if g or n:
+                old = stats.get(topic, {})
+                kept = [f for f in files.get(topic, []) if f not in g]
+                files[topic] = kept + list(n)
+                stats[topic] = {f: old[f] for f in kept if f in old} | ns
         self._adjust_clean_baseline(topic, rows_before)
-        self._commit_manifest(topic)  # atomic old→new snapshot switch
-        for f in old_files:
-            self._fsio.delete(f)
-        self._fsio.delete(tmp, recursive=True)
+        self._commit_manifest(topic)
+        for f in gone:
+            self._fsio.delete(os.path.join(self.root, f))
+        for f in a_gone:
+            self._afsio.delete(os.path.join(self.archive_root, f))
 
     # -- transaction ranges (rm_stm aborted/committed tx metadata) --------
 

@@ -95,8 +95,9 @@ class LocalFS:
 
     def write_text_atomic(self, path: str, text: str) -> None:
         tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(text)
+        # binary: text mode's encoder and newline pass cost every commit
+        with open(tmp, "wb") as f:
+            f.write(text.encode("utf-8"))
         os.replace(tmp, path)
 
     def create_exclusive(self, path: str, text: str) -> bool:
@@ -111,8 +112,8 @@ class LocalFS:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
         except FileExistsError:
             return False
-        with os.fdopen(fd, "w") as f:
-            f.write(text)
+        with os.fdopen(fd, "wb") as f:
+            f.write(text.encode("utf-8"))
         return True
 
     def list_names(self, d: str) -> list[str]:

@@ -405,6 +405,8 @@ class RestApp:
             "archival_bytes": "bytes uploaded to the archive tier",
             "cold_cache_hits": "cold reads served from the local cache",
             "cold_cache_misses": "cold reads that filled the local cache",
+            "maintenance_local_rewrites": "maintenance rewrites run in-process on Arrow",
+            "maintenance_spark_rewrites": "maintenance rewrites run as Spark jobs",
         }
         per_family: dict[str, list[tuple[dict, float]]] = {
             k: [] for k in families
