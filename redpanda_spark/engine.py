@@ -3679,7 +3679,7 @@ class TopicEngine:
         t = pa.concat_tables([
             self._read_records(self._fsio, os.path.join(self.root, f)).cast(_SEGMENT_ARROW)
             for f in rels
-        ]).combine_chunks()
+        ])
         part = t["partition"].to_numpy()
         offs = t["offset"].to_numpy()
         ts = t["timestamp"].to_numpy()
