@@ -1037,8 +1037,16 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from redpanda_spark.sources.iceberg_export import CommitConflictError
+
     args = build_parser().parse_args(argv)
-    return args.fn(args)
+    try:
+        return args.fn(args)
+    except CommitConflictError as e:
+        # the Iceberg verbs' expected failure under concurrent writers:
+        # one line, not a traceback
+        print(f"error: {e}", file=sys.stderr)
+        return 1
 
 
 if __name__ == "__main__":

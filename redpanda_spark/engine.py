@@ -363,6 +363,22 @@ def _next_arch_epoch(paths) -> int:
     return max_epoch + 1
 
 
+def _gc_sidecars(fs, d: str) -> None:
+    """Delete the checksum sidecars in ``d`` whose file is gone. Spark's
+    parquet writes on a plain local root go through Hadoop's checksummed
+    local FileSystem, which leaves ``.<name>.crc`` beside each segment;
+    ``LocalFS.delete`` removes it with its segment, and this collects
+    those older code or a crash left behind. Hadoop roots list and delete
+    through the checksummed FileSystem itself, so only local dirs hold
+    strays."""
+    if not getattr(fs, "is_local", False):
+        return
+    names = set(fs.list_names(d))
+    for n in names:
+        if n.startswith(".") and n.endswith(".crc") and n[1:-4] not in names:
+            fs.delete(os.path.join(d, n))
+
+
 class TopicEngine:
     def __init__(
         self,
@@ -803,6 +819,7 @@ class TopicEngine:
         live_abs = {os.path.join(self.root, p) for p in self._files[topic]}
         for f in self._segment_files(topic) - live_abs:
             self._fsio.delete(f)
+        _gc_sidecars(self._fsio, d)
         if not archive:
             return
         # archive tier: a crash between the archival copy and the manifest
@@ -816,6 +833,7 @@ class TopicEngine:
         }
         for f in set(self._afsio.list_segments(ad)) - live_arch:
             self._afsio.delete(f)
+        _gc_sidecars(self._afsio, ad)
 
     def _save_state(self) -> None:
         self._refuse_read_only()

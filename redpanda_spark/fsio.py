@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from contextlib import contextmanager
 
 try:  # POSIX only; Windows falls back to optimistic commits
@@ -64,6 +65,25 @@ def has_scheme(path: str) -> bool:
     )
 
 
+def _link_exclusive(path: str, text: str) -> bool:
+    """Publish ``text`` at local ``path`` only if ``path`` is absent: the
+    bytes go to a uniquely named temp file first, then ``os.link`` gives
+    it the target name (EEXIST = the race was lost). The link is atomic,
+    so ``path`` is either absent or whole — a crash mid-write leaves only
+    the temp file, never a truncated target that would block every later
+    create of the same name."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "wb") as f:
+        f.write(text.encode("utf-8"))
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
+    return True
+
+
 def for_root(spark, root: str) -> "LocalFS | HadoopFS":
     """Pick the implementation for a storage root. Anything with a URI
     scheme routes through Hadoop; bare paths stay on os/shutil."""
@@ -75,9 +95,9 @@ def for_root(spark, root: str) -> "LocalFS | HadoopFS":
 
 class LocalFS:
     is_local = True
-    # O_CREAT|O_EXCL: the kernel arbitrates create_exclusive — two racers
-    # can never both win, so the engine's epoch-number fence alone is
-    # sufficient (no per-commit owner-nonce read needed)
+    # link(2) never overwrites: the kernel arbitrates create_exclusive —
+    # two racers can never both win, so the engine's epoch-number fence
+    # alone is sufficient (no per-commit owner-nonce read needed)
     arbitrated_create = True
 
     def normalize(self, path: str) -> str:
@@ -101,20 +121,15 @@ class LocalFS:
         os.replace(tmp, path)
 
     def create_exclusive(self, path: str, text: str) -> bool:
-        """First-writer-wins creation: create ``path`` only if it does not
-        already exist, atomically (O_CREAT|O_EXCL — the kernel arbitrates).
-        Returns False when another writer got there first. The engine's
-        writer-epoch claims ride on this: two engines racing the same
-        epoch number can never both win (the reference gets the same
-        uniqueness from raft electing at most one leader per term,
+        """First-writer-wins creation: publish ``path`` whole, only if it
+        does not already exist (temp file, then link — the kernel
+        arbitrates, see ``_link_exclusive``). Returns False when another
+        writer got there first. The engine's writer-epoch claims and the
+        Iceberg metadata commit ride on this: two writers racing the same
+        name can never both win (the reference gets the same uniqueness
+        from raft electing at most one leader per term,
         `src/v/raft/consensus.cc`)."""
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "wb") as f:
-            f.write(text.encode("utf-8"))
-        return True
+        return _link_exclusive(path, text)
 
     def list_names(self, d: str) -> list[str]:
         """Plain file names directly under ``d`` ([] if absent)."""
@@ -128,8 +143,12 @@ class LocalFS:
         try:
             if recursive and os.path.isdir(path):
                 shutil.rmtree(path, ignore_errors=True)
-            else:
-                os.remove(path)
+                return
+            os.remove(path)
+            # Hadoop's checksummed local FS (Spark's parquet writes) leaves
+            # a ``.<name>.crc`` sidecar that must go with its file
+            d, name = os.path.split(path)
+            os.remove(os.path.join(d, f".{name}.crc"))
         except OSError:
             pass
 
@@ -279,13 +298,15 @@ class HadoopFS:
         self._fs.rename(self._p(tmp), dst)
 
     def create_exclusive(self, path: str, text: str) -> bool:
-        """First-writer-wins creation. ``file:`` URIs use the kernel's
-        O_CREAT|O_EXCL directly (Hadoop's RawLocalFileSystem implements
-        create(overwrite=false) as exists-then-create — NOT atomic — so
-        the POSIX primitive is the correct arbiter there). Namenode-
-        backed schemes (hdfs/viewfs/webhdfs) go through
-        ``FileSystem.create(path, overwrite=false)``: atomic, two racers
-        can never both succeed. Object-store schemes FIRST try a
+        """First-writer-wins creation of a whole file: no reader ever sees
+        ``path`` half-written, and a crash never leaves it so. ``file:``
+        URIs take the kernel's temp-file-then-link path (Hadoop's
+        RawLocalFileSystem implements create(overwrite=false) as
+        exists-then-create — NOT atomic — so the POSIX primitive is the
+        correct arbiter there). Namenode-backed schemes (hdfs/viewfs/
+        webhdfs) write a temp file and rename it: the namenode's rename
+        never overwrites, so two racers can never both succeed. Object-
+        store PUTs are atomic at close; those schemes FIRST try a
         conditional create through the connector — S3 has supported
         conditional writes (``If-None-Match: *`` on PUT) since late
         2024, surfaced by Hadoop's createFile builder option
@@ -303,23 +324,31 @@ class HadoopFS:
         double-win once the rival's PUT has landed (see
         ``TopicEngine._check_writer_fence`` for the exact residual
         window; the two-engine convergence test in tests/test_fencing.py
-        drives the landed-PUT interleaving)."""
+        drives the landed-PUT interleaving). The Iceberg metadata commit
+        has no such check: on those stores two publishes of one table
+        version can both report success."""
         p = self._p(path)
         norm = p.toString()
         if norm.startswith("file:"):
             import re
 
-            local = re.sub(r"^file:/+", "/", norm)
+            return _link_exclusive(re.sub(r"^file:/+", "/", norm), text)
+        if self._native_arbitrated:
+            # the namenode's rename never overwrites a file: the whole
+            # temp file appears under ``path`` or the race is lost
+            tmp = self._p(f"{path}.{uuid.uuid4().hex}.tmp")
+            out = self._fs.create(tmp, True)
             try:
-                fd = os.open(
-                    local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644
-                )
-            except FileExistsError:
+                out.write(bytearray(text.encode("utf-8")))
+            finally:
+                out.close()
+            if self._fs.rename(tmp, p):
+                return True
+            self._fs.delete(tmp, False)
+            if self._fs.exists(p):
                 return False
-            with os.fdopen(fd, "w") as f:
-                f.write(text)
-            return True
-        if not self._native_arbitrated and self._conditional_create is not False:
+            raise OSError(f"rename failed: {tmp} -> {path}")
+        if self._conditional_create is not False:
             try:
                 # createFile builder contract (verified against the
                 # bundled hadoop-client-api 3.4.2 bytecode): a create or

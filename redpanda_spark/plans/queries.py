@@ -5198,10 +5198,8 @@ def q_iceberg_export_counts(spark, sf_dir):
     the same counts from the raw events table in DuckDB, so a lie anywhere
     in the export chain (partition value encoding, entry record_count,
     file copy) breaks the value hash."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from redpanda_spark.sources.datalake import write_datalake
     from redpanda_spark.sources.iceberg_export import (
@@ -5209,11 +5207,7 @@ def q_iceberg_export_counts(spark, sf_dir):
         export_iceberg,
     )
 
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        "redpanda_spark_ice",
-        hashlib.md5(sf_dir.encode()).hexdigest(),
-    )
+    cache = _iceberg_fixture_dir("redpanda_spark_ice", sf_dir)
     meta_file = os.path.join(cache, "ice", "metadata", "v1.metadata.json")
     if not os.path.exists(meta_file):
         # export in place (the metadata embeds absolute paths, so a
@@ -6997,10 +6991,8 @@ def q_iceberg_delete_read(spark, sf_dir):
     ``maintained_ok`` additionally pins the STRUCTURAL facts (deletes
     committed, compaction reduced the file count, expiry pruned to one
     snapshot) the value columns alone can't see."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from redpanda_spark.sources.datalake import write_datalake
     from redpanda_spark.sources.iceberg_export import (
@@ -7015,11 +7007,7 @@ def q_iceberg_delete_read(spark, sf_dir):
         live_entries,
     )
 
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        "redpanda_spark_ice_maint",
-        hashlib.md5(sf_dir.encode()).hexdigest(),
-    )
+    cache = _iceberg_fixture_dir("redpanda_spark_ice_maint", sf_dir)
     marker = os.path.join(cache, "_maint_done.json")
     import json as _json
 
@@ -7095,20 +7083,14 @@ def q_iceberg_upsert_read(spark, sf_dir):
     synthetic block — a row that kept its old value (delete missed), was
     double-counted (old copy resurrected), or never landed (insert lost)
     breaks the value hash."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from redpanda_spark.sources.datalake import write_datalake
     from redpanda_spark.sources.iceberg_export import export_iceberg, read_iceberg
     from redpanda_spark.sources.iceberg_maintain import merge_upsert
 
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        "redpanda_spark_ice_upsert",
-        hashlib.md5(sf_dir.encode()).hexdigest(),
-    )
+    cache = _iceberg_fixture_dir("redpanda_spark_ice_upsert", sf_dir)
     marker = os.path.join(cache, "_upsert_done")
     if not os.path.exists(marker):
         shutil.rmtree(cache, ignore_errors=True)
@@ -7249,6 +7231,23 @@ def _events_fingerprint(sf_dir: str) -> str:
         if os.path.exists(p)
         for st in [os.stat(p)]
     )
+
+
+def _iceberg_fixture_dir(name: str, sf_dir: str) -> str:
+    """Cache dir of an Iceberg catalog fixture under $TMPDIR/``name``,
+    keyed by ``sf_dir``, its events data and the code that builds the
+    table (the datalake writer, the Iceberg exporter and maintenance), so
+    a sweep after a change to that code rebuilds the table instead of
+    reusing one older code built."""
+    import hashlib
+    import tempfile
+
+    key = hashlib.md5(f"{sf_dir}|{_events_fingerprint(sf_dir)}".encode())
+    src = os.path.join(os.path.dirname(os.path.dirname(__file__)), "sources")
+    for f in ("datalake.py", "iceberg_export.py", "iceberg_maintain.py"):
+        with open(os.path.join(src, f), "rb") as fh:
+            key.update(fh.read())
+    return os.path.join(tempfile.gettempdir(), name, key.hexdigest())
 
 
 # exact integer-µs retention cutoff shared with the oracle: epoch µs of
@@ -7723,20 +7722,14 @@ def q_iceberg_eq_delete_read(spark, sf_dir):
     keep the new ones (the spec's strict sequence rule), and the oracle
     recomputes exactly that from raw events
     (sources/iceberg_maintain.py:equality_delete)."""
-    import hashlib
     import json as _json
     import shutil
-    import tempfile
 
     from redpanda_spark.sources.datalake import write_datalake
     from redpanda_spark.sources.iceberg_export import export_iceberg, read_iceberg
     from redpanda_spark.sources.iceberg_maintain import equality_delete
 
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        "redpanda_spark_ice_eqdel",
-        hashlib.md5(f"{sf_dir}|{_events_fingerprint(sf_dir)}".encode()).hexdigest(),
-    )
+    cache = _iceberg_fixture_dir("redpanda_spark_ice_eqdel", sf_dir)
     marker = os.path.join(cache, "_done.json")
     ice = os.path.join(cache, "ice")
     if not os.path.exists(marker):

@@ -35,22 +35,19 @@ class CatalogError(Exception):
 
 
 def _metadata_location(table_path: str, fs=None) -> str:
-    """Current committed metadata file per the filesystem-catalog
-    convention (version-hint.text names the live version). ``fs``: the
-    table root's fsio handle for URI roots (plain local by default)."""
-    if fs is None:
-        from redpanda_spark.fsio import LocalFS
+    """Current committed metadata file, resolved like every reader and
+    writer of the table (``iceberg_export._current_version``). ``fs``:
+    the table root's fsio handle for URI roots (plain local by default)."""
+    from redpanda_spark.sources.iceberg_export import (
+        _current_version,
+        _version_path,
+    )
 
-        fs = LocalFS()
     meta_dir = os.path.join(table_path, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if not fs.exists(hint):
-        raise CatalogError(f"no version-hint.text under {meta_dir}")
-    version = int(fs.read_text(hint).strip())
-    loc = os.path.join(meta_dir, f"v{version}.metadata.json")
-    if not fs.exists(loc):
-        raise CatalogError(f"version-hint names missing file {loc}")
-    return loc
+    version, _meta = _current_version(meta_dir, fs)
+    if not version:
+        raise CatalogError(f"no vN.metadata.json under {meta_dir}")
+    return _version_path(meta_dir, version)
 
 
 def register_table(

@@ -22,6 +22,14 @@ timestamp, field-id 1000) dissolves here into an IDENTITY transform on the
 already-materialized ``_hour`` column — same pruning power, truthful to
 this layout's physical partitioning.
 
+Every writer of the table — this export and ``iceberg_maintain``'s
+deletes, upserts, compaction and expiry — commits through one path: it
+reads the head (N, vN) once (``_current_version``, the Hadoop catalog's
+resolution) and publishes v{N+1}.metadata.json by exclusive create
+(``_commit_metadata``), the commit point; version-hint.text follows as a
+hint. A writer that loses the publish re-runs from a fresh read, so two
+concurrent commits never overwrite one another (``_commit_retrying``).
+
 Avro container files are written with the repo's from-spec datum codec
 (registry/avro_codec.py) plus the OCF framing implemented below from the
 Apache Avro 1.11 spec (magic, metadata map, sync-marker-delimited blocks).
@@ -40,7 +48,9 @@ from __future__ import annotations
 import functools as _functools
 import json
 import os
+import re
 import struct
+import time
 import uuid
 from typing import Any
 
@@ -409,7 +419,7 @@ def _rebuild_state(prior: dict, data_dir: str, fs=None) -> dict:
     """Recover the file -> [added_snapshot_id, sequence] map from the
     committed manifest chain (current snapshot's manifest list -> manifest
     entries). Used whenever ``_export_state.json`` is missing or stamped
-    with a version other than the committed hint — the manifests are the
+    with a version other than the head the export read — the manifests are the
     source of truth; the state file is only a cache of them. Sequence/
     snapshot inheritance for ADDED entries follows the spec: a null field
     inherits from the manifest-list record that carries the manifest."""
@@ -442,10 +452,116 @@ def _rebuild_state(prior: dict, data_dir: str, fs=None) -> dict:
     return state
 
 
-def _write_atomic(path: str, data: str, fs=None) -> None:
-    """tmp + rename: a crashed write can never leave a truncated commit
-    file (metadata.json / state / version-hint)."""
-    _fs_or_local(fs).write_text_atomic(path, data)
+# ---------------------------------------------------------------------------
+# the commit: one version resolver, one exclusive metadata publish
+# ---------------------------------------------------------------------------
+
+# A writer that loses the publish of v{N+1} re-runs from a fresh read this
+# many times before giving up (Iceberg's commit.retry.num-retries default).
+_COMMIT_RETRIES = 4
+_VERSION_NAME = re.compile(r"^v(\d+)\.metadata\.json$")
+
+
+class CommitConflictError(RuntimeError):
+    """Every attempt of an Iceberg commit lost the publish of the table's
+    next metadata version to a concurrent writer."""
+
+
+def _version_path(meta_dir: str, version: int) -> str:
+    return os.path.join(meta_dir, f"v{version}.metadata.json")
+
+
+def _current_version(meta_dir: str, fs=None) -> tuple[int, dict | None]:
+    """(N, vN metadata) of the table's committed head — (0, None) before
+    the first commit. Resolution is the Hadoop catalog's
+    (`HadoopTableOperations.findVersion` + refresh): start at
+    version-hint.text, or at the highest vN listed when the hint is
+    absent or names no file, then step forward while v{N+1} exists. The
+    exclusive create of v{N+1} is the commit point; the hint may lag it
+    (a crash after the publish, or a slow writer overwriting a newer
+    hint), never lead it."""
+    fs = _fs_or_local(fs)
+    hint = os.path.join(meta_dir, "version-hint.text")
+    try:
+        version = int(fs.read_text(hint).strip()) if fs.exists(hint) else 0
+    except ValueError:
+        version = 0
+    if not (version and fs.exists(_version_path(meta_dir, version))):
+        found = [_VERSION_NAME.match(n) for n in fs.list_names(meta_dir)]
+        version = max((int(m.group(1)) for m in found if m), default=0)
+    while fs.exists(_version_path(meta_dir, version + 1)):
+        version += 1
+    if not version:
+        return 0, None
+    return version, json.loads(fs.read_text(_version_path(meta_dir, version)))
+
+
+def _commit_metadata(
+    meta_dir: str, base_version: int, base: dict | None, new_meta: dict, fs=None
+) -> int:
+    """Publish ``new_meta`` — built from ``base``, the table's
+    v{base_version} — as v{base_version+1} and return that version. The
+    exclusive create is the commit point: when another writer already
+    published that version this raises CommitConflictError, never
+    overwrites. version-hint.text advances after it, as a hint only.
+    Fills the bookkeeping every commit shares: ``last-updated-ms``, the
+    metadata-log entry for the superseded file, and a snapshot-log entry
+    when the current snapshot changed."""
+    fs = _fs_or_local(fs)
+    version = base_version + 1
+    new_meta = {**new_meta, "last-updated-ms": int(time.time() * 1000)}
+    base = base or {}
+    new_meta["metadata-log"] = list(base.get("metadata-log", []))
+    if base:
+        new_meta["metadata-log"].append(
+            {
+                "timestamp-ms": base["last-updated-ms"],
+                "metadata-file": _version_path(meta_dir, base_version),
+            }
+        )
+    cur = new_meta["current-snapshot-id"]
+    if cur != base.get("current-snapshot-id"):
+        snap = next(s for s in new_meta["snapshots"] if s["snapshot-id"] == cur)
+        new_meta["snapshot-log"] = list(new_meta.get("snapshot-log", [])) + [
+            {"timestamp-ms": snap["timestamp-ms"], "snapshot-id": cur}
+        ]
+    if not fs.create_exclusive(
+        _version_path(meta_dir, version), json.dumps(new_meta, indent=1)
+    ):
+        raise CommitConflictError(
+            f"{os.path.dirname(meta_dir)}: v{version}.metadata.json was "
+            "published by a concurrent writer"
+        )
+    fs.write_text_atomic(os.path.join(meta_dir, "version-hint.text"), str(version))
+    return version
+
+
+def _commit_retrying(meta_dir: str, fs, attempt, create: bool = False):
+    """Run ``attempt(version, meta)`` on a fresh read of the table and
+    commit what it builds; a lost publish re-runs it from a new read, up
+    to ``_COMMIT_RETRIES`` times, then raises CommitConflictError naming
+    the table and version. ``attempt`` returns (new metadata or None for
+    a no-op, the files it wrote, result); a losing attempt's files are
+    deleted. Returns (committed version or None, result). ``create``
+    allows an empty table (the first export)."""
+    fs = _fs_or_local(fs)
+    for _ in range(_COMMIT_RETRIES + 1):
+        version, meta = _current_version(meta_dir, fs)
+        if meta is None and not create:
+            raise ValueError(f"no vN.metadata.json under {meta_dir}")
+        new_meta, written, result = attempt(version, meta)
+        if new_meta is None:
+            return None, result
+        try:
+            return _commit_metadata(meta_dir, version, meta, new_meta, fs), result
+        except CommitConflictError:
+            for p in written:
+                fs.delete(p)
+    raise CommitConflictError(
+        f"{os.path.dirname(meta_dir)}: lost the publish of "
+        f"v{version + 1}.metadata.json to concurrent writers "
+        f"{_COMMIT_RETRIES + 1} times"
+    )
 
 
 def _data_path_form(p: str) -> str:
@@ -455,8 +571,6 @@ def _data_path_form(p: str) -> str:
     directly readable by `spark.read.parquet`), the full URI for true
     object-store schemes (where Spark's metadata column carries the
     same URI form)."""
-    import re
-
     return re.sub(r"^file:(//)?", "", p)
 
 
@@ -487,22 +601,28 @@ def export_iceberg(
     previously-exported files enter the new manifest as EXISTING entries
     carrying their original (snapshot_id, sequence_number); a new
     vN.metadata.json keeps every prior snapshot (time travel across
-    exports works through ``read_iceberg(snapshot_id=...)``), the
-    metadata-log records the superseded metadata file, and version-hint
-    advances. Files dropped between engine snapshots simply leave the new
-    manifest (full-state manifests per snapshot); their bytes stay on
-    disk for the older snapshots that reference them. Re-exporting an
-    already-exported snapshot is an idempotent no-op. Export bookkeeping
-    (file -> first-export snapshot/sequence) lives in
-    ``metadata/_export_state.json`` — engine-side state, not part of the
-    Iceberg spec surface.
+    exports works through ``read_iceberg(snapshot_id=...)``) and the
+    metadata-log records the superseded metadata file. Files dropped
+    between engine snapshots simply leave the new manifest (full-state
+    manifests per snapshot); their bytes stay on disk for the older
+    snapshots that reference them. Re-exporting an already-exported
+    snapshot is an idempotent no-op.
+
+    The commit is ``_commit_metadata``'s exclusive create of
+    v{N+1}.metadata.json on the version N the export read; an export
+    that loses it to a concurrent writer (another export, a maintenance
+    commit) re-runs from a fresh read, and raises CommitConflictError
+    after ``_COMMIT_RETRIES`` re-runs. Export bookkeeping (file ->
+    first-export snapshot/sequence) lives in ``metadata/_export_state.json``
+    — engine-side state, not part of the Iceberg spec surface — written
+    after the commit and stamped with the committed version; a stamp
+    that is not the head's version is ignored and the state rebuilt from
+    the committed manifests.
 
     The exported table is self-contained: data files are copied under
     ``out/data`` (byte-for-byte), all metadata paths inside the manifest
     list / metadata.json are absolute to ``out_path`` per the spec.
     """
-    import time as _time
-
     from redpanda_spark.sources.datalake import (
         _load_lake_manifest,
         read_datalake,
@@ -521,6 +641,7 @@ def export_iceberg(
     )
     if snap is None:
         raise ValueError(f"snapshot {snapshot_id} not live under {lake_path}")
+    snap_id = int(snap["id"])
 
     # the table root's filesystem: plain local paths stay on the POSIX
     # fast path; URI roots (file:/hdfs:/s3a:/...) ride the Hadoop
@@ -535,258 +656,226 @@ def export_iceberg(
     meta_dir = os.path.join(out_abs, "metadata")
     ofs.mkdirs(data_dir)
     ofs.mkdirs(meta_dir)
-
-    # incremental: pick up the prior table state when one exists
-    prior = None
-    state: dict[str, list] = {}  # rel path -> [added_snapshot_id, seq]
     state_path = os.path.join(meta_dir, "_export_state.json")
-    if ofs.exists(os.path.join(meta_dir, "version-hint.text")):
-        prior = _current_metadata(out_abs, fs=ofs)
-        hint_version = int(
-            ofs.read_text(os.path.join(meta_dir, "version-hint.text")).strip()
+
+    @_functools.cache
+    def layout():
+        """(schema, last column id, partition fields, spec) of the lake
+        snapshot: the schema from the snapshot read (mergeSchema view —
+        what a reader gets), the spec an identity on the materialized
+        _hour column (see module docstring vs the reference's hour
+        transform, field-id 1000)."""
+        schema = iceberg_schema(
+            read_datalake(spark, lake_path, snapshot_id=snap["id"]).schema
         )
-        # the state file is a CACHE keyed to the committed hint version: a
-        # crash between the state write and the hint flip (or a rolled-back
-        # hint) leaves state describing an UNCOMMITTED attempt — trusting it
-        # would mark that attempt's files EXISTING under a snapshot id the
-        # table never committed (a spec violation the conformance reader
-        # now checks). On any mismatch, rebuild from the committed manifest
-        # chain, which is authoritative by definition.
-        if ofs.exists(state_path):
-            raw = json.loads(ofs.read_text(state_path))
-            if raw.pop("_hint_version", None) == hint_version:
-                state = raw
-        if not state:
-            state = _rebuild_state(prior, data_dir, fs=ofs)
-        done = {s["snapshot-id"] for s in prior.get("snapshots", [])}
-        if int(snap["id"]) in done:  # idempotent re-export
-            return {
+        last_column_id = schema.pop("_last_column_id")
+        hour_field = next(
+            (f for f in schema["fields"] if f["name"] == "_hour"), None
+        )
+        part_fields = []
+        if hour_field is not None:
+            part_fields = [
+                {
+                    "name": "_hour",
+                    "source_id": hour_field["id"],
+                    "field_id": 1000,
+                    "transform": "identity",
+                    "avro_type": "long",  # timestamptz partition value: micros
+                }
+            ]
+        spec = {
+            "spec-id": 0,
+            "fields": [
+                {
+                    "name": p["name"],
+                    "transform": p["transform"],
+                    "source-id": p["source_id"],
+                    "field-id": p["field_id"],
+                }
+                for p in part_fields
+            ],
+        }
+        return schema, last_column_id, part_fields, spec
+
+    @_functools.cache
+    def data_files():
+        """[(rel, dst, rows, bytes, partition value)] of the snapshot's
+        files, each copied under out/data unless already there, with
+        footer-only stats."""
+        part_fields = layout()[2]
+        out = []
+        src_root = fs.normalize(lake_path)
+        for rel in snap["files"]:
+            dst = os.path.join(data_dir, rel)
+            if not ofs.exists(dst):
+                ofs.mkdirs(os.path.dirname(dst))
+                # tmp + rename (fsio.copy_file): dst is either absent or
+                # complete — a crash mid-copy must not leave a truncated
+                # parquet that the retry's exists-check would then trust
+                fsio.copy_file(fs, os.path.join(src_root, rel), ofs, dst)
+            part_val = None
+            if part_fields and "_hour=" in rel:
+                part_val = _hour_to_micros(
+                    rel.split("_hour=", 1)[1].split(os.sep, 1)[0].split("/", 1)[0]
+                )
+            rows = int(_pq_file(ofs, dst).metadata.num_rows)
+            out.append((rel, dst, rows, int(ofs.getsize(dst)), part_val))
+        return out
+
+    def attempt(version: int, prior: dict | None):
+        if prior is not None and snap_id in {
+            s["snapshot-id"] for s in prior["snapshots"]
+        }:  # idempotent re-export
+            return None, [], {
                 "table_uuid": prior["table-uuid"],
-                "snapshot_id": int(snap["id"]),
+                "snapshot_id": snap_id,
                 "n_files": len(snap["files"]),
                 "n_rows": None,
-                "metadata_path": os.path.join(
-                    meta_dir, f"v{hint_version}.metadata.json"
-                ),
+                "metadata_path": _version_path(meta_dir, version),
             }
+        # rel path -> [added_snapshot_id, seq]: the state file is a cache
+        # of the committed manifests, trusted only when stamped with the
+        # version this attempt read — anything else (a crash before the
+        # state write, a concurrent commit) rebuilds it from the manifest
+        # chain, which is authoritative by definition. Trusting a stale
+        # cache would mark files EXISTING under a snapshot id the table
+        # never committed (a spec violation the conformance reader checks).
+        state: dict[str, list] = {}
+        if prior is not None:
+            if ofs.exists(state_path):
+                raw = json.loads(ofs.read_text(state_path))
+                if raw.pop("_version", None) == version:
+                    state = raw
+            if not state:
+                state = _rebuild_state(prior, data_dir, fs=ofs)
+        schema, last_column_id, part_fields, spec = layout()
 
-    # schema: from the snapshot read (mergeSchema view — what a reader gets)
-    df_schema = read_datalake(spark, lake_path, snapshot_id=snap["id"]).schema
-    schema = iceberg_schema(df_schema)
-    last_column_id = schema.pop("_last_column_id")
-    hour_field = next(
-        (f for f in schema["fields"] if f["name"] == "_hour"), None
-    )
-
-    # partition spec: identity on the materialized _hour column (see
-    # module docstring vs the reference's hour transform, field-id 1000)
-    part_fields = []
-    if hour_field is not None:
-        part_fields = [
-            {
-                "name": "_hour",
-                "source_id": hour_field["id"],
-                "field_id": 1000,
-                "transform": "identity",
-                "avro_type": "long",  # timestamptz partition value: micros
-            }
-        ]
-    spec = {
-        "spec-id": 0,
-        "fields": [
-            {
-                "name": p["name"],
-                "transform": p["transform"],
-                "source-id": p["source_id"],
-                "field-id": p["field_id"],
-            }
-            for p in part_fields
-        ],
-    }
-
-    # copy NEW data files + collect per-file stats (footer-only reads);
-    # files already exported enter as EXISTING entries with their original
-    # (snapshot_id, sequence_number) per the v2 spec
-    snap_id = int(snap["id"])
-    seq = (prior["last-sequence-number"] + 1) if prior else 1
-    entries = []
-    total_rows = added_rows = 0
-    n_added = n_existing = 0
-    src_root = fs.normalize(lake_path)
-    for rel in snap["files"]:
-        src = os.path.join(src_root, rel)
-        dst = os.path.join(data_dir, rel)
-        if not ofs.exists(dst):
-            ofs.mkdirs(os.path.dirname(dst))
-            # tmp + rename (fsio.copy_file): dst is either absent or
-            # complete — a crash mid-copy must not leave a truncated
-            # parquet that the retry's exists-check would then trust
-            fsio.copy_file(fs, src, ofs, dst)
-        md = _pq_file(ofs, dst).metadata
-        total_rows += md.num_rows
-        part_val = None
-        if part_fields and "_hour=" in rel:
-            part_val = _hour_to_micros(
-                rel.split("_hour=", 1)[1].split(os.sep, 1)[0].split("/", 1)[0]
+        # files already exported enter as EXISTING entries with their
+        # original (snapshot_id, sequence_number) per the v2 spec
+        seq = (prior["last-sequence-number"] + 1) if prior else 1
+        entries = []
+        total_rows = added_rows = 0
+        n_added = n_existing = 0
+        for rel, dst, rows, size, part_val in data_files():
+            total_rows += rows
+            if rel in state:
+                status, e_snap, e_seq = 0, int(state[rel][0]), int(state[rel][1])
+                n_existing += 1
+            else:
+                status, e_snap, e_seq = 1, snap_id, None  # ADDED: seq inherited
+                state[rel] = [snap_id, seq]
+                n_added += 1
+                added_rows += rows
+            entries.append(
+                {
+                    "status": status,
+                    "snapshot_id": e_snap,
+                    "sequence_number": e_seq,
+                    "file_sequence_number": e_seq,
+                    "data_file": {
+                        "content": 0,  # DATA
+                        "file_path": _data_path_form(dst),
+                        "file_format": "PARQUET",
+                        "partition": {"_hour": part_val} if part_fields else {},
+                        "record_count": rows,
+                        "file_size_in_bytes": size,
+                        "equality_ids": None,
+                    },
+                }
             )
-        if rel in state:
-            status, e_snap, e_seq = 0, int(state[rel][0]), int(state[rel][1])
-            n_existing += 1
-        else:
-            status, e_snap, e_seq = 1, snap_id, None  # ADDED: seq inherited
-            state[rel] = [snap_id, seq]
-            n_added += 1
-            added_rows += md.num_rows
-        entries.append(
-            {
-                "status": status,
-                "snapshot_id": e_snap,
-                "sequence_number": e_seq,
-                "file_sequence_number": e_seq,
-                "data_file": {
-                    "content": 0,  # DATA
-                    "file_path": _data_path_form(dst),
-                    "file_format": "PARQUET",
-                    "partition": {"_hour": part_val} if part_fields else {},
-                    "record_count": int(md.num_rows),
-                    "file_size_in_bytes": int(ofs.getsize(dst)),
-                },
-            }
+        min_seq = min((int(state[rel][1]) for rel in snap["files"]), default=seq)
+
+        # manifest (…-m0.avro)
+        manifest_path = os.path.join(meta_dir, f"{uuid.uuid4()}-m0.avro")
+        avro_ocf_write(
+            manifest_path,
+            _manifest_entry_schema(part_fields),
+            entries,
+            fs=ofs,
+            meta={
+                "schema": json.dumps(schema).encode(),
+                "partition-spec": json.dumps(spec["fields"]).encode(),
+                "partition-spec-id": b"0",
+                "format-version": b"2",
+                "content": b"data",
+            },
         )
 
-    table_uuid = prior["table-uuid"] if prior else str(uuid.uuid4())
-    now_ms = int(_time.time() * 1000)
-    min_seq = min((int(state[rel][1]) for rel in snap["files"]), default=seq)
-
-    # manifest (…-m0.avro)
-    entry_schema = _manifest_entry_schema(part_fields)
-    for e in entries:  # older entries predate the equality_ids field
-        e["data_file"].setdefault("equality_ids", None)
-    manifest_path = os.path.join(meta_dir, f"{uuid.uuid4()}-m0.avro")
-    avro_ocf_write(
-        manifest_path,
-        entry_schema,
-        entries,
-        fs=ofs,
-        meta={
-            "schema": json.dumps(schema).encode(),
-            "partition-spec": json.dumps(spec["fields"]).encode(),
-            "partition-spec-id": b"0",
-            "format-version": b"2",
-            "content": b"data",
-        },
-    )
-
-    # manifest list (snap-<id>-….avro)
-    part_vals = [
-        e["data_file"]["partition"].get("_hour")
-        for e in entries
-        if part_fields
-    ]
-    partitions_summary = (
-        [
+        # manifest list (snap-<id>-….avro)
+        part_vals = [e["data_file"]["partition"].get("_hour") for e in entries]
+        known = [v for v in part_vals if v is not None]
+        partitions_summary = (
+            [
+                {
+                    "contains_null": len(known) < len(part_vals),
+                    "contains_nan": False,
+                    "lower_bound": struct.pack("<q", min(known)) if known else None,
+                    "upper_bound": struct.pack("<q", max(known)) if known else None,
+                }
+            ]
+            if part_fields
+            else None
+        )
+        mlist_records = [
             {
-                "contains_null": any(v is None for v in part_vals),
-                "contains_nan": False,
-                "lower_bound": struct.pack(
-                    "<q", min(v for v in part_vals if v is not None)
-                )
-                if any(v is not None for v in part_vals)
-                else None,
-                "upper_bound": struct.pack(
-                    "<q", max(v for v in part_vals if v is not None)
-                )
-                if any(v is not None for v in part_vals)
-                else None,
+                "manifest_path": manifest_path,
+                "manifest_length": ofs.getsize(manifest_path),
+                "partition_spec_id": 0,
+                "content": 0,
+                "sequence_number": seq,
+                "min_sequence_number": min_seq,
+                "added_snapshot_id": snap_id,
+                "added_data_files_count": n_added,
+                "existing_data_files_count": n_existing,
+                "deleted_data_files_count": 0,
+                "added_rows_count": added_rows,
+                "existing_rows_count": total_rows - added_rows,
+                "deleted_rows_count": 0,
+                "partitions": partitions_summary,
             }
         ]
-        if part_fields
-        else None
-    )
-    mlist_records = [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": ofs.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": min_seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": n_added,
-            "existing_data_files_count": n_existing,
-            "deleted_data_files_count": 0,
-            "added_rows_count": added_rows,
-            "existing_rows_count": total_rows - added_rows,
-            "deleted_rows_count": 0,
-            "partitions": partitions_summary,
-        }
-    ]
-    # Carry the prior snapshot's DELETE manifests forward (position AND
-    # equality): maintenance commits (iceberg_maintain.delete_where /
-    # equality_delete / merge_upsert) interleave with exports on the same
-    # table, and a new snapshot that silently dropped their delete files
-    # would resurrect deleted rows. The manifest files themselves are
-    # immutable — reference them as-is (the v2 spec explicitly allows a
-    # manifest to be listed by many snapshots).
-    if prior:
-        prior_snap = next(
-            (
+        # Carry the prior snapshot's DELETE manifests forward (position AND
+        # equality): maintenance commits (iceberg_maintain.delete_where /
+        # equality_delete / merge_upsert) interleave with exports on the
+        # same table, and a new snapshot that silently dropped their delete
+        # files would resurrect deleted rows. The manifest files themselves
+        # are immutable — reference them as-is (the v2 spec explicitly
+        # allows a manifest to be listed by many snapshots).
+        if prior:
+            prior_snap = next(
                 s
-                for s in prior.get("snapshots", [])
-                if s["snapshot-id"] == prior.get("current-snapshot-id")
-            ),
-            None,
-        )
-        if prior_snap is not None:
+                for s in prior["snapshots"]
+                if s["snapshot-id"] == prior["current-snapshot-id"]
+            )
             _pls, _plm, prior_mfs = avro_ocf_read(
                 prior_snap["manifest-list"], fs=ofs
             )
-            for pmf in prior_mfs:
-                if pmf.get("content") == 1:  # delete manifest
-                    mlist_records.append(dict(pmf))
-    mlist_path = os.path.join(
-        meta_dir, f"snap-{snap_id}-{seq}-{uuid.uuid4()}.avro"
-    )
-    avro_ocf_write(mlist_path, _MANIFEST_FILE_SCHEMA, mlist_records, fs=ofs)
-
-    # table metadata (v2 spec §Table Metadata) + filesystem-catalog pointer
-    if prior:
-        version = int(
-            ofs.read_text(
-                os.path.join(meta_dir, "version-hint.text")
-            ).strip()
-        ) + 1
-        schemas = list(prior["schemas"])
-        cur = next(
-            s for s in schemas if s["schema-id"] == prior["current-schema-id"]
+            mlist_records += [dict(p) for p in prior_mfs if p.get("content") == 1]
+        mlist_path = os.path.join(
+            meta_dir, f"snap-{snap_id}-{seq}-{uuid.uuid4()}.avro"
         )
-        if {k: v for k, v in schema.items() if k != "schema-id"} == {
-            k: v for k, v in cur.items() if k != "schema-id"
-        }:
-            schema_id = cur["schema-id"]
-        else:  # schema evolution: register the new schema
-            schema_id = max(s["schema-id"] for s in schemas) + 1
-            schema = {**schema, "schema-id": schema_id}
-            schemas.append(schema)
-        snapshots = list(prior["snapshots"])
-        snapshot_log = list(prior.get("snapshot-log", []))
-        metadata_log = list(prior.get("metadata-log", [])) + [
-            {
-                "timestamp-ms": prior["last-updated-ms"],
-                "metadata-file": os.path.join(
-                    meta_dir, f"v{version - 1}.metadata.json"
-                ),
-            }
-        ]
-        last_column_id = max(last_column_id, prior["last-column-id"])
-    else:
-        version, schema_id = 1, 0
-        schemas, snapshots, snapshot_log, metadata_log = [schema], [], [], []
-    snapshots.append(
-        {
+        avro_ocf_write(mlist_path, _MANIFEST_FILE_SCHEMA, mlist_records, fs=ofs)
+
+        # table metadata (v2 spec §Table Metadata)
+        schema_id = 0
+        schemas = [schema]
+        if prior:
+            schemas = list(prior["schemas"])
+            cur = next(
+                s for s in schemas if s["schema-id"] == prior["current-schema-id"]
+            )
+            if {k: v for k, v in schema.items() if k != "schema-id"} == {
+                k: v for k, v in cur.items() if k != "schema-id"
+            }:
+                schema_id = cur["schema-id"]
+            else:  # schema evolution: register the new schema
+                schema_id = max(s["schema-id"] for s in schemas) + 1
+                schemas.append({**schema, "schema-id": schema_id})
+            last_column_id = max(last_column_id, prior["last-column-id"])
+        snapshot = {
             "snapshot-id": snap_id,
             "sequence-number": seq,
-            "timestamp-ms": now_ms,
+            "timestamp-ms": int(time.time() * 1000),
             "manifest-list": mlist_path,
             "summary": {
                 "operation": "append",
@@ -797,47 +886,39 @@ def export_iceberg(
             },
             "schema-id": schema_id,
         }
-    )
-    snapshot_log.append({"timestamp-ms": now_ms, "snapshot-id": snap_id})
-    metadata = {
-        "format-version": 2,
-        "table-uuid": table_uuid,
-        "location": out_abs,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": last_column_id,
-        "current-schema-id": schema_id,
-        "schemas": schemas,
-        "default-spec-id": 0,
-        "partition-specs": [spec],
-        "last-partition-id": 1000 if part_fields else 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"write.format.default": "parquet"},
-        "current-snapshot-id": snap_id,
-        "snapshots": snapshots,
-        "snapshot-log": snapshot_log,
-        "metadata-log": metadata_log,
-    }
-    metadata_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    _write_atomic(metadata_path, json.dumps(metadata, indent=1), fs=ofs)
-    # state is stamped with the version it belongs to; a crash before the
-    # hint flip leaves the stamp != hint, and the next export rebuilds
-    # from the committed manifests instead of trusting this file
-    _write_atomic(
-        state_path, json.dumps({**state, "_hint_version": version}), fs=ofs
-    )
-    # hint last: the commit point (readers resolve metadata through it)
-    _write_atomic(
-        os.path.join(meta_dir, "version-hint.text"), str(version), fs=ofs
-    )
-    return {
-        "table_uuid": table_uuid,
-        "snapshot_id": snap_id,
-        "n_files": len(entries),
-        "n_rows": total_rows,
-        "metadata_path": metadata_path,
-    }
+        metadata = {
+            "format-version": 2,
+            "table-uuid": prior["table-uuid"] if prior else str(uuid.uuid4()),
+            "location": out_abs,
+            "last-sequence-number": seq,
+            "last-column-id": last_column_id,
+            "current-schema-id": schema_id,
+            "schemas": schemas,
+            "default-spec-id": 0,
+            "partition-specs": [spec],
+            "last-partition-id": 1000 if part_fields else 999,
+            "default-sort-order-id": 0,
+            "sort-orders": [{"order-id": 0, "fields": []}],
+            "properties": {"write.format.default": "parquet"},
+            "current-snapshot-id": snap_id,
+            "snapshots": (prior["snapshots"] if prior else []) + [snapshot],
+            "snapshot-log": prior.get("snapshot-log", []) if prior else [],
+        }
+        summary = {
+            "table_uuid": metadata["table-uuid"],
+            "snapshot_id": snap_id,
+            "n_files": len(entries),
+            "n_rows": total_rows,
+            "metadata_path": _version_path(meta_dir, version + 1),
+        }
+        return metadata, [manifest_path, mlist_path], (summary, state)
+
+    version, result = _commit_retrying(meta_dir, ofs, attempt, create=True)
+    if version is None:
+        return result
+    summary, state = result
+    ofs.write_text_atomic(state_path, json.dumps({**state, "_version": version}))
+    return summary
 
 
 # ---------------------------------------------------------------------------
@@ -846,27 +927,13 @@ def export_iceberg(
 
 
 def _current_metadata(path: str, fs=None) -> dict:
-    """Resolve the live vN.metadata.json via the filesystem-catalog
-    convention (version-hint.text; falls back to the highest vN present —
-    `filesystem_catalog.cc` resolution order)."""
-    fs = _fs_or_local(fs)
+    """The committed metadata of the table at ``path`` (see
+    ``_current_version``)."""
     meta_dir = os.path.join(path, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if fs.exists(hint):
-        v = fs.read_text(hint).strip()
-        p = os.path.join(meta_dir, f"v{v}.metadata.json")
-        if fs.exists(p):
-            return json.loads(fs.read_text(p))
-    vs = sorted(
-        int(f[1:].split(".")[0])
-        for f in fs.list_names(meta_dir)
-        if f.startswith("v") and f.endswith(".metadata.json")
-    )
-    if not vs:
+    _version, meta = _current_version(meta_dir, fs)
+    if meta is None:
         raise ValueError(f"no vN.metadata.json under {meta_dir}")
-    return json.loads(
-        fs.read_text(os.path.join(meta_dir, f"v{vs[-1]}.metadata.json"))
-    )
+    return meta
 
 
 def fs_path_col(col):
@@ -992,8 +1059,6 @@ def read_iceberg(
     external writer committed (same layout rules) is queryable here with
     no Iceberg runtime, exactly how `manifest_io.cc` materializes a
     snapshot's file set in the reference."""
-    from pyspark.sql import functions as F
-
     ofs = None
     from redpanda_spark import fsio as _fsio
 
@@ -1001,6 +1066,14 @@ def read_iceberg(
         ofs = _fsio.for_root(spark, path)
         path = ofs.normalize(path)
     meta = _current_metadata(path, fs=ofs)
+    return _read_snapshot(spark, path, meta, snapshot_id, with_metadata, ofs)
+
+
+def _read_snapshot(spark, path: str, meta: dict, snapshot_id, with_metadata, ofs):
+    """``read_iceberg`` on already-resolved table metadata: maintenance
+    locates rows in the very snapshot its commit builds on."""
+    from pyspark.sql import functions as F
+
     if meta.get("format-version") != 2:
         raise ValueError(f"unsupported iceberg format-version {meta.get('format-version')}")
     snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}

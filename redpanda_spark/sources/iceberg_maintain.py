@@ -11,9 +11,13 @@ are the table-maintenance half every Iceberg deployment runs out-of-band
 training-data pipeline needs them for right-to-be-forgotten removal and
 small-file hygiene at 100 TB.
 
-Design notes (all three ops follow the exporter's commit discipline —
-every commit file is tmp+os.replace, version-hint flips LAST, and
-readers resolve state only through the hint):
+Design notes (every op commits like the exporter: it reads the table's
+head (N, vN) once through ``iceberg_export._current_version``, derives
+everything from that snapshot, and publishes v{N+1}.metadata.json with
+an exclusive create — the commit point. A writer that loses the publish
+to a concurrent one re-runs from a fresh read and deletes the files its
+lost attempt wrote; after ``_COMMIT_RETRIES`` re-runs it raises
+``CommitConflictError``. No commit ever overwrites another's snapshot):
 
 - **Position deletes** (`delete_where`): matching rows are located with
   Spark's parquet metadata columns (`_metadata.file_path` +
@@ -42,11 +46,10 @@ readers resolve state only through the hint):
   untouched files (new files have a higher sequence number, so stale
   entries are inert by both the sequence rule and the path anti-join).
 - **Expiry** (`expire_snapshots`): trims the snapshot list in a new
-  metadata version (hint flips last = the commit point), THEN garbage-
-  collects manifest lists / manifests / data+delete files referenced
-  only by expired snapshots. A crash between the hint flip and the GC
-  leaves orphan files, never a broken table (GC is best-effort
-  hygiene; the commit point is the hint flip).
+  metadata version, THEN garbage-collects manifest lists / manifests /
+  data+delete files referenced only by expired snapshots of the version
+  the trim committed on. A crash between the commit and the GC leaves
+  orphan files, never a broken table (GC is best-effort hygiene).
 
 All driver-side metadata work is O(manifest entries) — bounded control
 material, never data-sized.
@@ -62,12 +65,13 @@ import uuid
 
 from redpanda_spark.sources.iceberg_export import (
     _MANIFEST_FILE_SCHEMA,
-    _current_metadata,
+    _commit_retrying,
+    _current_metadata,  # re-exported: callers read table state from here
     _data_path_form,
     _fs_or_local,
     _manifest_entry_schema,
     _pq_file,
-    _write_atomic,
+    _read_snapshot,
     avro_ocf_read,
     avro_ocf_write,
 )
@@ -260,73 +264,92 @@ def _manifest_file_record(
     }
 
 
-def _commit_snapshot(
+def _existing(entries: list[dict]) -> list[dict]:
+    """Live entries carried into a new full-state manifest: EXISTING,
+    keeping their resolved snapshot id and sequence numbers."""
+    return [{**e, "status": 0} for e in entries]
+
+
+def _added(
+    path: str,
+    content: int,
+    partition: dict,
+    record_count: int,
+    snap_id: int,
+    seq: int,
+    fs=None,
+    equality_ids: list[int] | None = None,
+) -> dict:
+    """Manifest entry for a file this commit ADDS (content 0 data, 1
+    position deletes, 2 equality deletes)."""
+    return {
+        "status": 1,
+        "snapshot_id": snap_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": {
+            "content": content,
+            "file_path": _data_path_form(path),
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": int(record_count),
+            "file_size_in_bytes": int(_fs_or_local(fs).getsize(path)),
+            "equality_ids": equality_ids,
+        },
+    }
+
+
+def _snapshot_metadata(
     table_path: str,
     meta: dict,
-    manifest_records: list[dict],
+    data: list[dict],
+    dels: list[dict],
     snap_id: int,
     seq: int,
     operation: str,
-    summary_extra: dict[str, str],
-    schema_id: int,
+    summary: dict[str, str],
     fs=None,
-) -> dict:
-    """Write the manifest list + next vN.metadata.json and flip the hint.
-    Returns the new metadata dict."""
-    from redpanda_spark.fsio import has_scheme as _has_scheme_c
-
-    meta_dir = os.path.join(
-        table_path
-        if _has_scheme_c(table_path)
-        else os.path.abspath(table_path),
-        "metadata",
+) -> tuple[dict, list[str]]:
+    """(new metadata, files written) for a snapshot over ``meta`` whose
+    full state is ``data`` + ``dels``: one data manifest, one delete
+    manifest when there are deletes, and the manifest list. The caller
+    commits it through ``_commit_retrying``."""
+    meta_dir = os.path.join(table_path, "metadata")
+    part_fields = _part_fields_of(meta)
+    schema = next(
+        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
     )
-    now_ms = int(time.time() * 1000)
+    written, records = [], []
+    for content, entries in ((0, data), (1, dels)):
+        if entries:
+            path = _write_manifest(
+                meta_dir, entries, part_fields, schema,
+                "deletes" if content else "data", fs=fs,
+            )
+            written.append(path)
+            records.append(
+                _manifest_file_record(
+                    path, entries, content, seq, snap_id, part_fields, fs=fs
+                )
+            )
     mlist_path = os.path.join(meta_dir, f"snap-{snap_id}-{seq}-{uuid.uuid4()}.avro")
-    avro_ocf_write(mlist_path, _MANIFEST_FILE_SCHEMA, manifest_records, fs=fs)
-    version = int(
-        _fs_or_local(fs)
-        .read_text(os.path.join(meta_dir, "version-hint.text"))
-        .strip()
-    ) + 1
-    snapshots = list(meta["snapshots"]) + [
-        {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist_path,
-            "summary": {"operation": operation, **summary_extra},
-            "schema-id": schema_id,
-        }
-    ]
+    avro_ocf_write(mlist_path, _MANIFEST_FILE_SCHEMA, records, fs=fs)
+    written.append(mlist_path)
+    snapshot = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": int(time.time() * 1000),
+        "manifest-list": mlist_path,
+        "summary": {"operation": operation, **summary},
+        "schema-id": meta["current-schema-id"],
+    }
     new_meta = {
         **meta,
         "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
         "current-snapshot-id": snap_id,
-        "snapshots": snapshots,
-        "snapshot-log": list(meta.get("snapshot-log", []))
-        + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}],
-        "metadata-log": list(meta.get("metadata-log", []))
-        + [
-            {
-                "timestamp-ms": meta["last-updated-ms"],
-                "metadata-file": os.path.join(
-                    meta_dir, f"v{version - 1}.metadata.json"
-                ),
-            }
-        ],
+        "snapshots": meta["snapshots"] + [snapshot],
     }
-    _write_atomic(
-        os.path.join(meta_dir, f"v{version}.metadata.json"),
-        json.dumps(new_meta, indent=1),
-        fs=fs,
-    )
-    # hint flips LAST — the commit point
-    _write_atomic(
-        os.path.join(meta_dir, "version-hint.text"), str(version), fs=fs
-    )
-    return new_meta
+    return new_meta, written
 
 
 def _next_ids(meta: dict) -> tuple[int, int]:
@@ -397,104 +420,57 @@ def delete_where(spark, table_path: str, predicate: str) -> dict:
     the manifest; the commit path below is unchanged by that swap."""
     from pyspark.sql import functions as F
 
-    from redpanda_spark.sources.iceberg_export import read_iceberg
-
     table_path, ofs = _resolve_table(spark, table_path)
-    meta = _current_metadata(table_path, fs=ofs)
-    # read through the normal merge-on-read path so already-deleted rows
-    # can't be deleted twice (their positions would duplicate), keeping
-    # the row's physical address columns
-    live = read_iceberg(spark, table_path, with_metadata=True)
-    hits = (
-        live.where(F.expr(predicate))
-        # _file_path is already normalized (scheme-stripped + URL-decoded)
-        # by read_iceberg's with_metadata branch
-        .select(
-            F.col("_file_path").alias("file_path"),
-            F.col("_row_index").alias("pos"),
-        )
-        .orderBy("file_path", "pos")
-        .collect()
-    )
-    if not hits:
-        return {"deleted_rows": 0, "snapshot_id": None}
 
-    data_entries, del_entries = live_entries(meta, fs=ofs)
-    part_fields = _part_fields_of(meta)
-    snap_id, seq = _next_ids(meta)
-    dfile = _write_delete_file(table_path, hits, fs=ofs)
+    def attempt(_version, meta):
+        # rows are located in the snapshot this commit builds on, through
+        # the normal merge-on-read path so already-deleted rows can't be
+        # deleted twice (their positions would duplicate)
+        hits = (
+            _read_snapshot(spark, table_path, meta, None, True, ofs)
+            .where(F.expr(predicate))
+            # _file_path is already normalized (scheme-stripped + URL-
+            # decoded) by the with_metadata read
+            .select(
+                F.col("_file_path").alias("file_path"),
+                F.col("_row_index").alias("pos"),
+            )
+            .orderBy("file_path", "pos")
+            .collect()
+        )
+        if not hits:
+            return None, [], {"deleted_rows": 0, "snapshot_id": None}
+        data_entries, del_entries = live_entries(meta, fs=ofs)
+        snap_id, seq = _next_ids(meta)
+        dfile = _write_delete_file(table_path, hits, fs=ofs)
+        parts = {p["name"]: None for p in _part_fields_of(meta)}
+        new_meta, written = _snapshot_metadata(
+            table_path,
+            meta,
+            _existing(data_entries),
+            _existing(del_entries)
+            + [_added(dfile, 1, parts, len(hits), snap_id, seq, fs=ofs)],
+            snap_id,
+            seq,
+            "delete",
+            {
+                "added-position-delete-files": "1",
+                "added-position-deletes": str(len(hits)),
+                "total-records": str(
+                    sum(e["data_file"]["record_count"] for e in data_entries)
+                ),
+                "total-position-deletes": str(
+                    sum(e["data_file"]["record_count"] for e in del_entries)
+                    + len(hits)
+                ),
+                "total-data-files": str(len(data_entries)),
+            },
+            fs=ofs,
+        )
+        result = {"deleted_rows": len(hits), "snapshot_id": snap_id}
+        return new_meta, [dfile, *written], result
 
-    meta_dir = os.path.join(table_path, "metadata")
-    table_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    # full-state manifests, the exporter's invariant: one data manifest
-    # (everything EXISTING) + one delete manifest (prior deletes EXISTING
-    # + the new file ADDED)
-    data_existing = [
-        {**e, "status": 0, "file_sequence_number": e["sequence_number"]}
-        for e in data_entries
-    ]
-    del_existing = [
-        {**e, "status": 0, "file_sequence_number": e["sequence_number"]}
-        for e in del_entries
-    ]
-    new_del_entry = {
-        "status": 1,
-        "snapshot_id": snap_id,
-        "sequence_number": seq,
-        "file_sequence_number": seq,
-        "data_file": {
-            "content": 1,  # POSITION_DELETES
-            "file_path": _data_path_form(dfile),
-            "file_format": "PARQUET",
-            "partition": {p["name"]: None for p in part_fields},
-            "record_count": len(hits),
-            "file_size_in_bytes": _fs_or_local(ofs).getsize(dfile),
-        },
-    }
-    dm = _write_manifest(
-        meta_dir,
-        del_existing + [new_del_entry],
-        part_fields,
-        table_schema,
-        "deletes",
-        fs=ofs,
-    )
-    dmf = _manifest_file_record(
-        dm, del_existing + [new_del_entry], 1, seq, snap_id, part_fields, fs=ofs
-    )
-    records = [dmf]
-    if data_existing:
-        datam = _write_manifest(
-            meta_dir, data_existing, part_fields, table_schema, "data", fs=ofs
-        )
-        records.insert(
-            0,
-            _manifest_file_record(
-                datam, data_existing, 0, seq, snap_id, part_fields, fs=ofs
-            ),
-        )
-    total = sum(e["data_file"]["record_count"] for e in data_entries)
-    prior_del = sum(e["data_file"]["record_count"] for e in del_entries)
-    _commit_snapshot(
-        table_path,
-        meta,
-        records,
-        snap_id,
-        seq,
-        "delete",
-        {
-            "added-position-delete-files": "1",
-            "added-position-deletes": str(len(hits)),
-            "total-records": str(total),
-            "total-position-deletes": str(prior_del + len(hits)),
-            "total-data-files": str(len(data_entries)),
-        },
-        meta["current-schema-id"],
-        fs=ofs,
-    )
-    return {"deleted_rows": len(hits), "snapshot_id": snap_id}
+    return _commit_retrying(os.path.join(table_path, "metadata"), ofs, attempt)[1]
 
 
 _EQ_PA_TYPES = {
@@ -523,107 +499,68 @@ def equality_delete(
     small); the delete file is one spec-schema parquet with the key
     columns' field-ids."""
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
     if not keys:
         return {"deleted_keys": 0, "snapshot_id": None}
     table_path, ofs = _resolve_table(spark, table_path)
-    meta = _current_metadata(table_path, fs=ofs)
-    table_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    by_name = {f["name"]: f for f in table_schema["fields"]}
-    ids, pa_fields = [], []
-    for c in key_cols:
-        f = by_name.get(c)
-        if f is None:
-            raise ValueError(f"unknown key column {c!r}")
-        t = f["type"]
-        if t not in _EQ_PA_TYPES:
-            raise ValueError(f"unsupported equality-delete key type {t!r}")
-        ids.append(int(f["id"]))
-        pa_fields.append(
-            pa.field(
-                c,
-                getattr(pa, _EQ_PA_TYPES[t])(),
-                nullable=True,
-                metadata={b"PARQUET:field_id": str(f["id"]).encode()},
-            )
-        )
-    dfile = os.path.join(table_path, "data", f"eq-delete-{uuid.uuid4()}.parquet")
-    tbl = pa.table(
-        {c: [k.get(c) for k in keys] for c in key_cols}, schema=pa.schema(pa_fields)
-    )
-    _pq_write_atomic(ofs, dfile, tbl)
 
-    data_entries, del_entries = live_entries(meta, fs=ofs)
-    part_fields = _part_fields_of(meta)
-    snap_id, seq = _next_ids(meta)
-    meta_dir = os.path.join(table_path, "metadata")
-    data_existing = [
-        {**e, "status": 0, "file_sequence_number": e["sequence_number"]}
-        for e in data_entries
-    ]
-    del_existing = [
-        {**e, "status": 0, "file_sequence_number": e["sequence_number"]}
-        for e in del_entries
-    ]
-    new_entry = {
-        "status": 1,
-        "snapshot_id": snap_id,
-        "sequence_number": seq,
-        "file_sequence_number": seq,
-        "data_file": {
-            "content": 2,  # EQUALITY_DELETES
-            "file_path": _data_path_form(dfile),
-            "file_format": "PARQUET",
-            "partition": {p["name"]: None for p in part_fields},
-            "record_count": len(keys),
-            "file_size_in_bytes": _fs_or_local(ofs).getsize(dfile),
-            "equality_ids": ids,
-        },
-    }
-    dm = _write_manifest(
-        meta_dir,
-        del_existing + [new_entry],
-        part_fields,
-        table_schema,
-        "deletes",
-        fs=ofs,
-    )
-    records = [
-        _manifest_file_record(
-            dm, del_existing + [new_entry], 1, seq, snap_id, part_fields, fs=ofs
+    def attempt(_version, meta):
+        table_schema = next(
+            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
-    ]
-    if data_existing:
-        datam = _write_manifest(
-            meta_dir, data_existing, part_fields, table_schema, "data", fs=ofs
+        by_name = {f["name"]: f for f in table_schema["fields"]}
+        ids, pa_fields = [], []
+        for c in key_cols:
+            f = by_name.get(c)
+            if f is None:
+                raise ValueError(f"unknown key column {c!r}")
+            t = f["type"]
+            if t not in _EQ_PA_TYPES:
+                raise ValueError(f"unsupported equality-delete key type {t!r}")
+            ids.append(int(f["id"]))
+            pa_fields.append(
+                pa.field(
+                    c,
+                    getattr(pa, _EQ_PA_TYPES[t])(),
+                    nullable=True,
+                    metadata={b"PARQUET:field_id": str(f["id"]).encode()},
+                )
+            )
+        dfile = os.path.join(table_path, "data", f"eq-delete-{uuid.uuid4()}.parquet")
+        tbl = pa.table(
+            {c: [k.get(c) for k in keys] for c in key_cols},
+            schema=pa.schema(pa_fields),
         )
-        records.insert(
-            0,
-            _manifest_file_record(
-                datam, data_existing, 0, seq, snap_id, part_fields, fs=ofs
-            ),
+        _pq_write_atomic(ofs, dfile, tbl)
+
+        data_entries, del_entries = live_entries(meta, fs=ofs)
+        snap_id, seq = _next_ids(meta)
+        parts = {p["name"]: None for p in _part_fields_of(meta)}
+        new_entry = _added(
+            dfile, 2, parts, len(keys), snap_id, seq, fs=ofs, equality_ids=ids
         )
-    total = sum(e["data_file"]["record_count"] for e in data_entries)
-    _commit_snapshot(
-        table_path,
-        meta,
-        records,
-        snap_id,
-        seq,
-        "delete",
-        {
-            "added-equality-delete-files": "1",
-            "added-equality-deletes": str(len(keys)),
-            "total-records": str(total),
-            "total-data-files": str(len(data_entries)),
-        },
-        meta["current-schema-id"],
-        fs=ofs,
-    )
-    return {"deleted_keys": len(keys), "snapshot_id": snap_id}
+        new_meta, written = _snapshot_metadata(
+            table_path,
+            meta,
+            _existing(data_entries),
+            _existing(del_entries) + [new_entry],
+            snap_id,
+            seq,
+            "delete",
+            {
+                "added-equality-delete-files": "1",
+                "added-equality-deletes": str(len(keys)),
+                "total-records": str(
+                    sum(e["data_file"]["record_count"] for e in data_entries)
+                ),
+                "total-data-files": str(len(data_entries)),
+            },
+            fs=ofs,
+        )
+        result = {"deleted_keys": len(keys), "snapshot_id": snap_id}
+        return new_meta, [dfile, *written], result
+
+    return _commit_retrying(os.path.join(table_path, "metadata"), ofs, attempt)[1]
 
 
 def merge_upsert(spark, table_path: str, updates, key_cols: list[str]) -> dict:
@@ -645,161 +582,103 @@ def merge_upsert(spark, table_path: str, updates, key_cols: list[str]) -> dict:
     rows ever reach the driver. This is the foreachBatch body for a CDC
     stream into the lakehouse: Structured Streaming micro-batches call
     this per batch, giving exactly-once upsert semantics through the
-    snapshot commit point (hint flip)."""
+    snapshot commit point (the exclusive metadata publish)."""
     from pyspark.sql import functions as F
 
+    from redpanda_spark.sources.iceberg_export import _hour_to_micros
+
     table_path, ofs = _resolve_table(spark, table_path)
-    meta = _current_metadata(table_path, fs=ofs)
-    data_entries, del_entries = live_entries(meta, fs=ofs)
-    part_fields = _part_fields_of(meta)
-    snap_id, seq = _next_ids(meta)
-
-    from redpanda_spark.sources.iceberg_export import (
-        _hour_to_micros,
-        read_iceberg,
-    )
-
-    # 1) locate stored rows whose key is being replaced
-    keys = updates.select(*key_cols).distinct()
-    live = read_iceberg(spark, table_path, with_metadata=True)
-    hits = (
-        live.join(F.broadcast(keys), key_cols, "inner")
-        .select(
-            F.col("_file_path").alias("file_path"),
-            F.col("_row_index").alias("pos"),
-        )
-        .orderBy("file_path", "pos")
-        .collect()
-    )
-
-    # 2) write the update rows as new data files in the table layout
-    part_names = [p["name"] for p in part_fields]
-    tmpd = os.path.join(table_path, f"_upsert_tmp_{uuid.uuid4()}")
-    w = updates.write.mode("overwrite")
-    if part_names:
-        w = w.partitionBy(*part_names)
-    w.parquet(tmpd)
-    new_entries: list[dict] = []
-    added_rows = 0
     mfs = _fs_or_local(ofs)
-    for src_file in sorted(_walk_parquet(ofs, tmpd)):
-        dirpath = os.path.dirname(src_file)
-        rel_dir = os.path.relpath(dirpath, tmpd)
-        dst_dir = (
-            os.path.join(table_path, "data")
-            if rel_dir == "."
-            else os.path.join(table_path, "data", rel_dir)
-        )
-        mfs.mkdirs(dst_dir)
-        dst = os.path.join(dst_dir, f"upsert-{uuid.uuid4()}.parquet")
-        mfs.rename(src_file, dst)
-        md = _pq_file(mfs, dst).metadata
-        part_val = {}
-        if part_names and f"{part_names[0]}=" in rel_dir:
-            part_val = {
-                part_names[0]: _hour_to_micros(
-                    rel_dir.split(f"{part_names[0]}=", 1)[1].split(os.sep, 1)[0]
-                )
-            }
-        elif part_names:
-            part_val = {part_names[0]: None}
-        added_rows += md.num_rows
-        new_entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": _data_path_form(dst),
-                    "file_format": "PARQUET",
-                    "partition": part_val,
-                    "record_count": int(md.num_rows),
-                    "file_size_in_bytes": int(mfs.getsize(dst)),
-                },
-            }
-        )
-    mfs.delete(tmpd, recursive=True)
-    if not new_entries and not hits:
-        return {"matched_rows": 0, "inserted_rows": 0, "snapshot_id": None}
+    keys = updates.select(*key_cols).distinct()
 
-    # 3) one snapshot: delete manifest (if any match) + data manifest
-    meta_dir = os.path.join(table_path, "metadata")
-    table_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    data_all = [{**e, "status": 0} for e in data_entries] + new_entries
-    records = [
-        _manifest_file_record(
-            _write_manifest(
-                meta_dir, data_all, part_fields, table_schema, "data", fs=ofs
-            ),
+    def attempt(_version, meta):
+        data_entries, del_entries = live_entries(meta, fs=ofs)
+        part_fields = _part_fields_of(meta)
+        snap_id, seq = _next_ids(meta)
+        # 1) locate stored rows whose key is being replaced, in the
+        # snapshot this commit builds on
+        hits = (
+            _read_snapshot(spark, table_path, meta, None, True, ofs)
+            .join(F.broadcast(keys), key_cols, "inner")
+            .select(
+                F.col("_file_path").alias("file_path"),
+                F.col("_row_index").alias("pos"),
+            )
+            .orderBy("file_path", "pos")
+            .collect()
+        )
+
+        # 2) write the update rows as new data files in the table layout
+        part_names = [p["name"] for p in part_fields]
+        tmpd = os.path.join(table_path, f"_upsert_tmp_{uuid.uuid4()}")
+        w = updates.write.mode("overwrite")
+        if part_names:
+            w = w.partitionBy(*part_names)
+        w.parquet(tmpd)
+        new_entries: list[dict] = []
+        written: list[str] = []
+        for src_file in sorted(_walk_parquet(ofs, tmpd)):
+            rel_dir = os.path.relpath(os.path.dirname(src_file), tmpd)
+            dst_dir = (
+                os.path.join(table_path, "data")
+                if rel_dir == "."
+                else os.path.join(table_path, "data", rel_dir)
+            )
+            mfs.mkdirs(dst_dir)
+            dst = os.path.join(dst_dir, f"upsert-{uuid.uuid4()}.parquet")
+            mfs.rename(src_file, dst)
+            written.append(dst)
+            part_val = {}
+            if part_names and f"{part_names[0]}=" in rel_dir:
+                part_val = {
+                    part_names[0]: _hour_to_micros(
+                        rel_dir.split(f"{part_names[0]}=", 1)[1].split(os.sep, 1)[0]
+                    )
+                }
+            elif part_names:
+                part_val = {part_names[0]: None}
+            rows = _pq_file(mfs, dst).metadata.num_rows
+            new_entries.append(_added(dst, 0, part_val, rows, snap_id, seq, fs=ofs))
+        mfs.delete(tmpd, recursive=True)
+        if not new_entries and not hits:
+            return None, [], {"matched_rows": 0, "inserted_rows": 0, "snapshot_id": None}
+
+        # 3) one snapshot: data manifest + delete manifest (if any match)
+        data_all = _existing(data_entries) + new_entries
+        del_all = _existing(del_entries)
+        if hits:
+            dfile = _write_delete_file(table_path, hits, fs=ofs)
+            written.append(dfile)
+            parts = {p["name"]: None for p in part_fields}
+            del_all.append(_added(dfile, 1, parts, len(hits), snap_id, seq, fs=ofs))
+        added_rows = sum(e["data_file"]["record_count"] for e in new_entries)
+        new_meta, meta_files = _snapshot_metadata(
+            table_path,
+            meta,
             data_all,
-            0,
-            seq,
+            del_all,
             snap_id,
-            part_fields,
+            seq,
+            "overwrite",
+            {
+                "added-data-files": str(len(new_entries)),
+                "added-records": str(added_rows),
+                "added-position-deletes": str(len(hits)),
+                "total-data-files": str(len(data_all)),
+                "total-records": str(
+                    sum(e["data_file"]["record_count"] for e in data_all)
+                ),
+            },
             fs=ofs,
         )
-    ]
-    del_all = [{**e, "status": 0} for e in del_entries]
-    if hits:
-        dfile = _write_delete_file(table_path, hits, fs=ofs)
-        del_all.append(
-            {
-                "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 1,
-                    "file_path": _data_path_form(dfile),
-                    "file_format": "PARQUET",
-                    "partition": {p["name"]: None for p in part_fields},
-                    "record_count": len(hits),
-                    "file_size_in_bytes": mfs.getsize(dfile),
-                },
-            }
-        )
-    if del_all:
-        records.append(
-            _manifest_file_record(
-                _write_manifest(
-                    meta_dir, del_all, part_fields, table_schema, "deletes", fs=ofs
-                ),
-                del_all,
-                1,
-                seq,
-                snap_id,
-                part_fields,
-                fs=ofs,
-            )
-        )
-    _commit_snapshot(
-        table_path,
-        meta,
-        records,
-        snap_id,
-        seq,
-        "overwrite",
-        {
-            "added-data-files": str(len(new_entries)),
-            "added-records": str(added_rows),
-            "added-position-deletes": str(len(hits)),
-            "total-data-files": str(len(data_all)),
-            "total-records": str(
-                sum(e["data_file"]["record_count"] for e in data_all)
-            ),
-        },
-        meta["current-schema-id"],
-        fs=ofs,
-    )
-    return {
-        "matched_rows": len(hits),
-        "inserted_rows": added_rows - len(hits),
-        "snapshot_id": snap_id,
-    }
+        result = {
+            "matched_rows": len(hits),
+            "inserted_rows": added_rows - len(hits),
+            "snapshot_id": snap_id,
+        }
+        return new_meta, written + meta_files, result
+
+    return _commit_retrying(os.path.join(table_path, "metadata"), ofs, attempt)[1]
 
 
 # ---------------------------------------------------------------------------
@@ -824,167 +703,127 @@ def compact_data_files(
 
     table_path, ofs = _resolve_table(spark, table_path)
     mfs = _fs_or_local(ofs)
-    meta = _current_metadata(table_path, fs=ofs)
-    data_entries, del_entries = live_entries(meta, fs=ofs)
-    part_fields = _part_fields_of(meta)
     small = small_bytes if small_bytes is not None else target_bytes // 2
 
-    # bin-pack per partition value (files can't merge across partitions)
-    by_part: dict[tuple, list[dict]] = {}
-    for e in data_entries:
-        if e["data_file"]["file_size_in_bytes"] >= small:
-            continue
-        key = tuple(sorted(e["data_file"]["partition"].items()))
-        by_part.setdefault(key, []).append(e)
-    bins: list[list[dict]] = []
-    for _key, group in sorted(by_part.items()):
-        group.sort(key=lambda e: e["data_file"]["file_path"])
-        cur: list[dict] = []
-        size = 0
-        for e in group:
-            cur.append(e)
-            size += e["data_file"]["file_size_in_bytes"]
-            if size >= target_bytes:
+    def attempt(_version, meta):
+        data_entries, del_entries = live_entries(meta, fs=ofs)
+        # bin-pack per partition value (files can't merge across partitions)
+        by_part: dict[tuple, list[dict]] = {}
+        for e in data_entries:
+            if e["data_file"]["file_size_in_bytes"] >= small:
+                continue
+            key = tuple(sorted(e["data_file"]["partition"].items()))
+            by_part.setdefault(key, []).append(e)
+        bins: list[list[dict]] = []
+        for _key, group in sorted(by_part.items()):
+            group.sort(key=lambda e: e["data_file"]["file_path"])
+            cur: list[dict] = []
+            size = 0
+            for e in group:
+                cur.append(e)
+                size += e["data_file"]["file_size_in_bytes"]
+                if size >= target_bytes:
+                    bins.append(cur)
+                    cur, size = [], 0
+            if len(cur) >= min_input_files:
                 bins.append(cur)
-                cur, size = [], 0
-        if len(cur) >= min_input_files:
-            bins.append(cur)
-    bins = [b for b in bins if len(b) >= min_input_files]
-    if not bins:
-        return {"rewritten_files": 0, "new_files": 0, "snapshot_id": None}
+        bins = [b for b in bins if len(b) >= min_input_files]
+        if not bins:
+            return None, [], {"rewritten_files": 0, "new_files": 0, "snapshot_id": None}
 
-    snap_id, seq = _next_ids(meta)
-    rewritten = {e["data_file"]["file_path"] for b in bins for e in b}
+        snap_id, seq = _next_ids(meta)
+        rewritten = {e["data_file"]["file_path"] for b in bins for e in b}
 
-    if any(e["data_file"].get("content", 0) == 2 for e in del_entries):
-        # applying outstanding EQUALITY deletes during a rewrite needs the
-        # matched-row semantics of the read path; refuse loudly rather
-        # than misread them as positional (read_iceberg handles them)
-        raise ValueError(
-            "compact_data_files: table has equality delete files; "
-            "rewrite via read_iceberg + a fresh export instead"
-        )
-    # (file_path, pos) frame of ALL live position deletes, once
-    del_paths = [e["data_file"]["file_path"] for e in del_entries]
-    del_df = (
-        spark.read.parquet(*del_paths).select("file_path", "pos")
-        if del_paths
-        else None
-    )
-
-    new_entries: list[dict] = []
-    for b in bins:
-        paths = [e["data_file"]["file_path"] for e in b]
-        df = spark.read.parquet(*paths).withColumn(
-            "_fp", _strip_scheme(F.col("_metadata.file_path"))
-        ).withColumn("_pos", F.col("_metadata.row_index"))
-        if del_df is not None:
-            df = df.join(
-                F.broadcast(del_df),
-                (df["_fp"] == del_df["file_path"]) & (df["_pos"] == del_df["pos"]),
-                "left_anti",
+        if any(e["data_file"].get("content", 0) == 2 for e in del_entries):
+            # applying outstanding EQUALITY deletes during a rewrite needs
+            # the matched-row semantics of the read path; refuse loudly
+            # rather than misread them as positional (read_iceberg handles
+            # them)
+            raise ValueError(
+                "compact_data_files: table has equality delete files; "
+                "rewrite via read_iceberg + a fresh export instead"
             )
-        df = df.drop("_fp", "_pos")
-        # one output file per bin, placed beside its inputs so the
-        # hive-partition directory (identity _hour) keeps working
-        out_dir = os.path.dirname(paths[0])
-        out = os.path.join(out_dir, f"compact-{uuid.uuid4()}.parquet")
-        tmpd = os.path.join(table_path, f"_compact_tmp_{uuid.uuid4()}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmpd)
-        part = next(iter(_walk_parquet(ofs, tmpd)))
-        mfs.rename(part, out)
-        mfs.delete(tmpd, recursive=True)
-        md = _pq_file(mfs, out).metadata
-        new_entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": _data_path_form(out),
-                    "file_format": "PARQUET",
-                    "partition": dict(b[0]["data_file"]["partition"]),
-                    "record_count": int(md.num_rows),
-                    "file_size_in_bytes": int(mfs.getsize(out)),
-                },
-            }
+        # (file_path, pos) frame of ALL live position deletes, once
+        del_paths = [e["data_file"]["file_path"] for e in del_entries]
+        del_df = (
+            spark.read.parquet(*del_paths).select("file_path", "pos")
+            if del_paths
+            else None
         )
 
-    # delete files fully absorbed by the rewrite drop out of the snapshot
-    kept_dels = []
-    for e in del_entries:
-        targets = set(
-            _pq_file(mfs, e["data_file"]["file_path"])
-            .read(columns=["file_path"])
-            .column("file_path")
-            .to_pylist()
-        )
-        if not targets <= rewritten:
-            kept_dels.append(e)
+        new_entries: list[dict] = []
+        outputs: list[str] = []
+        for b in bins:
+            paths = [e["data_file"]["file_path"] for e in b]
+            df = spark.read.parquet(*paths).withColumn(
+                "_fp", _strip_scheme(F.col("_metadata.file_path"))
+            ).withColumn("_pos", F.col("_metadata.row_index"))
+            if del_df is not None:
+                df = df.join(
+                    F.broadcast(del_df),
+                    (df["_fp"] == del_df["file_path"]) & (df["_pos"] == del_df["pos"]),
+                    "left_anti",
+                )
+            df = df.drop("_fp", "_pos")
+            # one output file per bin, placed beside its inputs so the
+            # hive-partition directory (identity _hour) keeps working
+            out = os.path.join(
+                os.path.dirname(paths[0]), f"compact-{uuid.uuid4()}.parquet"
+            )
+            tmpd = os.path.join(table_path, f"_compact_tmp_{uuid.uuid4()}")
+            df.coalesce(1).write.mode("overwrite").parquet(tmpd)
+            mfs.rename(next(iter(_walk_parquet(ofs, tmpd))), out)
+            outputs.append(out)
+            mfs.delete(tmpd, recursive=True)
+            rows = _pq_file(mfs, out).metadata.num_rows
+            new_entries.append(
+                _added(
+                    out, 0, dict(b[0]["data_file"]["partition"]), rows,
+                    snap_id, seq, fs=ofs,
+                )
+            )
 
-    meta_dir = os.path.join(table_path, "metadata")
-    table_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    survivors = [
-        {**e, "status": 0}
-        for e in data_entries
-        if e["data_file"]["file_path"] not in rewritten
-    ]
-    entries = survivors + new_entries
-    records = [
-        _manifest_file_record(
-            _write_manifest(
-                meta_dir, entries, part_fields, table_schema, "data", fs=ofs
-            ),
+        # delete files fully absorbed by the rewrite drop out of the snapshot
+        kept_dels = []
+        for e in del_entries:
+            targets = set(
+                _pq_file(mfs, e["data_file"]["file_path"])
+                .read(columns=["file_path"])
+                .column("file_path")
+                .to_pylist()
+            )
+            if not targets <= rewritten:
+                kept_dels.append(e)
+
+        entries = _existing(
+            [e for e in data_entries if e["data_file"]["file_path"] not in rewritten]
+        ) + new_entries
+        new_meta, written = _snapshot_metadata(
+            table_path,
+            meta,
             entries,
-            0,
-            seq,
+            _existing(kept_dels),
             snap_id,
-            part_fields,
+            seq,
+            "replace",
+            {
+                "deleted-data-files": str(len(rewritten)),
+                "added-data-files": str(len(new_entries)),
+                "total-data-files": str(len(entries)),
+                "total-records": str(
+                    sum(e["data_file"]["record_count"] for e in entries)
+                ),
+            },
             fs=ofs,
         )
-    ]
-    if kept_dels:
-        kd = [{**e, "status": 0} for e in kept_dels]
-        records.append(
-            _manifest_file_record(
-                _write_manifest(
-                    meta_dir, kd, part_fields, table_schema, "deletes", fs=ofs
-                ),
-                kd,
-                1,
-                seq,
-                snap_id,
-                part_fields,
-                fs=ofs,
-            )
-        )
-    _commit_snapshot(
-        table_path,
-        meta,
-        records,
-        snap_id,
-        seq,
-        "replace",
-        {
-            "deleted-data-files": str(len(rewritten)),
-            "added-data-files": str(len(new_entries)),
-            "total-data-files": str(len(entries)),
-            "total-records": str(
-                sum(e["data_file"]["record_count"] for e in entries)
-            ),
-        },
-        meta["current-schema-id"],
-        fs=ofs,
-    )
-    return {
-        "rewritten_files": len(rewritten),
-        "new_files": len(new_entries),
-        "snapshot_id": snap_id,
-    }
+        result = {
+            "rewritten_files": len(rewritten),
+            "new_files": len(new_entries),
+            "snapshot_id": snap_id,
+        }
+        return new_meta, outputs + written, result
+
+    return _commit_retrying(os.path.join(table_path, "metadata"), ofs, attempt)[1]
 
 
 # ---------------------------------------------------------------------------
@@ -1019,11 +858,13 @@ def expire_snapshots(
     spark=None,
 ) -> dict:
     """Expire snapshots (always keeping the current one), then GC every
-    file only they referenced. The metadata trim commits first (hint
-    flip); GC runs after, so a crash leaves orphans — never a broken
-    table — and the next expiry's reachability sweep collects them.
-    URI table roots need ``spark`` (the Hadoop FileSystem lives in the
-    JVM); plain local paths don't."""
+    file only they referenced. The metadata trim commits first (the
+    exclusive publish of the next metadata version; a lost publish
+    re-plans from a fresh read); GC runs after, from the version the trim
+    committed on, so a crash leaves orphans — never a broken table — and
+    the next expiry's reachability sweep collects them. URI table roots
+    need ``spark`` (the Hadoop FileSystem lives in the JVM); plain local
+    paths don't."""
     from redpanda_spark.fsio import has_scheme as _has_scheme_e
 
     if _has_scheme_e(table_path):
@@ -1034,77 +875,53 @@ def expire_snapshots(
         table_path, ofs = _resolve_table(spark, table_path)
     else:
         table_path, ofs = os.path.abspath(table_path), None
-    mfs = _fs_or_local(ofs)
-    meta = _current_metadata(table_path, fs=ofs)
-    snaps = sorted(meta["snapshots"], key=lambda s: s["timestamp-ms"])
-    cur = meta["current-snapshot-id"]
-    keep_ids = {cur}
-    if keep_last is not None:
-        keep_ids |= {s["snapshot-id"] for s in snaps[-keep_last:]}
-    if older_than_ms is not None:
-        keep_ids |= {
-            s["snapshot-id"] for s in snaps if s["timestamp-ms"] >= older_than_ms
-        }
     if keep_last is None and older_than_ms is None:
         raise ValueError("pass keep_last and/or older_than_ms")
-    expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
-    if not expired:
-        return {"expired": 0, "files_deleted": 0}
+    mfs = _fs_or_local(ofs)
 
-    meta_dir = os.path.join(table_path, "metadata")
-    version = int(
-        mfs.read_text(os.path.join(meta_dir, "version-hint.text")).strip()
-    ) + 1
-    now_ms = int(time.time() * 1000)
-    kept_snaps = [s for s in snaps if s["snapshot-id"] in keep_ids]
-    # writer-defined property: EXISTING manifest entries keep the
-    # snapshot id that first added their file, which may now be expired.
-    # Recording the expired ids lets the independent conformance reader
-    # tell "references a legitimately expired snapshot" apart from
-    # "references a snapshot the table never committed" (the exporter
-    # crash-bug signature it exists to catch).
-    prev_expired = meta.get("properties", {}).get("history.expired-snapshot-ids", "")
-    all_expired = sorted(
-        {int(x) for x in prev_expired.split(",") if x}
-        | {s["snapshot-id"] for s in expired}
-    )
-    new_meta = {
-        **meta,
-        "properties": {
-            **meta.get("properties", {}),
-            "history.expired-snapshot-ids": ",".join(map(str, all_expired)),
-        },
-        "last-updated-ms": now_ms,
-        "snapshots": kept_snaps,
-        "snapshot-log": [
-            e
-            for e in meta.get("snapshot-log", [])
-            if e["snapshot-id"] in keep_ids
-        ],
-        "metadata-log": list(meta.get("metadata-log", []))
-        + [
-            {
-                "timestamp-ms": meta["last-updated-ms"],
-                "metadata-file": os.path.join(
-                    meta_dir, f"v{version - 1}.metadata.json"
-                ),
+    def attempt(_version, meta):
+        snaps = sorted(meta["snapshots"], key=lambda s: s["timestamp-ms"])
+        keep_ids = {meta["current-snapshot-id"]}
+        if keep_last is not None:
+            keep_ids |= {s["snapshot-id"] for s in snaps[-keep_last:]}
+        if older_than_ms is not None:
+            keep_ids |= {
+                s["snapshot-id"] for s in snaps if s["timestamp-ms"] >= older_than_ms
             }
-        ],
-    }
-    _write_atomic(
-        os.path.join(meta_dir, f"v{version}.metadata.json"),
-        json.dumps(new_meta, indent=1),
-        fs=ofs,
-    )
-    _write_atomic(
-        os.path.join(meta_dir, "version-hint.text"), str(version), fs=ofs
-    )
+        expired = {s["snapshot-id"] for s in snaps} - keep_ids
+        if not expired:
+            return None, [], None
+        # writer-defined property: EXISTING manifest entries keep the
+        # snapshot id that first added their file, which may now be
+        # expired. Recording the expired ids lets the independent
+        # conformance reader tell "references a legitimately expired
+        # snapshot" apart from "references a snapshot the table never
+        # committed" (the exporter crash-bug signature it exists to catch).
+        props = meta.get("properties", {})
+        prev = props.get("history.expired-snapshot-ids", "")
+        all_expired = sorted({int(x) for x in prev.split(",") if x} | expired)
+        new_meta = {
+            **meta,
+            "properties": {
+                **props,
+                "history.expired-snapshot-ids": ",".join(map(str, all_expired)),
+            },
+            "snapshots": [s for s in snaps if s["snapshot-id"] in keep_ids],
+            "snapshot-log": [
+                e
+                for e in meta.get("snapshot-log", [])
+                if e["snapshot-id"] in keep_ids
+            ],
+        }
+        return new_meta, [], (meta, keep_ids, expired)
 
+    trimmed = _commit_retrying(os.path.join(table_path, "metadata"), ofs, attempt)[1]
+    if trimmed is None:
+        return {"expired": 0, "files_deleted": 0}
+    meta, keep_ids, expired = trimmed
     # GC: reachable-from-kept minus reachable-from-expired
-    kept_refs = _referenced_files(meta, keep_ids, fs=ofs)
-    dead = (
-        _referenced_files(meta, {s["snapshot-id"] for s in expired}, fs=ofs)
-        - kept_refs
+    dead = _referenced_files(meta, expired, fs=ofs) - _referenced_files(
+        meta, keep_ids, fs=ofs
     )
     n = 0
     for p in sorted(dead):

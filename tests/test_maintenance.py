@@ -251,3 +251,50 @@ def test_maintenance_counters_on_metrics(spark, tmp_path):
     out = b"".join(RestApp(eng)(environ, lambda s, h: None)).decode()
     assert 'redpanda_spark_maintenance_local_rewrites_total{topic="t"} 1' in out
     assert 'redpanda_spark_maintenance_spark_rewrites_total{topic="t"} 1' in out
+
+
+def test_checksum_sidecars_leave_with_their_segments(spark, tmp_path, monkeypatch):
+    """Spark-written segments on a local root carry Hadoop ``.crc``
+    sidecars: the in-process merge that deletes the segments deletes
+    them too, and reopen GC collects a sidecar whose segment is gone
+    while the sidecars of live segments stay."""
+    root = str(tmp_path / "r")
+    d = os.path.join(root, "t")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("t", TopicConfig(partitions=2))
+    bound = engine_mod._LOCAL_PRODUCE_MAX_BYTES
+
+    def distributed_produce(e, b):
+        monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", 0)
+        e.produce("t", _batch(b))
+        monkeypatch.setattr(engine_mod, "_LOCAL_PRODUCE_MAX_BYTES", bound)
+
+    def sidecars():
+        return sorted(n for n in os.listdir(d) if n.endswith(".crc"))
+
+    def live_sidecars(e):
+        return sorted(
+            f".{os.path.basename(f)}.crc"
+            for f in e._files["t"]
+            if os.path.basename(f).startswith("part-")
+        )
+
+    for b in range(3):
+        distributed_produce(eng, b)
+    before = _rows(eng, "t")
+    assert sidecars() and sidecars() == live_sidecars(eng)
+
+    _, jobs = _jobs(spark, "merge-sidecars", lambda: eng.optimize_segments("t"))
+    assert jobs == []
+    assert _rows(eng, "t") == before
+    assert sidecars() == []
+
+    distributed_produce(eng, 3)
+    kept = live_sidecars(eng)
+    assert kept and sidecars() == kept
+    stray = os.path.join(d, ".part-00000-gone-c000.parquet.crc")
+    with open(os.path.join(d, kept[0]), "rb") as src, open(stray, "wb") as dst:
+        dst.write(src.read())
+    reopened = TopicEngine(spark, root)
+    assert sidecars() == kept
+    assert _rows(reopened, "t") == _rows(eng, "t")

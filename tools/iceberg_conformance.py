@@ -12,7 +12,8 @@ snapshot manifest-list → manifest → data files, and the spec's required
 field-ids for manifest_file / manifest_entry / data_file).
 
 Purpose: a consumer that cannot inherit a writer bug traverses
-  version-hint.text → v{N}.metadata.json → manifest-list.avro →
+  version-hint.text (stepping forward while v{N+1} exists, as the
+  Hadoop catalog does) → v{N}.metadata.json → manifest-list.avro →
   manifest.avro → data parquet
 and returns what it found, so tests can assert the chain is readable by an
 implementation that only knows the published specs.
@@ -238,6 +239,10 @@ def traverse(table_path: str) -> dict:
     along the way. Raises on any broken link."""
     meta_dir = os.path.join(table_path, "metadata")
     version = int(open(os.path.join(meta_dir, "version-hint.text")).read().strip())
+    # Hadoop-catalog resolution: the hint may lag the last published
+    # version (a writer that crashed after its publish), never lead it
+    while os.path.exists(os.path.join(meta_dir, f"v{version + 1}.metadata.json")):
+        version += 1
     md_path = os.path.join(meta_dir, f"v{version}.metadata.json")
     md = json.load(open(md_path))
     errs: list[str] = []
