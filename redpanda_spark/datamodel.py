@@ -79,19 +79,6 @@ CONSUMER_OFFSETS_SCHEMA = T.StructType(
     ]
 )
 
-# Transactional ranges for read_committed filtering
-# (reference: src/v/model/record.h:607 tx_range; fetch.cc:116-187).
-TX_RANGES_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("partition", T.IntegerType(), False),
-        T.StructField("producer_id", T.LongType(), False),
-        T.StructField("first_offset", T.LongType(), False),
-        T.StructField("last_offset", T.LongType(), False),
-        T.StructField("outcome", T.StringType(), False),  # committed|aborted|open
-    ]
-)
-
 TESTDATA_TABLES = (
     "region",
     "nation",

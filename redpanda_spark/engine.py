@@ -155,8 +155,9 @@ class FencedWriterError(Exception):
         self.current = current
 
 
-# Group state (committed offsets, group metadata): keyed records of this
-# internal compacted topic, as in the reference (`group_metadata.h:71`).
+# Group state (committed offsets, group metadata) and transaction ranges:
+# keyed records of this internal compacted topic, as in the reference
+# (`group_metadata.h:71`; tx ranges are partition state, `rm_stm.h:130`).
 # Opened (and claimed) by every engine; it is never in the catalog, its
 # first manifest is written by the first commit, and list_topics hides it.
 OFFSETS_TOPIC = "__consumer_offsets"
@@ -504,10 +505,6 @@ class TopicEngine:
         self._log_start_cache: dict[str, tuple[str, dict[int, int]]] = {}
         # per topic: manifest text of the hot and archived segments
         self._manifest_text: dict[str, tuple[_SegmentsText, _SegmentsText]] = {}
-        # driver-side mirror of the (tiny) _tx_ranges side table, keyed by
-        # the dir's file listing — lets the hot tail serve read_committed
-        # with zero Spark jobs (LSO bound + aborted filter in-process)
-        self._tx_local_cache: tuple[tuple[str, ...], list[dict]] | None = None
         # keep-latest map of __consumer_offsets (record key -> decoded
         # value), keyed by the manifest file list it was replayed from
         self._group_cache: tuple[tuple[str, ...], dict] | None = None
@@ -711,16 +708,20 @@ class TopicEngine:
         )
 
     def _load_state(self) -> None:
-        for d in ("_consumer_offsets", "_groups"):
+        for d, state in (
+            ("_consumer_offsets", "group state"),
+            ("_groups", "group state"),
+            ("_tx_ranges", "transaction ranges"),
+        ):
             for legacy in (d, d + ".old", d + ".purge.tmp"):
-                # group state's old Parquet side tables (and a crashed
-                # purge swap's copies): not imported, so opening would
-                # silently drop every committed position
+                # the old Parquet side tables (and a crashed purge swap's
+                # copies): not imported, so opening would silently drop
+                # every committed position or aborted range
                 legacy = os.path.join(self.root, legacy)
                 if self._fsio.list_names(legacy):
                     raise ValueError(
-                        f"{legacy}: legacy group-state table, not read since "
-                        f"group state moved into the {OFFSETS_TOPIC} topic"
+                        f"{legacy}: legacy side table, not read since "
+                        f"{state} moved into the {OFFSETS_TOPIC} topic"
                     )
         if self._fsio.exists(self._meta_path):
             raw = json.loads(self._fsio.read_text(self._meta_path))
@@ -777,18 +778,6 @@ class TopicEngine:
                     self._claim_writer_epoch(t)
             if not self.read_only:
                 self._gc_orphans(t, archive=has_manifest)
-        if not self.read_only:
-            # a purge (delete_topic/unmount/create-debris) may have
-            # crashed mid-swap: roll the tx-range table to a whole copy
-            # BEFORE anything probes it (a half-swapped table reads as
-            # absent, which would hide rows from the create_topic debris
-            # probe — and strand them for a later purge to resurrect).
-            # Under the root lock: another engine may be mid-purge RIGHT
-            # NOW, and "rolling back" its in-flight swap would make its
-            # rename(tmp→d) collide (local roots; URI roots rely on the
-            # single-writer fence as everywhere else).
-            with self._fsio.write_lock(self.root):
-                self._recover_side_table_swap(self._tx_ranges_dir())
 
     def _gc_orphans(self, topic: str, archive: bool) -> None:
         """Crash recovery: delete segment files not referenced by the
@@ -864,22 +853,12 @@ class TopicEngine:
         # engine fenced on the old incarnation can never pass the fence
         # on the new one (the ABA hazard a restarted lineage would open).
         self._fsio.delete(self._manifest_path(topic))
-        # a crashed delete, unmount or mount may have left tx ranges and/or
-        # committed offsets for this name: stale aborted ranges would hide
-        # this fresh topic's rows at the reused offsets, and stale offsets
-        # would make consumers skip them. Both probes are driver-side
-        # (zero Spark jobs); each purge runs only on a hit.
-        if any(r["topic"] == topic for r in self._tx_ranges_local()):
-            # under the root lock, like every other purge call site: the
-            # swap must not interleave with another engine's purge
-            with self._fsio.write_lock(self.root):
-                self._purge_topic_metadata(topic)
-        self._purge_group_offsets(topic)
+        self._purge_topic_keys(topic)  # a crashed delete/unmount's leftovers
         self._save_state()
         self._commit_manifest(topic)
 
     def delete_topic(self, topic: str) -> None:
-        """Drop the topic's data, its tx-range rows and its committed
+        """Drop the topic's data, its tx ranges and its committed
         offsets. Without the purge, recreating a topic with the
         same name resurrects stale tx metadata — a leftover 'open' range
         would gate the new topic's LSO forever, and stale aborted ranges
@@ -896,7 +875,7 @@ class TopicEngine:
         # of a topic it no longer owns.
         with self._fsio.write_lock(self.root):
             self._check_writer_fence(topic)
-        self._purge_group_offsets(topic)
+        self._purge_topic_keys(topic, kinds=("offset",))
         # a stale writer must not destroy the current writer's topic —
         # and the fence must hold THROUGH the destructive sequence, not
         # just at entry: the root write_lock is held across the deletes
@@ -944,54 +923,30 @@ class TopicEngine:
             # the epoch CHAIN survives the topic (monotone lineage — see
             # create_topic); only our in-memory claim is dropped
             self._writer_epoch.pop(topic, None)
-            self._purge_topic_metadata(topic)
             self._save_state()
-        self._purge_group_offsets(topic)  # sweep: commits that raced in
+        self._purge_topic_keys(topic)  # tx keys, and offsets that raced in
 
-    def _recover_side_table_swap(self, d: str) -> None:
-        """Roll a crashed side-table swap (see _purge_topic_metadata)
-        forward or backward from whichever copy survived: ``d.old``
-        alongside ``d`` is debris from after the new copy landed (delete
-        it); ``d.old`` WITHOUT ``d`` means the crash hit between the two
-        renames — restore the original so no rows are stranded invisible
-        in ``.old`` (where a LATER purge of a different topic would
-        resurrect them after this topic's name was reused). Runs at
-        engine open and before every purge; the delete-topic kill-point
-        sweep drives every interleaving."""
-        old = d + ".old"
-        if self._fsio.exists(old):
-            if self._fsio.exists(d):
-                self._fsio.delete(old, recursive=True)
-            else:
-                self._fsio.rename(old, d)
-        self._fsio.delete(d + ".purge.tmp", recursive=True)
+    def _purge_topic_keys(
+        self, topic: str, kinds: tuple[str, ...] = ("offset", "tx")
+    ) -> None:
+        """Tombstone ``topic``'s OFFSETS_TOPIC keys of ``kinds`` in one
+        commit (which takes the root lock: call it outside a locked
+        section).
 
-    def _purge_topic_metadata(self, topic: str) -> None:
-        """Rewrite _tx_ranges dropping the topic's rows.
-        Crash-idempotent: write-tmp → rename(d→old) → rename(tmp→d)
-        → delete(old), with a half-done swap first rolled forward/backward
-        from whichever copy survived. Caller must hold the root
-        write_lock (every call site does): the roll-back of a crashed
-        swap must never race another engine's IN-FLIGHT swap, whose
-        rename(tmp→d) would then collide mid-sequence."""
-        d = self._tx_ranges_dir()
-        self._recover_side_table_swap(d)
-        try:
-            df = self.spark.read.parquet(d)
-        except Exception:
-            return  # side table doesn't exist yet
-        tmp = d + ".purge.tmp"
-        df.where(F.col("topic") != topic).write.mode("overwrite").parquet(tmp)
-        old = d + ".old"
-        self._fsio.rename(d, old)
-        self._fsio.rename(tmp, d)
-        self._fsio.delete(old, recursive=True)
-
-    def _purge_group_offsets(self, topic: str) -> None:
-        """Tombstone every committed offset of ``topic`` in one commit
-        (which takes the root lock: call it outside a locked section)."""
+        Ordering invariant: a topic's tx keys are tombstoned only once its
+        data is gone or detached — after delete_topic's locked removal,
+        after unmount_topic stages its handoff manifest — never before
+        (a crash in between would leave the topic live with its aborted
+        records reading as committed). A crash may therefore leave a gone
+        topic's keys behind, so every adoption of the name (create_topic,
+        and mount_topic before it replays a handoff) tombstones them
+        first."""
         self._group_append(
-            [(k, None) for k in self._group_map() if k[0] == "offset" and k[2] == topic]
+            [
+                (k, None)
+                for k in self._group_map()
+                if k[0] in kinds and k[2 if k[0] == "offset" else 1] == topic
+            ]
         )
 
     def list_topics(self) -> dict[str, TopicConfig]:
@@ -1846,9 +1801,8 @@ class TopicEngine:
 
     def _read_parquet_file(self, fs, path: str, columns=None, filters=None):
         """One parquet file as a pyarrow table — direct-path on a local
-        filesystem, bytes-through-the-driver on a URI one (tx outcomes,
-        group-state commits of OFFSETS_TOPIC, and the few segments a row
-        fetch reads)."""
+        filesystem, bytes-through-the-driver on a URI one (the records of
+        OFFSETS_TOPIC, and the few segments a row fetch reads)."""
         import pyarrow.parquet as _pq
 
         if getattr(fs, "is_local", True):
@@ -1862,44 +1816,20 @@ class TopicEngine:
         )
 
     def _tx_ranges_local(self) -> list[dict]:
-        """Driver-side (zero Spark jobs) replica of ``tx_ranges()``'s live
-        view: final rows + open rows not superseded by a final row for the
-        same (topic, partition, producer, first_offset). The side table is
-        tiny by design (one row per transaction outcome), read via pyarrow
-        and cached on the dir's file listing — one directory listing per
-        poll (POSIX scandir locally, Hadoop listStatus on URI roots), a
-        re-parse only when EndTxn/purge actually changed the table (an
-        os.listdir here silently read [] on URI roots)."""
-        d = self._tx_ranges_dir()
-        files = tuple(
-            sorted(f for f in self._fsio.list_names(d) if f.endswith(".parquet"))
-        )
-        if self._tx_local_cache is not None and self._tx_local_cache[0] == files:
-            return self._tx_local_cache[1]
-        rows: list[dict] = []
-        for f in files:
-            rows.extend(
-                self._read_parquet_file(self._fsio, os.path.join(d, f)).to_pylist()
-            )
-        final = [r for r in rows if r["outcome"] != "open"]
-        fkeys = {
-            (r["topic"], r["partition"], r["producer_id"], r["first_offset"])
-            for r in final
-        }
-        live = final + [
-            r
-            for r in rows
-            if r["outcome"] == "open"
-            and (r["topic"], r["partition"], r["producer_id"], r["first_offset"])
-            not in fkeys
+        """Live tx ranges (zero Spark jobs): the "tx" records of
+        OFFSETS_TOPIC's keep-latest map, where a range's EndTxn record
+        replaced its open one under the same key."""
+        return [
+            {"topic": k[1], "partition": k[2], "producer_id": k[3],
+             "first_offset": k[4], **v}
+            for k, v in self._group_map().items()
+            if k[0] == "tx"
         ]
-        self._tx_local_cache = (files, live)
-        return live
 
     def _visibility(self, topic, partition, isolation):
         """The read_committed visibility test of one partition's records,
-        or None at read_uncommitted. Applied in-process from the
-        driver-side tx-ranges mirror, as the reference's fetch applies the
+        or None at read_uncommitted. Applied in-process from the replayed
+        tx ranges, as the reference's fetch applies the
         LSO as a read bound (`handlers/fetch.cc:355-399`): offsets below
         the LSO (min open-txn first_offset, else HWM), outside aborted
         ranges, never control rows — the same predicates
@@ -2370,7 +2300,6 @@ class TopicEngine:
         offset: int = 0,
         max_records: int | None = None,
         isolation: str = "read_uncommitted",
-        tx_ranges: DataFrame | None = None,
         max_bytes: int | None = None,
     ) -> DataFrame:
         self._require(topic)
@@ -2389,9 +2318,7 @@ class TopicEngine:
         if starts:
             log = LOG.delete_records(log, starts)
         if isolation == "read_committed":
-            ranges = tx_ranges if tx_ranges is not None else self.tx_ranges()
-            if "topic" in ranges.columns:
-                ranges = ranges.where(F.col("topic") == topic)
+            ranges = self.tx_ranges().where(F.col("topic") == topic)
             log = _read_committed(log, ranges)
         if max_bytes is not None:
             # Kafka byte budget (max.partition.fetch.bytes): whole records
@@ -2410,9 +2337,7 @@ class TopicEngine:
             return out
         from redpanda_spark.operators.transactions import last_stable_offset
 
-        ranges = self.tx_ranges()
-        if "topic" in ranges.columns:
-            ranges = ranges.where(F.col("topic") == topic)
+        ranges = self.tx_ranges().where(F.col("topic") == topic)
         lso = last_stable_offset(self.log(topic), ranges)
         return (
             out.join(F.broadcast(lso), "partition", "left")
@@ -2772,9 +2697,7 @@ class TopicEngine:
             # guard closes the direct-call path
             raise ValueError("cannot compact a topic with archived segments")
         log = self._local_log(topic)
-        ranges = self.tx_ranges()
-        if "topic" in ranges.columns:
-            ranges = ranges.where(F.col("topic") == topic)
+        ranges = self.tx_ranges().where(F.col("topic") == topic)
 
         def _range_cond():
             return (
@@ -3077,13 +3000,12 @@ class TopicEngine:
         # Transaction metadata travels WITH the topic: aborted ranges are
         # what keeps read_committed honest on the target cluster (the
         # reference carries tx markers inside the log itself, so its
-        # migration moves them for free; our side-table design must do it
-        # explicitly). An OPEN transaction means the topic isn't
+        # migration moves them for free; here they are records of the
+        # root's internal topic, so the handoff carries them explicitly).
+        # An OPEN transaction means the topic isn't
         # quiesced — refuse, exactly as leadership transfer waits for
         # in-flight transactions.
-        tx_rows = [
-            dict(r) for r in self._tx_ranges_local() if r["topic"] == topic
-        ]
+        tx_rows = [r for r in self._tx_ranges_local() if r["topic"] == topic]
         if any(r["outcome"] == "open" for r in tx_rows):
             raise ValueError(
                 f"topic {topic}: open transaction in flight — "
@@ -3149,7 +3071,8 @@ class TopicEngine:
         for f in files:
             self._fsio.delete(os.path.join(self.root, f))
         # Phase 2: local detach, then STAGE the bucket handoff manifest,
-        # then purge — ALL under the root lock, in exactly that order:
+        # then purge — in exactly that order, under the root lock up to
+        # the tombstone commit (which takes the lock itself):
         #
         #   fence check .. _save_state   detach commit point. The fence
         #                                is re-checked here: a writer
@@ -3176,7 +3099,7 @@ class TopicEngine:
         #                                source still fully owns, and a
         #                                resume_claim on another cluster
         #                                would then double-own it.
-        #   purge + local deletes        cleanup; every piece is now
+        #   local deletes + tombstones   cleanup; every piece is now
         #                                durable in the bucket.
         #
         # Crash states: before _save_state → topic still owned (retry
@@ -3241,8 +3164,7 @@ class TopicEngine:
             self._fsio.delete(self._manifest_path(topic))
             # epoch chain survives (monotone lineage across mounts)
             self._writer_epoch.pop(topic, None)
-            self._purge_topic_metadata(topic)
-        self._purge_group_offsets(topic)  # commits, so outside the lock
+        self._purge_topic_keys(topic)
         # Phase 3: PUBLISH the handoff token by atomic rename of the
         # staged manifest to its mountable name. Mount reads it for O(1)
         # metadata adoption (exact config + watermarks even for
@@ -3407,11 +3329,11 @@ class TopicEngine:
             self._arch_epoch[topic] = int(m.get("arch_epoch", 0))
             self._fsio.mkdirs(self._topic_dir(topic))
             self._commit_manifest(topic)  # claims the writer epoch
+            self._purge_topic_keys(topic)  # a crashed delete's leftovers
             if m.get("tx_ranges"):
                 # restore the migrated aborted/committed ranges so
                 # read_committed filters identically on the target
-                # cluster (duplicate rows from a resumed mount are
-                # harmless: range filtering is idempotent per row)
+                # cluster (a resumed mount rewrites the same keys)
                 from redpanda_spark.operators.txcoord import tx_ranges_frame
 
                 self.append_tx_ranges(tx_ranges_frame(self.spark, m["tx_ranges"]))
@@ -3446,9 +3368,7 @@ class TopicEngine:
             self._writer_epoch.pop(topic, None)
             try:
                 self._fsio.delete(self._manifest_path(topic))
-                with self._fsio.write_lock(self.root):  # purge discipline
-                    self._purge_topic_metadata(topic)  # replayed tx rows
-                self._purge_group_offsets(topic)  # replayed offsets
+                self._purge_topic_keys(topic)  # replayed tx rows, offsets
                 self._save_state()
             except BaseException:
                 pass  # reopen-time GC / resume_claim cover the debris
@@ -3759,33 +3679,31 @@ class TopicEngine:
 
     # -- transaction ranges (rm_stm aborted/committed tx metadata) --------
 
-    def _tx_ranges_dir(self) -> str:
-        return os.path.join(self.root, "_tx_ranges")
-
     def append_tx_ranges(self, df: DataFrame) -> None:
-        """Record transaction outcomes (one row per (topic, partition,
-        producer, offset-range)). Appended by the TxCoordinator at EndTxn;
-        read_committed fetches anti-join the aborted rows."""
+        """Record transaction ranges, one row per (topic, partition,
+        producer, offset range), as ONE commit of OFFSETS_TOPIC records
+        keyed ("tx", topic, partition, producer_id, first_offset) — so a
+        range's EndTxn outcome replaces its open record. ``df`` is
+        collected: the TxCoordinator's frames are Arrow LocalRelations,
+        so the append runs no Spark job on a local root."""
         self._refuse_read_only()
-        df.write.mode("append").parquet(self._tx_ranges_dir())
+        self._group_append(
+            [
+                (
+                    ("tx", r["topic"], r["partition"], r["producer_id"],
+                     r["first_offset"]),
+                    {"last_offset": r["last_offset"], "outcome": r["outcome"]},
+                )
+                for r in df.collect()
+            ]
+        )
 
     def tx_ranges(self) -> DataFrame:
-        """Live tx metadata: final (committed/aborted) rows plus open rows
-        not yet superseded by an EndTxn row for the same (topic, partition,
-        producer, first_offset). Tiny table — the anti-join broadcasts."""
+        """Live tx ranges (``_tx_ranges_local``) as an Arrow LocalRelation:
+        committed and aborted ranges plus the still-open ones."""
         from redpanda_spark.operators.txcoord import tx_ranges_frame
 
-        d = self._tx_ranges_dir()
-        try:
-            raw = self.spark.read.parquet(d)
-        except Exception:
-            return tx_ranges_frame(self.spark, [])
-        final = raw.where(F.col("outcome") != "open")
-        keys = ["topic", "partition", "producer_id", "first_offset"]
-        live_open = raw.where(F.col("outcome") == "open").join(
-            F.broadcast(final.select(*keys)), keys, "left_anti"
-        )
-        return final.unionByName(live_open)
+        return tx_ranges_frame(self.spark, self._tx_ranges_local())
 
     # -- group state: records of OFFSETS_TOPIC ----------------------------
 

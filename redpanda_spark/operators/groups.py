@@ -26,8 +26,9 @@ GROUP_KEY = ["group_id", "topic", "partition"]
 def encode_group_record(
     key: tuple, value: dict | None
 ) -> tuple[bytes, bytes | None]:
-    """Record key and value bytes of one group-state record. Keys are
-    ``("offset", group, topic, partition)`` or ``("group", group)``;
+    """Record key and value bytes of one record of the internal topic. Keys
+    are ``("offset", group, topic, partition)``, ``("group", group)`` or
+    ``("tx", topic, partition, producer_id, first_offset)``;
     values are JSON objects; ``None`` is the tombstone (null value)."""
     return (
         json.dumps(key).encode(),

@@ -9,12 +9,16 @@ describe_producers.cc`, `describe_transactions.cc`, `list_transactions.cc`).
 Spark design: transactional produce stages records like any append, but the
 records carry (producer_id, producer_epoch, is_transactional=true); the
 coordinator tracks per-transactional-id state driver-side (tiny — one row
-per open transaction, exactly like tm_stm's replicated map) and on
-commit/abort appends the outcome to the engine's `_tx_ranges` side table.
-Readers at read_committed anti-join `_tx_ranges` (operators/transactions.py
-::read_committed) — so data files are never rewritten on abort, matching
-the reference where aborted batches stay in the log and are filtered at
-fetch time (`fetch.cc:116-187`).
+per open transaction, exactly like tm_stm's replicated map). A partition's
+first transactional write records its range as open, and commit/abort
+records the outcome under the same key: both are "tx" records of the
+engine's internal `__consumer_offsets` topic (engine.append_tx_ranges),
+one zero-job in-process commit each on a local root. Readers at
+read_committed drop the aborted ranges and stop at the first open one
+(operators/transactions.py::read_committed, engine._visibility) — so data
+files are never rewritten on abort, matching the reference where aborted
+batches stay in the log and are filtered at fetch time (`fetch.cc:116-187`)
+and tx ranges are partition state rebuilt from the log (`rm_stm.h:130`).
 
 Group offsets inside a transaction (TxnOffsetCommit, 28) are staged in the
 coordinator and only forwarded to the engine's consumer-offset path when
@@ -171,9 +175,9 @@ class TxCoordinator:
         transaction.timeout.ms — tm_stm's periodic expiry (the reference's
         coordinator aborts hung producers so their open ranges stop
         holding back the LSO and read_committed consumers). Returns the
-        aborted transactional ids; the abort markers land in `_tx_ranges`
-        exactly like a client abort, so fetch-side filtering needs no new
-        machinery."""
+        aborted transactional ids; each abort is recorded as the range's
+        "tx" record of the internal topic exactly like a client abort, so
+        fetch-side filtering needs no new machinery."""
         import time as _time
 
         now = now_ms if now_ms is not None else int(_time.time() * 1000)

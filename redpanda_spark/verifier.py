@@ -278,9 +278,7 @@ def run_workload(
         # compaction's tx_reducer drops them first — an aborted write
         # must never be expected to win keep-latest.
         before = engine.log(topic)
-        ranges = engine.tx_ranges()
-        if "topic" in ranges.columns:
-            ranges = ranges.where(F.col("topic") == topic)
+        ranges = engine.tx_ranges().where(F.col("topic") == topic)
         aborted = ranges.where(F.col("outcome") == "aborted").select(
             F.col("partition").alias("a_partition"),
             F.col("producer_id").alias("a_pid"),

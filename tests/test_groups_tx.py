@@ -248,6 +248,77 @@ def test_tx_ranges_without_transactions_runs_no_spark_job(spark, tmp_path):
     ]
 
 
+def test_tx_produce_commit_abort_run_no_spark_job(spark, tmp_path):
+    """Tx ranges are "tx" records of __consumer_offsets: on a local root
+    a transactional record-list produce (its open record), a commit and
+    an abort each run zero Spark jobs. read_committed row fetches and
+    list_offsets hide the aborted range and stop at the open one, and
+    the live ranges survive compact_offsets and a reopen unchanged."""
+    from redpanda_spark.engine import TopicConfig, TopicEngine
+    from redpanda_spark.operators.txcoord import TxCoordinator
+
+    root = str(tmp_path / "root")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("t", TopicConfig(partitions=1))
+    tc = TxCoordinator(eng)
+    tc.init_producer_id("tx")
+
+    def rec(v):
+        return [{"key": None, "value": v.encode(), "partition": 0}]
+
+    def tx(label, fn):
+        _, jobs = _job_ids(spark, label, fn)
+        assert jobs == [], label
+
+    tx("tx-produce-1", lambda: tc.produce("tx", "t", rec("c0")))  # offset 0
+    tx("tx-commit", lambda: tc.commit("tx"))
+    tx("tx-produce-2", lambda: tc.produce("tx", "t", rec("a1")))  # offset 1
+    tx("tx-abort", lambda: tc.abort("tx"))
+    eng.produce("t", rec("p2"))  # offset 2
+    tx("tx-produce-3", lambda: tc.produce("tx", "t", rec("o3")))  # open at 3
+    eng.produce("t", rec("p4"))  # offset 4, held back by the open range
+
+    def rc_rows():
+        rows = eng.fetch_rows("t", 0, isolation="read_committed")
+        return [bytes(r["value"]).decode() for r in rows]
+
+    def rc_latest():
+        out = eng.list_offsets("t", isolation="read_committed").collect()
+        return {r["partition"]: r["latest_offset"] for r in out}
+
+    assert rc_rows() == ["c0", "p2"]
+    assert rc_latest() == {0: 3}
+    ranges = sorted(eng.tx_ranges().collect())
+    assert [(r["first_offset"], r["outcome"]) for r in ranges] == [
+        (0, "committed"), (1, "aborted"), (3, "open"),
+    ]
+    eng.compact_offsets()
+    assert sorted(eng.tx_ranges().collect()) == ranges
+    reopened = TopicEngine(spark, root, read_only=True)  # does not fence
+    assert sorted(reopened.tx_ranges().collect()) == ranges
+    tc.commit("tx")
+    assert rc_rows() == ["c0", "p2", "o3", "p4"]
+    assert rc_latest() == {0: 5}
+
+
+def test_legacy_tx_ranges_side_table_refuses_to_open(spark, tmp_path):
+    """A root that still holds the old `_tx_ranges` Parquet side table
+    (or a crashed purge swap's copy) must not open as if no range were
+    aborted: its aborted records would read as committed."""
+    import os
+
+    import pytest
+
+    from redpanda_spark.engine import TopicEngine
+
+    for d in ("_tx_ranges", "_tx_ranges.old", "_tx_ranges.purge.tmp"):
+        root = tmp_path / d.strip("_")
+        os.makedirs(root / d)
+        (root / d / "part-00000.parquet").write_bytes(b"")
+        with pytest.raises(ValueError, match=f"{d}: .*transaction ranges"):
+            TopicEngine(spark, str(root))
+
+
 def test_internal_offsets_topic_is_hidden_and_reserved(spark, tmp_path, capsys):
     import json
 

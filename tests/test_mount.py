@@ -1193,6 +1193,64 @@ def test_crash_sweep_delete_topic_never_resurrects_metadata(
     )
 
 
+def test_mount_after_crashed_delete_drops_stale_tx_ranges(spark, tmp_path):
+    """delete_topic tombstones a topic's tx ranges only after its
+    catalog removal, so a crash in between leaves them behind for a gone
+    topic. A topic of the same name mounted from a bucket must not
+    inherit them: here a stale aborted range of producer 7 covers offset
+    0, where the mounted topic holds a transactional record of producer 7
+    that read_committed must still show."""
+    from pyspark.sql import Row
+
+    from redpanda_spark.operators.txcoord import TX_RANGE_SCHEMA
+
+    cold = tmp_path / "bucket"
+
+    def tx_record(v):
+        return {
+            "value": v.encode(), "timestamp": BASE, "partition": 0,
+            "producer_id": 7, "producer_epoch": 0, "base_sequence": 0,
+            "is_transactional": True,
+        }
+
+    a = _mk_engine(spark, tmp_path, "a", cold)
+    a.create_topic("t", _cfg(partitions=1))
+    a.produce("t", [tx_record("stale")])
+    a.append_tx_ranges(
+        spark.createDataFrame(
+            [Row(topic="t", partition=0, producer_id=7, first_offset=0,
+                 last_offset=0, outcome="aborted")],
+            TX_RANGE_SCHEMA,
+        )
+    )
+    real_append = a._group_append
+
+    def crash_on_tx_tombstones(records):
+        if any(k[0] == "tx" for k, _ in records):
+            raise _Crash("before the tx tombstones")
+        real_append(records)
+
+    a._group_append = crash_on_tx_tombstones
+    with pytest.raises(_Crash):
+        a.delete_topic("t")
+
+    rec = _mk_engine(spark, tmp_path, "a", cold)
+    assert "t" not in rec.list_topics()
+    assert _tx_rows_for(rec, "t") == {(0, 7, 0, 0, "aborted")}  # left behind
+
+    src = _mk_engine(spark, tmp_path, "src", cold)
+    src.create_topic("t", _cfg(partitions=1))
+    src.produce("t", [tx_record("m0")])
+    _produce(src, "t", ["m1"])
+    src.unmount_topic("t")
+    rec.mount_topic("t")
+    assert _tx_rows_for(rec, "t") == set()
+    rows = rec.fetch_rows("t", 0, isolation="read_committed")
+    assert [bytes(r["value"]) for r in rows] == [b"m0", b"m1"]
+    scan = rec.fetch("t", 0, isolation="read_committed").orderBy("offset")
+    assert [bytes(r["value"]) for r in scan.collect()] == [b"m0", b"m1"]
+
+
 def test_rest_and_cli_group_migration_surfaces(spark, tmp_path, capsys):
     """The with_groups opt-in rides through both admin surfaces: REST
     body {"with_groups": [...]} and CLI --with-groups."""
