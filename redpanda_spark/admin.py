@@ -11,9 +11,9 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
 
 from redpanda_spark.engine import TopicConfig, TopicEngine
+from redpanda_spark.operators.txcoord import TxCoordinator, _ProducerIdAllocator
 
 # Topic configs that map to TopicConfig attributes (Kafka config names).
 _ATTR_CONFIGS = {
@@ -43,10 +43,7 @@ class AdminClient:
         # admin metadata lives next to the data on URI / object-store
         # roots too (raw os IO reads nothing and crashes at save there)
         self._fsio = engine._fsio
-        self._producer_ids = _ProducerIdAllocator(
-            os.path.join(engine.root, "_producer_ids.json"),
-            fsio=engine._fsio,
-        )
+        self._producer_ids = _ProducerIdAllocator(engine.root, engine._fsio)
         # client quotas are DURABLE cluster metadata in the reference
         # (AlterClientQuotas writes the controller log, client_quotas.cc);
         # persisted like producer ids so a restarted admin/CLI sees them.
@@ -240,9 +237,13 @@ class AdminClient:
     # -- InitProducerId (22) ----------------------------------------------
 
     def init_producer_id(self, transactional_id: str | None = None) -> tuple[int, int]:
-        """Allocate (producer_id, epoch). Re-initializing a transactional id
-        bumps its epoch (fencing); non-transactional gets a fresh id."""
-        return self._producer_ids.allocate(transactional_id)
+        """Allocate (producer_id, epoch): a fresh id without a
+        transactional id; with one, the transaction coordinator's
+        InitProducerId, whose re-init bumps the epoch and aborts the
+        previous incarnation's ongoing transaction."""
+        if transactional_id is None:
+            return self._producer_ids.allocate(), 0
+        return TxCoordinator(self.engine).init_producer_id(transactional_id)
 
     # -- DescribeLogDirs (35) ---------------------------------------------
 
@@ -328,67 +329,3 @@ class AdminClient:
         self.quotas[client_id][bk] = bucket
         self.quotas[client_id][lk] = now
         return delay
-
-
-@dataclass
-class _ProducerIdAllocator:
-    """Monotonic id allocation + epoch fencing (cluster/id_allocator_stm.cc,
-    rm_stm epoch bump). Persisted so ids survive restarts."""
-
-    path: str
-    next_id: int = 0
-    tx_ids: dict[str, tuple[int, int]] = field(default_factory=dict)
-    # filesystem abstraction (engine._fsio); default = plain local paths
-    fsio: object | None = None
-    # root whose write_lock serializes allocations across processes
-    # (defaults to the store file's directory)
-    lock_root: str | None = None
-
-    def __post_init__(self):
-        if self.fsio is None:
-            from redpanda_spark.fsio import LocalFS
-
-            self.fsio = LocalFS()
-        if self.lock_root is None:
-            self.lock_root = os.path.dirname(self.path)
-        self._reload()
-
-    def _reload(self):
-        import json
-
-        if self.fsio.exists(self.path):
-            raw = json.loads(self.fsio.read_text(self.path))
-            self.next_id = raw["next_id"]
-            self.tx_ids = {k: tuple(v) for k, v in raw["tx_ids"].items()}
-
-    def allocate(self, transactional_id: str | None) -> tuple[int, int]:
-        # RELOAD + mutate + save under the root write lock: the store
-        # file is shared by every process on the root (engine, CLI,
-        # REST), and an in-memory-only bump would reissue a pid another
-        # process already allocated — breaking the idempotence window
-        # and epoch fencing that key on pid uniqueness (the reference
-        # serializes this through the id_allocator_stm raft group).
-        with self.fsio.write_lock(self.lock_root):
-            self._reload()
-            if transactional_id is None:
-                pid = self.next_id
-                self.next_id += 1
-                self._save()
-                return pid, 0
-            if transactional_id in self.tx_ids:
-                pid, epoch = self.tx_ids[transactional_id]
-                self.tx_ids[transactional_id] = (pid, epoch + 1)
-            else:
-                self.tx_ids[transactional_id] = (self.next_id, 0)
-                self.next_id += 1
-            self._save()
-            return self.tx_ids[transactional_id]
-
-    def _save(self):
-        import json
-
-        # tmp + rename: producer-id state survives a crash mid-write
-        # (losing it would reissue pids and break epoch fencing)
-        self.fsio.write_text_atomic(
-            self.path, json.dumps({"next_id": self.next_id, "tx_ids": self.tx_ids})
-        )

@@ -169,8 +169,9 @@ def cmd_topic_alter_config(args) -> int:
 def cmd_topic_truncate(args) -> int:
     eng = _engine(args)
     eng.delete_records(args.topic, {args.partition: args.before_offset})
+    start = eng._log_starts(args.topic).get(args.partition, 0)
     print(json.dumps({"topic": args.topic, "partition": args.partition,
-                      "new_start_offset": args.before_offset}))
+                      "new_start_offset": start}))
     return 0
 
 
@@ -1037,14 +1038,16 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from redpanda_spark.engine import OffsetOutOfRangeError
     from redpanda_spark.sources.iceberg_export import CommitConflictError
 
     args = build_parser().parse_args(argv)
     try:
         return args.fn(args)
-    except CommitConflictError as e:
-        # the Iceberg verbs' expected failure under concurrent writers:
-        # one line, not a traceback
+    except (CommitConflictError, OffsetOutOfRangeError) as e:
+        # expected refusals (an Iceberg commit lost to a concurrent
+        # writer, a truncate past the high watermark): one line, not a
+        # traceback
         print(f"error: {e}", file=sys.stderr)
         return 1
 

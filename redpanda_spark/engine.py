@@ -136,6 +136,16 @@ class ProduceError(Exception):
         self.code = code
 
 
+class OffsetOutOfRangeError(ValueError):
+    """OFFSET_OUT_OF_RANGE: a DeleteRecords offset past the high watermark
+    (KIP-107)."""
+
+    code = "OFFSET_OUT_OF_RANGE"
+
+    def __init__(self, detail: str):
+        super().__init__(f"{self.code}: {detail}")
+
+
 class FencedWriterError(Exception):
     """Raised when this engine's writer epoch for a topic is stale: another
     engine opened the same root (claiming a higher epoch) after we did, so
@@ -723,6 +733,19 @@ class TopicEngine:
                         f"{legacy}: legacy side table, not read since "
                         f"{state} moved into the {OFFSETS_TOPIC} topic"
                     )
+        # the old transaction-coordinator stores: its snapshot file, and
+        # the transactional ids the producer-id allocator used to keep
+        for name, key in (("_tx_coordinator.json", None),
+                          ("_producer_ids.json", "tx_ids")):
+            legacy = os.path.join(self.root, name)
+            if self._fsio.exists(legacy) and (
+                key is None or json.loads(self._fsio.read_text(legacy)).get(key)
+            ):
+                raise ValueError(
+                    f"{legacy}: legacy transaction coordinator state, not "
+                    f"read since transaction state moved into the "
+                    f"{OFFSETS_TOPIC} topic"
+                )
         if self._fsio.exists(self._meta_path):
             raw = json.loads(self._fsio.read_text(self._meta_path))
             self._topics = {t: TopicConfig(**c) for t, c in raw.items()}
@@ -2407,12 +2430,22 @@ class TopicEngine:
         return dict(hit[1])
 
     def delete_records(self, topic: str, start_offsets: dict[int, int]) -> None:
-        """Advance log start offsets (visibility-immediate prefix truncate)."""
+        """Advance log start offsets (visibility-immediate prefix truncate).
+        As in KIP-107, -1 means the high watermark, and an offset past it
+        is refused whole with OFFSET_OUT_OF_RANGE."""
         cfg = self._require(topic)
         self._refuse_replica_mutation(topic)
         cur = self._log_starts(topic)
+        high = self._high.get(topic, {})
         for p, o in start_offsets.items():
-            cur[p] = max(cur.get(p, 0), o)
+            hwm = high.get(p, 0)
+            if not -1 <= o <= hwm:
+                raise OffsetOutOfRangeError(
+                    f"{topic}/{p}: offset {o} is not between 0 and the high "
+                    f"watermark {hwm} (or -1, which means it)"
+                )
+        for p, o in start_offsets.items():
+            cur[p] = max(cur.get(p, 0), high.get(p, 0) if o == -1 else o)
         cfg.configs["_log_starts"] = json.dumps(cur)
         self._save_state()
 
@@ -3334,9 +3367,7 @@ class TopicEngine:
                 # restore the migrated aborted/committed ranges so
                 # read_committed filters identically on the target
                 # cluster (a resumed mount rewrites the same keys)
-                from redpanda_spark.operators.txcoord import tx_ranges_frame
-
-                self.append_tx_ranges(tx_ranges_frame(self.spark, m["tx_ranges"]))
+                self.append_tx_ranges(m["tx_ranges"])
             # first-class consumer-offset migration (opt-in at unmount):
             # resume at the exact committed positions. Batched per group
             # (offset_commit_batch, the OffsetCommit-request shape): one
@@ -3679,22 +3710,21 @@ class TopicEngine:
 
     # -- transaction ranges (rm_stm aborted/committed tx metadata) --------
 
-    def append_tx_ranges(self, df: DataFrame) -> None:
-        """Record transaction ranges, one row per (topic, partition,
-        producer, offset range), as ONE commit of OFFSETS_TOPIC records
-        keyed ("tx", topic, partition, producer_id, first_offset) — so a
-        range's EndTxn outcome replaces its open record. ``df`` is
-        collected: the TxCoordinator's frames are Arrow LocalRelations,
-        so the append runs no Spark job on a local root."""
-        self._refuse_read_only()
+    def append_tx_ranges(self, rows) -> None:
+        """Record transaction ranges — mappings with the TX_RANGE_SCHEMA
+        columns, e.g. a handoff manifest's rows (a DataFrame of them is
+        collected) — as ONE commit of their OFFSETS_TOPIC records
+        (``groups.tx_range_record``). The TxCoordinator writes its range
+        records inside its own batches instead."""
+        if isinstance(rows, DataFrame):
+            rows = rows.collect()
         self._group_append(
             [
-                (
-                    ("tx", r["topic"], r["partition"], r["producer_id"],
-                     r["first_offset"]),
-                    {"last_offset": r["last_offset"], "outcome": r["outcome"]},
+                G.tx_range_record(
+                    r["topic"], r["partition"], r["producer_id"],
+                    r["first_offset"], r["last_offset"], r["outcome"],
                 )
-                for r in df.collect()
+                for r in rows
             ]
         )
 
@@ -3742,10 +3772,21 @@ class TopicEngine:
         """Commit (key, value) records as ONE batch of OFFSETS_TOPIC by the
         normal produce path (zero-job _produce_local on local roots),
         atomic and fenced like every commit; the next _group_map call
-        replays the new file."""
+        replays the new file. A decided tx range is final: a batch that
+        would turn a committed range aborted, or the reverse, is refused
+        whole."""
         self._refuse_read_only()
         if not records:
             return
+        outcomes = [(k, v["outcome"]) for k, v in records if k[0] == "tx" and v]
+        if outcomes:
+            state = self._group_map()
+            for k, new in outcomes:
+                old = state.get(k, {}).get("outcome")
+                if {old, new} == {"committed", "aborted"}:
+                    raise ValueError(
+                        f"tx range {list(k[1:])} is already {old}: refusing {new}"
+                    )
         self._produce_impl(
             OFFSETS_TOPIC,
             [
@@ -3777,17 +3818,8 @@ class TopicEngine:
         self, group_id: str, topic: str, partition: int, offset: int,
         metadata: str = "",
     ) -> None:
-        value = self._offset_value(offset, metadata)
+        value = G.offset_value(offset, metadata)
         self._group_append([(("offset", group_id, topic, int(partition)), value)])
-
-    @staticmethod
-    def _offset_value(offset: int, metadata: str = "") -> dict:
-        return {
-            "committed_offset": int(offset),
-            "leader_epoch": 0,
-            "metadata": metadata,
-            "commit_seq": time.time_ns(),  # commit time: KIP-211 expiry
-        }
 
     def offset_commit_batch(
         self, group_id: str, offsets: dict[tuple[str, int], int | None]
@@ -3800,7 +3832,7 @@ class TopicEngine:
             [
                 (
                     ("offset", group_id, t, int(p)),
-                    None if off is None else self._offset_value(off),
+                    None if off is None else G.offset_value(off),
                 )
                 for (t, p), off in offsets.items()
             ]
@@ -3871,20 +3903,20 @@ class TopicEngine:
     ) -> int:
         """GC committed offsets older than offsets.retention.ms for groups
         with no live members (KIP-211 semantics; the reference expires
-        through the group coordinator's periodic offset GC). Writes the
-        tombstones as ONE commit."""
-        if not any(k[0] == "offset" for k in self._group_map()):
-            return 0
+        through the group coordinator's periodic offset GC). Decided on
+        the replayed map, with no Spark job: a partition's latest commit
+        is all that counts (keep-latest shadows the earlier ones). Writes
+        the tombstones as ONE commit."""
         now = now_ns if now_ns is not None else time.time_ns()
-        active = None
-        if active_group_ids:
-            active = self.spark.createDataFrame(
-                [(g,) for g in active_group_ids], "group_id string"
-            )
-        commits = self._offsets_df()
-        exp = G.expired_offsets(commits, now, retention_ms, active).collect()
-        self._group_append([(("offset", *r[:3]), None) for r in exp])
-        return len(exp)
+        cutoff = now - retention_ms * 1_000_000
+        active = set(active_group_ids or ())
+        gone = [
+            k
+            for k, v in self._group_map().items()
+            if k[0] == "offset" and k[1] not in active and v["commit_seq"] < cutoff
+        ]
+        self._group_append([(k, None) for k in gone])
+        return len(gone)
 
     def offset_fetch(self, group_id: str | None = None) -> DataFrame:
         """OffsetFetch: latest committed offset per (group, topic,

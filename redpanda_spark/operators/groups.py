@@ -8,12 +8,13 @@ internal ``__consumer_offsets`` topic holds records encoded by
 :func:`encode_group_record`, replayed driver-side into a keep-latest map.
 The DataFrame operators below read a commits table (one row per commit
 event, keep-latest by (group, topic, partition)) — the catalog queries'
-shape, and the one the engine's offset expiry feeds :func:`expired_offsets`.
+shape.
 """
 
 from __future__ import annotations
 
 import json
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,9 +28,10 @@ def encode_group_record(
     key: tuple, value: dict | None
 ) -> tuple[bytes, bytes | None]:
     """Record key and value bytes of one record of the internal topic. Keys
-    are ``("offset", group, topic, partition)``, ``("group", group)`` or
-    ``("tx", topic, partition, producer_id, first_offset)``;
-    values are JSON objects; ``None`` is the tombstone (null value)."""
+    are ``("offset", group, topic, partition)``, ``("group", group)``,
+    ``("tx", topic, partition, producer_id, first_offset)`` or
+    ``("txn", transactional_id)``; values are JSON objects; ``None`` is
+    the tombstone (null value)."""
     return (
         json.dumps(key).encode(),
         None if value is None else json.dumps(value).encode(),
@@ -38,6 +40,28 @@ def encode_group_record(
 
 def decode_group_record(key: bytes, value: bytes | None) -> tuple[tuple, dict | None]:
     return tuple(json.loads(key)), None if value is None else json.loads(value)
+
+
+def offset_value(offset: int, metadata: str = "") -> dict:
+    """The value of an ``"offset"`` record: a committed position."""
+    return {
+        "committed_offset": int(offset),
+        "leader_epoch": 0,
+        "metadata": metadata,
+        "commit_seq": time.time_ns(),  # commit time: KIP-211 expiry
+    }
+
+
+def tx_range_record(
+    topic, partition, producer_id, first_offset, last_offset, outcome
+) -> tuple[tuple, dict | None]:
+    """The ``"tx"`` record of one transaction range: open, committed or
+    aborted (an EndTxn outcome replaces the open record under its key);
+    a None outcome is the range's tombstone."""
+    key = ("tx", topic, partition, producer_id, first_offset)
+    if outcome is None:
+        return key, None
+    return key, {"last_offset": last_offset, "outcome": outcome}
 
 
 def offset_fetch(commits: DataFrame) -> DataFrame:
@@ -65,24 +89,3 @@ def group_lag(commits: DataFrame, log_ends: DataFrame) -> DataFrame:
         "lag", F.col("high_watermark") - F.col("committed_offset")
     )
 
-
-def expired_offsets(
-    commits: DataFrame,
-    now_ns: int,
-    retention_ms: int,
-    active_groups: DataFrame | None = None,
-) -> DataFrame:
-    """Offsets eligible for expiry (KIP-211; reference: group offset GC in
-    the group coordinator — `src/v/kafka/server/group.cc` offset_expiry):
-    the LATEST commit per (group, topic, partition) is expirable when it is
-    older than `offsets.retention.ms` AND the group has no live members.
-    Earlier commits never matter (keep-latest shadows them), and a single
-    fresh commit protects its partition slot."""
-    latest = compact_keep_latest(commits, GROUP_KEY, order_col="commit_seq")
-    cutoff = now_ns - retention_ms * 1_000_000
-    exp = latest.where(~F.col("deleted") & (F.col("commit_seq") < cutoff))
-    if active_groups is not None:
-        exp = exp.join(
-            F.broadcast(active_groups.select("group_id")), "group_id", "left_anti"
-        )
-    return exp.select(*GROUP_KEY, "committed_offset", "commit_seq")

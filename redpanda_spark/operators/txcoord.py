@@ -7,27 +7,38 @@ and the introspection RPCs DescribeProducers (61) / DescribeTransactions
 describe_producers.cc`, `describe_transactions.cc`, `list_transactions.cc`).
 
 Spark design: transactional produce stages records like any append, but the
-records carry (producer_id, producer_epoch, is_transactional=true); the
-coordinator tracks per-transactional-id state driver-side (tiny — one row
-per open transaction, exactly like tm_stm's replicated map). A partition's
-first transactional write records its range as open, and commit/abort
-records the outcome under the same key: both are "tx" records of the
-engine's internal `__consumer_offsets` topic (engine.append_tx_ranges),
-one zero-job in-process commit each on a local root. Readers at
-read_committed drop the aborted ranges and stop at the first open one
-(operators/transactions.py::read_committed, engine._visibility) — so data
-files are never rewritten on abort, matching the reference where aborted
-batches stay in the log and are filtered at fetch time (`fetch.cc:116-187`)
-and tx ranges are partition state rebuilt from the log (`rm_stm.h:130`).
+records carry (producer_id, producer_epoch, is_transactional=true). All
+coordinator state lives in the engine's internal `__consumer_offsets`
+topic, as tm_stm keeps its map in its own log:
+- a "txn" record per transactional id holds its producer id and epoch,
+  status, partition scope, staged group offsets and timeout;
+- a "tx" record per (topic, partition, producer, first offset) holds a
+  range's outcome: open, committed or aborted.
+Every coordinator call builds one list of records and commits it through
+one ``engine._group_append`` — one atomic, fenced commit, with no Spark
+job on a local root. So a crash lands on the state before the call or
+after it, and every coordinator instance on the root reads the same state
+(``engine._group_map``).
 
-Group offsets inside a transaction (TxnOffsetCommit, 28) are staged in the
-coordinator and only forwarded to the engine's consumer-offset path when
-the transaction commits — offsets-in-txn atomicity without special-casing
-the offsets table.
+A transactional produce first commits the Ongoing state and the open
+ranges of the partitions it joins, at their high watermarks
+(AddPartitionsToTxn, 24), and only then the data: rows never exist
+without their range. Routing is decided inside the produce, so the whole
+topic joins; EndTxn drops the ranges no record reached. EndTxn (26)
+commits the range outcomes, the staged offsets (TxnOffsetCommit, 28) and
+the new state together, so a transaction's rows and its input offsets
+become visible at once (KIP-98). Readers at read_committed drop the
+aborted ranges and stop at the first open one
+(operators/transactions.py::read_committed, engine._visibility) — data
+files are never rewritten on abort, as in the reference, where aborted
+batches stay in the log and are filtered at fetch time
+(`fetch.cc:116-187`).
+
+Producer ids come from the root's one allocator (_ProducerIdAllocator, the
+`cluster/id_allocator_stm.cc` analog), which AdminClient shares.
 
 State machine per transactional id (tm_stm tx_status analog):
-    Empty → Ongoing → PrepareCommit/PrepareAbort → Complete(Committed|
-    Aborted) → (next begin) Ongoing ...
+    Empty → Ongoing → Committed|Aborted → (next begin) Ongoing ...
 Epoch fencing: init_producer_id on an existing transactional id bumps the
 epoch and aborts any ongoing transaction of the previous incarnation.
 """
@@ -36,10 +47,13 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from redpanda_spark.operators.groups import offset_value, tx_range_record
 
 TX_RANGE_SCHEMA = (
     "topic string, partition int, producer_id bigint, "
@@ -80,62 +94,85 @@ class TxState:
     timeout_ms: int = 60_000
     started_at_ms: int | None = None
 
+    def to_value(self) -> dict:
+        """The value of the id's "txn" record: the fields, with the two
+        tuple-keyed maps as lists."""
+        return {
+            **vars(self),
+            "partitions": [
+                [t, p, *rng]
+                for t, parts in self.partitions.items()
+                for p, rng in parts.items()
+            ],
+            "staged_offsets": [[*k, o] for k, o in self.staged_offsets.items()],
+        }
+
+    @classmethod
+    def from_value(cls, v: dict) -> TxState:
+        partitions: dict = {}
+        for t, p, first, last in v["partitions"]:
+            partitions.setdefault(t, {})[p] = (first, last)
+        staged = {(g, t, p): o for g, t, p, o in v["staged_offsets"]}
+        return cls(**{**v, "partitions": partitions, "staged_offsets": staged})
+
+    def begin(self) -> None:
+        self.status = "Ongoing"
+        self.partitions = {}
+        self.staged_offsets = {}
+        self.started_at_ms = int(time.time() * 1000)
+
+
+class _ProducerIdAllocator:
+    """Monotonic producer-id allocation (cluster/id_allocator_stm.cc), the
+    root's one source of producer ids, plain and transactional. Persisted
+    in ``_producer_ids.json`` so ids survive restarts."""
+
+    def __init__(self, root: str, fsio):
+        self.root = root
+        self.path = os.path.join(root, "_producer_ids.json")
+        self.fsio = fsio
+
+    def allocate(self) -> int:
+        # RELOAD + bump + save under the root write lock: the store file
+        # is shared by every process on the root (engine, CLI, REST), and
+        # an in-memory-only bump would reissue a pid another process
+        # already allocated — breaking the idempotence window and epoch
+        # fencing that key on pid uniqueness (the reference serializes
+        # this through the id_allocator_stm raft group).
+        with self.fsio.write_lock(self.root):
+            pid = (
+                json.loads(self.fsio.read_text(self.path))["next_id"]
+                if self.fsio.exists(self.path)
+                else 0
+            )
+            # tmp + rename: a crash mid-write never loses the counter
+            # (losing it would reissue pids)
+            self.fsio.write_text_atomic(self.path, json.dumps({"next_id": pid + 1}))
+            return pid
+
 
 class TxCoordinator:
-    """tm_stm analog over a TopicEngine. One instance per engine root."""
+    """tm_stm analog over a TopicEngine. Holds no state of its own: any
+    number of instances may serve one root."""
 
     def __init__(self, engine):
         self.engine = engine
-        self.spark = engine.spark
-        self._txs: dict[str, TxState] = {}
-        self._next_pid = 1000
-        # persistence rides the engine's filesystem abstraction so the
-        # coordinator state lives NEXT TO the data it fences on URI /
-        # object-store roots too (raw os IO would read nothing at load
-        # and crash at save on a file:/s3a: root)
-        self._fsio = engine._fsio
-        self._path = os.path.join(engine.root, "_tx_coordinator.json")
-        self._load()
+        self._pids = _ProducerIdAllocator(engine.root, engine._fsio)
 
-    # -- persistence (tm_stm's raft-replicated map → json snapshot) -------
-
-    def _load(self):
-        if self._fsio.exists(self._path):
-            d = json.loads(self._fsio.read_text(self._path))
-            self._next_pid = d["next_pid"]
-            for tid, s in d["txs"].items():
-                st = TxState(s["producer_id"], s["producer_epoch"], s["status"])
-                st.timeout_ms = s.get("timeout_ms", 60_000)
-                st.started_at_ms = s.get("started_at_ms")
-                st.partitions = {
-                    t: {int(p): tuple(v) for p, v in parts.items()}
-                    for t, parts in s["partitions"].items()
-                }
-                st.staged_offsets = {
-                    tuple(json.loads(k)): v for k, v in s["staged_offsets"].items()
-                }
-                self._txs[tid] = st
-
-    def _save(self):
-        d = {
-            "next_pid": self._next_pid,
-            "txs": {
-                tid: {
-                    "producer_id": s.producer_id,
-                    "producer_epoch": s.producer_epoch,
-                    "status": s.status,
-                    "timeout_ms": s.timeout_ms,
-                    "started_at_ms": s.started_at_ms,
-                    "partitions": s.partitions,
-                    "staged_offsets": {
-                        json.dumps(list(k)): v for k, v in s.staged_offsets.items()
-                    },
-                }
-                for tid, s in self._txs.items()
-            },
+    @property
+    def _txs(self) -> dict[str, TxState]:
+        """Every transactional id's state, from its "txn" record."""
+        return {
+            k[1]: TxState.from_value(v)
+            for k, v in self.engine._group_map().items()
+            if k[0] == "txn"
         }
-        # tmp + rename locally, same contract through Hadoop on URI roots
-        self._fsio.write_text_atomic(self._path, json.dumps(d))
+
+    def _commit(self, transactional_id: str, st: TxState, records=()) -> None:
+        """``records`` and the id's new state as ONE commit."""
+        self.engine._group_append(
+            [*records, (("txn", transactional_id), st.to_value())]
+        )
 
     # -- InitProducerId (22) ---------------------------------------------
 
@@ -147,18 +184,16 @@ class TxCoordinator:
         `transaction_timeout_ms` is the client's transaction.timeout.ms —
         the coordinator aborts Ongoing transactions that outlive it
         (expire_transactions)."""
-        st = self._txs.get(transactional_id)
+        st = self._state(transactional_id)
+        records = []
         if st is None:
-            st = TxState(producer_id=self._next_pid, producer_epoch=0)
-            self._next_pid += 1
-            self._txs[transactional_id] = st
+            st = TxState(producer_id=self._pids.allocate(), producer_epoch=0)
         else:
             if st.status == "Ongoing":
-                self._end(transactional_id, commit=False)
-                st = self._txs[transactional_id]
+                records = self._end_records(st, commit=False)
             st.producer_epoch += 1
         st.timeout_ms = int(transaction_timeout_ms)
-        self._save()
+        self._commit(transactional_id, st, records)
         return st.producer_id, st.producer_epoch
 
     @staticmethod
@@ -175,28 +210,24 @@ class TxCoordinator:
         transaction.timeout.ms — tm_stm's periodic expiry (the reference's
         coordinator aborts hung producers so their open ranges stop
         holding back the LSO and read_committed consumers). Returns the
-        aborted transactional ids; each abort is recorded as the range's
-        "tx" record of the internal topic exactly like a client abort, so
-        fetch-side filtering needs no new machinery."""
-        import time as _time
-
-        now = now_ms if now_ms is not None else int(_time.time() * 1000)
-        expired = [
-            tid
-            for tid, s in self._txs.items()
-            if s.status == "Ongoing"
-            and s.started_at_ms is not None
-            and now - s.started_at_ms > s.timeout_ms
-        ]
-        for tid in expired:
-            self._end(tid, commit=False)
-            # bump the epoch so the timed-out incarnation is FENCED on
-            # its next request instead of silently starting (and maybe
-            # half-committing) a fresh transaction — Kafka's abort-on-
-            # expiry bumps the epoch for exactly this reason
-            self._txs[tid].producer_epoch += 1
-        if expired:
-            self._save()
+        aborted transactional ids; all the aborts are one commit."""
+        now = now_ms if now_ms is not None else int(time.time() * 1000)
+        expired, records = [], []
+        for tid, st in self._txs.items():
+            if (
+                st.status == "Ongoing"
+                and st.started_at_ms is not None
+                and now - st.started_at_ms > st.timeout_ms
+            ):
+                records += self._end_records(st, commit=False)
+                # bump the epoch so the timed-out incarnation is FENCED on
+                # its next request instead of silently starting (and maybe
+                # half-committing) a fresh transaction — Kafka's abort-on-
+                # expiry bumps the epoch for exactly this reason
+                st.producer_epoch += 1
+                records.append((("txn", tid), st.to_value()))
+                expired.append(tid)
+        self.engine._group_append(records)
         return expired
 
     # -- transactional produce (AddPartitionsToTxn 24 + Produce) ---------
@@ -208,9 +239,9 @@ class TxCoordinator:
         batch,
         producer_epoch: int | None = None,
     ) -> dict[int, int]:
-        """Append a batch under the transaction's scope. The partition set
-        joins the transaction implicitly (AddPartitionsToTxn), and the
-        written offset ranges are recorded for the eventual marker.
+        """Append a batch under the transaction's scope: first the topic's
+        partitions join the transaction at their high watermarks
+        (AddPartitionsToTxn, one commit), then the data is produced.
 
         ``batch`` may be a DataFrame (distributed pipeline) or a list of
         record dicts/Rows — the latter rides the engine's zero-job
@@ -218,6 +249,8 @@ class TxCoordinator:
         get the same hot-path latency as plain ones."""
         st = self._require(transactional_id)
         self._check_epoch(st, producer_epoch)
+        highs = self.engine.high_watermarks(topic)
+        self.record_produced(transactional_id, topic, highs, highs)
         if isinstance(batch, (list, tuple)):
             recs = [
                 dict(r.asDict()) if hasattr(r, "asDict") else dict(r)
@@ -227,62 +260,39 @@ class TxCoordinator:
                 r["producer_id"] = st.producer_id
                 r["producer_epoch"] = st.producer_epoch
                 r["is_transactional"] = True
-            bases = self.engine.produce(topic, recs)
-        else:
-            df = (
-                batch.withColumn("producer_id", F.lit(st.producer_id).cast("bigint"))
-                .withColumn("producer_epoch", F.lit(st.producer_epoch).cast("smallint"))
-                .withColumn("is_transactional", F.lit(True))
-            )
-            bases = self.engine.produce(topic, df)
-        highs = self.engine.high_watermarks(topic)
-        self.record_produced(transactional_id, topic, bases, highs)
-        return bases
+            return self.engine.produce(topic, recs)
+        df = (
+            batch.withColumn("producer_id", F.lit(st.producer_id).cast("bigint"))
+            .withColumn("producer_epoch", F.lit(st.producer_epoch).cast("smallint"))
+            .withColumn("is_transactional", F.lit(True))
+        )
+        return self.engine.produce(topic, df)
 
     def record_produced(
         self, transactional_id: str, topic: str, bases: dict, highs: dict
     ) -> None:
-        """Pure bookkeeping half of a transactional produce (split out so
-        the FSM is property-testable without Spark): transition to Ongoing,
-        extend the partition scope, and record new partitions as OPEN —
-        the LSO gate (last_stable_offset) holds read_committed readers
-        below the open range until EndTxn supersedes it
-        (fetch.cc:341-399 read-bound semantics)."""
+        """The bookkeeping half of a transactional produce (split out so
+        the FSM is property-testable without Spark), as one commit:
+        transition to Ongoing, extend the partition scope to ``highs``,
+        and record each partition new to it as an OPEN range from its
+        ``bases`` offset — the LSO gate (last_stable_offset) holds
+        read_committed readers below the open range until EndTxn
+        supersedes it (fetch.cc:341-399 read-bound semantics)."""
         st = self._require(transactional_id)
         if st.status != "Ongoing":
-            st.status = "Ongoing"
-            st.partitions = {}
-            st.staged_offsets = {}
-            import time as _time
-
-            st.started_at_ms = int(_time.time() * 1000)
+            st.begin()
         scope = st.partitions.setdefault(topic, {})
-        new_open = []
+        records = []
         for p, base in bases.items():
             last = highs[p] - 1
             if p in scope:
                 scope[p] = (scope[p][0], last)
             else:
                 scope[p] = (base, last)
-                new_open.append((p, base))
-        if new_open:
-            self.engine.append_tx_ranges(
-                tx_ranges_frame(
-                    self.spark,
-                    [
-                        dict(
-                            topic=topic,
-                            partition=p,
-                            producer_id=st.producer_id,
-                            first_offset=base,
-                            last_offset=2**62,
-                            outcome="open",
-                        )
-                        for p, base in new_open
-                    ],
+                records.append(
+                    tx_range_record(topic, p, st.producer_id, base, 2**62, "open")
                 )
-            )
-        self._save()
+        self._commit(transactional_id, st, records)
 
     # -- TxnOffsetCommit (28) / AddOffsetsToTxn (25) ---------------------
 
@@ -297,21 +307,14 @@ class TxCoordinator:
     ) -> None:
         st = self._require(transactional_id)
         self._check_epoch(st, producer_epoch)
-        if st.status not in ("Ongoing", "Empty", "Committed", "Aborted"):
-            raise TxError("INVALID_TXN_STATE")
         if st.status != "Ongoing":
             # offsets-only (consume-only) transactions are legal: Kafka's
             # AddOffsetsToTxn starts the transaction exactly like
             # AddPartitionsToTxn — requiring a prior produce would force
             # dummy data writes
-            import time as _time
-
-            st.status = "Ongoing"
-            st.partitions = {}
-            st.staged_offsets = {}
-            st.started_at_ms = int(_time.time() * 1000)
+            st.begin()
         st.staged_offsets[(group_id, topic, partition)] = offset
-        self._save()
+        self._commit(transactional_id, st)
 
     # -- EndTxn (26) ------------------------------------------------------
 
@@ -337,33 +340,35 @@ class TxCoordinator:
             if st.status in ("Committed", "Aborted"):
                 return  # idempotent EndTxn
             raise TxError("INVALID_TXN_STATE")
+        self._commit(transactional_id, st, self._end_records(st, commit))
+
+    def _end_records(self, st: TxState, commit: bool) -> list[tuple]:
+        """EndTxn's records, moving ``st`` to Committed or Aborted: each
+        range's outcome, up to its partition's high watermark (a range no
+        record reached is dropped), and on commit the staged offsets."""
         outcome = "committed" if commit else "aborted"
-        rows = [
-            dict(
-                topic=t,
-                partition=p,
-                producer_id=st.producer_id,
-                first_offset=rng[0],
-                last_offset=rng[1],
-                outcome=outcome,
-            )
-            for t, parts in st.partitions.items()
-            for p, rng in parts.items()
-        ]
-        if rows:
-            self.engine.append_tx_ranges(tx_ranges_frame(self.spark, rows))
+        records = []
+        for t, parts in st.partitions.items():
+            try:
+                highs = self.engine.high_watermarks(t)
+            except KeyError:  # deleted mid-transaction: ranges purged with it
+                highs = {}
+            for p, (first, last) in parts.items():
+                last = max(last, highs.get(p, 0) - 1)
+                records.append(
+                    tx_range_record(
+                        t, p, st.producer_id, first, last,
+                        outcome if last >= first else None,
+                    )
+                )
         if commit:
-            by_group: dict[str, dict] = {}
-            for (group, topic, part), off in st.staged_offsets.items():
-                by_group.setdefault(group, {})[(topic, part)] = off
-            for group, offs in by_group.items():
-                # one append per group (the OffsetCommit-request shape) —
-                # a per-partition loop was one Spark job each and widened
-                # the partial-forwarding crash window
-                self.engine.offset_commit_batch(group, offs)
+            records += [
+                (("offset", *k), offset_value(o))
+                for k, o in st.staged_offsets.items()
+            ]
         st.status = "Committed" if commit else "Aborted"
         st.staged_offsets = {}
-        self._save()
+        return records
 
     # -- introspection (61/65/66) ----------------------------------------
 
@@ -390,8 +395,12 @@ class TxCoordinator:
             },
         }
 
+    def _state(self, transactional_id: str) -> TxState | None:
+        v = self.engine._group_map().get(("txn", transactional_id))
+        return None if v is None else TxState.from_value(v)
+
     def _require(self, transactional_id: str) -> TxState:
-        st = self._txs.get(transactional_id)
+        st = self._state(transactional_id)
         if st is None:
             raise TxError("UNKNOWN_TRANSACTIONAL_ID")
         return st

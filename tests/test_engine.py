@@ -91,6 +91,41 @@ def test_delete_records_filters_reads(engine, spark):
     assert lo["earliest_offset"] == 3
 
 
+def test_delete_records_past_high_watermark_is_out_of_range(
+    engine, capsys
+):
+    """KIP-107: an offset past the high watermark is refused with
+    OFFSET_OUT_OF_RANGE (before, a truncate to 1000 of a 10-row partition
+    hid every later produce), and -1 means the high watermark. The CLI
+    prints the refusal as one line and exits 1."""
+    import json
+
+    from redpanda_spark.cli import main
+    from redpanda_spark.engine import OffsetOutOfRangeError
+
+    engine.create_topic("t", TopicConfig(partitions=2))
+    engine.produce("t", [{"value": b"v%d" % i, "partition": 0} for i in range(10)])
+    with pytest.raises(OffsetOutOfRangeError, match="OFFSET_OUT_OF_RANGE"):
+        engine.delete_records("t", {1: 0, 0: 1000})  # refused whole
+    assert engine._log_starts("t") == {}
+    capsys.readouterr()
+    argv = ["--root", engine.root, "topic", "truncate", "t", "-p", "0"]
+    assert main([*argv, "--before-offset", "1000"]) == 1
+    out = capsys.readouterr()
+    assert out.out == "" and out.err.count("\n") == 1
+    assert out.err.startswith("error: OFFSET_OUT_OF_RANGE")
+
+    fresh = TopicEngine(engine.spark, engine.root)
+    assert fresh._log_starts("t") == {}
+    fresh.delete_records("t", {0: -1})
+    assert fresh._log_starts("t") == {0: 10}
+    fresh.produce("t", [{"value": b"after", "partition": 0}])
+    assert [r["offset"] for r in fresh.fetch_rows("t", 0)] == [10]
+    capsys.readouterr()
+    assert main([*argv, "--before-offset=-1"]) == 0
+    assert json.loads(capsys.readouterr().out)["new_start_offset"] == 11
+
+
 def test_compaction_keeps_latest_and_tombstone_removal(engine, spark):
     engine.create_topic(
         "t6", TopicConfig(partitions=1, cleanup_policy="compact", delete_retention_ms=0)

@@ -110,29 +110,41 @@ def test_idempotent_dedup_keeps_first(spark):
     assert offsets == [0, 2, 3, 4]
 
 
-def test_expired_offsets_kip211_rules(spark):
-    from redpanda_spark.operators.groups import expired_offsets
+def test_expired_offsets_kip211_rules(spark, tmp_path):
+    """KIP-211 expiry on the engine, decided from the replayed map with no
+    Spark job: a partition's latest commit expires when it is older than
+    the retention and its group has no live members."""
+    from redpanda_spark.engine import TopicEngine
 
+    eng = TopicEngine(spark, str(tmp_path / "root"))
     ms = 1_000_000  # ns per ms
-    commits = commits_df(
+
+    def commit(group, partition, offset, at_ms):
+        eng._group_append([(
+            ("offset", group, "t", partition),
+            {"committed_offset": offset, "leader_epoch": 0, "metadata": "",
+             "commit_seq": at_ms * ms},
+        )])
+
+    # stale group: latest commit far past retention -> expirable
+    commit("dead", 0, 5, 10)
+    # fresh commit protects its slot
+    commit("live", 0, 7, 990)
+    # stale latest, but group has active members -> protected
+    commit("act", 0, 3, 10)
+    # earlier stale commit shadowed by a fresh one -> protected
+    commit("live", 1, 1, 10)
+    commit("live", 1, 2, 995)
+    n, jobs = _job_ids(
         spark,
-        [
-            # stale group: latest commit far past retention -> expirable
-            dict(group_id="dead", topic="t", partition=0, committed_offset=5, commit_seq=10 * ms),
-            # fresh commit protects its slot
-            dict(group_id="live", topic="t", partition=0, committed_offset=7, commit_seq=990 * ms),
-            # stale latest, but group has active members -> protected
-            dict(group_id="act", topic="t", partition=0, committed_offset=3, commit_seq=10 * ms),
-            # earlier stale commit shadowed by a fresh one -> protected
-            dict(group_id="live", topic="t", partition=1, committed_offset=1, commit_seq=10 * ms),
-            dict(group_id="live", topic="t", partition=1, committed_offset=2, commit_seq=995 * ms),
-        ],
+        "expire",
+        lambda: eng.expire_offsets(
+            retention_ms=100, now_ns=1000 * ms, active_group_ids=["act"]
+        ),
     )
-    active = spark.createDataFrame([("act",)], "group_id string")
-    out = expired_offsets(
-        commits, now_ns=1000 * ms, retention_ms=100, active_groups=active
-    ).collect()
-    assert [(r["group_id"], r["partition"]) for r in out] == [("dead", 0)]
+    assert n == 1 and jobs == []
+    left = {(r["group_id"], r["partition"]) for r in eng.offset_fetch().collect()}
+    assert left == {("live", 0), ("act", 0), ("live", 1)}
 
 
 def test_engine_expire_offsets_tombstones(spark, tmp_path):

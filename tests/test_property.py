@@ -208,20 +208,10 @@ def test_idempotent_dedup_matches_model(spark, recs):
 # the REAL TxCoordinator methods drive the FSM via record_produced.)
 
 
-# TxCoordinator builds its tx-range rows as an Arrow table, and pyarrow's
-# first conversion from Python objects imports pandas (~0.4 s here): pay
-# that once at import, not inside a deadline-timed example
-pa.array([0])
-
-
 class _StubEngine:
-    class _Spark:
-        def createDataFrame(self, table, schema):
-            # txcoord hands its Arrow table of tx-range rows straight on
-            # to append_tx_ranges
-            from pyspark.sql import Row
-
-            return [Row(**r) for r in table.to_pylist()]
+    """The coordinator's view of an engine: its one batch entry point
+    (``_group_append``) over a keep-latest map, the tx-range records it
+    commits collected as rows, and the offset records as tuples."""
 
     def __init__(self, root):
         import os
@@ -230,11 +220,11 @@ class _StubEngine:
 
         self.root = str(root)
         os.makedirs(self.root, exist_ok=True)
-        self.spark = self._Spark()
-        self._fsio = LocalFS()  # txcoord persists through the engine's fsio
+        self._fsio = LocalFS()  # the producer-id allocator's store
         self.high = {}
         self.tx_rows = []
         self.committed_offsets = []
+        self._state = {}
 
     def produce_n(self, n):
         base = self.high.get(0, 0)
@@ -244,15 +234,21 @@ class _StubEngine:
     def high_watermarks(self, topic):
         return dict(self.high)
 
-    def append_tx_ranges(self, rows):
-        self.tx_rows.extend(rows)
+    def _group_map(self):
+        return self._state
 
-    def offset_commit(self, group, topic, partition, offset):
-        self.committed_offsets.append((group, topic, partition, offset))
+    def _group_append(self, records):
+        from pyspark.sql import Row
 
-    def offset_commit_batch(self, group, offsets):
-        for (topic, partition), offset in offsets.items():
-            self.committed_offsets.append((group, topic, partition, offset))
+        for k, v in records:
+            if v is None:
+                self._state.pop(k, None)
+                continue
+            self._state[k] = v
+            if k[0] == "tx":
+                self.tx_rows.append(Row(first_offset=k[4], **v))
+            elif k[0] == "offset":
+                self.committed_offsets.append((*k[1:], v["committed_offset"]))
 
 
 _tx_ops = st.lists(
