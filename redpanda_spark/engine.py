@@ -84,7 +84,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from redpanda_spark import fsio
-from redpanda_spark.functions.hashes import murmur2_partition_udf
+from redpanda_spark.functions.hashes import murmur2_partition_udf, murmur2_partitions
 from redpanda_spark.operators import log as LOG
 from redpanda_spark.operators import groups as G
 from redpanda_spark.operators.compaction import compact_with_tombstone_grace
@@ -249,6 +249,23 @@ def _cached_plan_bytes(plan) -> int | None:
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
     return total
+
+
+def _route(n_parts: int, n: int, key=None, partition=None) -> np.ndarray:
+    """The partitions of ``n`` records (``key``/``partition``: Arrow arrays
+    or None): an explicit partition wins, else murmur2(key), else
+    round-robin on the record's index — a null partition is routed."""
+    part = np.arange(n, dtype=np.int64) % n_parts
+    if key is not None:
+        hashed = murmur2_partitions(key, n_parts)
+        part = np.where(hashed >= 0, hashed, part)
+    if partition is not None:
+        part = np.where(
+            np.asarray(partition.is_null()),
+            part,
+            np.asarray(partition.fill_null(0), dtype=np.int64),
+        )
+    return part
 
 
 def _record_row(r: dict) -> Row:
@@ -773,8 +790,10 @@ class TopicEngine:
                 has_manifest = self._fsio.exists(mp)
                 if has_manifest:
                     m = json.loads(self._fsio.read_text(mp))
+                    # a partition added since the last commit is at 0
                     self._high[t] = {
-                        int(p): o for p, o in m.get("high", {}).items()
+                        **{p: 0 for p in range(self._topics[t].partitions)},
+                        **{int(p): o for p, o in m.get("high", {}).items()},
                     }
                     self._files[t] = m.get("files", [])
                     self._stats[t] = m.get("stats", {})
@@ -1458,8 +1477,6 @@ class TopicEngine:
         whose manifest stats come from the arrays, the atomic manifest
         commit, and then the hot tail, with record dicts built only for
         the rows it keeps. Returns {partition: base_offset}."""
-        from redpanda_spark.functions.hashes import murmur2_partitions
-
         t = t.combine_chunks()
         n = t.num_rows
         cols = set(t.column_names)
@@ -1495,20 +1512,12 @@ class TopicEngine:
         else:
             ts = np.full(n, now_us, dtype=np.int64)
 
-        # -- routing: explicit partition, else murmur2(key), else
-        # round-robin — a null partition in a mixed batch is routed, never
-        # silently partition 0
-        part = np.arange(n, dtype=np.int64) % cfg.partitions
-        if "key" in cols:
-            hashed = murmur2_partitions(column("key"), cfg.partitions)
-            part = np.where(hashed >= 0, hashed, part)
-        if "partition" in cols:
-            explicit = column("partition")
-            part = np.where(
-                np.asarray(explicit.is_null()),
-                part,
-                np.asarray(explicit.fill_null(0), dtype=np.int64),
-            )
+        part = _route(
+            cfg.partitions,
+            n,
+            column("key") if "key" in cols else None,
+            column("partition") if "partition" in cols else None,
+        )
 
         # -- producer idempotence window (shared decision logic) ----------
         keep = np.ones(n, dtype=bool)
@@ -2383,6 +2392,18 @@ class TopicEngine:
     def high_watermarks(self, topic: str) -> dict[int, int]:
         self._require(topic)
         return dict(self._high.get(topic, {}))
+
+    def route_records(self, topic: str, rows: list[dict]) -> list[int]:
+        """Each record dict's partition (``_route``), for a caller that must
+        know it before the produce; pinned as explicit partitions, it
+        holds on every produce path."""
+        key, part = (
+            pa.array([r.get(c) for r in rows], _RECORD_ARROW.field(c).type)
+            if any(c in r for r in rows)
+            else None
+            for c in ("key", "partition")
+        )
+        return _route(self._require(topic).partitions, len(rows), key, part).tolist()
 
     def topic_stats(self, topic: str) -> dict:
         """O(1) observability from the manifest — no scan, no Spark job
@@ -3729,11 +3750,15 @@ class TopicEngine:
         )
 
     def tx_ranges(self) -> DataFrame:
-        """Live tx ranges (``_tx_ranges_local``) as an Arrow LocalRelation:
-        committed and aborted ranges plus the still-open ones."""
-        from redpanda_spark.operators.txcoord import tx_ranges_frame
+        """Live tx ranges (``_tx_ranges_local``): committed and aborted
+        ranges plus the still-open ones, as an Arrow LocalRelation, which
+        collects with no Spark job where a list-built frame is an RDD scan."""
+        from redpanda_spark.operators.txcoord import TX_RANGE_SCHEMA
 
-        return tx_ranges_frame(self.spark, self._tx_ranges_local())
+        rows = self._tx_ranges_local()
+        cols = [c.split()[0] for c in TX_RANGE_SCHEMA.split(", ")]
+        table = pa.Table.from_pydict({c: [r[c] for r in rows] for c in cols})
+        return self.spark.createDataFrame(table, schema=TX_RANGE_SCHEMA)
 
     # -- group state: records of OFFSETS_TOPIC ----------------------------
 

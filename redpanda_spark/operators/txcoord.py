@@ -14,25 +14,22 @@ topic, as tm_stm keeps its map in its own log:
   status, partition scope, staged group offsets and timeout;
 - a "tx" record per (topic, partition, producer, first offset) holds a
   range's outcome: open, committed or aborted.
-Every coordinator call builds one list of records and commits it through
-one ``engine._group_append`` — one atomic, fenced commit, with no Spark
-job on a local root. So a crash lands on the state before the call or
-after it, and every coordinator instance on the root reads the same state
-(``engine._group_map``).
+Every coordinator call commits one list of records through one
+``engine._group_append`` (atomic, fenced, no Spark job on a local root),
+so a crash lands on the state before the call or after it, and every
+coordinator on the root reads the same state (``engine._group_map``).
 
 A transactional produce first commits the Ongoing state and the open
 ranges of the partitions it joins, at their high watermarks
 (AddPartitionsToTxn, 24), and only then the data: rows never exist
-without their range. Routing is decided inside the produce, so the whole
-topic joins; EndTxn drops the ranges no record reached. EndTxn (26)
-commits the range outcomes, the staged offsets (TxnOffsetCommit, 28) and
-the new state together, so a transaction's rows and its input offsets
-become visible at once (KIP-98). Readers at read_committed drop the
-aborted ranges and stop at the first open one
-(operators/transactions.py::read_committed, engine._visibility) — data
-files are never rewritten on abort, as in the reference, where aborted
-batches stay in the log and are filtered at fetch time
-(`fetch.cc:116-187`).
+without their range. A record list joins the partitions it is routed to
+(``engine.route_records``), a DataFrame the whole topic; EndTxn drops the
+ranges no record reached. EndTxn (26) commits the range outcomes, the
+staged offsets (TxnOffsetCommit, 28) and the new state together, so a
+transaction's rows and its input offsets become visible at once (KIP-98).
+Readers at read_committed drop the aborted ranges and stop at the first
+open one (engine._visibility); data files are never rewritten on abort,
+as aborted batches stay in the reference's log (`fetch.cc:116-187`).
 
 Producer ids come from the root's one allocator (_ProducerIdAllocator, the
 `cluster/id_allocator_stm.cc` analog), which AdminClient shares.
@@ -59,20 +56,6 @@ TX_RANGE_SCHEMA = (
     "topic string, partition int, producer_id bigint, "
     "first_offset bigint, last_offset bigint, outcome string"
 )
-_TX_RANGE_COLUMNS = (
-    "topic", "partition", "producer_id", "first_offset", "last_offset", "outcome"
-)
-
-
-def tx_ranges_frame(spark, rows: list[dict]) -> DataFrame:
-    """Tx-range rows as an Arrow LocalRelation: collecting or joining it
-    runs no Spark job, where a list-built createDataFrame is an RDD scan."""
-    import pyarrow as pa
-
-    table = pa.Table.from_pydict(
-        {c: [r[c] for r in rows] for c in _TX_RANGE_COLUMNS}
-    )
-    return spark.createDataFrame(table, schema=TX_RANGE_SCHEMA)
 
 
 class TxError(Exception):
@@ -133,20 +116,16 @@ class _ProducerIdAllocator:
         self.fsio = fsio
 
     def allocate(self) -> int:
-        # RELOAD + bump + save under the root write lock: the store file
-        # is shared by every process on the root (engine, CLI, REST), and
-        # an in-memory-only bump would reissue a pid another process
-        # already allocated — breaking the idempotence window and epoch
-        # fencing that key on pid uniqueness (the reference serializes
-        # this through the id_allocator_stm raft group).
+        # reload + bump + save under the root write lock: every process on
+        # the root shares the file, and a reissued pid breaks idempotence
+        # and epoch fencing (the reference serializes this through raft)
         with self.fsio.write_lock(self.root):
             pid = (
                 json.loads(self.fsio.read_text(self.path))["next_id"]
                 if self.fsio.exists(self.path)
                 else 0
             )
-            # tmp + rename: a crash mid-write never loses the counter
-            # (losing it would reissue pids)
+            # tmp + rename: a crash never loses the counter
             self.fsio.write_text_atomic(self.path, json.dumps({"next_id": pid + 1}))
             return pid
 
@@ -220,10 +199,8 @@ class TxCoordinator:
                 and now - st.started_at_ms > st.timeout_ms
             ):
                 records += self._end_records(st, commit=False)
-                # bump the epoch so the timed-out incarnation is FENCED on
-                # its next request instead of silently starting (and maybe
-                # half-committing) a fresh transaction — Kafka's abort-on-
-                # expiry bumps the epoch for exactly this reason
+                # Kafka's abort-on-expiry epoch bump: the timed-out
+                # incarnation is FENCED, not silently starting a new one
                 st.producer_epoch += 1
                 records.append((("txn", tid), st.to_value()))
                 expired.append(tid)
@@ -239,34 +216,42 @@ class TxCoordinator:
         batch,
         producer_epoch: int | None = None,
     ) -> dict[int, int]:
-        """Append a batch under the transaction's scope: first the topic's
-        partitions join the transaction at their high watermarks
-        (AddPartitionsToTxn, one commit), then the data is produced.
+        """Append a batch under the transaction's scope: the partitions it
+        reaches first join the transaction at their high watermarks
+        (AddPartitionsToTxn, one commit, skipped when all are in the
+        scope already), then the data is produced.
 
         ``batch`` may be a DataFrame (distributed pipeline) or a list of
         record dicts/Rows — the latter rides the engine's zero-job
         driver-side produce path, so interactive transactional producers
-        get the same hot-path latency as plain ones."""
+        get the same hot-path latency as plain ones. A record list is
+        routed here, each record pinned to its partition; a DataFrame is
+        routed inside the produce, so the whole topic joins."""
         st = self._require(transactional_id)
         self._check_epoch(st, producer_epoch)
-        highs = self.engine.high_watermarks(topic)
-        self.record_produced(transactional_id, topic, highs, highs)
         if isinstance(batch, (list, tuple)):
-            recs = [
+            batch = [
                 dict(r.asDict()) if hasattr(r, "asDict") else dict(r)
                 for r in batch
             ]
-            for r in recs:
+            for r, p in zip(batch, self.engine.route_records(topic, batch)):
+                r["partition"] = p
                 r["producer_id"] = st.producer_id
                 r["producer_epoch"] = st.producer_epoch
                 r["is_transactional"] = True
-            return self.engine.produce(topic, recs)
-        df = (
-            batch.withColumn("producer_id", F.lit(st.producer_id).cast("bigint"))
-            .withColumn("producer_epoch", F.lit(st.producer_epoch).cast("smallint"))
-            .withColumn("is_transactional", F.lit(True))
-        )
-        return self.engine.produce(topic, df)
+            joins = {r["partition"] for r in batch}
+        else:
+            batch = (
+                batch.withColumn("producer_id", F.lit(st.producer_id).cast("bigint"))
+                .withColumn("producer_epoch", F.lit(st.producer_epoch).cast("smallint"))
+                .withColumn("is_transactional", F.lit(True))
+            )
+            joins = set(range(self.engine._require(topic).partitions))
+        if st.status != "Ongoing" or not joins <= set(st.partitions.get(topic, {})):
+            highs = self.engine.high_watermarks(topic)
+            at = {p: highs.get(p, 0) for p in joins}
+            self.record_produced(transactional_id, topic, at, at)
+        return self.engine.produce(topic, batch)
 
     def record_produced(
         self, transactional_id: str, topic: str, bases: dict, highs: dict

@@ -108,8 +108,8 @@ def test_crash_sweep_coordinator_calls_are_atomic(spark, tmp_path, name):
     pre = _state(ref.root, spark)
     mid = None
     if name == "produce":
-        highs = ref.high_watermarks("t")
-        TxCoordinator(ref).record_produced("tx", "t", highs, highs)
+        at = {0: ref.high_watermarks("t")[0]}  # the records go to partition 0
+        TxCoordinator(ref).record_produced("tx", "t", at, at)
         mid = _state(ref.root, spark)
         ref = _seed(spark, str(tmp_path / "ref2"), ongoing)
     op(TxCoordinator(ref))
@@ -165,6 +165,88 @@ def test_crash_inside_endtxn_never_aborts_visible_rows(spark, tmp_path):
         for r in reopened.offset_fetch("g").collect()
     }
     assert committed == {0: 42}
+
+
+def test_crash_at_endtxn_commit_leaves_it_ongoing_until_expiry(spark, tmp_path):
+    """A crash at EndTxn's one mutation, the internal topic's manifest
+    commit, leaves the transaction as it was: Ongoing, its rows hidden at
+    read_committed and group g uncommitted. Expiry then aborts it whole."""
+    root = str(tmp_path / "r")
+    eng = _seed(spark, root, ongoing=True)
+    eng._fsio = _AllMutationsFS(eng._fsio, 1)
+    with pytest.raises(CrashError):
+        TxCoordinator(eng).commit("tx")
+
+    reopened = TopicEngine(spark, root)
+    tc = TxCoordinator(reopened)
+    assert tc.describe_transaction("tx")["state"] == "Ongoing"
+    assert _values(reopened.fetch_rows("t", 0, isolation="read_committed")) == [
+        "plain0"
+    ]
+    assert ("offset", "g", "t", 0) not in reopened._group_map()
+
+    assert tc.expire_transactions(now_ms=_FAR_FUTURE_MS) == ["tx"]
+    assert tc.describe_transaction("tx")["state"] == "Aborted"
+    assert _values(reopened.fetch_rows("t", 0, isolation="read_committed")) == [
+        "plain0"
+    ]
+    assert ("offset", "g", "t", 0) not in reopened._group_map()
+
+
+def test_record_list_joins_only_its_routed_partitions(spark, tmp_path):
+    """A transactional record list joins the partitions it is routed to
+    (explicit, else murmur2(key), else round-robin), not the whole topic:
+    a partition it does not write keeps serving read_committed readers
+    while the transaction is open, and gets no range."""
+    eng = TopicEngine(spark, str(tmp_path / "r"))
+    eng.create_topic("t", TopicConfig(partitions=4))
+    tc = TxCoordinator(eng)
+    tc.init_producer_id("tx")
+    keyed = [{"key": b"k%d" % i, "value": b"v"} for i in range(3)]
+    routed = set(eng.route_records("t", keyed))
+    assert len(routed) < 4
+    bases = tc.produce("tx", "t", keyed)
+    assert set(bases) == routed
+    assert tc.describe_transaction("tx")["partitions"] == {"t": sorted(routed)}
+
+    # a repeat into joined partitions commits no coordinator record
+    segments = len(eng._files[OFFSETS_TOPIC])
+    tc.produce("tx", "t", keyed)
+    assert len(eng._files[OFFSETS_TOPIC]) == segments
+
+    idle = min({0, 1, 2, 3} - routed)
+    eng.produce("t", _recs("plain", 1, idle))
+    assert _values(eng.fetch_rows("t", idle, isolation="read_committed")) == [
+        "plain0"
+    ]
+    tc.commit("tx")
+    assert {r["partition"] for r in eng._tx_ranges_local()} == routed
+    assert sum(
+        len(eng.fetch_rows("t", p, isolation="read_committed")) for p in routed
+    ) == 6
+
+
+def test_tx_produce_into_partition_added_before_reopen(spark, tmp_path):
+    """A partition added by CreatePartitions has no watermark in the
+    manifest until its first commit; after a reopen a transactional
+    produce into it still joins it first, so an abort hides its rows."""
+    from redpanda_spark.admin import AdminClient
+
+    root = str(tmp_path / "r")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("t", TopicConfig(partitions=1))
+    eng.produce("t", _recs("plain", 1, 0))
+    AdminClient(eng).create_partitions("t", 2)
+
+    reopened = TopicEngine(spark, root)
+    assert reopened.high_watermarks("t") == {0: 1, 1: 0}
+    tc = TxCoordinator(reopened)
+    tc.init_producer_id("tx")
+    tc.produce("tx", "t", _recs("tx", 3, 1))
+    assert reopened.fetch_rows("t", 1, isolation="read_committed") == []
+    tc.abort("tx")
+    assert reopened.fetch_rows("t", 1, isolation="read_committed") == []
+    assert len(reopened.fetch_rows("t", 1)) == 3
 
 
 def test_coordinators_and_admin_share_one_pid_allocator(spark, tmp_path):
