@@ -17,15 +17,13 @@ as one record batch in the engine's internal compacted
 ``__consumer_offsets`` topic, so progress survives the member, the
 group, and the process.
 
-Driver-side control loop; the data path stays DataFrame jobs (the
-fetch). At cluster scale one of these runs per external consumer — the
-engine serves any number concurrently because fetches are reads and
-commits are appends.
+Driver-side control loop; start positions and polls run in-process (the
+replayed group map, ``engine.fetch_rows``). At cluster scale one of these
+runs per external consumer — the engine serves any number concurrently
+because fetches are reads and commits are appends.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from redpanda_spark.operators.coordinator import GroupManager
 
@@ -160,15 +158,13 @@ class Consumer:
 
     def _init_positions(self, keys: list[tuple[str, int]]) -> None:
         """Resolve start positions for all ``keys`` with ONE committed-
-        offsets read (the engine's replayed keep-latest map, no Spark
-        job) plus one watermark/log-start lookup per topic."""
+        offsets read (``engine.committed_offsets``, from the replayed
+        keep-latest map) plus one watermark/log-start lookup per topic,
+        all in-process: no JVM call."""
         missing = [k for k in keys if k not in self._positions]
         if not missing:
             return
-        committed = {
-            (r["topic"], r["partition"]): int(r["committed_offset"])
-            for r in self.engine.offset_fetch(self.group_id).collect()
-        }
+        committed = self.engine.committed_offsets(self.group_id)
         reset_cache: dict[str, dict[int, int]] = {}
         for topic, p in missing:
             if (topic, p) in committed:

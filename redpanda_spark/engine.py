@@ -82,6 +82,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from redpanda_spark import fsio
 from redpanda_spark.functions.hashes import murmur2_partition_udf, murmur2_partitions
@@ -172,15 +174,6 @@ class FencedWriterError(Exception):
 # first manifest is written by the first commit, and list_topics hides it.
 OFFSETS_TOPIC = "__consumer_offsets"
 
-# Segment column order, written by both produce paths; a segment scan's
-# collect() returns its fields in this order, and so does fetch_rows.
-_RecordRow = Row(
-    "partition", "timestamp", "key", "value", "headers", "producer_id",
-    "producer_epoch", "base_sequence", "is_transactional", "is_control",
-    "offset",
-)
-_HeaderRow = Row("key", "value")
-
 # The record columns a produce batch may carry, as the in-process produce
 # core takes them: the segment schema, with timestamps as integer µs.
 _RECORD_ARROW = pa.schema(
@@ -201,6 +194,20 @@ _RECORD_ARROW = pa.schema(
 # A stored segment's columns as the in-process rewrites hold them: the
 # record columns (integer-µs timestamps) and the offset.
 _SEGMENT_ARROW = _RECORD_ARROW.append(pa.field("offset", pa.int64()))
+
+# A stored segment's file schema, as both produce paths write it: the
+# segment columns with UTC µs timestamps. Every engine read of segment
+# files is given its Spark form, so building a read runs no
+# footer-inference job, and the empty log has the same columns.
+_SEGMENT_FILE_ARROW = _SEGMENT_ARROW.set(
+    1, pa.field("timestamp", pa.timestamp("us", tz="UTC"))
+)
+_SEGMENT_SCHEMA = from_arrow_schema(_SEGMENT_FILE_ARROW)
+
+# Segment column order, written by both produce paths; a segment scan's
+# collect() returns its fields in this order, and so does fetch_rows.
+_RecordRow = Row(*_SEGMENT_ARROW.names)
+_HeaderRow = Row("key", "value")
 
 # Largest produce batch, in bytes of its Arrow record table, that is
 # appended in-process; a bigger one takes the distributed
@@ -533,8 +540,9 @@ class TopicEngine:
         # per topic: manifest text of the hot and archived segments
         self._manifest_text: dict[str, tuple[_SegmentsText, _SegmentsText]] = {}
         # keep-latest map of __consumer_offsets (record key -> decoded
-        # value), keyed by the manifest file list it was replayed from
-        self._group_cache: tuple[tuple[str, ...], dict] | None = None
+        # value) and its "tx" keys indexed by (topic, partition), keyed by
+        # the manifest file list they were replayed from
+        self._group_cache: tuple[tuple[str, ...], dict, dict] | None = None
         # Engine-instance nonce, written into every epoch-claim file. On
         # stores whose create is NOT arbitrated (plain S3 without
         # conditional writes), two engines racing the same epoch number
@@ -1244,7 +1252,8 @@ class TopicEngine:
         ]
         self._stats.setdefault(topic, {}).update(self._footer_stats(new_files))
         # Per-partition counts for the watermark advance: one
-        # column-pruned count job over ONLY the new files — the scan
+        # column-pruned count job over ONLY the new files, read with the
+        # segment schema so no inference job runs first — the scan
         # touches just the `partition` column chunks, so this costs a
         # near-constant ~0.15s regardless of batch bytes. (An attached
         # df.observe() metric was tried first: observation metrics
@@ -1254,7 +1263,7 @@ class TopicEngine:
         counts: dict[int, int] = (
             {
                 r["partition"]: r["n"]
-                for r in self.spark.read.parquet(*new_files)
+                for r in self._scan(new_files)
                 .groupBy("partition")
                 .agg(F.count("*").alias("n"))
                 .collect()
@@ -1272,18 +1281,10 @@ class TopicEngine:
         self._commit_manifest(topic)
         return bases
 
-    # record-list produce column types (fallback DF conversion + REST)
+    # record-list produce column types (fallback DF conversion + REST):
+    # the segment schema's record columns, as DDL type names
     _RECORD_COL_TYPES = {
-        "partition": "int",
-        "timestamp": "timestamp",
-        "key": "binary",
-        "value": "binary",
-        "headers": "array<struct<key:string,value:binary>>",
-        "producer_id": "bigint",
-        "producer_epoch": "smallint",
-        "base_sequence": "int",
-        "is_transactional": "boolean",
-        "is_control": "boolean",
+        f.name: f.dataType.simpleString() for f in _SEGMENT_SCHEMA[:-1]
     }
 
     def _records_to_df(self, records) -> DataFrame:
@@ -1447,13 +1448,15 @@ class TopicEngine:
         """The batch's record columns, key and value cast to binary as the
         distributed path reads them, collected with one ``toArrow()`` into
         the table ``_append_arrow`` takes; None for a batch without a
-        value column or with a non-TIMESTAMP timestamp column."""
+        value column or with a non-TIMESTAMP timestamp column. A column
+        already of its record type is selected by name, so a batch of
+        record types plans no cast."""
         types = dict(batch.dtypes)
         if "value" not in types or types.get("timestamp", "timestamp") != "timestamp":
             return None
         t = batch.select(
             *[
-                F.col(c).cast(ty).alias(c)
+                c if types[c] == ty else F.col(c).cast(ty).alias(c)
                 for c, ty in self._RECORD_COL_TYPES.items()
                 if c in types
             ]
@@ -1847,15 +1850,19 @@ class TopicEngine:
             _io.BytesIO(fs.read_bytes(path)), columns=columns, filters=filters
         )
 
-    def _tx_ranges_local(self) -> list[dict]:
-        """Live tx ranges (zero Spark jobs): the "tx" records of
-        OFFSETS_TOPIC's keep-latest map, where a range's EndTxn record
-        replaced its open one under the same key."""
+    def _tx_ranges_local(self, topic=None, partition=None) -> list[dict]:
+        """Live tx ranges (zero Spark jobs) of one partition, or of every
+        partition: the "tx" records of OFFSETS_TOPIC's keep-latest map,
+        where a range's EndTxn record replaced its open one under the same
+        key, read from the (topic, partition) index replayed beside it."""
+        self._group_map()
+        index = self._group_cache[2]
+        parts = index.values() if topic is None else [index.get((topic, partition), {})]
         return [
             {"topic": k[1], "partition": k[2], "producer_id": k[3],
              "first_offset": k[4], **v}
-            for k, v in self._group_map().items()
-            if k[0] == "tx"
+            for part in parts
+            for k, v in part.items()
         ]
 
     def _visibility(self, topic, partition, isolation):
@@ -1868,11 +1875,7 @@ class TopicEngine:
         operators/transactions.py::read_committed runs relationally."""
         if isolation != "read_committed":
             return None
-        ranges = [
-            r
-            for r in self._tx_ranges_local()
-            if r["topic"] == topic and r["partition"] == partition
-        ]
+        ranges = self._tx_ranges_local(topic, partition)
         hwm = self._high.get(topic, {}).get(partition, 0)
         open_first = min(
             (r["first_offset"] for r in ranges if r["outcome"] == "open"),
@@ -2114,30 +2117,20 @@ class TopicEngine:
         return df
 
     def _scan(self, paths: list[str]) -> DataFrame:
-        """The record DataFrame over explicit segment paths. Hot and cold
-        segments share the flat record schema, so a tiered read is one
-        multi-path parquet read — one Spark job, file-level parallelism
-        across tiers. No paths is the empty log; a listed segment missing
-        on disk raises, so a rewrite never commits a lost read as empty.
-        The empty log is built from an empty Arrow table, a LocalRelation
-        whose reads run no Spark job (a list-built frame is an RDD scan)."""
+        """The record DataFrame over explicit segment paths, read with
+        ``_SEGMENT_SCHEMA``. Hot and cold segments share it, so a tiered
+        read is one multi-path parquet read whose build runs no Spark job
+        (listing more than ``parallelPartitionDiscovery.threshold`` paths
+        still does). No paths is the empty log; a listed segment missing
+        on disk raises when the read is built, so a rewrite never commits
+        a lost read as empty. The empty log is an empty Arrow table, a
+        LocalRelation whose reads run no Spark job (a list-built frame is
+        an RDD scan)."""
         if not paths:
-            from pyspark.sql.pandas.types import to_arrow_schema
-            from pyspark.sql.types import StructType
-
-            from redpanda_spark.datamodel import RECORD_SCHEMA
-
-            schema = StructType(
-                [
-                    f
-                    for f in RECORD_SCHEMA.fields
-                    if f.name not in ("topic", "timestamp_type")
-                ]
-            )
             return self.spark.createDataFrame(
-                to_arrow_schema(schema).empty_table(), schema=schema
+                _SEGMENT_FILE_ARROW.empty_table(), schema=_SEGMENT_SCHEMA
             )
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(_SEGMENT_SCHEMA).parquet(*paths)
 
     def enable_cold_cache(self, max_bytes: int, cache_dir: str | None = None):
         """Turn on the cold-read cache (cloud_storage/cache_service
@@ -2290,10 +2283,13 @@ class TopicEngine:
         moves data past retention.local.target.ms only). Historical
         backfill below the local boundary goes through ``fetch``/``log``,
         which span both tiers — the same split the reference makes
-        between the follower fetch path and remote_partition reads."""
-        static = self.log(topic)
+        between the follower fetch path and remote_partition reads.
+
+        The stream reads the topic directory with ``_SEGMENT_SCHEMA``, so
+        starting it runs no Spark job."""
+        self._require(topic)
         return (
-            self.spark.readStream.schema(static.schema)
+            self.spark.readStream.schema(_SEGMENT_SCHEMA)
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
             .parquet(self._topic_dir(topic))
         )
@@ -2552,7 +2548,9 @@ class TopicEngine:
         self._fsio.delete(spill, recursive=True)
         _filters(cold.unionByName(hot)).write.parquet(spill)
         try:
-            kept = self.spark.read.parquet(spill)
+            kept = self.spark.read.schema(
+                T.StructType([*_SEGMENT_SCHEMA, T.StructField("_tier", T.StringType())])
+            ).parquet(spill)
             self._rewrite(
                 topic, kept.where(F.col("_tier") == "l").drop("_tier")
             )
@@ -2644,7 +2642,7 @@ class TopicEngine:
             else:
                 new_rel = self._write_segments(
                     topic,
-                    self.spark.read.parquet(*paths).where(
+                    self._scan(paths).where(
                         F.unix_micros(F.col("timestamp")) >= F.lit(cutoff_us)
                     ),
                 )
@@ -2655,8 +2653,8 @@ class TopicEngine:
         if a_boundary:
             a_new_rel = self._write_segments(
                 topic,
-                self.spark.read.parquet(
-                    *[os.path.join(self.archive_root, f) for f in a_boundary]
+                self._scan(
+                    [os.path.join(self.archive_root, f) for f in a_boundary]
                 ).where(F.unix_micros(F.col("timestamp")) >= F.lit(cutoff_us)),
                 archive=True,
             )
@@ -3774,9 +3772,9 @@ class TopicEngine:
             if self._fsio.exists(mp)
             else ()
         )
-        seen, state = self._group_cache or ((), {})
+        seen, state, tx = self._group_cache or ((), {}, {})
         if files[: len(seen)] != seen:
-            seen, state = (), {}  # rewritten by compaction: replay all
+            seen, state, tx = (), {}, {}  # rewritten by compaction: replay all
         log: list[tuple] = []
         for f in files[len(seen):]:
             cols = ("offset", "key", "value")
@@ -3786,11 +3784,15 @@ class TopicEngine:
             log += zip(*(t.column(c).to_pylist() for c in cols))
         log.sort(key=lambda r: r[0])
         for key, value in (G.decode_group_record(k, v) for _, k, v in log):
-            if value is None:
-                state.pop(key, None)
-            else:
-                state[key] = value
-        self._group_cache = (files, state)
+            maps = [state]
+            if key[0] == "tx":  # also indexed by (topic, partition)
+                maps.append(tx.setdefault(key[1:3], {}))
+            for m in maps:
+                if value is None:
+                    m.pop(key, None)
+                else:
+                    m[key] = value
+        self._group_cache = (files, state, tx)
         return state
 
     def _group_append(self, records: list[tuple[tuple, dict | None]]) -> None:
@@ -3903,22 +3905,23 @@ class TopicEngine:
         self.run_compaction(OFFSETS_TOPIC)
         return {"before": before, "after": self._stats_rows(OFFSETS_TOPIC)}
 
-    def _offsets_df(self, group_id: str | None = None) -> DataFrame:
-        """Latest committed offsets as a commits table (an Arrow
-        LocalRelation: collecting it runs no Spark job)."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from redpanda_spark.datamodel import CONSUMER_OFFSETS_SCHEMA
-
-        rows = [
-            {"group_id": k[1], "topic": k[2], "partition": k[3], **v,
-             "deleted": False}
+    def _offset_rows(self, group_id: str | None = None) -> list[dict]:
+        """Live committed offsets of one group (None: every group) as
+        OffsetFetch rows, from the replayed map: no JVM call, as the
+        reference answers OffsetFetch from in-memory group state
+        (`kafka/server/group.cc`)."""
+        return [
+            {"group_id": k[1], "topic": k[2], "partition": k[3], **v}
             for k, v in self._group_map().items()
             if k[0] == "offset" and group_id in (None, k[1])
         ]
-        schema = to_arrow_schema(CONSUMER_OFFSETS_SCHEMA)
-        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema))
+
+    def committed_offsets(self, group_id: str) -> dict[tuple[str, int], int]:
+        """{(topic, partition): committed offset} of ``group_id``."""
+        return {
+            (r["topic"], r["partition"]): r["committed_offset"]
+            for r in self._offset_rows(group_id)
+        }
 
     def expire_offsets(
         self,
@@ -3945,5 +3948,13 @@ class TopicEngine:
 
     def offset_fetch(self, group_id: str | None = None) -> DataFrame:
         """OffsetFetch: latest committed offset per (group, topic,
-        partition), tombstoned entries excluded."""
-        return self._offsets_df(group_id).drop("commit_seq", "deleted")
+        partition), tombstoned entries excluded, as an Arrow
+        LocalRelation (collecting it runs no Spark job)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from redpanda_spark.datamodel import CONSUMER_OFFSETS_SCHEMA
+
+        schema = to_arrow_schema(CONSUMER_OFFSETS_SCHEMA[:6])
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist(self._offset_rows(group_id), schema)
+        )

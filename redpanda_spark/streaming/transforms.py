@@ -180,13 +180,7 @@ class TransformProcessor:
 
     def start_stream(self, trigger_available_now: bool = True):
         """Continuous execution via Structured Streaming file source."""
-        spark = self.engine.spark
-        static = self.engine.log(self.input_topic)
-        src = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-            .parquet(self.engine._topic_dir(self.input_topic))
-        )
+        src = self.engine.log_stream(self.input_topic, self.max_files_per_trigger)
         out = self._apply(src)
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -22,3 +22,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def spark_jobs(spark, group, fn):
+    """(fn(), the ids of the Spark jobs fn started) under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

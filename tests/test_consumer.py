@@ -85,6 +85,32 @@ def test_committed_offsets_survive_member_restart(spark, tmp_path):
     assert len(_drain(c4)) == 10
 
 
+class _NoJvm:
+    """A stand-in for the engine's session that fails any use."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"the JVM was asked for spark.{name}")
+
+
+def test_consumer_start_from_committed_offsets_makes_no_jvm_call(
+    spark, tmp_path, monkeypatch
+):
+    """Joining, resolving the committed start positions and polling from
+    them run in-process: the positions come from the engine's replayed
+    group map (OffsetFetch from coordinator state), not a DataFrame."""
+    engine, _ = _setup(spark, tmp_path, n_parts=2, n_msgs=10)
+    engine.offset_commit_batch("g", {("t", 0): 3, ("t", 1): 4})
+    fresh = TopicEngine(spark, engine.root)
+    mgr = GroupManager({"t": 2}, engine=fresh)
+    monkeypatch.setattr(fresh, "spark", _NoJvm())
+    c = Consumer(fresh, mgr, "g", ["t"])
+    assert c.subscribe() == {"t": [0, 1]}
+    assert (c.position("t", 0), c.position("t", 1)) == (3, 4)
+    got = c.poll()
+    assert [r["offset"] for r in got[("t", 0)]] == [3, 4]
+    assert [r["offset"] for r in got[("t", 1)]] == [4]
+
+
 def test_rebalance_on_member_leave(spark, tmp_path):
     engine, mgr = _setup(spark, tmp_path, n_parts=2, n_msgs=4)
     a = Consumer(engine, mgr, "g5", ["t"])

@@ -11,6 +11,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from redpanda_spark import engine as engine_mod
 from redpanda_spark.engine import TopicConfig, TopicEngine
 from redpanda_spark.functions.hashes import murmur2_partition
@@ -1223,6 +1224,106 @@ def test_empty_log_frames_run_no_spark_job(spark, tmp_path):
     assert _no_jobs(spark, "empty-fetch", lambda: eng.fetch("e", 0).collect()) == []
 
 
+def test_empty_and_written_logs_share_one_schema(spark, tmp_path):
+    """An empty topic's log has the columns, order and types of a written
+    one (the stored segment schema), so a positional union or a row
+    compare across the two lines up."""
+    eng = TopicEngine(spark, str(tmp_path / "t"))
+    eng.create_topic("e", TopicConfig(partitions=2))
+    eng.create_topic("w", TopicConfig(partitions=2))
+    eng.produce("w", [{"key": b"k", "value": b"v"}])
+    empty, written = eng.log("e"), eng.log("w")
+    assert empty.columns == written.columns == list(engine_mod._RecordRow)
+    assert empty.schema == written.schema == engine_mod._SEGMENT_SCHEMA
+    assert [tuple(r) for r in empty.unionAll(written).collect()] == [
+        tuple(r) for r in written.collect()
+    ]
+
+
+def test_log_build_runs_no_spark_job_and_count_runs_two(spark, tmp_path):
+    """Reads are given the segment schema: building ``log()`` infers
+    nothing from the footers (no job), so counting it runs only the
+    scan's two jobs; a listed segment missing on disk still raises when
+    the read is built."""
+    root = str(tmp_path / "t")
+    eng = TopicEngine(spark, root)
+    eng.create_topic("t", TopicConfig(partitions=2))
+    for i in range(3):
+        eng.produce("t", [{"key": b"k%d" % i, "value": b"v"}])
+    df, jobs = spark_jobs(spark, "log-build", lambda: eng.log("t"))
+    assert jobs == []
+    n, jobs = spark_jobs(spark, "log-count", lambda: eng.log("t").count())
+    assert n == 3 and len(jobs) == 2
+    os.remove(os.path.join(root, eng._files["t"][1]))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        eng.log("t")
+
+
+def test_log_stream_start_runs_no_spark_job(spark, tmp_path):
+    eng = TopicEngine(spark, str(tmp_path / "t"))
+    eng.create_topic("s", TopicConfig(partitions=2))
+    eng.produce("s", [{"key": b"k", "value": b"v"}])
+    stream = _no_jobs(spark, "log-stream-start", lambda: eng.log_stream("s"))
+    assert stream.isStreaming and stream.schema == engine_mod._SEGMENT_SCHEMA
+
+
+def test_read_committed_fetch_reads_only_its_partitions_tx_ranges(
+    spark, tmp_path, monkeypatch
+):
+    """The replayed tx ranges are indexed by (topic, partition): after 50
+    decided transactions on one topic, a read_committed row fetch of
+    another considers none of them, and on a mixed workload (committed,
+    aborted, open and plain batches) its rows equal the relational
+    read_committed scan."""
+    from redpanda_spark.operators.txcoord import TxCoordinator
+
+    eng = TopicEngine(spark, str(tmp_path / "t"))
+    eng.create_topic("x", TopicConfig(partitions=1))
+    eng.create_topic("y", TopicConfig(partitions=2))
+    tc = TxCoordinator(eng)
+    tc.init_producer_id("tx")
+    for i in range(50):
+        tc.produce("tx", "x", [{"value": b"x%d" % i, "partition": 0}])
+        (tc.commit if i % 2 else tc.abort)("tx")
+
+    def recs(tag, n=2):
+        return [{"value": b"%s%d" % (tag, i), "partition": i % 2} for i in range(n)]
+
+    eng.produce("y", recs(b"plain"))
+    tc.produce("tx", "y", recs(b"kept"))
+    tc.commit("tx")
+    tc.produce("tx", "y", recs(b"dead"))
+    tc.abort("tx")
+    eng.produce("y", recs(b"after"))
+    tc.produce("tx", "y", recs(b"open", 1))  # partition 0 only: open range
+    eng.produce("y", recs(b"late"))
+
+    considered = []
+    ranges = eng._tx_ranges_local
+
+    def spy(*args):
+        out = ranges(*args)
+        considered.append(len(out))
+        return out
+
+    monkeypatch.setattr(eng, "_tx_ranges_local", spy)
+    eng.fetch_rows("y", 1, isolation="read_committed")
+    assert considered == [2]  # the committed and the aborted range on y/1
+    eng.create_topic("z", TopicConfig(partitions=1))
+    eng.produce("z", [{"value": b"z"}])
+    assert [r["value"] for r in eng.fetch_rows("z", 0, isolation="read_committed")] == [b"z"]
+    assert considered[-1] == 0
+    monkeypatch.undo()
+    for p in (0, 1):
+        rows = eng.fetch_rows("y", p, isolation="read_committed")
+        scan = sorted(
+            eng.fetch("y", p, isolation="read_committed").collect(),
+            key=lambda r: r["offset"],
+        )
+        assert rows == scan
+    assert {bytes(r["value"]) for r in rows} == {b"plain1", b"kept1", b"after1", b"late1"}
+
+
 def test_record_produce_validations(spark, tmp_path):
     from redpanda_spark.engine import ProduceError
 
@@ -1344,13 +1445,8 @@ def test_engine_fetch_max_bytes(spark, tmp_path):
 
 def _no_jobs(spark, group, fn):
     """fn() under a Spark job group; asserts it started no job."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "must run no Spark job")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    out, jobs = spark_jobs(spark, group, fn)
+    assert jobs == []
     return out
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from redpanda_spark.operators.groups import group_lag, offset_fetch
 from redpanda_spark.operators.transactions import (
     idempotent_dedup,
@@ -135,7 +136,7 @@ def test_expired_offsets_kip211_rules(spark, tmp_path):
     # earlier stale commit shadowed by a fresh one -> protected
     commit("live", 1, 1, 10)
     commit("live", 1, 2, 995)
-    n, jobs = _job_ids(
+    n, jobs = spark_jobs(
         spark,
         "expire",
         lambda: eng.expire_offsets(
@@ -199,16 +200,6 @@ def test_compact_offsets_bounds_commit_log(spark, tmp_path):
     }
 
 
-def _job_ids(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_group_state_commit_and_read_run_no_spark_job(spark, tmp_path):
     """Group state is records of the internal __consumer_offsets topic:
     on a local root a commit is one zero-job local produce, and a
@@ -218,7 +209,7 @@ def test_group_state_commit_and_read_run_no_spark_job(spark, tmp_path):
     root = str(tmp_path / "root")
     eng = TopicEngine(spark, root)
     eng.create_topic("t", TopicConfig(partitions=4))
-    _, jobs = _job_ids(
+    _, jobs = spark_jobs(
         spark,
         "g-commit",
         lambda: eng.offset_commit_batch("g", {("t", p): 10 + p for p in range(4)}),
@@ -227,11 +218,11 @@ def test_group_state_commit_and_read_run_no_spark_job(spark, tmp_path):
     snap = {"group_id": "g", "state": "Stable", "generation": 2,
             "protocol": "range", "leader": "m1", "members": {"m1": {}},
             "next_member": 2, "coop_followup": True}
-    _, jobs = _job_ids(spark, "g-meta", lambda: eng.group_metadata_append(snap))
+    _, jobs = spark_jobs(spark, "g-meta", lambda: eng.group_metadata_append(snap))
     assert jobs == []
 
     fresh = TopicEngine(spark, root)
-    rows, jobs = _job_ids(spark, "g-fetch", lambda: fresh.offset_fetch("g").collect())
+    rows, jobs = spark_jobs(spark, "g-fetch", lambda: fresh.offset_fetch("g").collect())
     assert jobs == []
     assert {(r["partition"], r["committed_offset"]) for r in rows} == {
         (p, 10 + p) for p in range(4)
@@ -240,7 +231,7 @@ def test_group_state_commit_and_read_run_no_spark_job(spark, tmp_path):
         "group_id", "topic", "partition", "committed_offset",
         "leader_epoch", "metadata",
     ]
-    snaps, jobs = _job_ids(spark, "g-snaps", fresh.group_metadata_snapshots)
+    snaps, jobs = spark_jobs(spark, "g-snaps", fresh.group_metadata_snapshots)
     assert jobs == []
     assert snaps == [snap]
 
@@ -252,7 +243,7 @@ def test_tx_ranges_without_transactions_runs_no_spark_job(spark, tmp_path):
     from redpanda_spark.engine import TopicEngine
 
     eng = TopicEngine(spark, str(tmp_path / "root"))
-    rows, jobs = _job_ids(spark, "tx-empty", lambda: eng.tx_ranges().collect())
+    rows, jobs = spark_jobs(spark, "tx-empty", lambda: eng.tx_ranges().collect())
     assert jobs == [] and rows == []
     assert eng.tx_ranges().columns == [
         "topic", "partition", "producer_id", "first_offset", "last_offset",
@@ -279,7 +270,7 @@ def test_tx_produce_commit_abort_run_no_spark_job(spark, tmp_path):
         return [{"key": None, "value": v.encode(), "partition": 0}]
 
     def tx(label, fn):
-        _, jobs = _job_ids(spark, label, fn)
+        _, jobs = spark_jobs(spark, label, fn)
         assert jobs == [], label
 
     tx("tx-produce-1", lambda: tc.produce("tx", "t", rec("c0")))  # offset 0

@@ -13,23 +13,13 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from redpanda_spark import engine as engine_mod
 from redpanda_spark.engine import TopicConfig, TopicEngine
 from redpanda_spark.rest import RestApp
 
 UTC = dt.timezone.utc
 BASE = dt.datetime(2024, 1, 1, tzinfo=UTC)
-
-
-def _jobs(spark, group, fn):
-    """(fn(), the Spark job ids fn started) under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "counted")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _batch(b: int, n: int = 10, partitions: int = 2) -> list[dict]:
@@ -71,7 +61,7 @@ def test_no_retention_cleanup_runs_no_job(spark, tmp_path):
     for b in range(3):
         eng.produce("t", _batch(b))
     files = list(eng._files["t"])
-    _, jobs = _jobs(spark, "cleanup-noop", lambda: eng.run_cleanup("t"))
+    _, jobs = spark_jobs(spark, "cleanup-noop", lambda: eng.run_cleanup("t"))
     assert jobs == []
     assert eng._files["t"] == files
     assert "maintenance_spark_rewrites" not in eng.counters("t")
@@ -96,7 +86,7 @@ def test_cleanup_drops_segments_below_log_start_on_both_tiers(spark, tmp_path):
     fetched = TopicEngine(spark, root, read_only=True).fetch_rows("t", 0, offset=0)
     assert [r["offset"] for r in fetched] == list(range(17, 25))
 
-    _, jobs = _jobs(spark, "cleanup-truncated", lambda: eng.run_cleanup("t"))
+    _, jobs = spark_jobs(spark, "cleanup-truncated", lambda: eng.run_cleanup("t"))
     assert jobs == []
     assert eng._archived["t"] == [] and eng._files["t"] == hot[1:]
     assert os.listdir(eng._archive_dir("t")) == []
@@ -128,7 +118,7 @@ def test_merge_in_process_matches_spark_merge(spark, tmp_path):
     before = _rows(local, "t")
     assert _rows(uri, "t") == before
 
-    merged, jobs = _jobs(spark, "merge-local", lambda: local.optimize_segments("t"))
+    merged, jobs = spark_jobs(spark, "merge-local", lambda: local.optimize_segments("t"))
     assert jobs == []
     assert merged == {"files_before": 4, "files_after": 1}
     assert uri.optimize_segments("t") == merged
@@ -168,7 +158,7 @@ def test_merge_mixed_segments_into_contiguous_files(spark, tmp_path, monkeypatch
     before = _rows(eng, "t")
     total = sum(os.path.getsize(os.path.join(root, f)) for f in eng._files["t"])
 
-    merged, jobs = _jobs(
+    merged, jobs = spark_jobs(
         spark, "merge-mixed",
         lambda: eng.optimize_segments("t", target_file_bytes=total // 3 + 1),
     )
@@ -225,7 +215,7 @@ def test_time_retention_boundary_cut_in_process(spark, tmp_path):
     )
     assert 0 < len(expect) < 20
     now = BASE + dt.timedelta(hours=2, seconds=5)
-    _, jobs = _jobs(
+    _, jobs = spark_jobs(
         spark, "retention-cut",
         lambda: eng.run_retention("t", now_ms=int(now.timestamp() * 1000)),
     )
@@ -284,7 +274,7 @@ def test_checksum_sidecars_leave_with_their_segments(spark, tmp_path, monkeypatc
     before = _rows(eng, "t")
     assert sidecars() and sidecars() == live_sidecars(eng)
 
-    _, jobs = _jobs(spark, "merge-sidecars", lambda: eng.optimize_segments("t"))
+    _, jobs = spark_jobs(spark, "merge-sidecars", lambda: eng.optimize_segments("t"))
     assert jobs == []
     assert _rows(eng, "t") == before
     assert sidecars() == []
